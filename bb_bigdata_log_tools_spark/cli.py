@@ -35,6 +35,7 @@ import sys
 import time
 from datetime import datetime, timezone
 
+from pyspark.errors import IllegalArgumentException
 from pyspark.sql import DataFrame, SparkSession
 
 if __package__ in (None, ""):  # invoked as a bare script: bootstrap sys.path
@@ -52,7 +53,6 @@ DATE_FORMATS = [
     "%Y-%m-%d %H:%M:%S",
     "%Y-%m-%dT%H:%M:%S",
     "%Y/%m/%d %H:%M",
-    "%Y%m%d%H",
 ]
 
 
@@ -209,8 +209,22 @@ def _emit(df: DataFrame, opts: dict) -> None:
         # stream partitions through the driver one at a time (bounded
         # memory on huge result sets, reference parity: the client
         # streams job output to stdout)
-        for row in out.select("line").toLocalIterator():
-            sys.stdout.write(row["line"] + "\n")
+        sc = out.sparkSession.sparkContext
+        tag = f"logtools-deliver-{id(out)}"
+        sc.addJobTag(tag)
+        try:
+            for row in out.select("line").toLocalIterator():
+                sys.stdout.write(row["line"] + "\n")
+            sys.stdout.flush()
+        except BrokenPipeError:
+            # the reader went away (`| head`): stop like a Unix filter,
+            # with no traceback; stdout goes to /dev/null so the
+            # interpreter's exit-time flush cannot fail again
+            sc.cancelJobsWithTag(tag)
+            os.dup2(os.open(os.devnull, os.O_WRONLY), sys.stdout.fileno())
+            raise SystemExit(0) from None
+        finally:
+            sc.removeJobTag(tag)
     if not silent:
         sys.stderr.write(DATA_MARKER + "\n")
 
@@ -218,12 +232,9 @@ def _emit(df: DataFrame, opts: dict) -> None:
 def _load(opts: dict, tool: str, extra: list[str]) -> tuple:
     """Validate args and resolve paths BEFORE starting the JVM — bad
     invocations fail in milliseconds, not after a Spark session boot."""
-    dc, svc, comp, start_s, end_s = _require(
-        opts, tool, ["dc", "svc", "comp", "start", "end"]
+    dc, svc, comp, start_s, end_s, *values = _require(
+        opts, tool, ["dc", "svc", "comp", "start", "end", *extra]
     )
-    values = [opts.get(k) for k in extra]
-    if any(v is None for v in values):
-        _require(opts, tool, extra)
     start_ms, end_ms = parse_time(start_s), parse_time(end_s)
     if end_ms <= start_ms:
         raise SystemExit(";******************** ERROR: end must be after start")
@@ -236,11 +247,7 @@ def _load(opts: dict, tool: str, extra: list[str]) -> tuple:
     # --skipCorrupt: salvage damaged .bm trees (sync-marker resync past
     # corrupt blocks) instead of failing the run — see read_boom
     skip_corrupt = "skipCorrupt" in opts["flags"]
-    df = read_boom(spark, paths[0], skip_corrupt=skip_corrupt)
-    for extra_path in paths[1:]:
-        df = df.unionByName(
-            read_boom(spark, extra_path, skip_corrupt=skip_corrupt)
-        )
+    df = read_boom(spark, paths, skip_corrupt=skip_corrupt)
     return df, start_ms, end_ms, values
 
 
@@ -268,6 +275,13 @@ def logsearch(argv: list[str]) -> None:
 def loggrep(argv: list[str]) -> None:
     opts = parse_args(argv)
     df, start_ms, end_ms, (regex,) = _load(opts, "loggrep", ["regex"])
+    try:  # java.util.regex is rlike's dialect: fail before any job runs
+        df.sparkSession._jvm.java.util.regex.Pattern.compile(regex)
+    except IllegalArgumentException as exc:  # PatternSyntaxException
+        raise SystemExit(
+            f";******************** ERROR: invalid regex: {regex} "
+            f"({str(exc).splitlines()[0]})"
+        ) from None
     _emit(
         logops.grep(df, regex, start_ms, end_ms, "i" in opts["flags"]),
         opts,

@@ -19,9 +19,9 @@ The decoder is generic (driven by the embedded writer schema), so files
 with or without ``eventId`` decode correctly.
 
 Spark integration: ``read_boom`` uses the built-in ``binaryFile`` source
-+ ``mapInPandas`` — each .bm file is decoded Arrow-batched on an
-executor. Parallelism is per-file, which matches the reference layout
-(hourly part files); ``read_boom_split`` additionally splits multi-GB
++ ``mapInPandas`` — each .bm file is decoded whole, Arrow-batched, on an
+executor, and Spark packs small files (the reference's hourly part
+files) into about one partition per core; ``read_boom_split`` splits multi-GB
 files on sync markers (the Avro ``DataFileReader.sync/pastSync``
 contract, with candidate-validation against false marker matches), so a
 consolidated archive fans out across size/split tasks.
@@ -373,7 +373,7 @@ def count_boom_lines(path: str) -> int:
 
 def read_boom(
     spark: SparkSession,
-    path: str,
+    path: str | list[str],
     search_terms: list[str] | None = None,
     match_all: bool = False,
     case_insensitive: bool = False,
@@ -385,6 +385,14 @@ def read_boom(
     """Distributed .bm read: binaryFile source → per-file Arrow-batched
     decode in executors → canonical log schema.
 
+    ``path`` is one directory (or glob), or a list of directories read
+    in ONE scan: the CLI passes every hourly directory its window
+    resolves to. A list is always listed on the driver, never by a
+    listing job (see below), and Spark packs the small hourly files
+    into about one partition per core (``maxPartitionBytes`` /
+    ``openCostInBytes`` file packing), so the plan and the task count
+    stay flat as the window grows.
+
     ``search_terms`` pushes a substring search INTO the decoder
     (``scan_boom_bytes``): non-matching container blocks are skipped on
     a byte-scan of the compressed-block payload before any Avro record
@@ -394,6 +402,10 @@ def read_boom(
     may use it as a drop-in accelerator. On parquet-resident logs
     Catalyst's pushdown covers this; the seam exists for legacy .bm
     trees where the scan cost lives inside our own decoder.
+
+    A strict read that cannot decode a file fails with an error naming
+    that file: one task decodes many packed files, so the task alone
+    does not point to the damaged hour.
 
     ``skip_corrupt=True`` opts into SALVAGE semantics for damaged
     trees: corrupt container blocks are resynced past via the Avro
@@ -417,50 +429,61 @@ def read_boom(
 
     cols = ["ts", "message", "event_id", "create_time", "block_no", "line_no"]
 
+    def rows_of(data: bytes) -> list[tuple]:
+        if skip_corrupt:
+            # file-level fallback on top of block-level resync: a
+            # mutated header can even yield a DIFFERENT valid schema
+            # whose records don't flatten — under salvage semantics
+            # that file contributes zero rows, it never kills the task
+            try:
+                return list(flatten_log_blocks(read_container_resync(data)))
+            except Exception:  # noqa: BLE001
+                return []
+        if search_terms is not None:
+            return list(
+                scan_boom_bytes(
+                    data,
+                    search_terms,
+                    match_all=match_all,
+                    case_insensitive=case_insensitive,
+                    start_ms=start_ms,
+                    end_ms=end_ms,
+                )
+            )
+        return list(flatten_log_blocks(read_container(data)))
+
     def decode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         for pdf in batches:
-            for content in pdf["content"]:
-                data = bytes(content)
-                if skip_corrupt:
-                    # file-level fallback on top of block-level resync:
-                    # a mutated header can even yield a DIFFERENT valid
-                    # schema whose records don't flatten — under salvage
-                    # semantics that file contributes zero rows, it
-                    # never kills the task
-                    try:
-                        rows = list(
-                            flatten_log_blocks(read_container_resync(data))
-                        )
-                    except Exception:  # noqa: BLE001
-                        rows = []
-                elif search_terms is not None:
-                    rows = list(
-                        scan_boom_bytes(
-                            data,
-                            search_terms,
-                            match_all=match_all,
-                            case_insensitive=case_insensitive,
-                            start_ms=start_ms,
-                            end_ms=end_ms,
-                        )
-                    )
-                else:
-                    rows = list(flatten_log_blocks(read_container(data)))
+            for file_path, content in zip(pdf["path"], pdf["content"]):
+                try:
+                    rows = rows_of(bytes(content))
+                except Exception as exc:  # noqa: BLE001 — re-raised naming the file
+                    raise ValueError(
+                        f"cannot decode .bm file {file_path}: "
+                        f"{type(exc).__name__}: {exc}"
+                    ) from exc
                 yield pd.DataFrame(rows, columns=cols)
 
-    # recursive=True reads a whole tree from ONE root path: a glob that
-    # expands to many leaf dirs (an hourly tree is thousands) pushes
-    # Spark's InMemoryFileIndex over
-    # spark.sql.sources.parallelPartitionDiscovery.threshold and the
-    # listing itself becomes a cluster job with one task per leaf dir
-    # (r12 profile: a 720-task, multi-second "load" job to list 1251
-    # tiny files); a single recursive root is listed driver-side in
-    # milliseconds. Same file set either way (pathGlobFilter applies).
     reader = spark.read.format("binaryFile").option("pathGlobFilter", "*.bm")
+    # recursive=True reads a whole tree from ONE root path, which Spark
+    # lists driver-side in milliseconds. More paths than
+    # spark.sql.sources.parallelPartitionDiscovery.threshold would
+    # instead be listed by a cluster job with one task per path (r12
+    # profile: a 720-task, multi-second "load" job to list 1251 tiny
+    # files) — pure overhead for directories the caller has just
+    # listed. So the threshold covers the path count for this load()
+    # alone (the file index lists eagerly inside it).
     if recursive:
         reader = reader.option("recursiveFileLookup", "true")
-    binary = reader.load(path).select("content")
-    return binary.mapInPandas(decode, schema=LOG_SCHEMA)
+    paths = [path] if isinstance(path, str) else list(path)
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, str(max(len(paths), int(saved))))
+    try:
+        binary = reader.load(paths)
+    finally:
+        spark.conf.set(key, saved)
+    return binary.select("path", "content").mapInPandas(decode, schema=LOG_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

@@ -1,0 +1,221 @@
+"""The CLI reads every hour of a window in ONE binaryFile scan: its output
+equals a per-hour read + plain Spark filter, loading runs no Spark job
+(not even a file-listing one past Spark's 32-path parallel-listing
+threshold), and the CLI behaves like a Unix filter at its edges."""
+
+from __future__ import annotations
+
+import contextlib
+import io
+import os
+import shutil
+import subprocess
+import sys
+from functools import reduce
+
+import pytest
+
+from pyspark.sql import functions as F
+
+from bb_bigdata_log_tools_spark import cli
+from bb_bigdata_log_tools_spark.operators import logops
+from bb_bigdata_log_tools_spark.sources.boom import (
+    _parse_boom_header,
+    _try_block,
+    read_boom,
+    write_boom_local,
+)
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+T0 = 1791158400000  # 2026-10-05 00:00 UTC
+HOUR = 3600 * 1000
+HOURS = 36  # more than Spark's parallelPartitionDiscovery.threshold (32)
+LINES_PER_HOUR = 30
+WORDS = ["disk ok", "disk FAIL", "net timeout", "ÉCHEC-DISQUE sda", "user login"]
+TREE = ("dc1", "svc1", "comp1")
+
+
+def _write_tree(root: str, hours: int, lines_per_hour: int) -> list[str]:
+    """An hourly .bm tree in the reference layout; returns its files."""
+    dc, svc, comp = TREE
+    files = []
+    for h in range(hours):
+        t = T0 + h * HOUR
+        day, hh = divmod(h, 24)
+        d = os.path.join(
+            root, dc, svc, "logs", f"202610{5 + day:02d}", f"{hh:02d}", comp, "data"
+        )
+        os.makedirs(d)
+        lines = [
+            (t + i * (HOUR // lines_per_hour) + i % 7,
+             f"h{h} i{i} {WORDS[(h + i) % len(WORDS)]}", i)
+            for i in range(lines_per_hour)
+        ]
+        files.append(os.path.join(d, "part-00000.bm"))
+        write_boom_local(files[-1], lines)
+    return files
+
+
+def _damage(path: str) -> None:
+    """Wreck the count/size varints of the file's third block."""
+    with open(path, "rb") as f:
+        data = f.read()
+    _schema, sync, pos, codec = _parse_boom_header(data)
+    for _ in range(2):
+        _, _, pos = _try_block(data, pos, sync, codec)
+    bad = bytearray(data)
+    for k in range(6):
+        bad[pos + k] ^= 0xFF
+    with open(path, "wb") as f:
+        f.write(bytes(bad))
+
+
+@pytest.fixture(scope="module")
+def trees(tmp_path_factory):
+    """An intact tree and a copy with one damaged hour."""
+    base = tmp_path_factory.mktemp("single_scan")
+    good = str(base / "good")
+    files = _write_tree(good, HOURS, LINES_PER_HOUR)
+    bad = str(base / "bad")
+    shutil.copytree(good, bad)
+    damaged = files[HOURS // 2].replace(good, bad, 1)
+    _damage(damaged)
+    strings = str(base / "strings.txt")
+    with open(strings, "w", encoding="utf-8") as f:
+        f.write("net timeout\r\nÉCHEC-DISQUE\n")
+    return {"good": good, "bad": bad, "damaged": damaged, "strings": strings}
+
+
+def _argv(root: str, start_ms: int, end_ms: int, *extra: str) -> list[str]:
+    dc, svc, comp = TREE
+    return [f"-dc={dc}", f"-svc={svc}", f"-comp={comp}", f"-start={start_ms}",
+            f"-end={end_ms}", f"-root={root}", *extra]
+
+
+def _run(spark, monkeypatch, tool: str, argv: list[str]) -> list[str]:
+    monkeypatch.setattr(cli, "_spark", lambda: spark)
+    out, err = io.StringIO(), io.StringIO()
+    with contextlib.redirect_stdout(out), contextlib.redirect_stderr(err):
+        cli.TOOLS[tool](argv)
+    return out.getvalue().splitlines()
+
+
+@pytest.mark.parametrize("skip_corrupt", [False, True])
+def test_single_scan_equals_per_hour_filter(spark, monkeypatch, trees, skip_corrupt):
+    """logsearch / loggrep / logmultisearch over a >32-hour window equal
+    the plain Spark filter over a per-hour read_boom of each directory;
+    with --skipCorrupt, also over a tree with one damaged hour. Loading
+    the window starts no Spark job."""
+    root = trees["bad" if skip_corrupt else "good"]
+    flags = ["--skipCorrupt"] if skip_corrupt else []
+    # seconds-granular epoch bounds; the window cuts into the first hour
+    start_ms, end_ms = T0 + 30 * 60_000, T0 + HOURS * HOUR
+    dc, svc, comp = TREE
+    paths = cli.resolve_paths(root, dc, svc, comp, start_ms, end_ms)
+    assert len(paths) == HOURS > 32
+
+    sc, group = spark.sparkContext, f"single-scan-load-{skip_corrupt}"
+    sc.setJobGroup(group, "cli._load")
+    try:
+        cli._load(
+            cli.parse_args(_argv(root, start_ms, end_ms, "-string=x", *flags)),
+            "logsearch", ["string"],
+        )
+    finally:
+        sc._jsc.clearJobGroup()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+    per_hour = reduce(
+        lambda a, b: a.unionByName(b),
+        [read_boom(spark, p, skip_corrupt=skip_corrupt) for p in paths],
+    )
+    window = per_hour.filter((F.col("ts") >= start_ms) & (F.col("ts") < end_ms))
+    msg = F.col("message")
+    cases = [
+        ("logsearch", ["-string=disk FAIL"], msg.contains("disk FAIL")),
+        ("loggrep", ["-regex=h1[0-9] i[0-9]+ (net|user)"],
+         msg.rlike("h1[0-9] i[0-9]+ (net|user)")),
+        ("logmultisearch", [f"-strings={trees['strings']}"],
+         msg.contains("net timeout") | msg.contains("ÉCHEC-DISQUE")),
+    ]
+    for tool, extra, pred in cases:
+        want = [
+            r["line"]
+            for r in logops.format_and_sort(window.filter(pred)).collect()
+        ]
+        got = _run(spark, monkeypatch, tool,
+                   _argv(root, start_ms, end_ms, *extra, *flags))
+        assert want, tool
+        assert got == want, tool
+
+
+def test_strict_decode_error_names_file(spark, trees):
+    """A strict read of a >32-hour window fails naming the damaged file,
+    though its task decodes many packed files."""
+    dc, svc, comp = TREE
+    paths = cli.resolve_paths(trees["bad"], dc, svc, comp, T0, T0 + HOURS * HOUR)
+    assert len(paths) > 32
+    with pytest.raises(Exception) as err:
+        read_boom(spark, paths).collect()
+    assert trees["damaged"] in str(err.value)
+
+
+def test_invalid_regex_fails_before_any_job(spark, monkeypatch, trees):
+    sc = spark.sparkContext
+    sc.setJobGroup("bad-regex", "loggrep")
+    try:
+        with pytest.raises(SystemExit) as err:
+            _run(spark, monkeypatch, "loggrep",
+                 _argv(trees["good"], T0, T0 + HOUR, "-regex=disk (FAIL"))
+    finally:
+        sc._jsc.clearJobGroup()
+    msg = str(err.value)
+    assert msg.startswith(";******************** ERROR: invalid regex: disk (FAIL")
+    assert "\n" not in msg
+    assert list(sc.statusTracker().getJobIdsForGroup("bad-regex")) == []
+
+
+def test_parse_time_ten_digits_is_epoch_seconds():
+    """A 10-digit value is epoch seconds (there is no yyyyMMddHH form)."""
+    assert cli.parse_time("2026101703") == 2026101703 * 1000
+
+
+def _cli_proc(*args: str, **kw) -> subprocess.Popen:
+    env = dict(os.environ, PYTHONPATH=REPO, SPARK_GRAFT_CPUS="2")
+    return subprocess.Popen(
+        [sys.executable, os.path.join(REPO, "bb_bigdata_log_tools_spark/cli.py"), *args],
+        stderr=subprocess.PIPE, text=True, env=env, **kw,
+    )
+
+
+@pytest.mark.slow
+def test_invalid_regex_one_error_line_no_java_trace(trees):
+    proc = _cli_proc(
+        "loggrep", *_argv(trees["good"], T0, T0 + HOUR, "-regex=[abc"),
+        stdout=subprocess.PIPE,
+    )
+    out, err = proc.communicate(timeout=300)
+    assert proc.returncode == 1, err[-2000:]
+    assert out == ""
+    errors = [line for line in err.splitlines() if "ERROR" in line]
+    assert len(errors) == 1 and "invalid regex: [abc" in errors[0], err[-2000:]
+    for trace in ("Traceback", "PatternSyntaxException", "\tat "):
+        assert trace not in err, err[-2000:]
+
+
+@pytest.mark.slow
+def test_closed_pipe_exits_quietly(tmp_path):
+    """`logcat ... | head -1`: once the reader closes the pipe the CLI
+    stops delivering and exits 0 with no traceback. The output (~1 MB)
+    is far larger than the pipe buffer, so the write after the close
+    must fail."""
+    root = str(tmp_path / "tree")
+    _write_tree(root, 1, 10_000)
+    proc = _cli_proc("logcat", *_argv(root, T0, T0 + HOUR), stdout=subprocess.PIPE)
+    first = proc.stdout.readline()
+    assert first.rstrip("\n").endswith("h0 i0 disk ok")
+    proc.stdout.close()
+    err = proc.stderr.read()
+    assert proc.wait(timeout=300) == 0, err[-2000:]
+    for noise in ("Traceback", "BrokenPipeError", "Exception"):
+        assert noise not in err, err[-2000:]

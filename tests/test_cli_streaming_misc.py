@@ -502,9 +502,7 @@ def test_write_boom_tree_roundtrip_via_cli(spark, tmp_path):
     start, end = 1704412800000, 1704499200000  # one day window
     paths = resolve_paths(root, "dc1", "svc1", "comp1", start, end)
     assert paths, "hourly dirs must resolve"
-    df = read_boom(spark, paths[0])
-    for p in paths[1:]:
-        df = df.unionByName(read_boom(spark, p))
+    df = read_boom(spark, paths)
     got = {(r["ts"], r["message"]) for r in df.collect()}
     expect = {
         (r["ts"], r["message"])
