@@ -13,7 +13,8 @@ Parity targets (re-derived from the PUBLIC Avro 1.x container spec):
   output's marker (``merge_avro_files`` here). Payloads are copied
   verbatim — no decompress/decode on the merge path.
 - ``avro/AvroFileHeader.java`` / ``avro/AvroUtils.java``: header
-  parse/serialize (``read_header`` / ``container_header_bytes``).
+  parse/serialize (``read_header`` / ``container_header_bytes``), shared
+  with the boom source along with its block walker (``iter_blocks``).
 
 Spark integration mirrors the boom source: ``binaryFile`` +
 ``mapInPandas`` so every file is processed Arrow-batched on an
@@ -34,7 +35,12 @@ from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
-from bb_bigdata_log_tools_spark.sources.boom import MAGIC, _Decoder, _zigzag
+from bb_bigdata_log_tools_spark.sources.boom import (
+    _zigzag,
+    container_header_bytes,
+    iter_blocks,
+    read_header,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -42,35 +48,12 @@ from bb_bigdata_log_tools_spark.sources.boom import MAGIC, _Decoder, _zigzag
 # ---------------------------------------------------------------------------
 
 
-def read_header(data: bytes) -> tuple[dict, str, bytes, int]:
-    """Parse just the container header: returns (schema, codec, sync,
-    header_end_offset). Never touches block payloads."""
-    dec = _Decoder(data)
-    if dec.read_fixed(4) != MAGIC:
-        raise ValueError("not an Avro container file (bad magic)")
-    meta = dec.read_map_of_bytes()
-    schema = json.loads(meta["avro.schema"])
-    codec = meta.get("avro.codec", b"null").decode()
-    sync = dec.read_fixed(16)
-    return schema, codec, sync, dec.pos
-
-
 def scan_blocks(data: bytes) -> Iterator[tuple[int, int, int, bytes]]:
     """Yield (block_idx, record_count, byte_size, raw_payload) for each
     block — the payload stays compressed; nothing is deserialized.
     This is the AvroBlockRecordReader role."""
-    _schema, _codec, sync, pos = read_header(data)
-    dec = _Decoder(data)
-    dec.pos = pos
-    idx = 0
-    while dec.pos < len(dec.buf):
-        count = dec.read_long()
-        size = dec.read_long()
-        payload = dec.read_fixed(size)
-        if dec.read_fixed(16) != sync:
-            raise ValueError("sync marker mismatch — corrupt container")
-        yield idx, count, size, payload
-        idx += 1
+    for idx, (_schema, _codec, count, raw) in enumerate(iter_blocks(data)):
+        yield idx, count, len(raw), raw
 
 
 def avro_block_scan(spark: SparkSession, path: str, glob: str = "*.avro") -> DataFrame:
@@ -83,14 +66,10 @@ def avro_block_scan(spark: SparkSession, path: str, glob: str = "*.avro") -> Dat
     def scan(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         for pdf in batches:
             for p, content in zip(pdf["path"], pdf["content"]):
-                data = bytes(content)
-                _schema, codec, _sync, _pos = read_header(data)
-                rows = [
-                    (os.path.basename(str(p)), i, n, sz)
-                    for i, n, sz, _raw in scan_blocks(data)
-                ]
+                name = os.path.basename(str(p))
+                blocks = enumerate(iter_blocks(bytes(content)))
                 yield pd.DataFrame(
-                    [(f, i, n, sz, codec) for f, i, n, sz in rows],
+                    [(name, i, n, len(raw), codec) for i, (_s, codec, n, raw) in blocks],
                     columns=["file", "block_idx", "record_count", "byte_size", "codec"],
                 )
 
@@ -183,19 +162,6 @@ def _union_index(branches: list, value) -> int:
         if b != "null":
             return i
     raise ValueError("union has only null branches")
-
-
-def container_header_bytes(schema_json: str, codec: str, sync: bytes) -> bytes:
-    """Serialize a container header (AvroFileHeader.toBytes role)."""
-    out = bytearray(MAGIC)
-    meta = {"avro.schema": schema_json.encode(), "avro.codec": codec.encode()}
-    out += _zigzag(len(meta))
-    for k, v in meta.items():
-        kb = k.encode()
-        out += _zigzag(len(kb)) + kb + _zigzag(len(v)) + v
-    out += _zigzag(0)
-    out += sync
-    return bytes(out)
 
 
 def block_bytes(

@@ -18,13 +18,22 @@ the schema embedded in the files themselves):
 The decoder is generic (driven by the embedded writer schema), so files
 with or without ``eventId`` decode correctly.
 
+One container reader serves every ``.bm`` and ``.avro`` read (the
+generic ``avro_generic`` source included): :func:`read_header` parses
+the header, :func:`iter_blocks` walks and checks the block framing of a
+whole file, a byte range, or a salvage walk, :func:`inflate`
+decompresses a payload, and one FastSearch matcher (:func:`_matcher`)
+filters blocks and lines for both :func:`scan_boom_bytes` and
+:func:`scan_boom_range`. A strict read, whole-file or ranged, raises on
+a damaged block; salvage (``skip_corrupt``) is opt-in only.
+
 Spark integration: ``read_boom`` uses the built-in ``binaryFile`` source
 + ``mapInPandas`` — each .bm file is decoded whole, Arrow-batched, on an
 executor, and Spark packs small files (the reference's hourly part
-files) into about one partition per core; ``read_boom_split`` splits multi-GB
-files on sync markers (the Avro ``DataFileReader.sync/pastSync``
-contract, with candidate-validation against false marker matches), so a
-consolidated archive fans out across size/split tasks.
+files) into about one partition per core; ``read_boom_split`` splits
+multi-GB files into byte ranges on sync markers (the Avro
+``DataFileReader.sync/pastSync`` contract), so a consolidated archive
+fans out across tasks and still returns exactly the whole-file rows.
 """
 
 from __future__ import annotations
@@ -32,11 +41,11 @@ from __future__ import annotations
 import json
 import struct
 import zlib
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
-from bb_bigdata_log_tools_spark.schema import LOG_SCHEMA
+from bb_bigdata_log_tools_spark.schema import LOG_COLUMNS, LOG_SCHEMA
 
 MAGIC = b"Obj\x01"
 
@@ -103,6 +112,16 @@ class _Decoder:
                 out[key] = self.read_bytes()
         return out
 
+    def read_header(self) -> tuple[dict, str, bytes]:
+        """Parse a container header at the buffer's start: (schema,
+        codec, sync), leaving ``pos`` at the first block."""
+        if self.read_fixed(4) != MAGIC:
+            raise ValueError("not an Avro container file (bad magic)")
+        meta = self.read_map_of_bytes()
+        schema = json.loads(meta["avro.schema"])
+        codec = meta.get("avro.codec", b"null").decode()
+        return schema, codec, self.read_fixed(16)
+
     def decode(self, schema) -> object:
         """Decode one value of ``schema`` (parsed JSON avro schema)."""
         if isinstance(schema, str):
@@ -164,98 +183,206 @@ class _Decoder:
         raise ValueError(f"unsupported avro type: {schema!r}")
 
 
-def read_container_blocks(data: bytes) -> Iterator[tuple[dict, int, bytes]]:
-    """Yield (writer_schema, record_count, decompressed_payload) per
-    container block — the seam that lets a search prefilter byte-scan a
-    block BEFORE paying for record decode (FastSearch parity; see
-    ``scan_boom_bytes``)."""
-    dec = _Decoder(data)
-    if dec.read_fixed(4) != MAGIC:
-        raise ValueError("not an Avro container file (bad magic)")
-    meta = dec.read_map_of_bytes()
-    schema = json.loads(meta["avro.schema"])
-    codec = meta.get("avro.codec", b"null").decode()
-    sync = dec.read_fixed(16)
-    while dec.pos < len(dec.buf):
-        count = dec.read_long()
-        size = dec.read_long()
-        payload = dec.read_fixed(size)
-        if codec == "deflate":
-            payload = zlib.decompress(payload, -15)
-        elif codec != "null":
-            raise ValueError(f"unsupported codec: {codec}")
-        block_sync = dec.read_fixed(16)
-        if block_sync != sync:
-            raise ValueError("sync marker mismatch — corrupt container")
-        yield schema, count, payload
+def read_header(buf) -> tuple[dict, str, bytes, int]:
+    """(schema, codec, sync, header_end) of an Avro container — the
+    ``avro/AvroFileHeader.java`` parse. Never touches block payloads."""
+    dec = _Decoder(buf)
+    schema, codec, sync = dec.read_header()
+    return schema, codec, sync, dec.pos
 
 
-def read_container_blocks_resync(data: bytes) -> Iterator[tuple[dict, int, bytes]]:
-    """:func:`read_container_blocks` with sync-marker RESYNC past
-    corrupt blocks — the Avro container's sync markers exist precisely
-    so a reader can recover mid-stream. Where the strict reader raises
-    (fail the task, the default ingest posture), this one scans
-    forward for the next VALIDATED block boundary (the split reader's
-    `_try_block` discipline: a real boundary must parse as count,
-    size, payload, trailing sync — false marker matches inside
-    payloads are rejected) and continues, silently dropping only the
-    unreadable span. At 100 TB one flipped block must not kill a
-    1000-executor job when the operator opts into salvage semantics
-    (`read_boom(skip_corrupt=True)` — the
-    `spark.sql.files.ignoreCorruptFiles` posture at block granularity).
+def inflate(codec: str, raw: bytes) -> bytes:
+    """Decompress one block payload."""
+    if codec == "deflate":
+        return zlib.decompress(raw, -15)
+    if codec != "null":
+        raise ValueError(f"unsupported codec: {codec}")
+    return raw
+
+
+def iter_blocks(
+    buf, start: int = 0, end: int | None = None, salvage: bool = False
+) -> Iterator[tuple[dict, str, int, bytes]]:
+    """Walk the blocks of an Avro container (bytes or an mmap), yielding
+    ``(schema, codec, record_count, raw_payload)`` with the payload still
+    compressed. A block must have a positive record count, a non-empty
+    payload inside the buffer, and the header's sync marker after it.
+
+    ``start``/``end`` select a byte range (the Avro split rule,
+    ``DataFileReader.sync/pastSync``): the walk owns the blocks whose
+    PRECEDING sync marker starts in ``[start, end)``, so any split's
+    ranges partition the blocks. A range from 0 starts at the header
+    end; any other syncs to the first marker at or after ``start``,
+    whose block must also inflate: the marker bytes can occur inside a
+    payload (the writer's all-zero default also matches one byte early
+    whenever a payload ends in 0x00; the count check rejects that one).
+
+    A strict walk raises at the first damaged block, and a ranged one
+    also checks the block after its last: the next range would take a
+    damaged first block for a false marker match and skip it silently.
+    ``salvage=True`` instead resyncs to the next valid boundary, dropping
+    only the unreadable span — the ``ignoreCorruptFiles`` posture at
+    block granularity (``read_boom(skip_corrupt=True)``), never default.
     """
-    dec = _Decoder(data)
-    try:
-        if dec.read_fixed(4) != MAGIC:
-            return
-        meta = dec.read_map_of_bytes()
-        schema = json.loads(meta["avro.schema"])
-        codec = meta.get("avro.codec", b"null").decode()
-        sync = dec.read_fixed(16)
-    except Exception:  # noqa: BLE001 — unreadable header: nothing salvageable
-        return
-    n = len(data)
-    pos = dec.pos
-    while pos < n:
-        blk = _try_block(data, pos, sync, codec)
+    dec = _Decoder(buf)
+    schema, codec, sync = dec.read_header()
+    n = len(buf)
+    end = n if end is None else min(end, n)
+
+    def frame(pos: int):
+        """(count, raw_payload, next_pos) of the block at ``pos``, or
+        None when ``pos`` is not a block boundary."""
+        dec.pos = pos
+        try:
+            count = dec.read_long()
+            raw = dec.read_bytes()
+            if count > 0 and raw and dec.read_fixed(16) == sync:
+                return count, raw, dec.pos
+        except (IndexError, ValueError):  # ran off the buffer
+            pass
+        return None
+
+    def boundary(pos: int):
+        """:func:`frame` for a boundary not reached by framing from the
+        header: its payload must inflate too. An unsupported codec
+        still raises."""
+        blk = frame(pos)
+        if blk is not None:
+            try:
+                inflate(codec, blk[1])
+            except zlib.error:
+                return None
+        return blk
+
+    def seek(frm: int) -> int | None:
+        """The block after the first valid sync marker in ``[frm, end)``."""
+        hit = buf.find(sync, frm)
+        while 0 <= hit < end:
+            if boundary(hit + 16) is not None:
+                return hit + 16
+            hit = buf.find(sync, hit + 1)
+        return None
+
+    pos = dec.pos if start == 0 else seek(start)
+    while pos is not None and pos < n and pos - 16 < end:
+        blk = frame(pos)
         if blk is None:
-            # resync: first validated boundary after the damage
-            search_from = pos
-            while True:
-                hit = data.find(sync, search_from, n)
-                if hit < 0:
-                    return
-                cand = hit + 16
-                if _try_block(data, cand, sync, codec) is not None:
-                    pos = cand
-                    break
-                search_from = hit + 1
+            if not salvage:
+                raise ValueError(f"corrupt container block at byte {pos}")
+            pos = seek(pos)
             continue
-        payload, count, nxt = blk
-        yield schema, count, payload
-        pos = nxt
+        count, raw, pos = blk
+        yield schema, codec, count, raw
+    if not salvage and pos is not None and pos < n and boundary(pos) is None:
+        raise ValueError(f"corrupt container block at byte {pos}")
 
 
 def read_container_resync(data: bytes) -> Iterator[dict]:
-    """Decoded records via the resyncing block reader; a record-level
-    decode failure inside a validated block drops the REST of that
-    block only (varint streams cannot re-align mid-block — the next
-    sync is the recovery point)."""
-    for schema, count, payload in read_container_blocks_resync(data):
-        inner = _Decoder(payload)
-        try:
-            for _ in range(count):
-                yield inner.decode(schema)
-        except Exception:  # noqa: BLE001 — skip the block's damaged tail
-            continue
+    """Decoded records of a salvage walk (:func:`iter_blocks` with
+    ``salvage=True``): the Avro container's sync markers exist so a
+    reader can recover mid-stream, so at 100 TB one flipped block need
+    not kill a 1000-executor job when the operator opts in. A block that
+    fails to inflate or decode drops the REST of that block only (varint
+    streams cannot re-align mid-block — the next sync is the recovery
+    point); an unreadable header or codec yields nothing. Never raises."""
+    try:
+        for schema, codec, count, raw in iter_blocks(data, salvage=True):
+            try:
+                inner = _Decoder(inflate(codec, raw))
+                for _ in range(count):
+                    yield inner.decode(schema)
+            except Exception:  # noqa: BLE001 — skip the block's damaged tail
+                continue
+    except Exception:  # noqa: BLE001 — unreadable header or codec: nothing salvageable
+        return
 
 
 def read_container(data: bytes) -> Iterator[dict]:
     """Yield decoded records from an Avro object-container byte string."""
-    for schema, count, payload in read_container_blocks(data):
-        inner = _Decoder(payload)
+    for schema, codec, count, raw in iter_blocks(data):
+        inner = _Decoder(inflate(codec, raw))
         for _ in range(count):
             yield inner.decode(schema)
+
+
+def _matcher(search_terms: list[str] | None, match_all: bool, case_insensitive: bool):
+    """The FastSearch predicates for a term set, ``(block_ok, line_ok)``:
+    ``block_ok`` byte-scans an inflated block payload and is False only
+    when no line of the block can match; ``line_ok`` is the exact
+    substring test on one message. ``match_all`` requires every term (a
+    line containing all terms implies each term's bytes appear in its
+    block, so requiring all terms at block level is a safe prefilter);
+    the default is match-any. Case-insensitive mode upper-cases both
+    sides line-level; ASCII terms byte-scan both cases cheaply via
+    ``.upper()`` on a latin-1 view, while non-ASCII upper/lower can
+    change byte LENGTH (the reference's ``unicode`` flag), so such terms
+    pass every block. No terms match everything."""
+    if search_terms is None:
+        return (lambda payload: True), (lambda msg: True)
+    want = all if match_all else any
+    if case_insensitive:
+        ascii_ok = all(t.isascii() for t in search_terms)
+        terms_upper = [t.upper() for t in search_terms]
+
+        def block_ok(payload: bytes) -> bool:
+            if not ascii_ok:
+                return True
+            hay = payload.decode("latin-1").upper()
+            return want([t in hay for t in terms_upper])
+
+        def line_ok(msg: str) -> bool:
+            m = msg.upper()
+            return want([t in m for t in terms_upper])
+
+    else:
+        terms_bytes = [t.encode("utf-8") for t in search_terms]
+
+        def block_ok(payload: bytes) -> bool:
+            return want([t in payload for t in terms_bytes])
+
+        def line_ok(msg: str) -> bool:
+            return want([t in msg for t in search_terms])
+
+    return block_ok, line_ok
+
+
+def _scan(
+    blocks: Iterator[tuple[dict, str, int, bytes]],
+    search_terms: list[str] | None,
+    match_all: bool,
+    case_insensitive: bool,
+    start_ms: int | None = None,
+    end_ms: int | None = None,
+) -> Iterator[tuple]:
+    """Flattened lines of an :func:`iter_blocks` walk that pass the
+    FastSearch matcher and the block-second window. Only blocks that
+    pass the byte prefilter pay for a record decoder."""
+    block_ok, line_ok = _matcher(search_terms, match_all, case_insensitive)
+    for schema, codec, count, raw in blocks:
+        payload = inflate(codec, raw)
+        if not block_ok(payload):
+            continue
+        inner = _Decoder(payload)
+        for _ in range(count):
+            rec = inner.decode(schema)
+            ts_base = rec["second"] * 1000
+            if start_ms is not None and ts_base < start_ms:
+                continue
+            if end_ms is not None and ts_base >= end_ms:
+                continue
+            create_time = rec["createTime"]
+            block_no = rec["blockNumber"]
+            for line_no, line in enumerate(rec["logLines"]):
+                msg = line["message"]
+                if line_ok(msg):
+                    yield (
+                        ts_base + line["ms"],
+                        msg,
+                        int(line.get("eventId", 0) or 0),
+                        create_time,
+                        block_no,
+                        line_no,
+                    )
 
 
 def scan_boom_bytes(
@@ -277,63 +404,14 @@ def scan_boom_bytes(
     UTF-8 pattern bytes and skip the whole block's record decode when no
     term can match — on low-hit-rate greps this skips the expensive
     Avro record walk for most blocks; (2) only matched blocks are
-    decoded, then lines are substring-filtered exactly. ``match_all``
-    requires every term (a line containing all terms implies each
-    term's bytes appear in its block, so requiring all terms at block
-    level is a safe prefilter); default is match-any. Case-insensitive
-    mode upper-cases both sides line-level and skips the byte prefilter
-    for non-ASCII terms (the reference's ``unicode`` fallback).
-    ``start_ms``/``end_ms`` bound block seconds like
+    decoded, then lines are substring-filtered exactly (see
+    :func:`_matcher` for the match modes and the case-insensitive
+    fallback). ``start_ms``/``end_ms`` bound block seconds like
     ``logdriver.search.start.time``/``end.time``.
     """
-    if case_insensitive:
-        # ASCII terms byte-scan both cases cheaply via .upper() on a
-        # decoded latin-1 view; non-ASCII upper/lower can change byte
-        # LENGTH (reference's `unicode` flag) → decode every block.
-        ascii_ok = all(t.isascii() for t in search_terms)
-        terms_upper = [t.upper() for t in search_terms]
-    else:
-        terms_bytes = [t.encode("utf-8") for t in search_terms]
-    want_all = match_all
-
-    for schema, count, payload in read_container_blocks(data):
-        if case_insensitive:
-            if ascii_ok:
-                hay = payload.decode("latin-1").upper()
-                hits = [t in hay for t in terms_upper]
-            else:
-                hits = [True] * len(search_terms)
-        else:
-            hits = [t in payload for t in terms_bytes]
-        if not (all(hits) if want_all else any(hits)):
-            continue
-        inner = _Decoder(payload)
-        for _ in range(count):
-            rec = inner.decode(schema)
-            second = rec["second"]
-            ts_base = second * 1000
-            if start_ms is not None and ts_base < start_ms:
-                continue
-            if end_ms is not None and ts_base >= end_ms:
-                continue
-            create_time = rec["createTime"]
-            block_no = rec["blockNumber"]
-            for line_no, line in enumerate(rec["logLines"]):
-                msg = line["message"]
-                if case_insensitive:
-                    m = msg.upper()
-                    ok = [t in m for t in terms_upper]
-                else:
-                    ok = [t in msg for t in search_terms]
-                if all(ok) if want_all else any(ok):
-                    yield (
-                        ts_base + line["ms"],
-                        msg,
-                        int(line.get("eventId", 0) or 0),
-                        create_time,
-                        block_no,
-                        line_no,
-                    )
+    return _scan(
+        iter_blocks(data), search_terms, match_all, case_insensitive, start_ms, end_ms
+    )
 
 
 def flatten_log_blocks(records: Iterator[dict]) -> Iterator[tuple]:
@@ -371,6 +449,22 @@ def count_boom_lines(path: str) -> int:
         return sum(1 for _ in flatten_log_blocks(read_container(f.read())))
 
 
+def _lines_frame(path: str, rows: Iterable[tuple]) -> "pd.DataFrame":
+    """``rows`` (flattened lines) as a pandas frame with the log columns.
+    A decode failure is re-raised naming the .bm file: one task decodes
+    many packed files or ranges, so the task alone does not point to the
+    damaged one."""
+    import pandas as pd
+
+    try:
+        rows = list(rows)
+    except Exception as exc:  # noqa: BLE001 — re-raised naming the file
+        raise ValueError(
+            f"cannot decode .bm file {path}: {type(exc).__name__}: {exc}"
+        ) from exc
+    return pd.DataFrame(rows, columns=LOG_COLUMNS)
+
+
 def read_boom(
     spark: SparkSession,
     path: str | list[str],
@@ -404,12 +498,11 @@ def read_boom(
     trees where the scan cost lives inside our own decoder.
 
     A strict read that cannot decode a file fails with an error naming
-    that file: one task decodes many packed files, so the task alone
-    does not point to the damaged hour.
+    that file (:func:`_lines_frame`).
 
     ``skip_corrupt=True`` opts into SALVAGE semantics for damaged
     trees: corrupt container blocks are resynced past via the Avro
-    sync markers (:func:`read_container_blocks_resync`) instead of
+    sync markers (:func:`read_container_resync`) instead of
     failing the task, and a file with an unreadable header yields
     zero rows — the ``spark.sql.files.ignoreCorruptFiles`` posture at
     block granularity, for when one flipped block must not kill a
@@ -418,8 +511,6 @@ def read_boom(
     reads. Mutually exclusive with ``search_terms`` (the push-down
     byte-scan assumes intact containers — salvage first, then search).
     """
-    import pandas as pd
-
     if skip_corrupt and search_terms is not None:
         raise ValueError(
             "skip_corrupt and search_terms are mutually exclusive: the "
@@ -427,9 +518,7 @@ def read_boom(
             "the tree first, then search"
         )
 
-    cols = ["ts", "message", "event_id", "create_time", "block_no", "line_no"]
-
-    def rows_of(data: bytes) -> list[tuple]:
+    def rows_of(data: bytes) -> Iterable[tuple]:
         if skip_corrupt:
             # file-level fallback on top of block-level resync: a
             # mutated header can even yield a DIFFERENT valid schema
@@ -440,29 +529,20 @@ def read_boom(
             except Exception:  # noqa: BLE001
                 return []
         if search_terms is not None:
-            return list(
-                scan_boom_bytes(
-                    data,
-                    search_terms,
-                    match_all=match_all,
-                    case_insensitive=case_insensitive,
-                    start_ms=start_ms,
-                    end_ms=end_ms,
-                )
+            return scan_boom_bytes(
+                data,
+                search_terms,
+                match_all=match_all,
+                case_insensitive=case_insensitive,
+                start_ms=start_ms,
+                end_ms=end_ms,
             )
-        return list(flatten_log_blocks(read_container(data)))
+        return flatten_log_blocks(read_container(data))
 
     def decode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         for pdf in batches:
             for file_path, content in zip(pdf["path"], pdf["content"]):
-                try:
-                    rows = rows_of(bytes(content))
-                except Exception as exc:  # noqa: BLE001 — re-raised naming the file
-                    raise ValueError(
-                        f"cannot decode .bm file {file_path}: "
-                        f"{type(exc).__name__}: {exc}"
-                    ) from exc
-                yield pd.DataFrame(rows, columns=cols)
+                yield _lines_frame(file_path, rows_of(bytes(content)))
 
     reader = spark.read.format("binaryFile").option("pathGlobFilter", "*.bm")
     # recursive=True reads a whole tree from ONE root path, which Spark
@@ -517,18 +597,17 @@ BOOM_SCHEMA_JSON = (
 )
 
 
-def _write_container_header(f, sync: bytes) -> None:
-    f.write(MAGIC)
-    meta = {
-        "avro.schema": BOOM_SCHEMA_JSON.encode(),
-        "avro.codec": b"deflate",
-    }
-    f.write(_zigzag(len(meta)))
+def container_header_bytes(schema_json: str, codec: str, sync: bytes) -> bytes:
+    """Serialize a container header (AvroFileHeader.toBytes role)."""
+    out = bytearray(MAGIC)
+    meta = {"avro.schema": schema_json.encode(), "avro.codec": codec.encode()}
+    out += _zigzag(len(meta))
     for k, v in meta.items():
         kb = k.encode()
-        f.write(_zigzag(len(kb)) + kb + _zigzag(len(v)) + v)
-    f.write(_zigzag(0))
-    f.write(sync)
+        out += _zigzag(len(kb)) + kb + _zigzag(len(v)) + v
+    out += _zigzag(0)
+    out += sync
+    return bytes(out)
 
 
 def _write_block(
@@ -565,7 +644,7 @@ def write_boom_stream(
     arbitrarily large sorted partition. Returns the line count.
     """
     with open(path, "wb") as f:
-        _write_container_header(f, sync)
+        f.write(container_header_bytes(BOOM_SCHEMA_JSON, "deflate", sync))
         n = 0
         block_no = 0
         cur_second: int | None = None
@@ -605,7 +684,7 @@ def write_reboom_stream(
     memory is bounded by one block. Returns the line count.
     """
     with open(path, "wb") as f:
-        _write_container_header(f, sync)
+        f.write(container_header_bytes(BOOM_SCHEMA_JSON, "deflate", sync))
         n = 0
         cur: tuple | None = None  # (second, create_time, block_no)
         blk: list[tuple] = []
@@ -817,43 +896,6 @@ def write_boom_tree(
 # ---------------------------------------------------------------------------
 
 
-def _parse_boom_header(mm) -> tuple[dict, bytes, int, str]:
-    """(schema, sync, header_end, codec) from a mapped .bm file."""
-    head = bytes(mm[: min(len(mm), 1 << 20)])  # container headers are small
-    dec = _Decoder(head)
-    if dec.read_fixed(4) != MAGIC:
-        raise ValueError("not an Avro container file (bad magic)")
-    meta = dec.read_map_of_bytes()
-    schema = json.loads(meta["avro.schema"])
-    codec = meta.get("avro.codec", b"null").decode()
-    if codec not in ("deflate", "null"):
-        raise ValueError(f"unsupported codec: {codec}")
-    sync = dec.read_fixed(16)
-    return schema, sync, dec.pos, codec
-
-
-def _try_block(mm, pos: int, sync: bytes, codec: str):
-    """Attempt to parse the block starting at ``pos``; return
-    (records_payload, count, next_pos) or None if ``pos`` is not a real
-    block boundary (false sync match inside a payload)."""
-    try:
-        dec = _Decoder(mm)
-        dec.pos = pos
-        count = dec.read_long()
-        size = dec.read_long()
-        if count <= 0 or size <= 0 or dec.pos + size + 16 > len(mm):
-            return None
-        payload = bytes(mm[dec.pos : dec.pos + size])
-        dec.pos += size
-        if bytes(mm[dec.pos : dec.pos + 16]) != sync:
-            return None
-        if codec == "deflate":
-            payload = zlib.decompress(payload, -15)
-        return payload, count, dec.pos + 16
-    except Exception:  # noqa: BLE001 — any parse failure = not a boundary
-        return None
-
-
 def scan_boom_range(
     path: str,
     start: int,
@@ -862,95 +904,27 @@ def scan_boom_range(
     match_all: bool = False,
     case_insensitive: bool = False,
 ) -> Iterator[tuple]:
-    """Decode the blocks of one BYTE RANGE of a .bm file — the Avro
-    split algorithm (the reference reads whole files per mapper via
-    ``AvroBlockInputFormat``; real Avro readers split): a task owns the
-    blocks whose start offset s satisfies ``s < end + 16`` after
-    syncing to the first marker at/after ``start`` (first range starts
-    at the header end), which partitions every block to exactly one
-    range with no gap or overlap — the upstream
-    ``DataFileReader.sync/pastSync`` contract.
+    """Flattened lines of the blocks one BYTE RANGE ``[start, end)`` of
+    a .bm file owns — the Avro split algorithm (the reference reads
+    whole files per mapper via ``AvroBlockInputFormat``; real Avro
+    readers split). A range owns the blocks whose preceding sync marker
+    starts inside it (:func:`iter_blocks`), so the ranges of any split
+    of a file together return exactly its whole-file rows, each once.
 
-    False-positive sync matches (the 16-byte marker appearing inside a
-    compressed payload) are handled by VALIDATING each candidate: a
-    real boundary must parse as (count, size, payload, trailing sync).
-    mmap keeps memory at the touched pages, not the file size. The
-    optional ``search_terms`` push the FastSearch block byte-scan into
-    each range (see :func:`scan_boom_bytes`).
+    Strict like the whole-file read: a damaged block the range owns, or
+    the damaged block right after its last one, raises; it is never
+    skipped as a false marker match. mmap keeps memory at the touched
+    pages, not the file size. The optional ``search_terms`` push the
+    FastSearch block byte-scan into each range (see
+    :func:`scan_boom_bytes`).
     """
     import mmap
 
     with open(path, "rb") as f:
         with mmap.mmap(f.fileno(), 0, access=mmap.ACCESS_READ) as mm:
-            schema, sync, header_end, codec = _parse_boom_header(mm)
-            n = len(mm)
-            # Ownership rule (the actual Avro DataFileReader contract): a
-            # block belongs to the range that contains its PRECEDING sync
-            # marker's byte offset. Every range — including the first —
-            # scans for the first VALID sync at offset ≥ start (the
-            # header's own sync is the marker preceding block 1, so no
-            # header special-case: only the range containing it reads
-            # block 1); a range whose first sync lies at/after `end`
-            # owns nothing.
-            pos = None
-            search_from = start
-            while True:
-                hit = mm.find(sync, search_from, n)
-                if hit < 0 or hit >= end:
-                    return
-                cand = hit + 16
-                if _try_block(mm, cand, sync, codec) is not None:
-                    pos = cand
-                    break
-                search_from = hit + 1
-            if case_insensitive and search_terms is not None:
-                ascii_ok = all(t.isascii() for t in search_terms)
-                terms_upper = [t.upper() for t in search_terms]
-            elif search_terms is not None:
-                terms_bytes = [t.encode("utf-8") for t in search_terms]
-            # continue while the preceding sync offset (pos − 16) is ours
-            while pos is not None and pos - 16 < min(end, n):
-                blk = _try_block(mm, pos, sync, codec)
-                if blk is None:
-                    return  # trailing corruption — stop at last good block
-                payload, count, nxt = blk
-                if search_terms is not None:
-                    if case_insensitive:
-                        if ascii_ok:
-                            hay = payload.decode("latin-1").upper()
-                            hits = [t in hay for t in terms_upper]
-                        else:
-                            hits = [True] * len(search_terms)
-                    else:
-                        hits = [t in payload for t in terms_bytes]
-                    if not (all(hits) if match_all else any(hits)):
-                        pos = nxt
-                        continue
-                inner = _Decoder(payload)
-                for _ in range(count):
-                    rec = inner.decode(schema)
-                    second = rec["second"]
-                    create_time = rec["createTime"]
-                    block_no = rec["blockNumber"]
-                    for line_no, line in enumerate(rec["logLines"]):
-                        msg = line["message"]
-                        if search_terms is not None:
-                            if case_insensitive:
-                                mu = msg.upper()
-                                ok = [t in mu for t in terms_upper]
-                            else:
-                                ok = [t in msg for t in search_terms]
-                            if not (all(ok) if match_all else any(ok)):
-                                continue
-                        yield (
-                            second * 1000 + line["ms"],
-                            msg,
-                            int(line.get("eventId", 0) or 0),
-                            create_time,
-                            block_no,
-                            line_no,
-                        )
-                pos = nxt
+            yield from _scan(
+                iter_blocks(mm, start, end), search_terms, match_all, case_insensitive
+            )
 
 
 def read_boom_split(
@@ -972,12 +946,13 @@ def read_boom_split(
 
     The driver lists files and fabricates byte ranges; each task mmap's
     its file and decodes only its range's blocks
-    (:func:`scan_boom_range`). Paths must be reachable from executors
-    (shared FS / mount — the same contract as the tree writers).
+    (:func:`scan_boom_range`). The result is exactly ``read_boom``'s
+    for any ``split_bytes``, or the read fails: a damaged block fails
+    its task with an error naming the file, as ``read_boom`` does.
+    Paths must be reachable from executors (shared FS / mount — the
+    same contract as the tree writers).
     """
     import os as _os
-
-    import pandas as pd
 
     files = []
     if _os.path.isdir(path):
@@ -995,20 +970,17 @@ def read_boom_split(
             ranges.append((f, start, min(start + split_bytes, size)))
             start += split_bytes
     rdf = spark.createDataFrame(ranges, "path string, start long, end long")
-    cols = ["ts", "message", "event_id", "create_time", "block_no", "line_no"]
 
     def decode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         for pdf in batches:
             for p, s, e in zip(pdf["path"], pdf["start"], pdf["end"]):
-                rows = list(
-                    scan_boom_range(
-                        str(p), int(s), int(e),
-                        search_terms=search_terms,
-                        match_all=match_all,
-                        case_insensitive=case_insensitive,
-                    )
+                rows = scan_boom_range(
+                    str(p), int(s), int(e),
+                    search_terms=search_terms,
+                    match_all=match_all,
+                    case_insensitive=case_insensitive,
                 )
-                yield pd.DataFrame(rows, columns=cols)
+                yield _lines_frame(p, rows)
 
     return rdf.repartition(max(len(ranges), 1)).mapInPandas(
         decode, schema=LOG_SCHEMA

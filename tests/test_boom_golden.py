@@ -362,11 +362,10 @@ def test_read_boom_skip_corrupt_salvages_blocks(spark, tmp_path):
     import pytest
 
     from bb_bigdata_log_tools_spark.sources.boom import (
-        _parse_boom_header,
-        _try_block,
         read_boom,
         write_boom_local,
     )
+    from boom_damage import damage_block
 
     d = tmp_path / "tree"
     d.mkdir()
@@ -377,15 +376,7 @@ def test_read_boom_skip_corrupt_salvages_blocks(spark, tmp_path):
         for i in range(3)
     ]
     write_boom_local(str(p), lines)
-    data = p.read_bytes()
-    schema, sync, header_end, codec = _parse_boom_header(data)
-    pos = header_end
-    for _ in range(2):
-        _, _, pos = _try_block(data, pos, sync, codec)
-    bad = bytearray(data)
-    for k in range(6):
-        bad[pos + k] ^= 0xFF  # wreck block 3's count/size varints
-    p.write_bytes(bytes(bad))
+    damage_block(str(p))  # wreck block 3's count/size varints
     # strict default: the decode task fails loudly
     with pytest.raises(Exception):
         read_boom(spark, str(d)).collect()
@@ -413,10 +404,9 @@ def test_cli_logcat_skip_corrupt_flag(tmp_path):
     import sys
 
     from bb_bigdata_log_tools_spark.sources.boom import (
-        _parse_boom_header,
-        _try_block,
         write_boom_local,
     )
+    from boom_damage import damage_block
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     root = tmp_path / "service"
@@ -430,15 +420,7 @@ def test_cli_logcat_skip_corrupt_flag(tmp_path):
     ]
     p = d / "x.bm"
     write_boom_local(str(p), lines)
-    data = p.read_bytes()
-    schema, sync, header_end, codec = _parse_boom_header(data)
-    pos = header_end
-    for _ in range(2):
-        _, _, pos = _try_block(data, pos, sync, codec)
-    bad = bytearray(data)
-    for k in range(6):
-        bad[pos + k] ^= 0xFF
-    p.write_bytes(bytes(bad))
+    damage_block(str(p))
     from test_cli_streaming_misc import run_tools_batch
 
     args = [

@@ -19,12 +19,8 @@ from pyspark.sql import functions as F
 
 from bb_bigdata_log_tools_spark import cli
 from bb_bigdata_log_tools_spark.operators import logops
-from bb_bigdata_log_tools_spark.sources.boom import (
-    _parse_boom_header,
-    _try_block,
-    read_boom,
-    write_boom_local,
-)
+from bb_bigdata_log_tools_spark.sources.boom import read_boom, write_boom_local
+from boom_damage import damage_block
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 T0 = 1791158400000  # 2026-10-05 00:00 UTC
@@ -56,20 +52,6 @@ def _write_tree(root: str, hours: int, lines_per_hour: int) -> list[str]:
     return files
 
 
-def _damage(path: str) -> None:
-    """Wreck the count/size varints of the file's third block."""
-    with open(path, "rb") as f:
-        data = f.read()
-    _schema, sync, pos, codec = _parse_boom_header(data)
-    for _ in range(2):
-        _, _, pos = _try_block(data, pos, sync, codec)
-    bad = bytearray(data)
-    for k in range(6):
-        bad[pos + k] ^= 0xFF
-    with open(path, "wb") as f:
-        f.write(bytes(bad))
-
-
 @pytest.fixture(scope="module")
 def trees(tmp_path_factory):
     """An intact tree and a copy with one damaged hour."""
@@ -79,7 +61,7 @@ def trees(tmp_path_factory):
     bad = str(base / "bad")
     shutil.copytree(good, bad)
     damaged = files[HOURS // 2].replace(good, bad, 1)
-    _damage(damaged)
+    damage_block(damaged)
     strings = str(base / "strings.txt")
     with open(strings, "w", encoding="utf-8") as f:
         f.write("net timeout\r\nÉCHEC-DISQUE\n")

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import os
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from bb_bigdata_log_tools_spark.sources.boom import (
@@ -16,6 +16,28 @@ from bb_bigdata_log_tools_spark.sources.boom import (
 
 # millis in [2000-01-01, 2035-01-01)
 TS_MS = st.integers(min_value=946684800000, max_value=2051222400000)
+
+# Lines carrying the search terms of the reference's logsearch test
+# script (unicode, case variants, the match_all pairs), so the golden
+# pushdown cases run without the reference test data.
+GOLDEN_CORPUS = [
+    (1330423200000 + 997 * i, msg, i)
+    for i, msg in enumerate([
+        "This is a test message with ä inside",
+        "Ä upper-case umlaut line",
+        "la fenêtre est ouverte",
+        "LA FENÊTRE EST FERMÉE",
+        "человек идёт",
+        "ЧЕЛОВЕК СТОИТ",
+        "shebang #!A in upper case",
+        "shebang #!a in lower case",
+        "this line has mixed Case",
+        "line without the other word",
+        "it contains Greek αβγδε",
+        "contains nothing else",
+        "greek in lower case only",
+    ])
+]
 
 MESSAGES = st.text(
     alphabet=st.characters(blacklist_categories=("Cs",), blacklist_characters="\r\n"),
@@ -242,17 +264,22 @@ def test_split_assign_formula_subset_invariance(rows):
         max_size=120,
     ),
     st.integers(min_value=64, max_value=4096),
+    st.lists(st.text(min_size=1, max_size=6), min_size=1, max_size=3),
+    st.booleans(),
+    st.booleans(),
 )
-def test_sync_split_partition_invariance(lines, split):
+def test_sync_split_partition_invariance(lines, split, terms, match_all, ci):
     """For ANY random line set and ANY split size, the union of ranged
     decodes equals the whole-file decode — the sync/pastSync ownership
     rule leaves no block unread and reads none twice (false-sync
-    candidates in compressed payloads included)."""
+    candidates in compressed payloads included) — and the union of
+    ranged pushed searches equals ``scan_boom_bytes``."""
     import os
     import tempfile
 
     from bb_bigdata_log_tools_spark.sources.boom import (
         read_boom_local,
+        scan_boom_bytes,
         scan_boom_range,
         write_boom_local,
     )
@@ -263,11 +290,17 @@ def test_sync_split_partition_invariance(lines, split):
         want = sorted(read_boom_local(path))
         size = os.path.getsize(path)
         got = []
+        pushed = []
         start = 0
         while start < size:
-            got.extend(scan_boom_range(path, start, min(start + split, size)))
+            end = min(start + split, size)
+            got.extend(scan_boom_range(path, start, end))
+            pushed.extend(scan_boom_range(path, start, end, terms, match_all, ci))
             start += split
         assert sorted(got) == want
+        with open(path, "rb") as f:
+            data = f.read()
+        assert sorted(pushed) == sorted(scan_boom_bytes(data, terms, match_all, ci))
 
 
 @settings(max_examples=25, deadline=None, suppress_health_check=[HealthCheck.too_slow])
@@ -281,6 +314,13 @@ def test_sync_split_partition_invariance(lines, split):
     st.booleans(),
     st.booleans(),
 )
+@example(GOLDEN_CORPUS, ["ä"], False, True)
+@example(GOLDEN_CORPUS, ["fenêtre"], False, False)
+@example(GOLDEN_CORPUS, ["ЧЕЛовЕК"], False, True)
+@example(GOLDEN_CORPUS, ["#!a"], False, True)
+@example(GOLDEN_CORPUS, ["line", "case"], True, False)
+@example(GOLDEN_CORPUS, ["contains", "Greek"], False, False)
+@example(GOLDEN_CORPUS, ["nosuchterm"], False, False)
 def test_pushdown_scan_equals_filter_random(lines, terms, match_all, ci):
     """scan_boom_bytes == read-then-filter for ANY corpus, ANY terms,
     both match modes, both case modes (incl. unicode fallback)."""
