@@ -41,7 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 if __package__ in (None, ""):  # invoked as a bare script: bootstrap sys.path
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bb_bigdata_log_tools_spark.operators import logops
+from bb_bigdata_log_tools_spark.operators import logops, util
 from bb_bigdata_log_tools_spark.sources.boom import read_boom
 
 DATA_MARKER = ";#################### DATA MARKER ####################"
@@ -170,28 +170,19 @@ def _emit(df: DataFrame, opts: dict) -> None:
             F.concat_ws(sep, *[F.col(c).cast("string") for c in cols]).alias("line")
         )
     else:
-        # LogTools-style local-vs-remote sort pick (reference
-        # src/com/blackberry/logtools/LogTools.java decides --l/--r by
-        # estimated result size): --r forces the range-partitioned
-        # distributed orderBy, --l forces the single-partition local
-        # sort, and the default AUTO-picks by the actual filtered row
-        # count — small results skip the range sampler's second parent
-        # pass entirely (small_sort), huge ones spill to the
+        # the reference's --l/--r pick a local or remote sort
+        # (src/com/blackberry/logtools/LogTools.java); here they are
+        # accepted and ignored: small_sort picks the physical sort by the
+        # actual filtered row count — small results skip the range
+        # sampler's second parent pass entirely, huge ones spill to the
         # distributed orderBy above its row threshold.
-        from bb_bigdata_log_tools_spark.operators.util import small_sort
-
         out = logops.format_and_sort(df, date_format=date_format, sort=False)
         sort_cols = [
             c
             for c in ("ts", "create_time", "block_no", "line_no")
             if c in out.columns
         ]
-        if "r" in opts["flags"]:
-            out = out.orderBy(*sort_cols)
-        elif "l" in opts["flags"]:
-            out = out.repartition(1).sortWithinPartitions(*sort_cols)
-        else:
-            out = small_sort(out, *sort_cols)
+        out = util.small_sort(out, *sort_cols)
     silent = "silent" in opts["flags"]
     if not silent:
         sys.stderr.write(DATA_MARKER + "\n")

@@ -23,8 +23,6 @@ but rendered declaratively so AQE can size the sort partitions.
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -120,7 +118,7 @@ def multisearch(
     terms in one pass; declaratively that is a single OR/AND conjunction
     of Contains predicates, which Catalyst compiles into one generated
     loop over the row — same one-pass behavior without hand-rolled
-    scanning. (For huge term lists, prefer ``multisearch_rlike`` below.)
+    scanning.
     """
     if not terms:
         raise ValueError("multisearch requires at least one term")
@@ -129,19 +127,6 @@ def multisearch(
     for p in preds[1:]:
         combined = (combined & p) if match_all else (combined | p)
     return _project(_time_window(df, start_ms, end_ms).filter(combined))
-
-
-def multisearch_rlike(
-    df: DataFrame,
-    terms: list[str],
-    start_ms: int | None = None,
-    end_ms: int | None = None,
-    case_insensitive: bool = False,
-) -> DataFrame:
-    """OR-multisearch as one compiled alternation regex — useful when the
-    term list is large (single regex automaton pass per row)."""
-    alternation = "|".join(re.escape(t) for t in terms)
-    return grep(df, alternation, start_ms, end_ms, case_insensitive)
 
 
 def format_and_sort(

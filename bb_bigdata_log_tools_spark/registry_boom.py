@@ -21,11 +21,7 @@ from bb_bigdata_log_tools_spark.functions.timestamps import (
 )
 from bb_bigdata_log_tools_spark.operators.util import small_sort
 from bb_bigdata_log_tools_spark.session import table
-from bb_bigdata_log_tools_spark.sources.boom import (
-    read_boom,
-    read_boom_local,
-    read_boom_split,
-)
+from bb_bigdata_log_tools_spark.sources.boom import read_boom, read_boom_local
 
 BM_DIR = (
     "/root/reference/testcases/logsearch/logsearch-testservice/logs/"
@@ -138,11 +134,18 @@ ORDER BY event_id
 """
 
 def q_boom_read_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The golden .bm decoded through the SYNC-SPLIT ranged reader with
-    a 512-byte split (forcing many ranges over one small file) — must
-    equal the whole-file decode exactly (fixed input, independent of
-    sf_dir)."""
-    return read_boom_split(spark, BM_DIR, split_bytes=512)
+    """The golden .bm decoded through ``read_boom``'s sync-split ranges
+    under a 512-byte ``maxPartitionBytes`` (forcing many ranges over one
+    small file) — must equal the whole-file decode exactly (fixed input,
+    independent of sf_dir). The ranges are planned inside ``read_boom``,
+    so the setting is restored as soon as it returns."""
+    key = "spark.sql.files.maxPartitionBytes"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "512")
+    try:
+        return read_boom(spark, BM_DIR)
+    finally:
+        spark.conf.set(key, saved)
 
 
 BOOM_QUERIES = {

@@ -105,11 +105,10 @@ def q_boom_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(root, ignore_errors=True)
     logs = events_as_logs(ensure_parallelism(table(spark, sf_dir, "events")))
     write_boom_tree(logs, root, "dc1", "svc", "apache", "comp1")
-    # one recursive root instead of a 1251-dir glob: the glob expansion
-    # turned file LISTING into a 720-task cluster job (read_boom
-    # docstring); the file set is identical (*.bm under the tree)
+    # one root, walked on the driver: the file set is every *.bm under
+    # the tree
     return (
-        read_boom(spark, os.path.join(root, "dc1", "svc", "apache"), recursive=True)
+        read_boom(spark, os.path.join(root, "dc1", "svc", "apache"))
         .select("ts", "message", "event_id")
         .transform(lambda d: small_sort(d, "ts", "message", "event_id"))
     )

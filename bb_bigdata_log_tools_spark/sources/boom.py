@@ -27,18 +27,20 @@ filters blocks and lines for both :func:`scan_boom_bytes` and
 :func:`scan_boom_range`. A strict read, whole-file or ranged, raises on
 a damaged block; salvage (``skip_corrupt``) is opt-in only.
 
-Spark integration: ``read_boom`` uses the built-in ``binaryFile`` source
-+ ``mapInPandas`` — each .bm file is decoded whole, Arrow-batched, on an
-executor, and Spark packs small files (the reference's hourly part
-files) into about one partition per core; ``read_boom_split`` splits
-multi-GB files into byte ranges on sync markers (the Avro
-``DataFileReader.sync/pastSync`` contract), so a consolidated archive
-fans out across tasks and still returns exactly the whole-file rows.
+Spark integration: :func:`read_boom` is the one distributed reader. The
+driver cuts every file into byte ranges and packs them into about one
+task per core; executors decode each range through the same ranged walk
+(the Avro ``DataFileReader.sync/pastSync`` contract), so hourly part
+files and a consolidated archive alike return exactly the whole-file rows.
 """
 
 from __future__ import annotations
 
+import glob
+import heapq
 import json
+import mmap
+import os
 import struct
 import zlib
 from collections.abc import Iterable, Iterator
@@ -96,28 +98,25 @@ class _Decoder:
         self.pos += n
         return out
 
-    def read_map_of_bytes(self) -> dict[str, bytes]:
-        out: dict[str, bytes] = {}
+    def read_counts(self) -> Iterator[int]:
+        """Item counts of the blocks of an array or map, up to its zero
+        terminator; a negative count is followed by the block's byte
+        size, unused."""
         while True:
             count = self.read_long()
             if count == 0:
-                break
+                return
             if count < 0:
                 count = -count
-                self.read_long()  # block byte size, unused
-            for _ in range(count):
-                # assignment RHS evaluates first in Python — read key/value
-                # into locals to keep stream order
-                key = self.read_string()
-                out[key] = self.read_bytes()
-        return out
+                self.read_long()
+            yield count
 
     def read_header(self) -> tuple[dict, str, bytes]:
         """Parse a container header at the buffer's start: (schema,
         codec, sync), leaving ``pos`` at the first block."""
         if self.read_fixed(4) != MAGIC:
             raise ValueError("not an Avro container file (bad magic)")
-        meta = self.read_map_of_bytes()
+        meta = self.decode({"type": "map", "values": "bytes"})
         schema = json.loads(meta["avro.schema"])
         codec = meta.get("avro.codec", b"null").decode()
         return schema, codec, self.read_fixed(16)
@@ -134,27 +133,14 @@ class _Decoder:
         if kind == "record":
             return {f["name"]: self.decode(f["type"]) for f in schema["fields"]}
         if kind == "array":
-            items = []
-            while True:
-                count = self.read_long()
-                if count == 0:
-                    break
-                if count < 0:
-                    count = -count
-                    self.read_long()
-                for _ in range(count):
-                    items.append(self.decode(schema["items"]))
-            return items
+            items = schema["items"]
+            return [self.decode(items) for n in self.read_counts() for _ in range(n)]
         if kind == "map":
             out: dict[str, object] = {}
-            while True:
-                count = self.read_long()
-                if count == 0:
-                    break
-                if count < 0:
-                    count = -count
-                    self.read_long()
-                for _ in range(count):
+            for n in self.read_counts():
+                for _ in range(n):
+                    # assignment RHS evaluates first in Python — read the
+                    # key into a local to keep stream order
                     key = self.read_string()
                     out[key] = self.decode(schema["values"])
             return out
@@ -277,16 +263,19 @@ def iter_blocks(
         raise ValueError(f"corrupt container block at byte {pos}")
 
 
-def read_container_resync(data: bytes) -> Iterator[dict]:
+def read_container_resync(
+    data, start: int = 0, end: int | None = None
+) -> Iterator[dict]:
     """Decoded records of a salvage walk (:func:`iter_blocks` with
-    ``salvage=True``): the Avro container's sync markers exist so a
+    ``salvage=True``) over ``data`` or its byte range ``[start, end)``
+    (bytes or an mmap): the Avro container's sync markers exist so a
     reader can recover mid-stream, so at 100 TB one flipped block need
     not kill a 1000-executor job when the operator opts in. A block that
     fails to inflate or decode drops the REST of that block only (varint
     streams cannot re-align mid-block — the next sync is the recovery
     point); an unreadable header or codec yields nothing. Never raises."""
     try:
-        for schema, codec, count, raw in iter_blocks(data, salvage=True):
+        for schema, codec, count, raw in iter_blocks(data, start, end, salvage=True):
             try:
                 inner = _Decoder(inflate(codec, raw))
                 for _ in range(count):
@@ -305,6 +294,11 @@ def read_container(data: bytes) -> Iterator[dict]:
             yield inner.decode(schema)
 
 
+#: UTF-8 of the only non-ASCII code points whose ``lower()`` holds ASCII
+#: letters: U+0130 (``İ`` -> ``i̇``) and U+212A (KELVIN SIGN -> ``k``).
+_LOWERS_TO_ASCII = ("\u0130".encode(), "\u212a".encode())
+
+
 def _matcher(search_terms: list[str] | None, match_all: bool, case_insensitive: bool):
     """The FastSearch predicates for a term set, ``(block_ok, line_ok)``:
     ``block_ok`` byte-scans an inflated block payload and is False only
@@ -312,27 +306,29 @@ def _matcher(search_terms: list[str] | None, match_all: bool, case_insensitive: 
     substring test on one message. ``match_all`` requires every term (a
     line containing all terms implies each term's bytes appear in its
     block, so requiring all terms at block level is a safe prefilter);
-    the default is match-any. Case-insensitive mode upper-cases both
-    sides line-level; ASCII terms byte-scan both cases cheaply via
-    ``.upper()`` on a latin-1 view, while non-ASCII upper/lower can
-    change byte LENGTH (the reference's ``unicode`` flag), so such terms
-    pass every block. No terms match everything."""
+    the default is match-any. Case-insensitive mode lower-cases both
+    sides line-level, as Spark's ``lower()`` does in ``logops``; ASCII
+    terms byte-scan both cases cheaply via ``.lower()`` on a latin-1
+    view, except in a block holding a code point that lower-cases to
+    ASCII (:data:`_LOWERS_TO_ASCII`), which passes. Non-ASCII
+    upper/lower can change byte LENGTH (the reference's ``unicode``
+    flag), so such terms pass every block. No terms match everything."""
     if search_terms is None:
         return (lambda payload: True), (lambda msg: True)
     want = all if match_all else any
     if case_insensitive:
         ascii_ok = all(t.isascii() for t in search_terms)
-        terms_upper = [t.upper() for t in search_terms]
+        terms_lower = [t.lower() for t in search_terms]
 
         def block_ok(payload: bytes) -> bool:
-            if not ascii_ok:
+            if not ascii_ok or any(b in payload for b in _LOWERS_TO_ASCII):
                 return True
-            hay = payload.decode("latin-1").upper()
-            return want([t in hay for t in terms_upper])
+            hay = payload.decode("latin-1").lower()
+            return want([t in hay for t in terms_lower])
 
         def line_ok(msg: str) -> bool:
-            m = msg.upper()
-            return want([t in m for t in terms_upper])
+            m = msg.lower()
+            return want([t in m for t in terms_lower])
 
     else:
         terms_bytes = [t.encode("utf-8") for t in search_terms]
@@ -414,6 +410,34 @@ def scan_boom_bytes(
     )
 
 
+def scan_boom_range(
+    path: str,
+    start: int,
+    end: int,
+    search_terms: list[str] | None = None,
+    match_all: bool = False,
+    case_insensitive: bool = False,
+) -> Iterator[tuple]:
+    """Flattened lines of the blocks one BYTE RANGE ``[start, end)`` of
+    a .bm file owns — the Avro split algorithm (the reference reads
+    whole files per mapper via ``AvroBlockInputFormat``; real Avro
+    readers split). A range owns the blocks whose preceding sync marker
+    starts inside it (:func:`iter_blocks`), so the ranges of any split
+    of a file together return exactly its whole-file rows, each once.
+
+    Strict like the whole-file read: a damaged block the range owns, or
+    the damaged block right after its last one, raises; it is never
+    skipped as a false marker match. mmap keeps memory at the touched
+    pages, not the file size. The optional ``search_terms`` push the
+    FastSearch block byte-scan into each range (see
+    :func:`scan_boom_bytes`).
+    """
+    with open(path, "rb") as f, mmap.mmap(f.fileno(), 0, access=mmap.ACCESS_READ) as mm:
+        yield from _scan(
+            iter_blocks(mm, start, end), search_terms, match_all, case_insensitive
+        )
+
+
 def flatten_log_blocks(records: Iterator[dict]) -> Iterator[tuple]:
     """logBlock records → flattened (ts, message, event_id, create_time,
     block_no, line_no) tuples (LogLineData semantics)."""
@@ -465,47 +489,95 @@ def _lines_frame(path: str, rows: Iterable[tuple]) -> "pd.DataFrame":
     return pd.DataFrame(rows, columns=LOG_COLUMNS)
 
 
+def _boom_ranges(path: str | list[str], max_bytes: int) -> list[tuple[str, int, int]]:
+    """``(file, start, end)`` byte ranges of at most ``max_bytes`` that
+    cover the .bm files under ``path`` (one path or glob, or a list of
+    them), listed on the driver. Directories are walked recursively.
+    Files, and directories below a root, whose names start with ``_`` or
+    ``.`` are skipped, as Spark's file sources skip them (``_temporary``
+    attempt output, hidden files); only ``*.bm`` names are read, so an
+    in-progress ``*.bm.tmp`` stays invisible. A path that matches
+    nothing raises. An empty file still gets one range, so a strict read
+    of it fails like any headerless file."""
+
+    def hidden(name: str) -> bool:
+        return name.startswith(("_", "."))
+
+    def wanted(name: str) -> bool:
+        return name.endswith(".bm") and not hidden(name)
+
+    files = []
+    for pattern in [path] if isinstance(path, str) else path:
+        roots = sorted(glob.glob(pattern))
+        if not roots:
+            raise FileNotFoundError(f"path does not exist: {pattern}")
+        files += [r for r in roots if os.path.isfile(r) and wanted(os.path.basename(r))]
+        for root in filter(os.path.isdir, roots):
+            for d, dirs, names in os.walk(root):
+                dirs[:] = sorted(n for n in dirs if not hidden(n))
+                files += [os.path.join(d, n) for n in sorted(names) if wanted(n)]
+    ranges = []
+    for f in files:
+        size = os.path.getsize(f)
+        ranges += [
+            (f, s, min(s + max_bytes, size)) for s in range(0, max(size, 1), max_bytes)
+        ]
+    return ranges
+
+
+def _pack(ranges: list[tuple[str, int, int]], n_bins: int) -> list[list[tuple]]:
+    """``ranges`` in ``min(#ranges, n_bins)`` bins (at least one) balanced
+    by bytes: largest range first, each to the bin with the fewest bytes
+    so far."""
+    bins: list[list[tuple]] = [[] for _ in range(max(1, min(len(ranges), n_bins)))]
+    load = [(0, b) for b in range(len(bins))]
+    for r in sorted(ranges, key=lambda r: r[2] - r[1], reverse=True):
+        size, b = load[0]
+        bins[b].append(r)
+        heapq.heapreplace(load, (size + r[2] - r[1], b))
+    return bins
+
+
 def read_boom(
     spark: SparkSession,
     path: str | list[str],
     search_terms: list[str] | None = None,
     match_all: bool = False,
     case_insensitive: bool = False,
-    start_ms: int | None = None,
-    end_ms: int | None = None,
     skip_corrupt: bool = False,
-    recursive: bool = False,
 ) -> DataFrame:
-    """Distributed .bm read: binaryFile source → per-file Arrow-batched
-    decode in executors → canonical log schema.
+    """Distributed .bm read into the canonical log schema: the one reader
+    for hourly part files and multi-GB archives alike.
 
-    ``path`` is one directory (or glob), or a list of directories read
-    in ONE scan: the CLI passes every hourly directory its window
-    resolves to. A list is always listed on the driver, never by a
-    listing job (see below), and Spark packs the small hourly files
-    into about one partition per core (``maxPartitionBytes`` /
-    ``openCostInBytes`` file packing), so the plan and the task count
-    stay flat as the window grows.
+    ``path`` is one directory, file or glob, or a list of them read in
+    ONE scan (the CLI passes every hourly directory its window resolves
+    to). The driver lists the files and cuts them into byte ranges of at
+    most ``spark.sql.files.maxPartitionBytes`` (:func:`_boom_ranges`),
+    then packs the ranges into ``min(#ranges, defaultParallelism)`` bins
+    (:func:`_pack`): no listing job, and a task count that stays flat as
+    the window grows while an archive fans out. Each task decodes one
+    bin through :func:`scan_boom_range` (the Avro split rule of the
+    reference's splittable ``BoomIndividualInputFormat``), so any split
+    size returns exactly the whole-file rows. Paths must be reachable
+    from executors (shared FS / mount, as for the tree writers).
 
-    ``search_terms`` pushes a substring search INTO the decoder
-    (``scan_boom_bytes``): non-matching container blocks are skipped on
-    a byte-scan of the compressed-block payload before any Avro record
-    decode — the reference's FastSearch fast path
-    (``util/FastSearch.java:76``). Semantically identical to reading
-    everything then filtering (``log_search``'s contract), so callers
-    may use it as a drop-in accelerator. On parquet-resident logs
-    Catalyst's pushdown covers this; the seam exists for legacy .bm
-    trees where the scan cost lives inside our own decoder.
+    ``search_terms`` pushes a substring search INTO the decoder:
+    non-matching container blocks are skipped on a byte-scan of the
+    inflated payload before any Avro record decode — the reference's
+    FastSearch fast path (``util/FastSearch.java:76``, see
+    :func:`scan_boom_bytes`). Semantically identical to reading
+    everything then filtering with ``logops.multisearch``, so callers
+    may use it as a drop-in accelerator.
 
-    A strict read that cannot decode a file fails with an error naming
-    that file (:func:`_lines_frame`).
+    A strict read that cannot decode a range fails with an error naming
+    its file (:func:`_lines_frame`).
 
     ``skip_corrupt=True`` opts into SALVAGE semantics for damaged
     trees: corrupt container blocks are resynced past via the Avro
-    sync markers (:func:`read_container_resync`) instead of
-    failing the task, and a file with an unreadable header yields
-    zero rows — the ``spark.sql.files.ignoreCorruptFiles`` posture at
-    block granularity, for when one flipped block must not kill a
+    sync markers (:func:`read_container_resync`) instead of failing the
+    task, and a file with an unreadable header yields zero rows — the
+    ``spark.sql.files.ignoreCorruptFiles`` posture at block
+    granularity, for when one flipped block must not kill a
     1000-executor ingest. Default OFF: silent data loss is the wrong
     default, and the maintenance integrity checks rely on strict
     reads. Mutually exclusive with ``search_terms`` (the push-down
@@ -517,53 +589,37 @@ def read_boom(
             "FastSearch byte-scan assumes intact containers — salvage "
             "the tree first, then search"
         )
+    max_bytes = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    bins = _pack(_boom_ranges(path, max_bytes), spark.sparkContext.defaultParallelism)
 
-    def rows_of(data: bytes) -> Iterable[tuple]:
-        if skip_corrupt:
-            # file-level fallback on top of block-level resync: a
-            # mutated header can even yield a DIFFERENT valid schema
-            # whose records don't flatten — under salvage semantics
-            # that file contributes zero rows, it never kills the task
-            try:
-                return list(flatten_log_blocks(read_container_resync(data)))
-            except Exception:  # noqa: BLE001
-                return []
-        if search_terms is not None:
-            return scan_boom_bytes(
-                data,
-                search_terms,
-                match_all=match_all,
-                case_insensitive=case_insensitive,
-                start_ms=start_ms,
-                end_ms=end_ms,
+    def rows_of(p: str, start: int, end: int) -> Iterable[tuple]:
+        if not skip_corrupt:
+            return scan_boom_range(
+                p, start, end, search_terms, match_all, case_insensitive
             )
-        return flatten_log_blocks(read_container(data))
+        # file-level fallback on top of block-level resync: a mutated
+        # header can even yield a DIFFERENT valid schema whose records
+        # don't flatten — under salvage semantics that range contributes
+        # zero rows, it never kills the task
+        try:
+            with open(p, "rb") as f, mmap.mmap(
+                f.fileno(), 0, access=mmap.ACCESS_READ
+            ) as mm:
+                return list(flatten_log_blocks(read_container_resync(mm, start, end)))
+        except Exception:  # noqa: BLE001
+            return []
 
     def decode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         for pdf in batches:
-            for file_path, content in zip(pdf["path"], pdf["content"]):
-                yield _lines_frame(file_path, rows_of(bytes(content)))
+            for b in pdf["id"]:
+                for p, start, end in bins[b]:
+                    yield _lines_frame(p, rows_of(p, start, end))
 
-    reader = spark.read.format("binaryFile").option("pathGlobFilter", "*.bm")
-    # recursive=True reads a whole tree from ONE root path, which Spark
-    # lists driver-side in milliseconds. More paths than
-    # spark.sql.sources.parallelPartitionDiscovery.threshold would
-    # instead be listed by a cluster job with one task per path (r12
-    # profile: a 720-task, multi-second "load" job to list 1251 tiny
-    # files) — pure overhead for directories the caller has just
-    # listed. So the threshold covers the path count for this load()
-    # alone (the file index lists eagerly inside it).
-    if recursive:
-        reader = reader.option("recursiveFileLookup", "true")
-    paths = [path] if isinstance(path, str) else list(path)
-    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-    saved = spark.conf.get(key)
-    spark.conf.set(key, str(max(len(paths), int(saved))))
-    try:
-        binary = reader.load(paths)
-    finally:
-        spark.conf.set(key, saved)
-    return binary.select("path", "content").mapInPandas(decode, schema=LOG_SCHEMA)
+    # spark.range, not createDataFrame(ranges): it needs no Arrow or
+    # Python worker on the driver and runs no job at load
+    return spark.range(len(bins), numPartitions=len(bins)).mapInPandas(
+        decode, schema=LOG_SCHEMA
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -641,29 +697,22 @@ def write_boom_stream(
     One logBlock (= one deflate container block) is flushed per distinct
     second, so memory is bounded by one second of lines regardless of
     input size — this is what lets compaction run executor-side over an
-    arbitrarily large sorted partition. Returns the line count.
+    arbitrarily large sorted partition. Block numbers count the seconds
+    from 0; the encoding is :func:`write_reboom_stream`'s. Returns the
+    line count.
     """
-    with open(path, "wb") as f:
-        f.write(container_header_bytes(BOOM_SCHEMA_JSON, "deflate", sync))
-        n = 0
-        block_no = 0
-        cur_second: int | None = None
-        blk: list[tuple] = []
+
+    def numbered():
+        block_no, cur_second = -1, None
         for line in lines:
-            ts, message = line[0], line[1]
+            ts = line[0]
+            if ts // 1000 != cur_second:
+                cur_second = ts // 1000
+                block_no += 1
             event_id = line[2] if len(line) > 2 else 0
-            sec = ts // 1000
-            if sec != cur_second:
-                if cur_second is not None:
-                    _write_block(f, sync, cur_second, create_time, block_no, blk)
-                    block_no += 1
-                cur_second = sec
-                blk = []
-            blk.append((ts, message, event_id))
-            n += 1
-        if cur_second is not None:
-            _write_block(f, sync, cur_second, create_time, block_no, blk)
-    return n
+            yield ts, line[1], event_id, create_time, block_no
+
+    return write_reboom_stream(path, numbered(), sync=sync)
 
 
 def write_reboom_stream(
@@ -758,8 +807,7 @@ def text_to_boom(
         F.expr("substring(value, instr(value, ' ') + 1)").alias("message"),
     ).filter(F.col("ts").isNotNull())
 
-    def write_partition(idx_rows):
-        idx, rows = idx_rows
+    def write_partition(idx, rows):
         rows = list(rows)
         if rows:
             write_boom_local(
@@ -769,11 +817,7 @@ def text_to_boom(
             )
         return [len(rows)]
 
-    counts = (
-        parsed.rdd.mapPartitionsWithIndex(lambda i, it: write_partition((i, it)))
-        .collect()
-    )
-    return sum(counts)
+    return sum(parsed.rdd.mapPartitionsWithIndex(write_partition).collect())
 
 
 def compact_boom_dir(
@@ -889,99 +933,3 @@ def write_boom_tree(
         .applyInPandas(write_group, schema=count_schema)
     )
     return sum(r["n"] for r in counts.collect())
-
-
-# ---------------------------------------------------------------------------
-# sync-marker splitting (large-file parallelism)
-# ---------------------------------------------------------------------------
-
-
-def scan_boom_range(
-    path: str,
-    start: int,
-    end: int,
-    search_terms: list[str] | None = None,
-    match_all: bool = False,
-    case_insensitive: bool = False,
-) -> Iterator[tuple]:
-    """Flattened lines of the blocks one BYTE RANGE ``[start, end)`` of
-    a .bm file owns — the Avro split algorithm (the reference reads
-    whole files per mapper via ``AvroBlockInputFormat``; real Avro
-    readers split). A range owns the blocks whose preceding sync marker
-    starts inside it (:func:`iter_blocks`), so the ranges of any split
-    of a file together return exactly its whole-file rows, each once.
-
-    Strict like the whole-file read: a damaged block the range owns, or
-    the damaged block right after its last one, raises; it is never
-    skipped as a false marker match. mmap keeps memory at the touched
-    pages, not the file size. The optional ``search_terms`` push the
-    FastSearch block byte-scan into each range (see
-    :func:`scan_boom_bytes`).
-    """
-    import mmap
-
-    with open(path, "rb") as f:
-        with mmap.mmap(f.fileno(), 0, access=mmap.ACCESS_READ) as mm:
-            yield from _scan(
-                iter_blocks(mm, start, end), search_terms, match_all, case_insensitive
-            )
-
-
-def read_boom_split(
-    spark: SparkSession,
-    path: str,
-    split_bytes: int = 64 * 1024 * 1024,
-    search_terms: list[str] | None = None,
-    match_all: bool = False,
-    case_insensitive: bool = False,
-) -> DataFrame:
-    """Distributed .bm read with SYNC-MARKER SPLITTING: multi-GB files
-    fan out across ``ceil(size / split_bytes)`` tasks instead of one
-    task per file (``read_boom``'s per-file parallelism, which matches
-    the reference's hourly part files but not a consolidated archive).
-    Parity target: the reference's splittable reader
-    ``mapreduce/boom/BoomIndividualInputFormat.java:1`` /
-    ``BoomIndividualRecordReader.java:1`` (isSplitable=true, FileSplit
-    ranges) — same ownership rule, Spark-side.
-
-    The driver lists files and fabricates byte ranges; each task mmap's
-    its file and decodes only its range's blocks
-    (:func:`scan_boom_range`). The result is exactly ``read_boom``'s
-    for any ``split_bytes``, or the read fails: a damaged block fails
-    its task with an error naming the file, as ``read_boom`` does.
-    Paths must be reachable from executors (shared FS / mount — the
-    same contract as the tree writers).
-    """
-    import os as _os
-
-    files = []
-    if _os.path.isdir(path):
-        for root, _dirs, names in _os.walk(path):
-            files += [
-                _os.path.join(root, f) for f in names if f.endswith(".bm")
-            ]
-    else:
-        files = [path]
-    ranges = []
-    for f in sorted(files):
-        size = _os.path.getsize(f)
-        start = 0
-        while start < size:
-            ranges.append((f, start, min(start + split_bytes, size)))
-            start += split_bytes
-    rdf = spark.createDataFrame(ranges, "path string, start long, end long")
-
-    def decode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            for p, s, e in zip(pdf["path"], pdf["start"], pdf["end"]):
-                rows = scan_boom_range(
-                    str(p), int(s), int(e),
-                    search_terms=search_terms,
-                    match_all=match_all,
-                    case_insensitive=case_insensitive,
-                )
-                yield _lines_frame(p, rows)
-
-    return rdf.repartition(max(len(ranges), 1)).mapInPandas(
-        decode, schema=LOG_SCHEMA
-    )

@@ -23,3 +23,13 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture()
+def max_partition_bytes(spark):
+    """Set ``spark.sql.files.maxPartitionBytes`` for one test: the size
+    ``read_boom`` cuts .bm files into ranges of. Restored afterwards."""
+    key = "spark.sql.files.maxPartitionBytes"
+    saved = spark.conf.get(key)
+    yield lambda n: spark.conf.set(key, str(n))
+    spark.conf.set(key, saved)

@@ -270,7 +270,7 @@ def test_spark_pushdown_read_matches_unpushed(spark):
         cond = None
         for t in terms:
             c = (
-                F.upper(F.col("message")).contains(t.upper())
+                F.lower(F.col("message")).contains(t.lower())
                 if ci
                 else F.col("message").contains(t)
             )
@@ -328,12 +328,12 @@ def test_sync_split_ranges_partition_all_blocks(tmp_path):
     assert sorted(got) == sorted(r for r in want if term in r[1])
 
 
-def test_read_boom_split_distributed(spark, tmp_path):
-    """The ranged DataFrame reader equals read_boom on the same tree and
-    actually fans a single large file across multiple tasks."""
+def test_read_boom_split_distributed(spark, tmp_path, max_partition_bytes):
+    """read_boom under a small maxPartitionBytes equals the whole-file
+    read on the same tree and actually fans a single large file across
+    multiple tasks."""
     from bb_bigdata_log_tools_spark.sources.boom import (
         read_boom,
-        read_boom_split,
         write_boom_stream,
     )
 
@@ -347,7 +347,8 @@ def test_read_boom_split_distributed(spark, tmp_path):
     ]
     write_boom_stream(path, iter(lines))
     full = sorted(tuple(r) for r in read_boom(spark, str(d)).collect())
-    split = read_boom_split(spark, str(d), split_bytes=1500)
+    max_partition_bytes(1500)
+    split = read_boom(spark, str(d))
     got = sorted(tuple(r) for r in split.collect())
     assert got == full and len(got) == len(lines)
     assert split.rdd.getNumPartitions() > 3

@@ -1,6 +1,8 @@
 """The one Avro container reader behind every .bm and .avro read: ranged
 reads are as strict as the whole-file read, and an unsupported codec
-fails loudly on every read path."""
+fails loudly on every read path. ``read_boom``, the one distributed
+reader, returns exactly the per-file decode for any split size, lists
+files by Spark's naming rule and packs ranges across tasks."""
 
 from __future__ import annotations
 
@@ -13,7 +15,7 @@ from bb_bigdata_log_tools_spark.sources import avro_generic as ag
 from bb_bigdata_log_tools_spark.sources.boom import (
     BOOM_SCHEMA_JSON,
     flatten_log_blocks,
-    read_boom_split,
+    read_boom,
     read_container,
     read_header,
     scan_boom_bytes,
@@ -81,7 +83,7 @@ def test_ranged_reads_fail_loudly_on_damage(tmp_path):
     assert checked == 4 * 60 * len(SPLITS) and raised > checked // 2
 
 
-def test_read_boom_split_damage_names_file(spark, tmp_path):
+def test_read_boom_split_damage_names_file(spark, tmp_path, max_partition_bytes):
     """A strict split read of a damaged file fails, naming the file."""
     from boom_damage import damage_block
 
@@ -91,7 +93,8 @@ def test_read_boom_split_damage_names_file(spark, tmp_path):
     write_boom_local(path, _corpus(random.Random(3)))
     damage_block(path)
     with pytest.raises(Exception, match="cannot decode .bm file .*part-00000.bm"):
-        read_boom_split(spark, str(d), split_bytes=64).collect()
+        max_partition_bytes(64)
+        read_boom(spark, str(d)).collect()
 
 
 @pytest.fixture()
@@ -128,3 +131,153 @@ def test_avro_block_scan_reports_unsupported_codec(spark, snappy_file):
     rows = ag.avro_block_scan(spark, os.path.dirname(path)).collect()
     assert len(rows) == 30
     assert {r.codec for r in rows} == {"snappy"}
+
+
+HOUR_MS = 3_600_000
+T0 = 1_699_920_000_000  # 2023-11-14 00:00 UTC
+
+
+def _hour_tree(root, hours: int = 6) -> list[str]:
+    """An hourly ``<date>/<HH>/comp/data/part-*.bm`` tree of multi-block
+    files; returns the data directories in hour order."""
+    rng = random.Random(11)
+    dirs = []
+    for h in range(hours):
+        d = root / "20231114" / f"{h:02d}" / "comp" / "data"
+        d.mkdir(parents=True)
+        lines = [
+            (T0 + h * HOUR_MS + s * 1000 + rng.randrange(1000),
+             f"h{h} s{s} i{i} " + "z" * rng.randrange(40), i)
+            for s in range(0, 3600, 90)
+            for i in range(rng.randrange(1, 6))
+        ]
+        write_boom_local(str(d / f"part-00000.{h:02d}.bm"), lines)
+        dirs.append(str(d))
+    return dirs
+
+
+def _rows(df) -> list[tuple]:
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_read_boom_equals_local_decode(spark, tmp_path, max_partition_bytes):
+    """read_boom returns exactly the per-file read_boom_local decode for
+    a directory list, a glob, a recursive root and a single file, at
+    whole-file and sub-block split sizes. A strict read of a damaged file
+    raises naming it at every split size; salvage on whole-file ranges
+    returns the whole-file salvage walk."""
+    from boom_damage import damage_block
+
+    from bb_bigdata_log_tools_spark.sources.boom import (
+        read_boom_local,
+        read_container_resync,
+    )
+
+    dirs = _hour_tree(tmp_path / "tree")
+    files = [os.path.join(d, os.listdir(d)[0]) for d in dirs]
+    want = sorted(r for f in files for r in read_boom_local(f))
+    paths = {
+        "list": dirs,
+        "glob": str(tmp_path / "tree" / "*" / "*" / "comp" / "data"),
+        "root": str(tmp_path / "tree"),
+    }
+    largest = max(os.path.getsize(f) for f in files)
+    for split in (largest, 1500, 257):
+        max_partition_bytes(split)
+        for kind, path in paths.items():
+            assert _rows(read_boom(spark, path)) == want, (split, kind)
+        assert _rows(read_boom(spark, files[2])) == sorted(read_boom_local(files[2]))
+
+    before = read_boom_local(files[3])
+    damage_block(files[3])
+    for split in (largest, 1500, 257):
+        max_partition_bytes(split)
+        with pytest.raises(Exception, match=f"cannot decode .bm file {files[3]}"):
+            read_boom(spark, dirs).collect()
+    max_partition_bytes(largest)
+    with open(files[3], "rb") as f:
+        salvaged = list(flatten_log_blocks(read_container_resync(f.read())))
+    intact = [r for f in files if f != files[3] for r in read_boom_local(f)]
+    assert _rows(read_boom(spark, dirs, skip_corrupt=True)) == sorted(intact + salvaged)
+    assert 0 < len(salvaged) < len(before)
+
+
+def test_read_boom_listing_rule(spark, tmp_path):
+    """Directories are walked recursively; names starting with ``_`` or
+    ``.`` and non-``*.bm`` files are skipped; globs and a single file
+    work; a path that matches nothing raises."""
+    root = tmp_path / "root"
+    for rel in ("a/part-0.bm", "a/b/c/part-1.bm", "part-2.bm", "_temporary/0/part-3.bm",
+                ".x/part-4.bm", "a/_a.bm", "a/.b.bm", "a/part-5.bm.tmp"):
+        (root / rel).parent.mkdir(parents=True, exist_ok=True)
+        write_boom_local(str(root / rel), [(T0, rel, 0)])
+
+    def read(path):
+        return sorted(r.message for r in read_boom(spark, path).collect())
+
+    assert read(str(root)) == ["a/b/c/part-1.bm", "a/part-0.bm", "part-2.bm"]
+    assert read(str(root / "a" / "*.bm")) == ["a/part-0.bm"]
+    assert read(str(root / "a" / "_a.bm")) == []
+    assert read([str(root / "a" / "b"), str(root / "part-2.bm")]) == [
+        "a/b/c/part-1.bm", "part-2.bm"]
+    with pytest.raises(FileNotFoundError):
+        read_boom(spark, str(root / "missing"))
+    with pytest.raises(FileNotFoundError):
+        read_boom(spark, str(root / "nothing" / "*"))
+
+
+def test_read_boom_packs_ranges_across_tasks(spark, tmp_path, max_partition_bytes):
+    """48 equal files pack into min(48, defaultParallelism) partitions;
+    one file cut into 20 ranges spreads over every partition. Both
+    return the whole-file rows."""
+    from pyspark.sql import functions as F
+
+    from bb_bigdata_log_tools_spark.sources.boom import read_boom_local
+
+    par = spark.sparkContext.defaultParallelism
+    many = tmp_path / "many"
+    many.mkdir()
+    for h in range(48):
+        write_boom_local(str(many / f"part-{h:02d}.bm"),
+                         [(T0 + h * HOUR_MS + s * 1000, f"h{h:02d} s{s:03d}", 0)
+                          for s in range(100)])
+    df = read_boom(spark, str(many))
+    assert df.rdd.getNumPartitions() == min(48, par)
+    assert _rows(df) == sorted(
+        r for f in sorted(many.iterdir()) for r in read_boom_local(str(f)))
+
+    one = tmp_path / "one"
+    one.mkdir()
+    path = str(one / "part-00000.bm")
+    write_boom_local(path, [(T0 + s * 1000, f"s{s} " + "w" * (s % 50), 0)
+                            for s in range(2000)])
+    max_partition_bytes(-(-os.path.getsize(path) // 20))
+    df = read_boom(spark, path)
+    assert df.rdd.getNumPartitions() == min(20, par)
+    per_task = df.groupBy(F.spark_partition_id()).count().collect()
+    assert len(per_task) == min(20, par)
+    assert _rows(df) == sorted(read_boom_local(path))
+
+
+def test_read_boom_case_folding_pushdown_equals_multisearch(spark, tmp_path):
+    """Pushed search equals logops.multisearch over a plain read on the
+    lines where upper() and lower() disagree (ß, ſ, İ, KELVIN SIGN), in
+    both match modes and both case modes."""
+    from bb_bigdata_log_tools_spark.operators import logops
+
+    d = tmp_path / "fold"
+    d.mkdir()
+    messages = ["Straße gesperrt", "strasse offen", "ſtraſſe alt", "İstanbul hub",
+                "ISTANBUL HUB", "cooled to 4 \u212a", "KELVIN k", "plain line"]
+    write_boom_local(str(d / "part-0.bm"),
+                     [(T0 + i * 1000, m, i) for i, m in enumerate(messages)])
+    plain = read_boom(spark, str(d))
+    for terms in (["ss"], ["SS", "ß"], ["ſ", "S"], ["i"], ["İ"], ["k"], ["K", "hub"]):
+        for match_all in (False, True):
+            for ci in (False, True):
+                want = logops.multisearch(plain, terms, case_insensitive=ci,
+                                          match_all=match_all)
+                got = read_boom(spark, str(d), search_terms=terms,
+                                match_all=match_all, case_insensitive=ci)
+                assert _rows(got.select(*want.columns)) == _rows(want), (
+                    terms, match_all, ci)

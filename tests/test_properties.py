@@ -39,6 +39,22 @@ GOLDEN_CORPUS = [
     ])
 ]
 
+# Lines whose case folding differs between upper() and lower(): ß
+# upper-cases to SS, ſ to S, while U+0130 (İ) and U+212A (KELVIN SIGN)
+# lower-case to ASCII i and k.
+FOLDING_CORPUS = [
+    (1330423200000 + 997 * i, msg, i)
+    for i, msg in enumerate([
+        "Straße gesperrt",
+        "strasse offen",
+        "ſtraſſe alt",
+        "İstanbul hub",
+        "ISTANBUL HUB",
+        "cooled to 4 \u212a",
+        "plain line",
+    ])
+]
+
 MESSAGES = st.text(
     alphabet=st.characters(blacklist_categories=("Cs",), blacklist_characters="\r\n"),
     min_size=0,
@@ -321,9 +337,15 @@ def test_sync_split_partition_invariance(lines, split, terms, match_all, ci):
 @example(GOLDEN_CORPUS, ["line", "case"], True, False)
 @example(GOLDEN_CORPUS, ["contains", "Greek"], False, False)
 @example(GOLDEN_CORPUS, ["nosuchterm"], False, False)
+@example(FOLDING_CORPUS, ["SS"], False, True)
+@example(FOLDING_CORPUS, ["ſ", "S"], True, True)
+@example(FOLDING_CORPUS, ["i"], False, True)
+@example(FOLDING_CORPUS, ["K"], False, True)
 def test_pushdown_scan_equals_filter_random(lines, terms, match_all, ci):
     """scan_boom_bytes == read-then-filter for ANY corpus, ANY terms,
-    both match modes, both case modes (incl. unicode fallback)."""
+    both match modes, both case modes (incl. unicode fallback). The
+    case-insensitive oracle lower-cases both sides, as Spark's lower()
+    does in logops."""
     import os
     import tempfile
 
@@ -343,7 +365,7 @@ def test_pushdown_scan_equals_filter_random(lines, terms, match_all, ci):
         want = sorted(
             r for r in rows
             if agg(
-                (t.upper() in r[1].upper()) if ci else (t in r[1])
+                (t.lower() in r[1].lower()) if ci else (t in r[1])
                 for t in terms
             )
         )

@@ -84,28 +84,6 @@ def test_format_all_styles(spark):
     assert _one(spark, format_timestamp(F.lit(ms), "yyyy/MM/dd")) == "2012/02/28"
 
 
-def test_multisearch_rlike_equals_contains(spark):
-    from bb_bigdata_log_tools_spark.operators.logops import (
-        multisearch,
-        multisearch_rlike,
-    )
-
-    rows = [
-        (1000 + i, m, 0, 0, 0, i)
-        for i, m in enumerate(
-            ["alpha beta", "beta gamma", "delta", "ALPHA x", "a.b regex meta"]
-        )
-    ]
-    df = spark.createDataFrame(
-        rows, "ts long, message string, event_id int, create_time long, block_no long, line_no long"
-    )
-    for terms in [["alpha", "gamma"], ["a.b"], ["ALPHA"]]:
-        for ci in [False, True]:
-            a = {tuple(r) for r in multisearch(df, terms, case_insensitive=ci).collect()}
-            b = {tuple(r) for r in multisearch_rlike(df, terms, case_insensitive=ci).collect()}
-            assert a == b, (terms, ci)
-
-
 def test_bad_lines_split(spark):
     from bb_bigdata_log_tools_spark.operators.logops import bad_lines, format_and_sort
 
