@@ -271,6 +271,30 @@ def _only(rules: list[dict], ftype: str) -> bool:
 # ---------------------------------------------------------------------------
 
 
+def _publish_verified(job: str, tmp: str, final: str, n: int, source: str) -> None:
+    """Rename the written container ``tmp`` to ``final`` and remove the
+    ``source`` directory, only once ``tmp`` re-decodes to the ``n`` lines
+    written. An unreadable or short ``tmp`` is deleted and the job fails,
+    keeping ``source``."""
+    from bb_bigdata_log_tools_spark.sources.boom import count_boom_lines
+
+    kept = f"{os.path.basename(source)} retained"
+    try:
+        got = count_boom_lines(tmp)
+    except Exception as e:
+        os.unlink(tmp)
+        raise RuntimeError(
+            f"{job} verification failed: {tmp} is unreadable ({e}); {kept}"
+        ) from e
+    if got != n:
+        os.unlink(tmp)
+        raise RuntimeError(
+            f"{job} verification failed: wrote {n} lines, re-read {got}; {kept}"
+        )
+    os.rename(tmp, final)
+    shutil.rmtree(source)
+
+
 def merge_incoming_dir(spark: SparkSession, hour_comp_dir: str) -> int:
     """The merge job: compact a settled ``incoming`` directory's part
     files into one .bm in ``data``, then remove ``incoming``.
@@ -288,10 +312,7 @@ def merge_incoming_dir(spark: SparkSession, hour_comp_dir: str) -> int:
     a half-written one; a truncated/corrupt merge raises and leaves
     ``incoming`` intact.
     """
-    from bb_bigdata_log_tools_spark.sources.boom import (
-        compact_boom_dir,
-        count_boom_lines,
-    )
+    from bb_bigdata_log_tools_spark.sources.boom import compact_boom_dir
 
     incoming = os.path.join(hour_comp_dir, "incoming")
     data = os.path.join(hour_comp_dir, "data")
@@ -299,22 +320,7 @@ def merge_incoming_dir(spark: SparkSession, hour_comp_dir: str) -> int:
     final = os.path.join(data, "part-merged.00000.bm")
     tmp = final + ".tmp"
     n = compact_boom_dir(spark, incoming, tmp)
-    try:
-        got = count_boom_lines(tmp)
-    except Exception as e:
-        os.unlink(tmp)
-        raise RuntimeError(
-            f"merge verification failed: {tmp} is unreadable ({e}); "
-            f"incoming retained"
-        ) from e
-    if got != n:
-        os.unlink(tmp)
-        raise RuntimeError(
-            f"merge verification failed: wrote {n} lines, re-read {got}; "
-            f"incoming retained"
-        )
-    os.rename(tmp, final)
-    shutil.rmtree(incoming)
+    _publish_verified("merge", tmp, final, n, incoming)
     return n
 
 
@@ -334,11 +340,7 @@ def filter_archive_dir(
     :func:`merge_incoming_dir`: ``data`` is deleted only after the
     archive container re-decodes to the written line count.
     """
-    from bb_bigdata_log_tools_spark.sources.boom import (
-        count_boom_lines,
-        read_boom,
-        write_reboom_stream,
-    )
+    from bb_bigdata_log_tools_spark.sources.boom import read_boom, write_reboom_stream
 
     data = os.path.join(hour_comp_dir, "data")
     archive = os.path.join(hour_comp_dir, "archive")
@@ -362,22 +364,7 @@ def filter_archive_dir(
         yield write_reboom_stream(tmp, tuples)
 
     n = sum(kept.rdd.mapPartitions(write_part).collect())
-    try:
-        got = count_boom_lines(tmp)
-    except Exception as e:
-        os.unlink(tmp)
-        raise RuntimeError(
-            f"archive verification failed: {tmp} is unreadable ({e}); "
-            f"data retained"
-        ) from e
-    if got != n:
-        os.unlink(tmp)
-        raise RuntimeError(
-            f"archive verification failed: wrote {n} lines, re-read {got}; "
-            f"data retained"
-        )
-    os.rename(tmp, final)
-    shutil.rmtree(data)
+    _publish_verified("archive", tmp, final, n, data)
     return n
 
 

@@ -16,13 +16,14 @@ Parity targets (re-derived from the PUBLIC Avro 1.x container spec):
   parse/serialize (``read_header`` / ``container_header_bytes``), shared
   with the boom source along with its block walker (``iter_blocks``).
 
-Spark integration mirrors the boom source: ``binaryFile`` +
-``mapInPandas`` so every file is processed Arrow-batched on an
-executor; the merge writes through one ordered partition with a
+Spark integration is the boom source's one distributed read
+(``boom.fan_out``): block scan and merge read whole files, as they
+number blocks per file, and the decode splits a large file like a
+``.bm``. The merge writes through one ordered partition with a
 streaming writer (bounded memory), the same shape as
-``compact_boom_dir``. Schema translation maps the embedded writer
-schema to Spark types so arbitrary-schema containers (not just boom's
-logBlock) decode to typed DataFrames.
+``compact_boom_dir``. Schema translation maps the embedded writer schema
+to Spark types so arbitrary-schema containers (not just boom's logBlock)
+decode to typed DataFrames.
 """
 
 from __future__ import annotations
@@ -30,17 +31,12 @@ from __future__ import annotations
 import json
 import os
 import struct
-import zlib
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
-from bb_bigdata_log_tools_spark.sources.boom import (
-    _zigzag,
-    container_header_bytes,
-    iter_blocks,
-    read_header,
-)
+from bb_bigdata_log_tools_spark.sources import boom
+from bb_bigdata_log_tools_spark.sources.boom import container_header_bytes, read_header
 
 
 # ---------------------------------------------------------------------------
@@ -52,7 +48,7 @@ def scan_blocks(data: bytes) -> Iterator[tuple[int, int, int, bytes]]:
     """Yield (block_idx, record_count, byte_size, raw_payload) for each
     block — the payload stays compressed; nothing is deserialized.
     This is the AvroBlockRecordReader role."""
-    for idx, (_schema, _codec, count, raw) in enumerate(iter_blocks(data)):
+    for idx, (_schema, _codec, count, raw) in enumerate(boom.iter_blocks(data)):
         yield idx, count, len(raw), raw
 
 
@@ -63,27 +59,19 @@ def avro_block_scan(spark: SparkSession, path: str, glob: str = "*.avro") -> Dat
     use case (decide which blocks to process without deserializing)."""
     import pandas as pd
 
-    def scan(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            for p, content in zip(pdf["path"], pdf["content"]):
-                name = os.path.basename(str(p))
-                blocks = enumerate(iter_blocks(bytes(content)))
-                yield pd.DataFrame(
-                    [(name, i, n, len(raw), codec) for i, (_s, codec, n, raw) in blocks],
-                    columns=["file", "block_idx", "record_count", "byte_size", "codec"],
-                )
+    def scan(p: str, _start: int, _end: int) -> "pd.DataFrame":
+        name = os.path.basename(p)
+        with boom.mapped(p) as mm:
+            blocks = enumerate(boom.iter_blocks(mm))
+            return pd.DataFrame(
+                [(name, i, n, len(raw), codec) for i, (_s, codec, n, raw) in blocks],
+                columns=["file", "block_idx", "record_count", "byte_size", "codec"],
+            )
 
-    binary = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
-        .load(path)
-        .select("path", "content")
+    schema = (
+        "file string, block_idx long, record_count long, byte_size long, codec string"
     )
-    return binary.mapInPandas(
-        scan,
-        schema="file string, block_idx long, record_count long, "
-        "byte_size long, codec string",
-    )
+    return boom.fan_out(spark, boom.container_ranges(path, glob), scan, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -99,7 +87,7 @@ class _Encoder:
         self.out = bytearray()
 
     def write_long(self, n: int) -> None:
-        self.out += _zigzag(n)
+        self.out += boom._zigzag(n)
 
     write_int = write_long
 
@@ -171,12 +159,7 @@ def block_bytes(
     enc = _Encoder()
     for row in rows:
         enc.encode(schema, row)
-    payload = bytes(enc.out)
-    if codec == "deflate":
-        payload = zlib.compress(payload, 6)[2:-4]
-    elif codec != "null":
-        raise ValueError(f"unsupported codec: {codec}")
-    return _zigzag(len(rows)) + _zigzag(len(payload)) + payload + sync
+    return boom.block_frame(len(rows), boom.deflate(codec, bytes(enc.out)), sync)
 
 
 def write_avro_local(
@@ -208,10 +191,11 @@ def merge_avro_files(spark: SparkSession, paths: list[str], out_path: str) -> in
     marker, payloads byte-identical (never decompressed).
 
     Distributed shape: each input file's blocks are extracted on an
-    executor (binaryFile scan); the ordered segments flow through one
-    sorted partition into a streaming writer, so driver memory stays
-    O(1) and executor memory O(largest single block) — the same pattern
-    as ``compact_boom_dir``. Returns the merged record count.
+    executor (one whole-file range each, :func:`fan_out`); the ordered
+    segments flow through one sorted partition into a streaming writer,
+    so driver memory stays O(1) and executor memory O(largest single
+    block) — the same pattern as ``compact_boom_dir``. Returns the
+    merged record count.
 
     Parity: ``mapreduce/avro/AvroBlockWriterMapper.java`` (keep one
     header, clean up sync markers) over BinaryOutputFormat.
@@ -222,38 +206,28 @@ def merge_avro_files(spark: SparkSession, paths: list[str], out_path: str) -> in
         raise ValueError("no input files")
     headers = []
     for p in paths:
-        with open(p, "rb") as f:
-            headers.append(read_header(f.read(1 << 20)))
-    schema0, codec0 = headers[0][0], headers[0][1]
-    for p, (schema, codec, _s, _e) in zip(paths[1:], headers[1:]):
-        if schema != schema0 or codec != codec0:
+        with boom.mapped(p) as mm:
+            headers.append(read_header(mm)[:2])
+    for p, schema_codec in zip(paths[1:], headers[1:]):
+        if schema_codec != headers[0]:
             raise ValueError(f"schema/codec mismatch in merge input: {p}")
+    schema0, codec0 = headers[0]
 
-    order = {os.path.realpath(p): i for i, p in enumerate(paths)}
+    order = {p: i for i, p in enumerate(paths)}
 
-    def extract(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            for p, content in zip(pdf["path"], pdf["content"]):
-                local = os.path.realpath(str(p).removeprefix("file:"))
-                data = bytes(content)
-                segs = [
-                    (
-                        order[local],
-                        i,
-                        n,
-                        _zigzag(n) + _zigzag(sz) + raw + MERGE_SYNC,
-                    )
-                    for i, n, sz, raw in scan_blocks(data)
-                ]
-                yield pd.DataFrame(
-                    segs, columns=["file_order", "block_idx", "record_count", "seg"]
-                )
+    def extract(p: str, _start: int, _end: int) -> "pd.DataFrame":
+        with boom.mapped(p) as mm:
+            segs = [
+                (order[p], i, n, boom.block_frame(n, raw, MERGE_SYNC))
+                for i, n, _sz, raw in scan_blocks(mm)
+            ]
+        return pd.DataFrame(
+            segs, columns=["file_order", "block_idx", "record_count", "seg"]
+        )
 
-    binary = spark.read.format("binaryFile").load(paths).select("path", "content")
-    segs = binary.mapInPandas(
-        extract,
-        schema="file_order int, block_idx long, record_count long, seg binary",
-    )
+    ranges = [(p, 0, os.path.getsize(p)) for p in paths]
+    schema = "file_order int, block_idx long, record_count long, seg binary"
+    segs = boom.fan_out(spark, ranges, extract, schema)
 
     header = container_header_bytes(
         json.dumps(schema0, separators=(",", ":")), codec0, MERGE_SYNC
@@ -329,32 +303,26 @@ def record_ddl(schema) -> str:
 
 def read_avro(spark: SparkSession, path: str, glob: str = "*.avro") -> DataFrame:
     """Decode an arbitrary-schema Avro container tree to a typed
-    DataFrame. The writer schema is taken from the first file's header
-    (all files must agree — standard single-schema layout); decode runs
-    Arrow-batched on executors via ``mapInPandas``."""
+    DataFrame. The writer schema is taken from the first listed file's
+    header on the driver, with no Spark job (all files must agree —
+    standard single-schema layout). The files are cut into byte ranges
+    of at most ``spark.sql.files.maxPartitionBytes``, each decoded
+    Arrow-batched on an executor through the strict ranged walk, so any
+    split size returns exactly the per-file decode. A path that matches
+    nothing raises ``FileNotFoundError``; one with no matching files,
+    ``ValueError``."""
     import pandas as pd
 
-    from bb_bigdata_log_tools_spark.sources.boom import read_container
-
-    binary = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
-        .load(path)
-        .select("content")
-    )
-    first = binary.limit(1).collect()
-    if not first:
+    ranges = boom.container_ranges(path, glob, spark)
+    if not ranges:
         raise ValueError(f"no avro files under {path}")
-    schema, _codec, _sync, _pos = read_header(bytes(first[0][0]))
-    ddl = record_ddl(schema)
+    with boom.mapped(ranges[0][0]) as mm:
+        schema = read_header(mm)[0]
     names = [f["name"] for f in schema["fields"]]
 
-    def decode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            for content in pdf["content"]:
-                recs = list(read_container(bytes(content)))
-                yield pd.DataFrame(
-                    [[r[n] for n in names] for r in recs], columns=names
-                )
+    def decode(p: str, start: int, end: int) -> "pd.DataFrame":
+        with boom.mapped(p) as mm:
+            recs = boom.read_container(mm, start, end)
+            return pd.DataFrame([[r[n] for n in names] for r in recs], columns=names)
 
-    return binary.mapInPandas(decode, schema=ddl)
+    return boom.fan_out(spark, ranges, decode, record_ddl(schema))

@@ -27,15 +27,19 @@ filters blocks and lines for both :func:`scan_boom_bytes` and
 :func:`scan_boom_range`. A strict read, whole-file or ranged, raises on
 a damaged block; salvage (``skip_corrupt``) is opt-in only.
 
-Spark integration: :func:`read_boom` is the one distributed reader. The
-driver cuts every file into byte ranges and packs them into about one
-task per core; executors decode each range through the same ranged walk
-(the Avro ``DataFileReader.sync/pastSync`` contract), so hourly part
-files and a consolidated archive alike return exactly the whole-file rows.
+Spark integration: :func:`fan_out` is the one distributed container
+read, here behind :func:`read_boom` and behind every ``avro_generic``
+read. The driver lists the files and cuts them into byte ranges; each
+task reads a bin of ranges through an mmap of its files. A ``.bm`` range
+decodes through the same ranged walk (the Avro
+``DataFileReader.sync/pastSync`` contract), so hourly part files and a
+consolidated archive alike return exactly the whole-file rows.
 """
 
 from __future__ import annotations
 
+import contextlib
+import fnmatch
 import glob
 import heapq
 import json
@@ -43,9 +47,10 @@ import mmap
 import os
 import struct
 import zlib
-from collections.abc import Iterable, Iterator
+from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from bb_bigdata_log_tools_spark.schema import LOG_COLUMNS, LOG_SCHEMA
 
@@ -186,6 +191,20 @@ def inflate(codec: str, raw: bytes) -> bytes:
     return raw
 
 
+def deflate(codec: str, payload: bytes) -> bytes:
+    """Compress one block payload: the inverse of :func:`inflate`."""
+    if codec == "deflate":
+        return zlib.compress(payload, 6)[2:-4]
+    if codec != "null":
+        raise ValueError(f"unsupported codec: {codec}")
+    return payload
+
+
+def block_frame(count: int, payload: bytes, sync: bytes) -> bytes:
+    """One container block: ``count | size | payload | sync``."""
+    return _zigzag(count) + _zigzag(len(payload)) + payload + sync
+
+
 def iter_blocks(
     buf, start: int = 0, end: int | None = None, salvage: bool = False
 ) -> Iterator[tuple[dict, str, int, bytes]]:
@@ -263,35 +282,31 @@ def iter_blocks(
         raise ValueError(f"corrupt container block at byte {pos}")
 
 
-def read_container_resync(
-    data, start: int = 0, end: int | None = None
+def read_container(
+    data, start: int = 0, end: int | None = None, salvage: bool = False
 ) -> Iterator[dict]:
-    """Decoded records of a salvage walk (:func:`iter_blocks` with
-    ``salvage=True``) over ``data`` or its byte range ``[start, end)``
-    (bytes or an mmap): the Avro container's sync markers exist so a
-    reader can recover mid-stream, so at 100 TB one flipped block need
-    not kill a 1000-executor job when the operator opts in. A block that
-    fails to inflate or decode drops the REST of that block only (varint
-    streams cannot re-align mid-block — the next sync is the recovery
-    point); an unreadable header or codec yields nothing. Never raises."""
+    """Decoded records of an Avro container (bytes or an mmap), or of
+    the blocks its byte range ``[start, end)`` owns (:func:`iter_blocks`).
+    Strict by default: a damaged block, header or codec raises.
+
+    ``salvage=True`` never raises: the Avro container's sync markers
+    exist so a reader can recover mid-stream, so at 100 TB one flipped
+    block need not kill a 1000-executor job when the operator opts in.
+    A block that fails to inflate or decode drops the REST of that block
+    only (varint streams cannot re-align mid-block — the next sync is
+    the recovery point); an unreadable header or codec yields nothing."""
     try:
-        for schema, codec, count, raw in iter_blocks(data, start, end, salvage=True):
+        for schema, codec, count, raw in iter_blocks(data, start, end, salvage):
             try:
                 inner = _Decoder(inflate(codec, raw))
                 for _ in range(count):
                     yield inner.decode(schema)
-            except Exception:  # noqa: BLE001 — skip the block's damaged tail
-                continue
-    except Exception:  # noqa: BLE001 — unreadable header or codec: nothing salvageable
-        return
-
-
-def read_container(data: bytes) -> Iterator[dict]:
-    """Yield decoded records from an Avro object-container byte string."""
-    for schema, codec, count, raw in iter_blocks(data):
-        inner = _Decoder(inflate(codec, raw))
-        for _ in range(count):
-            yield inner.decode(schema)
+            except Exception:  # noqa: BLE001 — salvage skips the block's damaged tail
+                if not salvage:
+                    raise
+    except Exception:  # noqa: BLE001 — salvage: unreadable header or codec
+        if not salvage:
+            raise
 
 
 #: UTF-8 of the only non-ASCII code points whose ``lower()`` holds ASCII
@@ -351,9 +366,12 @@ def _scan(
     end_ms: int | None = None,
 ) -> Iterator[tuple]:
     """Flattened lines of an :func:`iter_blocks` walk that pass the
-    FastSearch matcher and the block-second window. Only blocks that
-    pass the byte prefilter pay for a record decoder."""
+    FastSearch matcher and whose ``ts`` lies in ``[start_ms, end_ms)``
+    (``logops._time_window``). Only blocks that pass the byte prefilter
+    pay for a record decoder."""
     block_ok, line_ok = _matcher(search_terms, match_all, case_insensitive)
+    lo = float("-inf") if start_ms is None else start_ms
+    hi = float("inf") if end_ms is None else end_ms
     for schema, codec, count, raw in blocks:
         payload = inflate(codec, raw)
         if not block_ok(payload):
@@ -362,17 +380,14 @@ def _scan(
         for _ in range(count):
             rec = inner.decode(schema)
             ts_base = rec["second"] * 1000
-            if start_ms is not None and ts_base < start_ms:
-                continue
-            if end_ms is not None and ts_base >= end_ms:
-                continue
             create_time = rec["createTime"]
             block_no = rec["blockNumber"]
             for line_no, line in enumerate(rec["logLines"]):
+                ts = ts_base + line["ms"]
                 msg = line["message"]
-                if line_ok(msg):
+                if lo <= ts < hi and line_ok(msg):
                     yield (
-                        ts_base + line["ms"],
+                        ts,
                         msg,
                         int(line.get("eventId", 0) or 0),
                         create_time,
@@ -402,8 +417,8 @@ def scan_boom_bytes(
     Avro record walk for most blocks; (2) only matched blocks are
     decoded, then lines are substring-filtered exactly (see
     :func:`_matcher` for the match modes and the case-insensitive
-    fallback). ``start_ms``/``end_ms`` bound block seconds like
-    ``logdriver.search.start.time``/``end.time``.
+    fallback). ``start_ms``/``end_ms`` bound each line's ``ts`` to the
+    CLI's half-open window ``[start, end)``, as ``logops`` does.
     """
     return _scan(
         iter_blocks(data), search_terms, match_all, case_insensitive, start_ms, end_ms
@@ -421,18 +436,13 @@ def scan_boom_range(
     """Flattened lines of the blocks one BYTE RANGE ``[start, end)`` of
     a .bm file owns — the Avro split algorithm (the reference reads
     whole files per mapper via ``AvroBlockInputFormat``; real Avro
-    readers split). A range owns the blocks whose preceding sync marker
-    starts inside it (:func:`iter_blocks`), so the ranges of any split
-    of a file together return exactly its whole-file rows, each once.
-
-    Strict like the whole-file read: a damaged block the range owns, or
-    the damaged block right after its last one, raises; it is never
-    skipped as a false marker match. mmap keeps memory at the touched
-    pages, not the file size. The optional ``search_terms`` push the
-    FastSearch block byte-scan into each range (see
-    :func:`scan_boom_bytes`).
+    readers split). The ranges of any split of a file together return
+    exactly its whole-file rows, each once, and a damaged block raises
+    as in the whole-file read (the ownership and strictness rules of
+    :func:`iter_blocks`). The optional ``search_terms`` push the
+    FastSearch block byte-scan into each range (:func:`scan_boom_bytes`).
     """
-    with open(path, "rb") as f, mmap.mmap(f.fileno(), 0, access=mmap.ACCESS_READ) as mm:
+    with mapped(path) as mm:
         yield from _scan(
             iter_blocks(mm, start, end), search_terms, match_all, case_insensitive
         )
@@ -473,29 +483,25 @@ def count_boom_lines(path: str) -> int:
         return sum(1 for _ in flatten_log_blocks(read_container(f.read())))
 
 
-def _lines_frame(path: str, rows: Iterable[tuple]) -> "pd.DataFrame":
-    """``rows`` (flattened lines) as a pandas frame with the log columns.
-    A decode failure is re-raised naming the .bm file: one task decodes
-    many packed files or ranges, so the task alone does not point to the
-    damaged one."""
-    import pandas as pd
-
-    try:
-        rows = list(rows)
-    except Exception as exc:  # noqa: BLE001 — re-raised naming the file
-        raise ValueError(
-            f"cannot decode .bm file {path}: {type(exc).__name__}: {exc}"
-        ) from exc
-    return pd.DataFrame(rows, columns=LOG_COLUMNS)
+@contextlib.contextmanager
+def mapped(path: str) -> Iterator[mmap.mmap]:
+    """``path`` memory-mapped read-only: every distributed container read
+    touches only the pages it walks, never a copy of the whole file."""
+    with open(path, "rb") as f, mmap.mmap(f.fileno(), 0, access=mmap.ACCESS_READ) as mm:
+        yield mm
 
 
-def _boom_ranges(path: str | list[str], max_bytes: int) -> list[tuple[str, int, int]]:
-    """``(file, start, end)`` byte ranges of at most ``max_bytes`` that
-    cover the .bm files under ``path`` (one path or glob, or a list of
-    them), listed on the driver. Directories are walked recursively.
-    Files, and directories below a root, whose names start with ``_`` or
-    ``.`` are skipped, as Spark's file sources skip them (``_temporary``
-    attempt output, hidden files); only ``*.bm`` names are read, so an
+def container_ranges(
+    path: str | list[str], pattern: str = "*.bm", spark: SparkSession | None = None
+) -> list[tuple[str, int, int]]:
+    """``(file, start, end)`` byte ranges that cover the files under
+    ``path`` (one path or glob, or a list of them) whose names match
+    ``pattern``, listed on the driver: at most ``spark``'s
+    ``spark.sql.files.maxPartitionBytes`` each, or one per file when no
+    session is given. Directories are walked recursively. Files, and
+    directories below a root, whose names start with ``_`` or ``.`` are
+    skipped, as Spark's file sources skip them (``_temporary`` attempt
+    output, hidden files); only matching names are read, so an
     in-progress ``*.bm.tmp`` stays invisible. A path that matches
     nothing raises. An empty file still gets one range, so a strict read
     of it fails like any headerless file."""
@@ -504,24 +510,26 @@ def _boom_ranges(path: str | list[str], max_bytes: int) -> list[tuple[str, int, 
         return name.startswith(("_", "."))
 
     def wanted(name: str) -> bool:
-        return name.endswith(".bm") and not hidden(name)
+        return fnmatch.fnmatchcase(name, pattern) and not hidden(name)
 
     files = []
-    for pattern in [path] if isinstance(path, str) else path:
-        roots = sorted(glob.glob(pattern))
+    for pattern_path in [path] if isinstance(path, str) else path:
+        roots = sorted(glob.glob(pattern_path))
         if not roots:
-            raise FileNotFoundError(f"path does not exist: {pattern}")
+            raise FileNotFoundError(f"path does not exist: {pattern_path}")
         files += [r for r in roots if os.path.isfile(r) and wanted(os.path.basename(r))]
         for root in filter(os.path.isdir, roots):
             for d, dirs, names in os.walk(root):
                 dirs[:] = sorted(n for n in dirs if not hidden(n))
                 files += [os.path.join(d, n) for n in sorted(names) if wanted(n)]
+    max_bytes = None
+    if spark is not None:
+        max_bytes = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
     ranges = []
     for f in files:
         size = os.path.getsize(f)
-        ranges += [
-            (f, s, min(s + max_bytes, size)) for s in range(0, max(size, 1), max_bytes)
-        ]
+        step = max_bytes or max(size, 1)
+        ranges += [(f, s, min(s + step, size)) for s in range(0, max(size, 1), step)]
     return ranges
 
 
@@ -538,6 +546,40 @@ def _pack(ranges: list[tuple[str, int, int]], n_bins: int) -> list[list[tuple]]:
     return bins
 
 
+def fan_out(
+    spark: SparkSession,
+    ranges: list[tuple[str, int, int]],
+    read_range: Callable[[str, int, int], "pd.DataFrame"],
+    schema: str | StructType,
+) -> DataFrame:
+    """One distributed read of ``ranges``: they are packed into
+    ``min(#ranges, defaultParallelism)`` bins, and each task of
+    ``spark.range(n).mapInPandas`` turns the ranges of its bin into
+    frames of ``schema`` through ``read_range(file, start, end)``. A
+    failure is re-raised naming its file, as one task reads many. Paths
+    must be reachable from executors (shared FS / mount, as for writers)."""
+    bins = _pack(ranges, spark.sparkContext.defaultParallelism)
+
+    def decode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+        for pdf in batches:
+            for b in pdf["id"]:
+                for p, start, end in bins[b]:
+                    try:
+                        frame = read_range(p, start, end)
+                    except Exception as exc:  # noqa: BLE001 — re-raised, named
+                        name = f"{os.path.splitext(p)[1]} file {p}"
+                        raise ValueError(
+                            f"cannot decode {name}: {type(exc).__name__}: {exc}"
+                        ) from exc
+                    yield frame
+
+    # spark.range, not createDataFrame(ranges): it needs no Arrow or
+    # Python worker on the driver and runs no job at load
+    return spark.range(len(bins), numPartitions=len(bins)).mapInPandas(
+        decode, schema=schema
+    )
+
+
 def read_boom(
     spark: SparkSession,
     path: str | list[str],
@@ -551,15 +593,12 @@ def read_boom(
 
     ``path`` is one directory, file or glob, or a list of them read in
     ONE scan (the CLI passes every hourly directory its window resolves
-    to). The driver lists the files and cuts them into byte ranges of at
-    most ``spark.sql.files.maxPartitionBytes`` (:func:`_boom_ranges`),
-    then packs the ranges into ``min(#ranges, defaultParallelism)`` bins
-    (:func:`_pack`): no listing job, and a task count that stays flat as
-    the window grows while an archive fans out. Each task decodes one
-    bin through :func:`scan_boom_range` (the Avro split rule of the
-    reference's splittable ``BoomIndividualInputFormat``), so any split
-    size returns exactly the whole-file rows. Paths must be reachable
-    from executors (shared FS / mount, as for the tree writers).
+    to): the ``*.bm`` files are cut into byte ranges of at most
+    ``spark.sql.files.maxPartitionBytes`` (:func:`container_ranges`) and
+    read by :func:`fan_out`, each range through :func:`scan_boom_range`
+    (the Avro split rule of the reference's splittable
+    ``BoomIndividualInputFormat``), so any split size returns exactly
+    the whole-file rows.
 
     ``search_terms`` pushes a substring search INTO the decoder:
     non-matching container blocks are skipped on a byte-scan of the
@@ -569,15 +608,12 @@ def read_boom(
     everything then filtering with ``logops.multisearch``, so callers
     may use it as a drop-in accelerator.
 
-    A strict read that cannot decode a range fails with an error naming
-    its file (:func:`_lines_frame`).
-
     ``skip_corrupt=True`` opts into SALVAGE semantics for damaged
     trees: corrupt container blocks are resynced past via the Avro
-    sync markers (:func:`read_container_resync`) instead of failing the
-    task, and a file with an unreadable header yields zero rows — the
-    ``spark.sql.files.ignoreCorruptFiles`` posture at block
-    granularity, for when one flipped block must not kill a
+    sync markers (:func:`read_container` with ``salvage=True``) instead
+    of failing the task, and a file with an unreadable header yields
+    zero rows — the ``spark.sql.files.ignoreCorruptFiles`` posture at
+    block granularity, for when one flipped block must not kill a
     1000-executor ingest. Default OFF: silent data loss is the wrong
     default, and the maintenance integrity checks rely on strict
     reads. Mutually exclusive with ``search_terms`` (the push-down
@@ -589,37 +625,29 @@ def read_boom(
             "FastSearch byte-scan assumes intact containers — salvage "
             "the tree first, then search"
         )
-    max_bytes = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
-    bins = _pack(_boom_ranges(path, max_bytes), spark.sparkContext.defaultParallelism)
 
-    def rows_of(p: str, start: int, end: int) -> Iterable[tuple]:
+    def read_range(p: str, start: int, end: int) -> "pd.DataFrame":
+        import pandas as pd
+
         if not skip_corrupt:
-            return scan_boom_range(
+            rows = scan_boom_range(
                 p, start, end, search_terms, match_all, case_insensitive
             )
+            return pd.DataFrame(list(rows), columns=LOG_COLUMNS)
         # file-level fallback on top of block-level resync: a mutated
         # header can even yield a DIFFERENT valid schema whose records
         # don't flatten — under salvage semantics that range contributes
         # zero rows, it never kills the task
         try:
-            with open(p, "rb") as f, mmap.mmap(
-                f.fileno(), 0, access=mmap.ACCESS_READ
-            ) as mm:
-                return list(flatten_log_blocks(read_container_resync(mm, start, end)))
+            with mapped(p) as mm:
+                records = read_container(mm, start, end, salvage=True)
+                rows = list(flatten_log_blocks(records))
         except Exception:  # noqa: BLE001
-            return []
+            rows = []
+        return pd.DataFrame(rows, columns=LOG_COLUMNS)
 
-    def decode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            for b in pdf["id"]:
-                for p, start, end in bins[b]:
-                    yield _lines_frame(p, rows_of(p, start, end))
-
-    # spark.range, not createDataFrame(ranges): it needs no Arrow or
-    # Python worker on the driver and runs no job at load
-    return spark.range(len(bins), numPartitions=len(bins)).mapInPandas(
-        decode, schema=LOG_SCHEMA
-    )
+    ranges = container_ranges(path, spark=spark)
+    return fan_out(spark, ranges, read_range, LOG_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -679,10 +707,7 @@ def _write_block(
         body += _zigzag(ts % 1000) + _zigzag(event_id)
         body += _zigzag(len(mb)) + mb
     body += _zigzag(0)  # array terminator
-    compressed = zlib.compress(bytes(body), 6)[2:-4]  # raw deflate
-    f.write(_zigzag(1) + _zigzag(len(compressed)))
-    f.write(compressed)
-    f.write(sync)
+    f.write(block_frame(1, deflate("deflate", bytes(body)), sync))
 
 
 def write_boom_stream(
@@ -764,17 +789,8 @@ def write_boom_local(
     within-second input order preserved; delegates to the streaming
     writer for the container encoding.
     """
-    by_second: dict[int, list[tuple]] = {}
-    for line in lines:
-        ts, message = line[0], line[1]
-        event_id = line[2] if len(line) > 2 else 0
-        by_second.setdefault(ts // 1000, []).append((ts, message, event_id))
-
-    def ordered():
-        for _, blk_lines in sorted(by_second.items()):
-            yield from blk_lines
-
-    write_boom_stream(path, ordered(), create_time=create_time, sync=sync)
+    by_second = sorted(lines, key=lambda line: line[0] // 1000)  # stable
+    write_boom_stream(path, by_second, create_time=create_time, sync=sync)
 
 
 # ---------------------------------------------------------------------------
@@ -794,13 +810,11 @@ def text_to_boom(
     (``foreachPartition``) — distributed, driver never sees the data.
     Returns the number of lines converted.
     """
-    import os as _os
-
     from pyspark.sql import functions as F
 
     from bb_bigdata_log_tools_spark.functions.timestamps import parse_rfc5424
 
-    _os.makedirs(out_dir, exist_ok=True)
+    os.makedirs(out_dir, exist_ok=True)
     raw = spark.read.text(text_path)
     parsed = raw.select(
         parse_rfc5424(F.split_part(F.col("value"), F.lit(" "), F.lit(1))).alias("ts"),
@@ -811,7 +825,7 @@ def text_to_boom(
         rows = list(rows)
         if rows:
             write_boom_local(
-                _os.path.join(out_dir, f"part-{idx:05d}.bm"),
+                os.path.join(out_dir, f"part-{idx:05d}.bm"),
                 [(r["ts"], r["message"], 0) for r in rows],
                 create_time=create_time,
             )
@@ -885,8 +899,6 @@ def write_boom_tree(
     recovery re-run of the SAME batch overwrites its own file rather
     than duplicating lines. Returns the number of lines written.
     """
-    import os as _os
-
     import pandas as pd
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
@@ -905,18 +917,18 @@ def write_boom_tree(
         from pyspark import TaskContext
 
         d, h = str(pdf["date"].iloc[0]), str(pdf["hour"].iloc[0])
-        dirp = _os.path.join(root, dc, service, log_type, d, h, component, "data")
-        _os.makedirs(dirp, exist_ok=True)
-        path = _os.path.join(dirp, f"part-{tag}00000.{d}-{h}.bm")
+        dirp = os.path.join(root, dc, service, log_type, d, h, component, "data")
+        os.makedirs(dirp, exist_ok=True)
+        path = os.path.join(dirp, f"part-{tag}00000.{d}-{h}.bm")
         lines = sorted(
             (int(t), str(m), int(e))
             for t, m, e in zip(pdf["ts"], pdf["message"], pdf["event_id"])
         )
         tc = TaskContext.get()
-        attempt = tc.taskAttemptId() if tc is not None else _os.getpid()
+        attempt = tc.taskAttemptId() if tc is not None else os.getpid()
         tmp = f"{path}.inprogress.{attempt}"
         write_boom_local(tmp, lines, create_time=create_time)
-        _os.replace(tmp, path)
+        os.replace(tmp, path)
         return pd.DataFrame({"n": [len(lines)]})
 
     # explicit repartition on the group key: hour groups are tiny, and

@@ -135,3 +135,76 @@ def test_nested_record_struct(tmp_path, spark):
     df = ag.read_avro(spark, str(tmp_path), glob="n.avro")
     assert dict(df.dtypes)["pos"] == "struct<x:double,y:double>"
     assert df.filter("pos.x = 2.0").count() == 1
+
+
+def _tree_of_avro(root) -> list[str]:
+    """Four multi-block containers (distinct sync markers, one sized
+    block each) in a two-level tree; returns the file paths."""
+    files = []
+    for i, rel in enumerate(("a.avro", "b.avro", "sub/c.avro", "sub/deep/d.avro")):
+        p = root / rel
+        p.parent.mkdir(parents=True, exist_ok=True)
+        ag.write_avro_local(str(p), SCHEMA, _rows(40 + 7 * i, start=1000 * i),
+                            sync=bytes([0x31 + i]) * 16, records_per_block=3 + i)
+        files.append(str(p))
+    return files
+
+
+def _decoded(df) -> list[dict]:
+    rows = [r.asDict(recursive=True) for r in df.collect()]
+    return sorted(rows, key=lambda r: r["id"])
+
+
+def test_read_avro_equals_local_decode(spark, tmp_path, max_partition_bytes):
+    """read_avro returns exactly the per-file read_container decode of
+    the whole tree at whole-file and sub-block split sizes."""
+    files = _tree_of_avro(tmp_path / "tree")
+    want = []
+    for p in files:
+        with open(p, "rb") as f:
+            want += list(read_container(f.read()))
+    want.sort(key=lambda r: r["id"])
+    for split in (max(os.path.getsize(p) for p in files), 1500, 257):
+        max_partition_bytes(split)
+        assert _decoded(ag.read_avro(spark, str(tmp_path / "tree"))) == want, split
+
+
+def test_read_avro_plans_without_a_job(spark, tmp_path):
+    """Calling read_avro reads the writer schema on the driver and runs
+    no Spark job; its plan is MapInPandas over Range."""
+    _tree_of_avro(tmp_path / "tree")
+    sc, group = spark.sparkContext, "read-avro-plan"
+    sc.setJobGroup(group, "read_avro")
+    try:
+        df = ag.read_avro(spark, str(tmp_path / "tree"))
+    finally:
+        sc._jsc.clearJobGroup()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    plan = df._jdf.queryExecution().sparkPlan()
+    names = []
+    while True:
+        names.append(plan.nodeName())
+        if plan.children().isEmpty():
+            break
+        assert plan.children().size() == 1
+        plan = plan.children().head()
+    assert names == ["MapInPandas", "Range"]
+
+
+def test_avro_listing_rule(spark, tmp_path):
+    """The .avro sources list files like read_boom: hidden (``.``) and
+    ``_`` names are skipped, as are names the glob does not match; a
+    path that matches nothing raises FileNotFoundError, a directory
+    without matching files ValueError."""
+    root = tmp_path / "root"
+    for i, rel in enumerate(("a.avro", "s/b.avro", "_tmp/c.avro", ".x/d.avro",
+                             "_e.avro", ".f.avro", "g.avro.tmp")):
+        (root / rel).parent.mkdir(parents=True, exist_ok=True)
+        ag.write_avro_local(str(root / rel), SCHEMA, _rows(1, start=i))
+    assert sorted(r.id for r in ag.read_avro(spark, str(root)).collect()) == [0, 1]
+    scanned = ag.avro_block_scan(spark, str(root)).collect()
+    assert sorted(r.file for r in scanned) == ["a.avro", "b.avro"]
+    with pytest.raises(FileNotFoundError):
+        ag.read_avro(spark, str(root / "missing"))
+    with pytest.raises(ValueError, match="no avro files"):
+        ag.read_avro(spark, str(root), glob="*.nothing")

@@ -2,10 +2,13 @@
 reads are as strict as the whole-file read, and an unsupported codec
 fails loudly on every read path. ``read_boom``, the one distributed
 reader, returns exactly the per-file decode for any split size, lists
-files by Spark's naming rule and packs ranges across tasks."""
+files by Spark's naming rule and packs ranges across tasks. Both
+container writers' output is pinned byte for byte."""
 
 from __future__ import annotations
 
+import hashlib
+import json
 import os
 import random
 
@@ -168,10 +171,7 @@ def test_read_boom_equals_local_decode(spark, tmp_path, max_partition_bytes):
     returns the whole-file salvage walk."""
     from boom_damage import damage_block
 
-    from bb_bigdata_log_tools_spark.sources.boom import (
-        read_boom_local,
-        read_container_resync,
-    )
+    from bb_bigdata_log_tools_spark.sources.boom import read_boom_local
 
     dirs = _hour_tree(tmp_path / "tree")
     files = [os.path.join(d, os.listdir(d)[0]) for d in dirs]
@@ -196,7 +196,7 @@ def test_read_boom_equals_local_decode(spark, tmp_path, max_partition_bytes):
             read_boom(spark, dirs).collect()
     max_partition_bytes(largest)
     with open(files[3], "rb") as f:
-        salvaged = list(flatten_log_blocks(read_container_resync(f.read())))
+        salvaged = list(flatten_log_blocks(read_container(f.read(), salvage=True)))
     intact = [r for f in files if f != files[3] for r in read_boom_local(f)]
     assert _rows(read_boom(spark, dirs, skip_corrupt=True)) == sorted(intact + salvaged)
     assert 0 < len(salvaged) < len(before)
@@ -281,3 +281,45 @@ def test_read_boom_case_folding_pushdown_equals_multisearch(spark, tmp_path):
                                 match_all=match_all, case_insensitive=ci)
                 assert _rows(got.select(*want.columns)) == _rows(want), (
                     terms, match_all, ci)
+
+
+PIN_BOOM_LINES = [
+    (1_700_000_000_000 + s * 1000 + (s * 37 + i * 211) % 1000,
+     f"s{s} i{i} café " + "x" * ((s * i) % 17), (s + i) % 4)
+    for s in range(0, 40, 3) for i in range(s % 5 + 1)
+]
+PIN_AVRO_SCHEMA = json.dumps({"type": "record", "name": "pin", "fields": [
+    {"name": "id", "type": "long"}, {"name": "name", "type": "string"},
+    {"name": "w", "type": "float"}, {"name": "d", "type": "double"},
+    {"name": "ok", "type": "boolean"}, {"name": "raw", "type": "bytes"},
+    {"name": "note", "type": ["null", "string"]},
+    {"name": "tags", "type": {"type": "array", "items": "int"}},
+    {"name": "attrs", "type": {"type": "map", "values": "long"}}]})
+PIN_AVRO_ROWS = [
+    {"id": i - 5, "name": f"r{i} ü", "w": i / 4, "d": i * 1.5, "ok": i % 2 == 0,
+     "raw": bytes(range(i % 7)), "note": None if i % 3 == 0 else f"n{i}",
+     "tags": list(range(i % 4)), "attrs": {"a": i, "b": -i} if i % 2 else {}}
+    for i in range(11)
+]
+
+
+def test_writers_output_is_pinned(tmp_path):
+    """Both container writers frame blocks through one block framer; the
+    bytes they write on a fixed corpus are pinned (deflate at level 6 of
+    the installed zlib)."""
+    path = str(tmp_path / "pin")
+
+    def sha() -> str:
+        with open(path, "rb") as f:
+            return hashlib.sha256(f.read()).hexdigest()
+
+    write_boom_local(path, PIN_BOOM_LINES)
+    assert sha() == "9d17ce09726914f8661c54c3653bc910b4787ef6e2be0e0a2851b96ce0eb4f77"
+    write_boom_local(path, PIN_BOOM_LINES, create_time=1_700_000_123_456,
+                     sync=bytes(range(16)))
+    assert sha() == "7db648a45515535b5da2b1ad3e8b22dce9adef7678364a50d2a2a87e3da49dcf"
+    ag.write_avro_local(path, PIN_AVRO_SCHEMA, PIN_AVRO_ROWS, records_per_block=4)
+    assert sha() == "ab698c91fb7ea99bde832c897b048b2d80e04176385157eaed0d8788834d3123"
+    ag.write_avro_local(path, PIN_AVRO_SCHEMA, PIN_AVRO_ROWS, codec="null",
+                        records_per_block=4)
+    assert sha() == "852d01c2c9cb3305524f5bf1d1732d12dccda0f60cf77ed89f2788bdf3b54f2e"

@@ -1,7 +1,7 @@
-"""The CLI reads every hour of a window in ONE binaryFile scan: its output
-equals a per-hour read + plain Spark filter, loading runs no Spark job
-(not even a file-listing one past Spark's 32-path parallel-listing
-threshold), and the CLI behaves like a Unix filter at its edges."""
+"""The CLI reads every hour of a window in ONE ``read_boom`` scan: its
+output equals a per-hour read + plain Spark filter, loading runs no Spark
+job (the driver lists the files, however many hours the window has), and
+the CLI behaves like a Unix filter at its edges."""
 
 from __future__ import annotations
 

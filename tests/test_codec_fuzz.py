@@ -234,7 +234,6 @@ def test_boom_salvage_and_strict_fuzz_never_raises_or_hangs():
     from bb_bigdata_log_tools_spark.sources.boom import (
         flatten_log_blocks,
         read_container,
-        read_container_resync,
         write_boom_local,
     )
 
@@ -247,14 +246,14 @@ def test_boom_salvage_and_strict_fuzz_never_raises_or_hangs():
     with open(p, "rb") as f:
         payload = f.read()
     rng = random.Random(4242)
-    assert len(list(flatten_log_blocks(read_container_resync(payload)))) == 12
+    assert len(list(flatten_log_blocks(read_container(payload, salvage=True)))) == 12
     for mutant in _mutations(payload, rng, 300):
-        list(read_container_resync(mutant))  # the READER never raises
+        list(read_container(mutant, salvage=True))  # the READER never raises
         try:
             # flattening may legitimately fail when a mutated header
             # yields a different valid schema — read_boom's salvage
             # branch wraps this in a file-level fallback
-            list(flatten_log_blocks(read_container_resync(mutant)))
+            list(flatten_log_blocks(read_container(mutant, salvage=True)))
         except Exception:
             pass
         try:

@@ -416,6 +416,41 @@ def test_merge_verification_detects_corrupt_output(spark, tmp_path, monkeypatch)
     )
 
 
+def test_archive_verification_keeps_data(spark, tmp_path, monkeypatch):
+    """The filter/archive job publishes like the merge: an archive that
+    fails verification raises, keeps `data` intact, and leaves NO
+    reader-visible .bm in archive/."""
+    from bb_bigdata_log_tools_spark import maintenance
+    from bb_bigdata_log_tools_spark.sources import boom as boom_mod
+
+    root = str(tmp_path / "service")
+    d = _mk_hour(
+        root, "dc1", "svc1", "logs", "20240131", "07", "app01", "data",
+        _lines_at(1706659200000),
+    )
+    hour_comp = os.path.dirname(d)
+
+    real = boom_mod.write_reboom_stream
+
+    def corrupting(path, lines, sync=b"\x00" * 16):
+        n = real(path, lines, sync)
+        with open(path, "r+b") as f:
+            f.truncate(os.path.getsize(path) // 2)
+        return n
+
+    monkeypatch.setattr(boom_mod, "write_reboom_stream", corrupting)
+    rules = [{"type": "stringmatch", "pattern": "ERROR"}]
+    with pytest.raises(RuntimeError, match="archive verification failed.*data retained"):
+        maintenance.filter_archive_dir(spark, hour_comp, rules)
+    assert os.listdir(d) == ["part-0.00000.20240131-07.bm"], (
+        "corrupt archive must not delete data"
+    )
+    archive = os.path.join(hour_comp, "archive")
+    assert not [f for f in os.listdir(archive) if f.endswith(".bm")], (
+        "no reader-visible archive file may exist after a failed archive"
+    )
+
+
 def test_mid_merge_reader_sees_old_or_new_never_half(spark, tmp_path):
     """Reader fencing: the merge writes to `*.bm.tmp` (invisible to the
     boom source's `*.bm` glob) and renames only after verification, so

@@ -375,6 +375,55 @@ def test_pushdown_scan_equals_filter_random(lines, terms, match_all, ci):
         assert got == want
 
 
+# Lines at 10.5 s, 11.1 s and 12.9 s: a window edge inside a second must
+# cut between lines of that second, not at the second's start.
+SUB_SECOND_LINES = [(10_500, "line a", 0), (11_100, "line b", 1), (12_900, "line c", 2)]
+WINDOW_MS = st.one_of(st.none(), st.integers(min_value=9_500, max_value=15_500))
+
+
+@settings(max_examples=25, deadline=None, suppress_health_check=[HealthCheck.too_slow])
+@given(
+    st.lists(
+        st.tuples(
+            st.integers(min_value=10_000, max_value=14_999),
+            st.sampled_from(["line a", "LINE b", "other", "a line"]),
+            st.integers(min_value=0, max_value=9),
+        ),
+        min_size=1,
+        max_size=40,
+    ),
+    WINDOW_MS,
+    WINDOW_MS,
+    st.lists(st.sampled_from(["line", "a", "LINE", "b"]), min_size=1, max_size=2),
+    st.booleans(),
+    st.booleans(),
+)
+@example(SUB_SECOND_LINES, 10_200, 12_000, ["line"], False, False)
+@example(SUB_SECOND_LINES, 10_200, 12_500, ["line"], False, False)
+def test_scan_window_equals_spark_filter(
+    spark, lines, start_ms, end_ms, terms, match_all, ci
+):
+    """scan_boom_bytes with a window equals the Spark ``_time_window``
+    plus ``multisearch`` filter over the whole-file decode: each line's
+    ts is bounded to ``[start_ms, end_ms)``, whatever second it is in."""
+    import tempfile
+
+    from bb_bigdata_log_tools_spark.operators import logops
+    from bb_bigdata_log_tools_spark.schema import LOG_SCHEMA
+    from bb_bigdata_log_tools_spark.sources.boom import read_boom_local, scan_boom_bytes
+
+    with tempfile.TemporaryDirectory() as d:
+        path = os.path.join(d, "f.bm")
+        write_boom_local(path, lines)
+        with open(path, "rb") as f:
+            data = f.read()
+        rows = read_boom_local(path)
+    df = spark.createDataFrame(rows, LOG_SCHEMA)
+    want = logops.multisearch(df, terms, start_ms, end_ms, ci, match_all)
+    got = scan_boom_bytes(data, terms, match_all, ci, start_ms, end_ms)
+    assert sorted(got) == sorted(tuple(r) for r in want.collect())
+
+
 @settings(max_examples=15, deadline=None, suppress_health_check=[HealthCheck.too_slow])
 @given(
     st.lists(
