@@ -13,8 +13,10 @@ Shared argument surface::
              --fieldSeparator=X (separator for --raw intermediate-format
              output; default U+001F)  --raw (emit the reference's
              intermediate separator-joined fields, unformatted/unsorted)
-             --silent  --v  --r/--l (accepted; Spark always plans the
-             sort itself — the local/remote split is obsolete here)
+             --silent  --v  --r/--l (accepted and ignored: the CLI picks
+             a local or remote sort itself, by the observed row count —
+             a small result is ordered on the driver, a large one by a
+             distributed range sort)
              --skipCorrupt (salvage damaged .bm trees: resync past
              corrupt container blocks instead of failing the run)
 
@@ -160,6 +162,8 @@ def _emit(df: DataFrame, opts: dict) -> None:
     from bb_bigdata_log_tools_spark.schema import DEFAULT_FIELD_SEPARATOR
 
     date_format = opts.get("dateFormat", "RFC5424")
+    target = opts.get("out")
+    local = None  # the driver-sorted line column, when the result is small
     if "raw" in opts["flags"]:
         # the reference's INTERMEDIATE file format: separator-joined raw
         # fields (ts<SEP>message<SEP>eventId<SEP>createTime<SEP>blockNo
@@ -172,21 +176,30 @@ def _emit(df: DataFrame, opts: dict) -> None:
     else:
         # the reference's --l/--r pick a local or remote sort
         # (src/com/blackberry/logtools/LogTools.java); here they are
-        # accepted and ignored: small_sort picks the physical sort by the
-        # actual filtered row count — small results skip the range
-        # sampler's second parent pass entirely, huge ones spill to the
-        # distributed orderBy above its row threshold.
+        # accepted and ignored, and the observed row count picks: one
+        # job checkpoints the result and counts it; a small result is
+        # then fetched by one Arrow job and ordered on the driver (no
+        # shuffle), a large one gets the distributed orderBy and is
+        # streamed back. --out keeps small_sort's DataFrame for its
+        # distributed sink.
         out = logops.format_and_sort(df, date_format=date_format, sort=False)
-        sort_cols = [
-            c
-            for c in ("ts", "create_time", "block_no", "line_no")
-            if c in out.columns
-        ]
-        out = util.small_sort(out, *sort_cols)
+        keys = [c for c in logops.SORT_KEYS if c in out.columns]
+        if target:
+            out = util.small_sort(out, *keys)
+        else:
+            out, n = util.counted_checkpoint(out)
+            if n <= util.SMALL_SORT_SPILL_ROWS:
+                local = (
+                    out.select(*keys, "line")
+                    .toArrow()
+                    .sort_by([(k, "ascending") for k in keys])
+                    .column("line")
+                )
+            else:
+                out = out.orderBy(*keys)
     silent = "silent" in opts["flags"]
     if not silent:
         sys.stderr.write(DATA_MARKER + "\n")
-    target = opts.get("out")
     if target:
         # FirstItemOnlyStoreFunc-style distributed sink: only the line
         # column lands, results never funnel through the driver, and
@@ -197,15 +210,23 @@ def _emit(df: DataFrame, opts: dict) -> None:
         write_first_item_text(out, target, col="line")
         sys.stderr.write(f"; results written to {target}\n")
     else:
-        # stream partitions through the driver one at a time (bounded
-        # memory on huge result sets, reference parity: the client
-        # streams job output to stdout)
         sc = out.sparkSession.sparkContext
         tag = f"logtools-deliver-{id(out)}"
-        sc.addJobTag(tag)
         try:
-            for row in out.select("line").toLocalIterator():
-                sys.stdout.write(row["line"] + "\n")
+            if local is not None:
+                for chunk in local.chunks:
+                    if len(chunk):  # an empty batch prints no empty line
+                        sys.stdout.write("\n".join(chunk.to_pylist()) + "\n")
+            else:
+                # stream partitions through the driver one at a time
+                # (bounded memory on huge result sets, reference parity:
+                # the client streams job output to stdout)
+                sc.addJobTag(tag)
+                try:
+                    for row in out.select("line").toLocalIterator():
+                        sys.stdout.write(row["line"] + "\n")
+                finally:
+                    sc.removeJobTag(tag)
             sys.stdout.flush()
         except BrokenPipeError:
             # the reader went away (`| head`): stop like a Unix filter,
@@ -214,8 +235,6 @@ def _emit(df: DataFrame, opts: dict) -> None:
             sc.cancelJobsWithTag(tag)
             os.dup2(os.open(os.devnull, os.O_WRONLY), sys.stdout.fileno())
             raise SystemExit(0) from None
-        finally:
-            sc.removeJobTag(tag)
     if not silent:
         sys.stderr.write(DATA_MARKER + "\n")
 
@@ -279,23 +298,39 @@ def loggrep(argv: list[str]) -> None:
     )
 
 
+def _read_terms(strings_path: str) -> list[str]:
+    """The search terms of ``-strings``: one per non-blank line of the
+    file, or of every file in the directory in name order, dos2unix
+    normalized as the reference does for Windows files. Read on the
+    driver before any session starts: a bad path fails in milliseconds."""
+    terms: list[str] = []
+    try:
+        paths = (
+            [os.path.join(strings_path, f) for f in sorted(os.listdir(strings_path))]
+            if os.path.isdir(strings_path)
+            else [strings_path]
+        )
+        for p in paths:
+            with open(p, encoding="utf-8") as f:
+                terms.extend(
+                    line.strip().replace("\r", "") for line in f if line.strip()
+                )
+    except (OSError, UnicodeDecodeError) as exc:
+        raise SystemExit(
+            f";******************** ERROR: cannot read -strings={strings_path}: "
+            f"{getattr(exc, 'strerror', None) or exc}"
+        ) from None
+    if not terms:
+        raise SystemExit(
+            f";******************** ERROR: no search terms in -strings={strings_path}"
+        )
+    return terms
+
+
 def logmultisearch(argv: list[str]) -> None:
     opts = parse_args(argv)
-    df, start_ms, end_ms, (strings_path,) = _load(
-        opts, "logmultisearch", ["strings"]
-    )
-    terms: list[str] = []
-    paths = (
-        [os.path.join(strings_path, f) for f in sorted(os.listdir(strings_path))]
-        if os.path.isdir(strings_path)
-        else [strings_path]
-    )
-    for p in paths:
-        with open(p, encoding="utf-8") as f:
-            # dos2unix normalization, as the reference does for Windows files
-            terms.extend(
-                line.strip().replace("\r", "") for line in f if line.strip()
-            )
+    terms = _read_terms(opts["strings"]) if "strings" in opts else []
+    df, start_ms, end_ms, _ = _load(opts, "logmultisearch", ["strings"])
     _emit(
         logops.multisearch(
             df,

@@ -33,6 +33,9 @@ from bb_bigdata_log_tools_spark.operators.util import small_sort
 #: Cat.java's mapper output order.
 RAW_COLUMNS = ["ts", "message", "event_id", "create_time", "block_no", "line_no"]
 
+#: The total order of formatted lines (formatAndSort.pg).
+SORT_KEYS = ("ts", "create_time", "block_no", "line_no")
+
 
 def _time_window(df: DataFrame, start_ms: int | None, end_ms: int | None) -> DataFrame:
     """Half-open window ``start <= ts < end`` (Cat.java:86)."""
@@ -145,7 +148,7 @@ def format_and_sort(
     isn't required.
     """
     good = df
-    for c in ("ts", "create_time", "block_no", "line_no"):
+    for c in SORT_KEYS:
         if c in df.columns:
             good = good.filter(F.col(c).isNotNull())
     out = good.withColumn(
@@ -153,7 +156,7 @@ def format_and_sort(
         F.concat_ws(" ", format_timestamp(F.col("ts"), date_format), F.col("message")),
     )
     if sort:
-        sort_cols = [c for c in ("ts", "create_time", "block_no", "line_no") if c in out.columns]
+        sort_cols = [c for c in SORT_KEYS if c in out.columns]
         out = out.orderBy(*sort_cols)
     return out.select("line", *[c for c in RAW_COLUMNS if c in out.columns])
 

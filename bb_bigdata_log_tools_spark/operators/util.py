@@ -11,6 +11,20 @@ from pyspark.sql import functions as F
 SMALL_SORT_SPILL_ROWS = 2_000_000
 
 
+def counted_checkpoint(df):
+    """``(checkpointed df, row count)`` from ONE job.
+
+    The input is local-checkpointed, so its (often expensive) parent plan
+    runs exactly once, and its row count is OBSERVED during that same
+    job (``Observation`` metrics fire on the eager checkpoint's action —
+    r13 optimization round; a separate ``count()`` paid one extra job +
+    driver-planning gap, ~0.1-0.3 s, on every sorted result).
+    """
+    obs = Observation()
+    out = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint()
+    return out, obs.get["n"]
+
+
 def small_sort(df, *cols, spill_rows: int = SMALL_SORT_SPILL_ROWS):
     """Deterministic order for small result sets WITHOUT a range sort.
 
@@ -21,21 +35,19 @@ def small_sort(df, *cols, spill_rows: int = SMALL_SORT_SPILL_ROWS):
     sorting within it is one pass and exact.
 
     GUARD: "small by construction" can fail — a boilerplate-heavy corpus
-    makes the near-dup pair set itself quadratic. The input is
-    local-checkpointed (so the expensive parent plan runs exactly once)
-    and its row count is OBSERVED during the checkpoint job itself
-    (``Observation`` metrics fire on the eager checkpoint's action —
-    r13 optimization round; the previous separate ``count()`` paid one
-    extra job + driver-planning gap, ~0.1-0.3 s, on EVERY sorted
-    operator). Above ``spill_rows`` the sort falls back to a
-    distributed ``orderBy`` over the checkpointed blocks instead of
-    funneling everything through one task. Both branches produce the
-    same totally-ordered rows — the guard picks a physical strategy,
-    never a result.
+    makes the near-dup pair set itself quadratic. The input goes through
+    :func:`counted_checkpoint`; above ``spill_rows`` observed rows the
+    sort falls back to a distributed ``orderBy`` over the checkpointed
+    blocks instead of funneling everything through one task. Both
+    branches produce the same totally-ordered rows — the guard picks a
+    physical strategy, never a result.
+
+    Returns a DataFrame, for callers that go on computing or writing in
+    Spark (the gate keys, the CLI's ``--out``). The CLI's stdout path
+    orders small results on the driver instead (``cli._emit``).
     """
-    obs = Observation()
-    out = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint()
-    if obs.get["n"] > spill_rows:
+    out, n = counted_checkpoint(df)
+    if n > spill_rows:
         return out.orderBy(*cols)
     # repartition(1), not coalesce(1): measured head-to-head (r13) the
     # narrow coalesce was NET NEUTRAL — it drops the tiny shuffle and

@@ -21,8 +21,12 @@ oracle queries share the exact adapter definition.
 
 from __future__ import annotations
 
+import json
+import os
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 EVENTS_AS_LOGS_SQL = """
     SELECT epoch_ms(ts) AS ts,
@@ -91,8 +95,40 @@ def write_log_store(logs: DataFrame, path: str, mode: str = "overwrite") -> None
     )
 
 
+#: Parquet footer key under which Spark's writer stores the row schema.
+SPARK_ROW_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _footer_schema(path: str) -> StructType | None:
+    """The Spark row schema in the footer of the first part file under
+    ``path`` (walked in name order, skipping ``_``/``.`` names), or None
+    when there is no local part file or it carries no Spark schema."""
+    import pyarrow.parquet as pq
+
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+        for name in sorted(files):
+            if name.endswith(".parquet") and not name.startswith(("_", ".")):
+                meta = pq.read_metadata(os.path.join(root, name)).metadata or {}
+                js = meta.get(SPARK_ROW_SCHEMA_KEY)
+                return StructType.fromJson(json.loads(js)) if js else None
+    return None
+
+
 def read_log_store(spark, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+    """The partitioned log store as a DataFrame, planned with no Spark job.
+
+    ``spark.read.parquet`` infers the data schema with a one-task job
+    that reads a footer on an executor. The driver reads that same footer
+    itself (:func:`_footer_schema`) and passes the schema in; Spark still
+    discovers the ``date``/``hour`` partition columns and infers their
+    types from the directory names. A store with no local part file, or
+    one written without Spark's schema key, is read with inference.
+    """
+    schema = _footer_schema(path)
+    if schema is None:
+        return spark.read.parquet(path)
+    return spark.read.schema(schema).parquet(path)
 
 
 def cat_by_time(spark, path: str, start_ms: int, end_ms: int) -> DataFrame:

@@ -1,0 +1,86 @@
+"""The Boom codec against an independent implementation: the JVM's own
+Avro library (``tests/jvm_avro.py``). A file the JVM writes reads back
+exactly through every program reader, and a file the program writes
+reads back exactly through the JVM, so a bug shared by the program's
+writer and reader cannot pass."""
+
+from __future__ import annotations
+
+import pytest
+
+from bb_bigdata_log_tools_spark.sources.boom import (
+    BOOM_SCHEMA_JSON,
+    read_boom,
+    read_boom_local,
+    write_boom_local,
+)
+from jvm_avro import jvm_read, jvm_write
+
+SECOND0 = 1_791_158_400  # 2026-10-05 00:00 UTC
+LONG = "long " + "x" * 70_000 + " end"
+MESSAGES = [
+    "",
+    "plain ascii disk ok",
+    "non-BMP \U0001F600 \U0001D11E \U0002000B",
+    "BMP é ü ß ÉCHEC-DISQUE",
+    'escapes   \t "quoted" back\\slash',
+]
+
+
+def _blocks() -> list[dict]:
+    """A fixed logBlock corpus: empty, long and non-BMP messages, blocks
+    of zero to four lines, extreme event ids, two create times."""
+    blocks = []
+    for b in range(240):
+        lines = [
+            {"ms": (b * 37 + i * 101) % 1000,
+             "eventId": (-1, 0, 2**31 - 1, b)[i % 4],
+             "message": LONG if b in (7, 150) and i == 0 else MESSAGES[(b + i) % len(MESSAGES)]}
+            for i in range(b % 5)
+        ]
+        blocks.append({"second": SECOND0 + b // 3, "createTime": 1_791_000_000_000 + b % 2,
+                       "blockNumber": b, "logLines": lines})
+    return blocks
+
+
+def _flat(blocks: list[dict]) -> list[tuple]:
+    """(ts, message, event_id, create_time, block_no, line_no) per line."""
+    return [
+        (r["second"] * 1000 + ln["ms"], ln["message"], ln["eventId"], r["createTime"],
+         r["blockNumber"], i)
+        for r in blocks
+        for i, ln in enumerate(r["logLines"])
+    ]
+
+
+@pytest.mark.parametrize("codec", ["deflate", "null"])
+def test_jvm_written_file_reads_back_exactly(spark, tmp_path, max_partition_bytes, codec):
+    """The JVM writes a .bm file (sync interval 2048, so many records per
+    block and many blocks); ``read_boom_local`` returns exactly its lines
+    in order, and ``read_boom`` exactly its lines whether the file is one
+    range or split into ranges smaller than a block."""
+    path = str(tmp_path / "jvm.bm")
+    blocks = _blocks()
+    jvm_write(spark, path, BOOM_SCHEMA_JSON, blocks, codec=codec, sync_interval=2048)
+    want = _flat(blocks)
+    assert read_boom_local(path) == want
+    for split in (128 * 1024 * 1024, 1500):
+        max_partition_bytes(split)
+        assert sorted(map(tuple, read_boom(spark, path).collect())) == sorted(want), split
+
+
+def test_program_written_file_jvm_reads_back_exactly(spark, tmp_path):
+    """``write_boom_local`` writes a .bm file; the JVM reads back exactly
+    the input lines, one logBlock per second numbered from 0 with the
+    given create time."""
+    lines = [(ts, msg, eid) for ts, msg, eid, *_ in _flat(_blocks())]
+    lines.sort(key=lambda ln: ln[0] // 1000)  # the writer's per-second order
+    path = str(tmp_path / "program.bm")
+    write_boom_local(path, lines, create_time=7)
+    records = jvm_read(spark, path)
+    got = [(r["second"] * 1000 + ln["ms"], ln["message"], ln["eventId"])
+           for r in records for ln in r["logLines"]]
+    assert got == lines
+    assert [r["blockNumber"] for r in records] == list(range(len(records)))
+    assert {r["createTime"] for r in records} == {7}
+    assert [r["second"] for r in records] == sorted({ts // 1000 for ts, *_ in lines})

@@ -201,3 +201,42 @@ def test_closed_pipe_exits_quietly(tmp_path):
     assert proc.wait(timeout=300) == 0, err[-2000:]
     for noise in ("Traceback", "BrokenPipeError", "Exception"):
         assert noise not in err, err[-2000:]
+
+
+_NO_SESSION = (
+    "import sys\n"
+    "from bb_bigdata_log_tools_spark import cli\n"
+    "def _no_session():\n"
+    "    sys.stderr.write('session started\\n')\n"
+    "    sys.exit(3)\n"
+    "cli._spark = _no_session\n"
+    "cli.logmultisearch(sys.argv[1:])\n"
+)
+
+
+@pytest.mark.parametrize("kind", ["missing", "empty", "blank", "empty_dir"])
+def test_multisearch_bad_strings_fail_before_session(tmp_path, kind):
+    """A -strings path that is missing or holds no terms after dos2unix
+    stripping fails with one error line and starts no Spark session,
+    though the window resolves to a directory."""
+    root = str(tmp_path / "tree")
+    _write_tree(root, 1, 5)
+    strings = tmp_path / "strings"
+    if kind == "empty":
+        strings.write_text("")
+    elif kind == "blank":
+        strings.write_text("\r\n  \r\n\n")
+    elif kind == "empty_dir":
+        strings.mkdir()
+    proc = subprocess.run(
+        [sys.executable, "-c", _NO_SESSION,
+         *_argv(root, T0, T0 + HOUR, f"-strings={strings}")],
+        capture_output=True, text=True, env=dict(os.environ, PYTHONPATH=REPO),
+        timeout=120,
+    )
+    assert proc.returncode == 1, proc.stderr[-2000:]
+    assert proc.stdout == ""
+    lines = proc.stderr.splitlines()
+    assert len(lines) == 1, proc.stderr[-2000:]
+    assert lines[0].startswith(";******************** ERROR:")
+    assert str(strings) in lines[0]

@@ -114,9 +114,11 @@ def test_format_sort_single_shuffle(spark, sf_dir):
 
 
 def test_cli_small_sort_path_no_range_exchange(spark, sf_dir):
-    """The CLI's auto-picked small-result sort (LogTools --l analogue)
-    must avoid the range-partitioned exchange: no sampling pass, one
-    single-partition exchange, exact order within it."""
+    """``small_sort``, which the CLI's ``--out`` and the gate keys use,
+    must avoid the range-partitioned exchange below its spill guard: no
+    sampling pass, one single-partition exchange, exact order within
+    it. (The CLI's stdout path sorts small results on the driver
+    instead, with no exchange at all: ``tests/test_cli_emit.py``.)"""
     from bb_bigdata_log_tools_spark.operators.util import small_sort
 
     logs = events_as_logs(table(spark, sf_dir, "events")).limit(1000)
