@@ -36,6 +36,7 @@ import re
 import sys
 import time
 from datetime import datetime, timezone
+from typing import NoReturn
 
 from pyspark.errors import IllegalArgumentException
 from pyspark.sql import DataFrame, SparkSession
@@ -159,7 +160,7 @@ def _require(opts: dict, tool: str, keys: list[str]) -> list[str]:
 def _emit(df: DataFrame, opts: dict) -> None:
     from pyspark.sql import functions as F
 
-    from bb_bigdata_log_tools_spark.schema import DEFAULT_FIELD_SEPARATOR
+    from bb_bigdata_log_tools_spark.schema import DEFAULT_FIELD_SEPARATOR, LOG_COLUMNS
 
     date_format = opts.get("dateFormat", "RFC5424")
     target = opts.get("out")
@@ -169,7 +170,7 @@ def _emit(df: DataFrame, opts: dict) -> None:
         # fields (ts<SEP>message<SEP>eventId<SEP>createTime<SEP>blockNo
         # <SEP>lineNo), --fieldSeparator default U+001F
         sep = opts.get("fieldSeparator", DEFAULT_FIELD_SEPARATOR)
-        cols = [c for c in logops.RAW_COLUMNS if c in df.columns]
+        cols = [c for c in LOG_COLUMNS if c in df.columns]
         out = df.select(
             F.concat_ws(sep, *[F.col(c).cast("string") for c in cols]).alias("line")
         )
@@ -229,14 +230,18 @@ def _emit(df: DataFrame, opts: dict) -> None:
                     sc.removeJobTag(tag)
             sys.stdout.flush()
         except BrokenPipeError:
-            # the reader went away (`| head`): stop like a Unix filter,
-            # with no traceback; stdout goes to /dev/null so the
-            # interpreter's exit-time flush cannot fail again
             sc.cancelJobsWithTag(tag)
-            os.dup2(os.open(os.devnull, os.O_WRONLY), sys.stdout.fileno())
-            raise SystemExit(0) from None
+            closed_pipe()
     if not silent:
         sys.stderr.write(DATA_MARKER + "\n")
+
+
+def closed_pipe() -> NoReturn:
+    """The reader of stdout went away (`| head`): stop like a Unix
+    filter, exit 0 with no traceback. stdout goes to /dev/null so the
+    interpreter's exit-time flush cannot fail again."""
+    os.dup2(os.open(os.devnull, os.O_WRONLY), sys.stdout.fileno())
+    raise SystemExit(0) from None
 
 
 def _load(opts: dict, tool: str, extra: list[str]) -> tuple:
@@ -353,13 +358,19 @@ TOOLS = {
 
 
 def main() -> None:
+    """Run the tool named by the program name (``bin/logcat``) or by the
+    first argument (``python -m bb_bigdata_log_tools_spark readboom``):
+    the search tools here and the admin tools of ``cli_admin``."""
+    from bb_bigdata_log_tools_spark.cli_admin import TOOLS as ADMIN_TOOLS
+
+    tools = {**TOOLS, **ADMIN_TOOLS}
     prog = os.path.basename(sys.argv[0])
-    if prog not in TOOLS and len(sys.argv) > 1 and sys.argv[1] in TOOLS:
-        TOOLS[sys.argv[1]](sys.argv[2:])
-    elif prog in TOOLS:
-        TOOLS[prog](sys.argv[1:])
+    if prog not in tools and len(sys.argv) > 1 and sys.argv[1] in tools:
+        tools[sys.argv[1]](sys.argv[2:])
+    elif prog in tools:
+        tools[prog](sys.argv[1:])
     else:
-        sys.stderr.write(f"usage: cli.py {{{'|'.join(TOOLS)}}} [args]\n")
+        sys.stderr.write(f"usage: {{{'|'.join(tools)}}} [args]\n")
         raise SystemExit(1)
 
 

@@ -31,7 +31,7 @@ from datetime import datetime, timezone
 if __package__ in (None, ""):  # invoked as a bare script: bootstrap sys.path
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bb_bigdata_log_tools_spark.cli import parse_args, parse_time
+from bb_bigdata_log_tools_spark.cli import closed_pipe, main, parse_args, parse_time
 
 
 def _spark():
@@ -47,25 +47,30 @@ def _spark():
 
 def readboom(argv: list[str]) -> None:
     """Decode .bm files to tab-separated flat lines (ReadBoom.java).
-    With no args (or ``-``) reads stdin. Streams: one block in memory."""
-    from bb_bigdata_log_tools_spark.sources.boom import (
-        flatten_log_blocks,
-        read_container,
-    )
+    With no args (or ``-``) reads stdin. A file streams through an mmap
+    (:func:`scan_boom_range`), so it is never held in memory. A closed
+    pipe ends the run quietly; a missing or damaged file prints one
+    error line naming it and exits 1, after the lines already printed."""
+    from bb_bigdata_log_tools_spark.sources.boom import scan_boom_bytes, scan_boom_range
 
-    files = [a for a in argv if not a.startswith("--")] or ["-"]
-    for file in files:
-        data = (
-            sys.stdin.buffer.read()
-            if file == "-"
-            else open(file, "rb").read()  # noqa: SIM115 - read whole container
-        )
-        for ts, message, event_id, create_time, block_no, line_no in (
-            flatten_log_blocks(read_container(data))
-        ):
-            sys.stdout.write(
-                f"{ts}\t{message}\t{event_id}\t{create_time}\t{block_no}\t{line_no}\n"
+    for file in [a for a in argv if not a.startswith("--")] or ["-"]:
+        try:
+            rows = (
+                scan_boom_bytes(sys.stdin.buffer.read(), None)
+                if file == "-"
+                else scan_boom_range(file)
             )
+            for row in rows:
+                sys.stdout.write("\t".join(map(str, row)) + "\n")
+            sys.stdout.flush()
+        except BrokenPipeError:
+            closed_pipe()
+        except Exception as exc:  # noqa: BLE001 — any read failure names its file
+            name = "<stdin>" if file == "-" else file
+            raise SystemExit(
+                f";******************** ERROR: cannot read {name}: "
+                f"{getattr(exc, 'strerror', None) or exc}"
+            ) from None
 
 
 # ---------------------------------------------------------------------------
@@ -401,17 +406,6 @@ TOOLS = {
     "hfind": hfind_cli,
     "logmaintenance": logmaintenance,
 }
-
-
-def main() -> None:
-    prog = os.path.basename(sys.argv[0])
-    if prog not in TOOLS and len(sys.argv) > 1 and sys.argv[1] in TOOLS:
-        TOOLS[sys.argv[1]](sys.argv[2:])
-    elif prog in TOOLS:
-        TOOLS[prog](sys.argv[1:])
-    else:
-        sys.stderr.write(f"usage: cli_admin.py {{{'|'.join(TOOLS)}}} [args]\n")
-        raise SystemExit(1)
 
 
 if __name__ == "__main__":

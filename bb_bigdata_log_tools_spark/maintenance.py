@@ -49,6 +49,8 @@ from datetime import datetime, timedelta, timezone
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bb_bigdata_log_tools_spark.schema import LOG_COLUMNS
+
 # Files eligible for merging, per the reference's VALID_FILE pattern
 # (numeric-suffixed uploads or .bm files).
 VALID_FILE = re.compile(r".*([0-9]|\.bm)$")
@@ -150,15 +152,11 @@ class MaintenanceLease:
     """
 
     def __init__(self, base: str, ttl_ms: int = 2 * 60 * 60 * 1000,
-                 now_ms: int | None = None,
                  backend: LeaseBackend | None = None):
         self.path = os.path.join(base, LEASE_MARKER)
         self.ttl_ms = ttl_ms
         self._held = False
         self.backend = backend if backend is not None else LeaseBackend()
-        # now_ms is accepted for signature stability but deliberately
-        # ignored: TTL staleness must use the same clock that wrote the
-        # lease mtime (see docstring).
 
     def _now(self) -> int:
         import time as _time
@@ -274,13 +272,15 @@ def _only(rules: list[dict], ftype: str) -> bool:
 def _publish_verified(job: str, tmp: str, final: str, n: int, source: str) -> None:
     """Rename the written container ``tmp`` to ``final`` and remove the
     ``source`` directory, only once ``tmp`` re-decodes to the ``n`` lines
-    written. An unreadable or short ``tmp`` is deleted and the job fails,
-    keeping ``source``."""
-    from bb_bigdata_log_tools_spark.sources.boom import count_boom_lines
+    written (a streaming full decode through an mmap, the
+    ``fs/FileManager.java`` checksum-verified-move analog). An
+    unreadable or short ``tmp`` is deleted and the job fails, keeping
+    ``source``."""
+    from bb_bigdata_log_tools_spark.sources.boom import scan_boom_range
 
     kept = f"{os.path.basename(source)} retained"
     try:
-        got = count_boom_lines(tmp)
+        got = sum(1 for _ in scan_boom_range(tmp))
     except Exception as e:
         os.unlink(tmp)
         raise RuntimeError(
@@ -351,7 +351,7 @@ def filter_archive_dir(
     kept = (
         read_boom(spark, data)
         .filter(filters_to_predicate(rules))
-        .select("ts", "message", "event_id", "create_time", "block_no", "line_no")
+        .select(*LOG_COLUMNS)
         .repartition(1)
         .sortWithinPartitions("create_time", "block_no", "ts", "line_no")
     )
@@ -421,8 +421,6 @@ def log_maintenance(
     now_ms: int | None = None,
     wait_time_ms: int = 10 * 60 * 1000,
     do_merge: bool = True,
-    lock: bool = True,
-    lease_ttl_ms: int = 2 * 60 * 60 * 1000,
 ) -> MaintenanceReport:
     """One maintenance sweep over ``<root>/<dc>/<service>/<logdir>``.
 
@@ -445,15 +443,12 @@ def log_maintenance(
     ``date``/``hour`` narrow the sweep like the reference's optional
     positional args. ``now_ms`` pins time for tests.
 
-    ``lock=True`` (default) takes the service tree's
-    :class:`MaintenanceLease` for the duration of the sweep and raises
-    :class:`MaintenanceLockHeld` if another runner holds it — the
-    LockedFs/ZooKeeper analog; pass ``lock=False`` only when the caller
-    coordinates runs itself.
+    The sweep holds the service tree's :class:`MaintenanceLease` and
+    raises :class:`MaintenanceLockHeld` if another runner holds it — the
+    LockedFs/ZooKeeper analog.
     """
     import time as _time
 
-    report = MaintenanceReport()
     now = int(_time.time() * 1000) if now_ms is None else now_ms
     delete_cut = (
         _cutoff_stamp(now, days_before_delete)
@@ -468,17 +463,28 @@ def log_maintenance(
 
     base = os.path.join(root, dc, service, logdir)
     if not os.path.isdir(base):
-        return report
-    if lock:
-        with MaintenanceLease(base, ttl_ms=lease_ttl_ms, now_ms=now_ms):
-            return log_maintenance(
-                spark, root, dc, service, logdir=logdir, date=date, hour=hour,
-                days_before_archive=days_before_archive,
-                days_before_delete=days_before_delete,
-                filters_conf=filters_conf, now_ms=now_ms,
-                wait_time_ms=wait_time_ms, do_merge=do_merge, lock=False,
-            )
+        return MaintenanceReport()
+    with MaintenanceLease(base):
+        return _sweep(
+            spark, base, date, hour, now, delete_cut, archive_cut,
+            filters_conf, wait_time_ms, do_merge,
+        )
 
+
+def _sweep(
+    spark: SparkSession,
+    base: str,
+    date: str | None,
+    hour: str | None,
+    now: int,
+    delete_cut: str | None,
+    archive_cut: str | None,
+    filters_conf,
+    wait_time_ms: int,
+    do_merge: bool,
+) -> MaintenanceReport:
+    """The body of :func:`log_maintenance`, run under its lease."""
+    report = MaintenanceReport()
     date_re = re.escape(date) if date else r"\d{8}"
     hour_re = re.escape(hour) if hour else r"\d{2}"
     re_date = re.compile(rf"({date_re})$")

@@ -28,10 +28,7 @@ from pyspark.sql import functions as F
 
 from bb_bigdata_log_tools_spark.functions.timestamps import format_timestamp
 from bb_bigdata_log_tools_spark.operators.util import small_sort
-
-#: Columns of the intermediate "raw lines" record, mirroring
-#: Cat.java's mapper output order.
-RAW_COLUMNS = ["ts", "message", "event_id", "create_time", "block_no", "line_no"]
+from bb_bigdata_log_tools_spark.schema import LOG_COLUMNS
 
 #: The total order of formatted lines (formatAndSort.pg).
 SORT_KEYS = ("ts", "create_time", "block_no", "line_no")
@@ -47,7 +44,7 @@ def _time_window(df: DataFrame, start_ms: int | None, end_ms: int | None) -> Dat
 
 
 def _project(df: DataFrame) -> DataFrame:
-    cols = [c for c in RAW_COLUMNS if c in df.columns]
+    cols = [c for c in LOG_COLUMNS if c in df.columns]
     return df.select(*cols)
 
 
@@ -158,7 +155,7 @@ def format_and_sort(
     if sort:
         sort_cols = [c for c in SORT_KEYS if c in out.columns]
         out = out.orderBy(*sort_cols)
-    return out.select("line", *[c for c in RAW_COLUMNS if c in out.columns])
+    return out.select("line", *[c for c in LOG_COLUMNS if c in out.columns])
 
 
 def bad_lines(df: DataFrame) -> DataFrame:

@@ -29,9 +29,6 @@ LOG_SCHEMA = T.StructType(
 
 LOG_COLUMNS = [f.name for f in LOG_SCHEMA.fields]
 
-# Partition columns derived from the reference's directory scheme.
-PARTITION_COLUMNS = ["dc", "service", "log_type", "component", "date", "hour"]
-
 # Default intermediate field separator: U+001F INFORMATION SEPARATOR ONE
 # (reference README: --fieldSeparator default).
 DEFAULT_FIELD_SEPARATOR = ""

@@ -22,10 +22,12 @@ One container reader serves every ``.bm`` and ``.avro`` read (the
 generic ``avro_generic`` source included): :func:`read_header` parses
 the header, :func:`iter_blocks` walks and checks the block framing of a
 whole file, a byte range, or a salvage walk, :func:`inflate`
-decompresses a payload, and one FastSearch matcher (:func:`_matcher`)
-filters blocks and lines for both :func:`scan_boom_bytes` and
-:func:`scan_boom_range`. A strict read, whole-file or ranged, raises on
-a damaged block; salvage (``skip_corrupt``) is opt-in only.
+decompresses a payload, and :func:`read_container` is the one record
+loop. Every ``.bm`` line, strict or salvaged, ranged or whole-file,
+searched or not, comes out of one walk: :func:`flatten_log_blocks`
+over :func:`read_container`, with :func:`_matcher`'s optional block
+and line predicates for a search. A strict read raises on a damaged
+block; salvage (``skip_corrupt``) is opt-in only.
 
 Spark integration: :func:`fan_out` is the one distributed container
 read, here behind :func:`read_boom` and behind every ``avro_generic``
@@ -283,11 +285,20 @@ def iter_blocks(
 
 
 def read_container(
-    data, start: int = 0, end: int | None = None, salvage: bool = False
+    data,
+    start: int = 0,
+    end: int | None = None,
+    salvage: bool = False,
+    block_ok: Callable[[bytes], bool] | None = None,
 ) -> Iterator[dict]:
     """Decoded records of an Avro container (bytes or an mmap), or of
-    the blocks its byte range ``[start, end)`` owns (:func:`iter_blocks`).
-    Strict by default: a damaged block, header or codec raises.
+    the blocks its byte range ``[start, end)`` owns (:func:`iter_blocks`):
+    the one record loop of every container read. Strict by default: a
+    damaged block, header or codec raises.
+
+    ``block_ok`` tests each inflated payload: a block it rejects is
+    skipped before a record decoder is built for it (the FastSearch
+    prefilter of :func:`_matcher`).
 
     ``salvage=True`` never raises: the Avro container's sync markers
     exist so a reader can recover mid-stream, so at 100 TB one flipped
@@ -298,7 +309,10 @@ def read_container(
     try:
         for schema, codec, count, raw in iter_blocks(data, start, end, salvage):
             try:
-                inner = _Decoder(inflate(codec, raw))
+                payload = inflate(codec, raw)
+                if block_ok is not None and not block_ok(payload):
+                    continue
+                inner = _Decoder(payload)
                 for _ in range(count):
                     yield inner.decode(schema)
             except Exception:  # noqa: BLE001 — salvage skips the block's damaged tail
@@ -314,22 +328,35 @@ def read_container(
 _LOWERS_TO_ASCII = ("\u0130".encode(), "\u212a".encode())
 
 
-def _matcher(search_terms: list[str] | None, match_all: bool, case_insensitive: bool):
-    """The FastSearch predicates for a term set, ``(block_ok, line_ok)``:
-    ``block_ok`` byte-scans an inflated block payload and is False only
-    when no line of the block can match; ``line_ok`` is the exact
-    substring test on one message. ``match_all`` requires every term (a
-    line containing all terms implies each term's bytes appear in its
-    block, so requiring all terms at block level is a safe prefilter);
-    the default is match-any. Case-insensitive mode lower-cases both
-    sides line-level, as Spark's ``lower()`` does in ``logops``; ASCII
-    terms byte-scan both cases cheaply via ``.lower()`` on a latin-1
-    view, except in a block holding a code point that lower-cases to
-    ASCII (:data:`_LOWERS_TO_ASCII`), which passes. Non-ASCII
-    upper/lower can change byte LENGTH (the reference's ``unicode``
-    flag), so such terms pass every block. No terms match everything."""
+def _matcher(
+    search_terms: list[str] | None,
+    match_all: bool,
+    case_insensitive: bool,
+    start_ms: int | None = None,
+    end_ms: int | None = None,
+):
+    """The FastSearch predicates ``(block_ok, line_ok)`` of
+    :func:`read_container` and :func:`flatten_log_blocks`, each None
+    when it passes everything. ``block_ok`` byte-scans an inflated block
+    payload and is False only when no line of the block can match;
+    ``line_ok(ts, message)`` is the exact test: ``ts`` in ``[start_ms,
+    end_ms)`` (``logops._time_window``) and the substring test.
+    ``match_all`` requires every term (a line containing all terms
+    implies each term's bytes appear in its block, so requiring all
+    terms at block level is a safe prefilter); the default is match-any.
+    Case-insensitive mode lower-cases both sides line-level, as Spark's
+    ``lower()`` does in ``logops``; ASCII terms byte-scan both cases
+    cheaply via ``.lower()`` on a latin-1 view, except in a block
+    holding a code point that lower-cases to ASCII
+    (:data:`_LOWERS_TO_ASCII`), which passes. Non-ASCII upper/lower can
+    change byte LENGTH (the reference's ``unicode`` flag), so such terms
+    pass every block. No terms match everything."""
+    lo = float("-inf") if start_ms is None else start_ms
+    hi = float("inf") if end_ms is None else end_ms
     if search_terms is None:
-        return (lambda payload: True), (lambda msg: True)
+        if start_ms is None and end_ms is None:
+            return None, None
+        return None, (lambda ts, msg: lo <= ts < hi)
     want = all if match_all else any
     if case_insensitive:
         ascii_ok = all(t.isascii() for t in search_terms)
@@ -341,7 +368,9 @@ def _matcher(search_terms: list[str] | None, match_all: bool, case_insensitive: 
             hay = payload.decode("latin-1").lower()
             return want([t in hay for t in terms_lower])
 
-        def line_ok(msg: str) -> bool:
+        def line_ok(ts: int, msg: str) -> bool:
+            if not lo <= ts < hi:
+                return False
             m = msg.lower()
             return want([t in m for t in terms_lower])
 
@@ -351,49 +380,10 @@ def _matcher(search_terms: list[str] | None, match_all: bool, case_insensitive: 
         def block_ok(payload: bytes) -> bool:
             return want([t in payload for t in terms_bytes])
 
-        def line_ok(msg: str) -> bool:
-            return want([t in msg for t in search_terms])
+        def line_ok(ts: int, msg: str) -> bool:
+            return lo <= ts < hi and want([t in msg for t in search_terms])
 
     return block_ok, line_ok
-
-
-def _scan(
-    blocks: Iterator[tuple[dict, str, int, bytes]],
-    search_terms: list[str] | None,
-    match_all: bool,
-    case_insensitive: bool,
-    start_ms: int | None = None,
-    end_ms: int | None = None,
-) -> Iterator[tuple]:
-    """Flattened lines of an :func:`iter_blocks` walk that pass the
-    FastSearch matcher and whose ``ts`` lies in ``[start_ms, end_ms)``
-    (``logops._time_window``). Only blocks that pass the byte prefilter
-    pay for a record decoder."""
-    block_ok, line_ok = _matcher(search_terms, match_all, case_insensitive)
-    lo = float("-inf") if start_ms is None else start_ms
-    hi = float("inf") if end_ms is None else end_ms
-    for schema, codec, count, raw in blocks:
-        payload = inflate(codec, raw)
-        if not block_ok(payload):
-            continue
-        inner = _Decoder(payload)
-        for _ in range(count):
-            rec = inner.decode(schema)
-            ts_base = rec["second"] * 1000
-            create_time = rec["createTime"]
-            block_no = rec["blockNumber"]
-            for line_no, line in enumerate(rec["logLines"]):
-                ts = ts_base + line["ms"]
-                msg = line["message"]
-                if lo <= ts < hi and line_ok(msg):
-                    yield (
-                        ts,
-                        msg,
-                        int(line.get("eventId", 0) or 0),
-                        create_time,
-                        block_no,
-                        line_no,
-                    )
 
 
 def scan_boom_bytes(
@@ -404,83 +394,75 @@ def scan_boom_bytes(
     start_ms: int | None = None,
     end_ms: int | None = None,
 ) -> Iterator[tuple]:
-    """FastSearch-parity filtered scan of one .bm byte string: flattened
-    (ts, message, event_id, create_time, block_no, line_no) tuples for
-    lines containing the search term(s).
-
-    Two-phase, mirroring the reference's
-    ``util/FastSearch.java:76`` SearchMapper (with
+    """FastSearch-parity filtered scan of one .bm byte string: the
+    flattened lines that contain the search term(s), mirroring the
+    reference's ``util/FastSearch.java:76`` SearchMapper (with
     ``mapred/boom/BoomFilterMapper.java``'s per-line string-match
-    semantics): (1) byte-scan the DECOMPRESSED block payload for the
-    UTF-8 pattern bytes and skip the whole block's record decode when no
-    term can match — on low-hit-rate greps this skips the expensive
-    Avro record walk for most blocks; (2) only matched blocks are
-    decoded, then lines are substring-filtered exactly (see
-    :func:`_matcher` for the match modes and the case-insensitive
-    fallback). ``start_ms``/``end_ms`` bound each line's ``ts`` to the
-    CLI's half-open window ``[start, end)``, as ``logops`` does.
+    semantics). A block whose DECOMPRESSED payload cannot match skips
+    its record decode, which on low-hit-rate greps skips the Avro record
+    walk for most blocks; the lines of the other blocks are filtered
+    exactly (:func:`_matcher`). ``start_ms``/``end_ms`` bound each
+    line's ``ts`` to the CLI's half-open window ``[start, end)``.
     """
-    return _scan(
-        iter_blocks(data), search_terms, match_all, case_insensitive, start_ms, end_ms
+    block_ok, line_ok = _matcher(
+        search_terms, match_all, case_insensitive, start_ms, end_ms
     )
+    return flatten_log_blocks(read_container(data, block_ok=block_ok), line_ok)
 
 
 def scan_boom_range(
     path: str,
-    start: int,
-    end: int,
+    start: int = 0,
+    end: int | None = None,
     search_terms: list[str] | None = None,
     match_all: bool = False,
     case_insensitive: bool = False,
+    salvage: bool = False,
 ) -> Iterator[tuple]:
     """Flattened lines of the blocks one BYTE RANGE ``[start, end)`` of
-    a .bm file owns — the Avro split algorithm (the reference reads
-    whole files per mapper via ``AvroBlockInputFormat``; real Avro
-    readers split). The ranges of any split of a file together return
-    exactly its whole-file rows, each once, and a damaged block raises
-    as in the whole-file read (the ownership and strictness rules of
-    :func:`iter_blocks`). The optional ``search_terms`` push the
-    FastSearch block byte-scan into each range (:func:`scan_boom_bytes`).
+    a .bm file owns (default: the whole file), read through an mmap —
+    the Avro split algorithm (the reference reads whole files per
+    mapper via ``AvroBlockInputFormat``; real Avro readers split). The
+    ranges of any split of a file together return exactly its
+    whole-file rows, each once, and a damaged block raises as in the
+    whole-file read (:func:`iter_blocks`) unless ``salvage`` is set. The
+    optional ``search_terms`` push the FastSearch predicates into each
+    range (:func:`scan_boom_bytes`).
     """
+    block_ok, line_ok = _matcher(search_terms, match_all, case_insensitive)
     with mapped(path) as mm:
-        yield from _scan(
-            iter_blocks(mm, start, end), search_terms, match_all, case_insensitive
-        )
+        records = read_container(mm, start, end, salvage, block_ok)
+        yield from flatten_log_blocks(records, line_ok)
 
 
-def flatten_log_blocks(records: Iterator[dict]) -> Iterator[tuple]:
+def flatten_log_blocks(
+    records: Iterator[dict], line_ok: Callable[[int, str], bool] | None = None
+) -> Iterator[tuple]:
     """logBlock records → flattened (ts, message, event_id, create_time,
-    block_no, line_no) tuples (LogLineData semantics)."""
+    block_no, line_no) tuples (LogLineData semantics): the one logBlock
+    flattener. With ``line_ok`` (:func:`_matcher`), a tuple is built
+    only for the lines where ``line_ok(ts, message)`` holds."""
     for rec in records:
-        second = rec["second"]
+        second_ms = rec["second"] * 1000
         create_time = rec["createTime"]
         block_no = rec["blockNumber"]
         for line_no, line in enumerate(rec["logLines"]):
-            yield (
-                second * 1000 + line["ms"],
-                line["message"],
-                int(line.get("eventId", 0) or 0),
-                create_time,
-                block_no,
-                line_no,
-            )
+            ts = second_ms + line["ms"]
+            message = line["message"]
+            if line_ok is None or line_ok(ts, message):
+                yield (
+                    ts,
+                    message,
+                    int(line.get("eventId", 0) or 0),
+                    create_time,
+                    block_no,
+                    line_no,
+                )
 
 
 def read_boom_local(path: str) -> list[tuple]:
     """Driver-side read of one .bm file (tests / small files)."""
-    with open(path, "rb") as f:
-        return list(flatten_log_blocks(read_container(f.read())))
-
-
-def count_boom_lines(path: str) -> int:
-    """Full-decode line count of one .bm file — the integrity check the
-    maintenance jobs run before deleting their source (the
-    ``fs/FileManager.java`` checksum-verified-move analog: a truncated
-    or corrupt container fails the Avro parse or yields a short count).
-    Streaming fold over the block generator; only the raw bytes are
-    held, never the decoded rows."""
-    with open(path, "rb") as f:
-        return sum(1 for _ in flatten_log_blocks(read_container(f.read())))
+    return list(scan_boom_range(path))
 
 
 @contextlib.contextmanager
@@ -629,20 +611,18 @@ def read_boom(
     def read_range(p: str, start: int, end: int) -> "pd.DataFrame":
         import pandas as pd
 
-        if not skip_corrupt:
-            rows = scan_boom_range(
-                p, start, end, search_terms, match_all, case_insensitive
-            )
-            return pd.DataFrame(list(rows), columns=LOG_COLUMNS)
-        # file-level fallback on top of block-level resync: a mutated
-        # header can even yield a DIFFERENT valid schema whose records
-        # don't flatten — under salvage semantics that range contributes
-        # zero rows, it never kills the task
+        rows = scan_boom_range(
+            p, start, end, search_terms, match_all, case_insensitive, skip_corrupt
+        )
         try:
-            with mapped(p) as mm:
-                records = read_container(mm, start, end, salvage=True)
-                rows = list(flatten_log_blocks(records))
+            rows = list(rows)
         except Exception:  # noqa: BLE001
+            if not skip_corrupt:
+                raise
+            # file-level fallback on top of block-level resync: a mutated
+            # header can even yield a DIFFERENT valid schema whose records
+            # don't flatten — under salvage that range contributes zero
+            # rows, it never kills the task
             rows = []
         return pd.DataFrame(rows, columns=LOG_COLUMNS)
 

@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from bb_bigdata_log_tools_spark.schema import LOG_COLUMNS
+
 EVENTS_AS_LOGS_SQL = """
     SELECT epoch_ms(ts) AS ts,
            event_type || ' ' || coalesce(props, '') AS message,
@@ -151,4 +153,4 @@ def cat_by_time(spark, path: str, start_ms: int, end_ms: int) -> DataFrame:
         & (F.col("ts") >= F.lit(start_ms))
         & (F.col("ts") < F.lit(end_ms))
     )
-    return out.select("ts", "message", "event_id", "create_time", "block_no", "line_no")
+    return out.select(*LOG_COLUMNS)

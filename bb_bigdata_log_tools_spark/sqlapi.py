@@ -12,27 +12,18 @@ exploits exactly that by using the SAME string as its oracle.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
-from bb_bigdata_log_tools_spark.session import table
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+from bb_bigdata_log_tools_spark.session import load_tables
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> list[str]:
     """Create a temp view per fixture table present in ``sf_dir``;
     returns the registered names."""
-    out = []
-    for name in TABLES:
-        if os.path.exists(os.path.join(sf_dir, f"{name}.parquet")):
-            table(spark, sf_dir, name).createOrReplaceTempView(name)
-            out.append(name)
-    return out
+    tables = load_tables(spark, sf_dir)
+    for name, df in tables.items():
+        df.createOrReplaceTempView(name)
+    return list(tables)
 
 
 def sql(spark: SparkSession, sf_dir: str, query: str) -> DataFrame:

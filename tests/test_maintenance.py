@@ -242,6 +242,79 @@ def test_readboom_cli(tmp_path):
     assert lines[1] == "2500\tworld\t8\t0\t1\t0"
 
 
+READBOOM = [sys.executable, os.path.join(BIN, "..", "bb_bigdata_log_tools_spark", "cli_admin.py"), "readboom"]
+
+
+def _readboom_lines(path: str) -> list[str]:
+    """The lines ``readboom`` prints for an intact file."""
+    return ["\t".join(map(str, row)) for row in read_boom_local(path)]
+
+
+def _big_bm(tmp_path) -> str:
+    """A .bm file whose readboom output (~1.6 MB) overflows a pipe buffer."""
+    path = str(tmp_path / "big.bm")
+    write_boom_local(path, [(NOW_MS + 37 * i, f"line {i} " + "x" * 40, i) for i in range(30_000)])
+    return path
+
+
+def test_readboom_closed_pipe_exits_quietly(tmp_path):
+    """``readboom big.bm | head -2``: the closed pipe ends readboom with
+    exit status 0 and nothing on stderr."""
+    proc = subprocess.Popen(
+        [*READBOOM, _big_bm(tmp_path)],
+        stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True,
+    )
+    head = [proc.stdout.readline() for _ in range(2)]
+    proc.stdout.close()
+    err = proc.stderr.read()
+    assert proc.wait(timeout=120) == 0, err
+    assert err == ""
+    assert len(head) == 2 and all(line.endswith("\n") for line in head)
+
+
+@pytest.mark.parametrize("damage", ["missing", "truncated"])
+def test_readboom_bad_file_names_it(tmp_path, damage):
+    """A missing or truncated file after a good one: the good file's
+    lines, then the truncated file's lines before the damage, stay on
+    stdout; stderr holds one ERROR line naming the file; exit status 1."""
+    good = str(tmp_path / "good.bm")
+    write_boom_local(good, [(1500, "hello", 7), (2500, "world", 8)])
+    big = _big_bm(tmp_path)
+    bad = str(tmp_path / "bad.bm")
+    if damage == "truncated":
+        with open(big, "rb") as f:
+            data = f.read()
+        with open(bad, "wb") as f:
+            f.write(data[: len(data) // 2])
+    out = subprocess.run([*READBOOM, good, bad], capture_output=True, text=True, timeout=120)
+    assert out.returncode == 1
+    err = out.stderr.splitlines()
+    assert len(err) == 1 and err[0].startswith(";******************** ERROR:"), out.stderr
+    assert bad in err[0]
+    printed = out.stdout.splitlines()
+    want = _readboom_lines(good)
+    assert printed[: len(want)] == want
+    rest = printed[len(want):]
+    assert rest == _readboom_lines(big)[: len(rest)]
+    assert bool(rest) == (damage == "truncated")
+
+
+def test_python_m_dispatches_readboom(tmp_path):
+    """``python -m bb_bigdata_log_tools_spark readboom`` reaches the admin
+    tool, for a file and for stdin."""
+    bm = str(tmp_path / "x.bm")
+    write_boom_local(bm, [(1500, "hello", 7), (2500, "world", 8)])
+    cmd = [sys.executable, "-m", "bb_bigdata_log_tools_spark", "readboom"]
+    root = os.path.dirname(BIN)
+    from_file = subprocess.run([*cmd, bm], capture_output=True, text=True, cwd=root)
+    with open(bm, "rb") as f:
+        from_stdin = subprocess.run(cmd, stdin=f, capture_output=True, cwd=root)
+    assert from_file.returncode == 0, from_file.stderr
+    assert from_file.stdout.splitlines() == _readboom_lines(bm)
+    assert from_stdin.returncode == 0, from_stdin.stderr
+    assert from_stdin.stdout.decode().splitlines() == _readboom_lines(bm)
+
+
 def test_indexlogs_and_queryindex_cli(tmp_path):
     root = str(tmp_path / "service")
     _mk_hour(root, "dc1", "svcA", "logs", "20240110", "01", "c1", "data", _lines_at(0), old=False)
@@ -337,7 +410,7 @@ def test_second_runner_skips_while_lease_held(spark, tmp_path):
     root = str(tmp_path / "service")
     base = os.path.join(root, "dc1", "svc1", "logs")
     os.makedirs(base)
-    with MaintenanceLease(base, now_ms=NOW_MS):
+    with MaintenanceLease(base):
         assert os.path.exists(os.path.join(base, LEASE_MARKER))
         # a concurrent sweep over the same tree must NOT run
         with pytest.raises(MaintenanceLockHeld) as e:
@@ -375,7 +448,7 @@ def test_lease_released_on_sweep_failure(tmp_path):
     base = str(tmp_path / "base")
     os.makedirs(base)
     with pytest.raises(ValueError):
-        with MaintenanceLease(base, now_ms=NOW_MS):
+        with MaintenanceLease(base):
             raise ValueError("sweep blew up")
     assert not os.path.exists(os.path.join(base, LEASE_MARKER))
 
