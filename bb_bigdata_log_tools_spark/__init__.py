@@ -11,6 +11,3 @@ reference file it mirrors in its docstring.
 """
 
 __version__ = "0.1.0"
-
-from bb_bigdata_log_tools_spark.schema import LOG_COLUMNS, LOG_SCHEMA  # noqa: F401
-from bb_bigdata_log_tools_spark.session import get_spark, load_tables  # noqa: F401

@@ -26,7 +26,9 @@ matter (reference README: "Order of arguments do not matter").
 
 Data goes to stdout (between the reference's data markers), notices to
 stderr — same stream discipline as the reference, so shell pipelines
-keep working.
+keep working. pyspark and the operators are imported only once the
+arguments are checked and the window resolves to a directory, so a bad
+call fails before they load.
 """
 
 from __future__ import annotations
@@ -36,16 +38,10 @@ import re
 import sys
 import time
 from datetime import datetime, timezone
-from typing import NoReturn
+from typing import TYPE_CHECKING, NoReturn
 
-from pyspark.errors import IllegalArgumentException
-from pyspark.sql import DataFrame, SparkSession
-
-if __package__ in (None, ""):  # invoked as a bare script: bootstrap sys.path
-    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-from bb_bigdata_log_tools_spark.operators import logops, util
-from bb_bigdata_log_tools_spark.sources.boom import read_boom
+if TYPE_CHECKING:
+    from pyspark.sql import DataFrame, SparkSession
 
 DATA_MARKER = ";#################### DATA MARKER ####################"
 
@@ -121,15 +117,13 @@ def resolve_paths(
 
 
 def parse_args(argv: list[str]) -> dict:
-    opts: dict = {"flags": set(), "D": []}
+    opts: dict = {"flags": set()}
     for arg in argv:
         if arg.startswith("--") and "=" in arg:
             k, v = arg[2:].split("=", 1)
             opts[k] = v
         elif arg.startswith("--"):
             opts["flags"].add(arg[2:])
-        elif arg.startswith("-D"):
-            opts["D"].append(arg[2:])
         elif arg.startswith("-") and "=" in arg:
             k, v = arg[1:].split("=", 1)
             opts[k] = v.strip("'\"")
@@ -160,6 +154,7 @@ def _require(opts: dict, tool: str, keys: list[str]) -> list[str]:
 def _emit(df: DataFrame, opts: dict) -> None:
     from pyspark.sql import functions as F
 
+    from bb_bigdata_log_tools_spark.operators import logops, util
     from bb_bigdata_log_tools_spark.schema import DEFAULT_FIELD_SEPARATOR, LOG_COLUMNS
 
     date_format = opts.get("dateFormat", "RFC5424")
@@ -258,6 +253,8 @@ def _load(opts: dict, tool: str, extra: list[str]) -> tuple:
     if not paths:
         sys.stderr.write("; no matching log directories\n")
         raise SystemExit(0)
+    from bb_bigdata_log_tools_spark.sources.boom import read_boom
+
     spark = _spark()
     # --skipCorrupt: salvage damaged .bm trees (sync-marker resync past
     # corrupt blocks) instead of failing the run — see read_boom
@@ -275,12 +272,16 @@ def _spark() -> SparkSession:
 def logcat(argv: list[str]) -> None:
     opts = parse_args(argv)
     df, start_ms, end_ms, _ = _load(opts, "logcat", [])
+    from bb_bigdata_log_tools_spark.operators import logops
+
     _emit(logops.cat(df, start_ms, end_ms), opts)
 
 
 def logsearch(argv: list[str]) -> None:
     opts = parse_args(argv)
     df, start_ms, end_ms, (term,) = _load(opts, "logsearch", ["string"])
+    from bb_bigdata_log_tools_spark.operators import logops
+
     _emit(
         logops.search(df, term, start_ms, end_ms, "i" in opts["flags"]),
         opts,
@@ -290,6 +291,10 @@ def logsearch(argv: list[str]) -> None:
 def loggrep(argv: list[str]) -> None:
     opts = parse_args(argv)
     df, start_ms, end_ms, (regex,) = _load(opts, "loggrep", ["regex"])
+    from pyspark.errors import IllegalArgumentException
+
+    from bb_bigdata_log_tools_spark.operators import logops
+
     try:  # java.util.regex is rlike's dialect: fail before any job runs
         df.sparkSession._jvm.java.util.regex.Pattern.compile(regex)
     except IllegalArgumentException as exc:  # PatternSyntaxException
@@ -336,6 +341,8 @@ def logmultisearch(argv: list[str]) -> None:
     opts = parse_args(argv)
     terms = _read_terms(opts["strings"]) if "strings" in opts else []
     df, start_ms, end_ms, _ = _load(opts, "logmultisearch", ["strings"])
+    from bb_bigdata_log_tools_spark.operators import logops
+
     _emit(
         logops.multisearch(
             df,
@@ -358,21 +365,24 @@ TOOLS = {
 
 
 def main() -> None:
-    """Run the tool named by the program name (``bin/logcat``) or by the
-    first argument (``python -m bb_bigdata_log_tools_spark readboom``):
-    the search tools here and the admin tools of ``cli_admin``."""
+    """Run ``<tool> [args]`` from ``sys.argv`` (``python -m
+    bb_bigdata_log_tools_spark``, which ``bin/logdriver`` and every
+    ``bin/<tool>`` symlink to it run): the search tools here and the
+    admin tools of ``cli_admin``, the one table of tools. ``help`` (or
+    no tool) lists them, ``version`` prints the version, and an unknown
+    tool exits 2."""
+    from bb_bigdata_log_tools_spark import __version__
     from bb_bigdata_log_tools_spark.cli_admin import TOOLS as ADMIN_TOOLS
 
     tools = {**TOOLS, **ADMIN_TOOLS}
-    prog = os.path.basename(sys.argv[0])
-    if prog not in tools and len(sys.argv) > 1 and sys.argv[1] in tools:
-        tools[sys.argv[1]](sys.argv[2:])
-    elif prog in tools:
-        tools[prog](sys.argv[1:])
+    tool = sys.argv[1] if len(sys.argv) > 1 else "help"
+    if tool in tools:
+        tools[tool](sys.argv[2:])
+    elif tool == "version":
+        print(__version__)
+    elif tool in ("help", "-h", "--help"):
+        print("usage: logdriver <tool> [args...]")
+        print(f"tools: {' '.join(tools)} version")
     else:
-        sys.stderr.write(f"usage: {{{'|'.join(tools)}}} [args]\n")
-        raise SystemExit(1)
-
-
-if __name__ == "__main__":
-    main()
+        sys.stderr.write(f"logdriver: unknown tool '{tool}'\n")
+        raise SystemExit(2)

@@ -28,10 +28,7 @@ import re
 import sys
 from datetime import datetime, timezone
 
-if __package__ in (None, ""):  # invoked as a bare script: bootstrap sys.path
-    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-from bb_bigdata_log_tools_spark.cli import closed_pipe, main, parse_args, parse_time
+from bb_bigdata_log_tools_spark.cli import closed_pipe, parse_args, parse_time
 
 
 def _spark():
@@ -406,7 +403,3 @@ TOOLS = {
     "hfind": hfind_cli,
     "logmaintenance": logmaintenance,
 }
-
-
-if __name__ == "__main__":
-    main()

@@ -489,9 +489,7 @@ def _sweep(
     hour_re = re.escape(hour) if hour else r"\d{2}"
     re_date = re.compile(rf"({date_re})$")
     re_hour = re.compile(rf"({date_re})/({hour_re})$")
-    re_incoming = re.compile(rf"({date_re})/({hour_re})/([^/]+)/incoming$")
-    re_data = re.compile(rf"({date_re})/({hour_re})/([^/]+)/data$")
-    re_archive = re.compile(rf"({date_re})/({hour_re})/([^/]+)/archive$")
+    re_state = re.compile(rf"({date_re})/({hour_re})/([^/]+)/(incoming|data|archive)$")
 
     def is_old(path: str) -> bool:
         return _mtime_ms(path) < now - wait_time_ms
@@ -519,7 +517,6 @@ def _sweep(
         if not os.path.isdir(p):
             continue
         children = sorted(os.listdir(p))
-        add_children = True
         rel = os.path.relpath(p, base)
 
         if not is_old(p):
@@ -535,29 +532,26 @@ def _sweep(
             if re_date.fullmatch(rel) or re_hour.fullmatch(rel):
                 mark_ready_if_children_ready(p, children)
 
-            m = re_incoming.fullmatch(rel)
+            m = re_state.fullmatch(rel)
             if m:
-                stamp = m.group(1) + m.group(2)
-                if delete_cut is not None and stamp < delete_cut:
-                    shutil.rmtree(p)
-                    report.deleted.append(p)
-                    continue
-                if do_merge and any(VALID_FILE.fullmatch(c) for c in children):
-                    report.lines_merged += merge_incoming_dir(
-                        spark, os.path.dirname(p)
-                    )
-                    report.merged.append(p)
-                    continue
-
-            m = re_data.fullmatch(rel)
-            if m:
-                stamp, comp = m.group(1) + m.group(2), m.group(3)
+                stamp, comp, state = m.group(1) + m.group(2), m.group(3), m.group(4)
                 if delete_cut is not None and stamp < delete_cut:
                     shutil.rmtree(p)
                     report.deleted.append(p)
                     continue
                 if (
-                    archive_cut is not None
+                    state == "incoming"
+                    and do_merge
+                    and any(VALID_FILE.fullmatch(c) for c in children)
+                ):
+                    report.lines_merged += merge_incoming_dir(
+                        spark, os.path.dirname(p)
+                    )
+                    report.merged.append(p)
+                    continue
+                if (
+                    state == "data"
+                    and archive_cut is not None
                     and stamp < archive_cut
                     and filters_conf is not None
                 ):
@@ -585,18 +579,9 @@ def _sweep(
                         report.archived.append(comp_dir)
                     continue
 
-            m = re_archive.fullmatch(rel)
-            if m:
-                stamp = m.group(1) + m.group(2)
-                if delete_cut is not None and stamp < delete_cut:
-                    shutil.rmtree(p)
-                    report.deleted.append(p)
-                    continue
-
-        if add_children:
-            for c in reversed(children):
-                cp = os.path.join(p, c)
-                if os.path.isdir(cp):
-                    stack.append(cp)
+        for c in reversed(children):
+            cp = os.path.join(p, c)
+            if os.path.isdir(cp):
+                stack.append(cp)
 
     return report

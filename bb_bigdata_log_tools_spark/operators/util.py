@@ -25,7 +25,7 @@ def counted_checkpoint(df):
     return out, obs.get["n"]
 
 
-def small_sort(df, *cols, spill_rows: int = SMALL_SORT_SPILL_ROWS):
+def small_sort(df, *cols):
     """Deterministic order for small result sets WITHOUT a range sort.
 
     ``orderBy`` range-partitions: the partitioner SAMPLES the input,
@@ -36,18 +36,19 @@ def small_sort(df, *cols, spill_rows: int = SMALL_SORT_SPILL_ROWS):
 
     GUARD: "small by construction" can fail — a boilerplate-heavy corpus
     makes the near-dup pair set itself quadratic. The input goes through
-    :func:`counted_checkpoint`; above ``spill_rows`` observed rows the
-    sort falls back to a distributed ``orderBy`` over the checkpointed
-    blocks instead of funneling everything through one task. Both
-    branches produce the same totally-ordered rows — the guard picks a
-    physical strategy, never a result.
+    :func:`counted_checkpoint`; above :data:`SMALL_SORT_SPILL_ROWS`
+    observed rows (read at call time) the sort falls back to a
+    distributed ``orderBy`` over the checkpointed blocks instead of
+    funneling everything through one task. Both branches produce the
+    same totally-ordered rows — the guard picks a physical strategy,
+    never a result.
 
     Returns a DataFrame, for callers that go on computing or writing in
     Spark (the gate keys, the CLI's ``--out``). The CLI's stdout path
     orders small results on the driver instead (``cli._emit``).
     """
     out, n = counted_checkpoint(df)
-    if n > spill_rows:
+    if n > SMALL_SORT_SPILL_ROWS:
         return out.orderBy(*cols)
     # repartition(1), not coalesce(1): measured head-to-head (r13) the
     # narrow coalesce was NET NEUTRAL — it drops the tiny shuffle and

@@ -13,8 +13,10 @@ Parity targets (re-derived from the PUBLIC Avro 1.x container spec):
   output's marker (``merge_avro_files`` here). Payloads are copied
   verbatim — no decompress/decode on the merge path.
 - ``avro/AvroFileHeader.java`` / ``avro/AvroUtils.java``: header
-  parse/serialize (``read_header`` / ``container_header_bytes``), shared
-  with the boom source along with its block walker (``iter_blocks``).
+  parse/serialize, shared with the boom source along with its block
+  walker (``iter_blocks``) and its one container writer
+  (``write_container``, which every writer here goes through, so a file
+  appears only when complete).
 
 Spark integration is the boom source's one distributed read
 (``boom.fan_out``): block scan and merge read whole files, as they
@@ -36,7 +38,7 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame, SparkSession
 
 from bb_bigdata_log_tools_spark.sources import boom
-from bb_bigdata_log_tools_spark.sources.boom import container_header_bytes, read_header
+from bb_bigdata_log_tools_spark.sources.boom import read_header
 
 
 # ---------------------------------------------------------------------------
@@ -152,16 +154,6 @@ def _union_index(branches: list, value) -> int:
     raise ValueError("union has only null branches")
 
 
-def block_bytes(
-    schema, rows: list, codec: str, sync: bytes
-) -> bytes:
-    """Encode one container block (count, size, payload, sync)."""
-    enc = _Encoder()
-    for row in rows:
-        enc.encode(schema, row)
-    return boom.block_frame(len(rows), boom.deflate(codec, bytes(enc.out)), sync)
-
-
 def write_avro_local(
     path: str,
     schema_json: str,
@@ -172,10 +164,16 @@ def write_avro_local(
 ) -> None:
     """Write rows (dicts keyed by field name) to one container file."""
     schema = json.loads(schema_json)
-    with open(path, "wb") as f:
-        f.write(container_header_bytes(schema_json, codec, sync))
+
+    def blocks() -> Iterator[tuple[int, bytes]]:
         for i in range(0, len(rows), records_per_block):
-            f.write(block_bytes(schema, rows[i : i + records_per_block], codec, sync))
+            chunk = rows[i : i + records_per_block]
+            enc = _Encoder()
+            for row in chunk:
+                enc.encode(schema, row)
+            yield len(chunk), boom.deflate(codec, bytes(enc.out))
+
+    boom.write_container(path, schema_json, codec, blocks(), sync)
 
 
 # ---------------------------------------------------------------------------
@@ -190,12 +188,12 @@ def merge_avro_files(spark: SparkSession, paths: list[str], out_path: str) -> in
     raw block copy: single header, every block re-synced to the output
     marker, payloads byte-identical (never decompressed).
 
-    Distributed shape: each input file's blocks are extracted on an
-    executor (one whole-file range each, :func:`fan_out`); the ordered
-    segments flow through one sorted partition into a streaming writer,
-    so driver memory stays O(1) and executor memory O(largest single
-    block) — the same pattern as ``compact_boom_dir``. Returns the
-    merged record count.
+    Distributed shape: each input file's raw payloads are extracted on
+    an executor (one whole-file range each, :func:`fan_out`) and flow,
+    ordered, through one partition into ``boom.write_container``, which
+    frames them with ``MERGE_SYNC``: driver memory stays O(1), executor
+    memory O(largest single block), as in ``compact_boom_dir``. Returns
+    the merged record count.
 
     Parity: ``mapreduce/avro/AvroBlockWriterMapper.java`` (keep one
     header, clean up sync markers) over BinaryOutputFormat.
@@ -212,45 +210,34 @@ def merge_avro_files(spark: SparkSession, paths: list[str], out_path: str) -> in
         if schema_codec != headers[0]:
             raise ValueError(f"schema/codec mismatch in merge input: {p}")
     schema0, codec0 = headers[0]
+    schema_json = json.dumps(schema0, separators=(",", ":"))
 
     order = {p: i for i, p in enumerate(paths)}
 
     def extract(p: str, _start: int, _end: int) -> "pd.DataFrame":
         with boom.mapped(p) as mm:
-            segs = [
-                (order[p], i, n, boom.block_frame(n, raw, MERGE_SYNC))
-                for i, n, _sz, raw in scan_blocks(mm)
-            ]
+            blocks = [(order[p], i, n, raw) for i, n, _sz, raw in scan_blocks(mm)]
         return pd.DataFrame(
-            segs, columns=["file_order", "block_idx", "record_count", "seg"]
+            blocks, columns=["file_order", "block_idx", "record_count", "payload"]
         )
 
     ranges = [(p, 0, os.path.getsize(p)) for p in paths]
-    schema = "file_order int, block_idx long, record_count long, seg binary"
-    segs = boom.fan_out(spark, ranges, extract, schema)
-
-    header = container_header_bytes(
-        json.dumps(schema0, separators=(",", ":")), codec0, MERGE_SYNC
-    )
-    tmp_out = out_path + ".inprogress"
+    schema = "file_order int, block_idx long, record_count long, payload binary"
+    blocks = boom.fan_out(spark, ranges, extract, schema)
 
     def write_part(rows) -> Iterator[tuple[int]]:
-        n = 0
-        with open(tmp_out, "wb") as f:
-            f.write(header)
-            for row in rows:
-                f.write(bytes(row.seg))
-                n += int(row.record_count)
-        yield (n,)
+        payloads = ((int(r.record_count), bytes(r.payload)) for r in rows)
+        yield (boom.write_container(out_path, schema_json, codec0, payloads, MERGE_SYNC),)
 
     counts = (
-        segs.repartition(1)
+        blocks.repartition(1)
         .sortWithinPartitions("file_order", "block_idx")
         .rdd.mapPartitions(write_part)
         .collect()
     )
-    os.replace(tmp_out, out_path)
-    return counts[0][0] if counts else 0
+    if not counts:  # no input block: the empty exchange runs no task
+        return boom.write_container(out_path, schema_json, codec0, [], MERGE_SYNC)
+    return counts[0][0]
 
 
 # ---------------------------------------------------------------------------

@@ -36,6 +36,11 @@ task reads a bin of ranges through an mmap of its files. A ``.bm`` range
 decodes through the same ranged walk (the Avro
 ``DataFileReader.sync/pastSync`` contract), so hourly part files and a
 consolidated archive alike return exactly the whole-file rows.
+
+Every ``.bm`` and ``.avro`` write goes through one container writer,
+:func:`write_container` (the reference's one ``DataFileWriter``), and
+every file the program publishes through :func:`published`, so a reader
+never sees a partial or short file under a name it reads.
 """
 
 from __future__ import annotations
@@ -44,17 +49,18 @@ import contextlib
 import fnmatch
 import glob
 import heapq
+import itertools
 import json
 import mmap
 import os
 import struct
 import zlib
-from collections.abc import Callable, Iterator
+from collections.abc import Callable, Iterable, Iterator
+from typing import TYPE_CHECKING
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
-
-from bb_bigdata_log_tools_spark.schema import LOG_COLUMNS, LOG_SCHEMA
+if TYPE_CHECKING:
+    from pyspark.sql import DataFrame, SparkSession
+    from pyspark.sql.types import StructType
 
 MAGIC = b"Obj\x01"
 
@@ -200,11 +206,6 @@ def deflate(codec: str, payload: bytes) -> bytes:
     if codec != "null":
         raise ValueError(f"unsupported codec: {codec}")
     return payload
-
-
-def block_frame(count: int, payload: bytes, sync: bytes) -> bytes:
-    """One container block: ``count | size | payload | sync``."""
-    return _zigzag(count) + _zigzag(len(payload)) + payload + sync
 
 
 def iter_blocks(
@@ -473,6 +474,26 @@ def mapped(path: str) -> Iterator[mmap.mmap]:
         yield mm
 
 
+@contextlib.contextmanager
+def published(path: str) -> Iterator[str]:
+    """The one publish: yields the temp name ``<path>.inprogress.<attempt>``
+    to write ``path`` to, renamed over ``path`` when the ``with`` body
+    completes and deleted if it raises. ``attempt`` is the Spark task attempt id
+    (the pid on the driver), so no two attempts share a temp file, and a
+    reader sees ``path`` complete or not at all."""
+    from pyspark import TaskContext
+
+    tc = TaskContext.get()
+    tmp = f"{path}.inprogress.{tc.taskAttemptId() if tc is not None else os.getpid()}"
+    try:
+        yield tmp
+        os.replace(tmp, path)  # atomic: same directory
+    except BaseException:
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(tmp)
+        raise
+
+
 def container_ranges(
     path: str | list[str], pattern: str = "*.bm", spark: SparkSession | None = None
 ) -> list[tuple[str, int, int]]:
@@ -483,9 +504,9 @@ def container_ranges(
     session is given. Directories are walked recursively. Files, and
     directories below a root, whose names start with ``_`` or ``.`` are
     skipped, as Spark's file sources skip them (``_temporary`` attempt
-    output, hidden files); only matching names are read, so an
-    in-progress ``*.bm.tmp`` stays invisible. A path that matches
-    nothing raises. An empty file still gets one range, so a strict read
+    output, hidden files); only matching names are read, so a
+    ``*.bm.tmp`` or a :func:`published` temp name stays invisible. A
+    path that matches nothing raises. An empty file still gets one range, so a strict read
     of it fails like any headerless file."""
 
     def hidden(name: str) -> bool:
@@ -608,6 +629,8 @@ def read_boom(
             "the tree first, then search"
         )
 
+    from bb_bigdata_log_tools_spark.schema import LOG_COLUMNS, LOG_SCHEMA
+
     def read_range(p: str, start: int, end: int) -> "pd.DataFrame":
         import pandas as pd
 
@@ -674,20 +697,34 @@ def container_header_bytes(schema_json: str, codec: str, sync: bytes) -> bytes:
     return bytes(out)
 
 
-def _write_block(
-    f, sync: bytes, second: int, create_time: int, block_no: int, blk: list[tuple]
-) -> None:
-    """Encode one logBlock as one deflate-compressed container block.
-    ``blk`` holds (ts, message, event_id) with ts // 1000 == second."""
+def write_container(
+    path: str, schema_json: str, codec: str, blocks: Iterable[tuple[int, bytes]], sync: bytes
+) -> int:
+    """The one container writer, the inverse of :func:`iter_blocks`: the
+    header, then ``count | size | payload | sync`` per ``(record_count,
+    compressed_payload)`` of ``blocks``, published only when complete
+    (:func:`published`). Returns the record count."""
+    n = 0
+    with published(path) as tmp, open(tmp, "wb") as f:
+        f.write(container_header_bytes(schema_json, codec, sync))
+        for count, payload in blocks:
+            f.write(_zigzag(count) + _zigzag(len(payload)) + payload + sync)
+            n += count
+    return n
+
+
+def _log_block(second: int, create_time: int, block_no: int, lines: list[tuple]) -> bytes:
+    """One logBlock record, deflated: one container block's payload.
+    ``lines`` are :func:`write_reboom_stream`'s, all in ``second``."""
     body = bytearray()
     body += _zigzag(second) + _zigzag(create_time) + _zigzag(block_no)
-    body += _zigzag(len(blk))
-    for ts, message, event_id in blk:
+    body += _zigzag(len(lines))
+    for ts, message, event_id, _create_time, _block_no in lines:
         mb = message.encode("utf-8")
         body += _zigzag(ts % 1000) + _zigzag(event_id)
         body += _zigzag(len(mb)) + mb
     body += _zigzag(0)  # array terminator
-    f.write(block_frame(1, deflate("deflate", bytes(body)), sync))
+    return deflate("deflate", bytes(body))
 
 
 def write_boom_stream(
@@ -706,18 +743,13 @@ def write_boom_stream(
     from 0; the encoding is :func:`write_reboom_stream`'s. Returns the
     line count.
     """
-
-    def numbered():
-        block_no, cur_second = -1, None
-        for line in lines:
-            ts = line[0]
-            if ts // 1000 != cur_second:
-                cur_second = ts // 1000
-                block_no += 1
-            event_id = line[2] if len(line) > 2 else 0
-            yield ts, line[1], event_id, create_time, block_no
-
-    return write_reboom_stream(path, numbered(), sync=sync)
+    seconds = itertools.groupby(lines, lambda line: line[0] // 1000)
+    numbered = (
+        (line[0], line[1], line[2] if len(line) > 2 else 0, create_time, block_no)
+        for block_no, (_second, blk) in enumerate(seconds)
+        for line in blk
+    )
+    return write_reboom_stream(path, numbered, sync=sync)
 
 
 def write_reboom_stream(
@@ -737,22 +769,17 @@ def write_reboom_stream(
     (createTime, blockNumber) pairs survive the round trip. Streaming:
     memory is bounded by one block. Returns the line count.
     """
-    with open(path, "wb") as f:
-        f.write(container_header_bytes(BOOM_SCHEMA_JSON, "deflate", sync))
-        n = 0
-        cur: tuple | None = None  # (second, create_time, block_no)
-        blk: list[tuple] = []
-        for ts, message, event_id, create_time, block_no in lines:
-            key = (ts // 1000, create_time, block_no)
-            if key != cur:
-                if cur is not None:
-                    _write_block(f, sync, cur[0], cur[1], cur[2], blk)
-                cur = key
-                blk = []
-            blk.append((ts, message, event_id))
-            n += 1
-        if cur is not None:
-            _write_block(f, sync, cur[0], cur[1], cur[2], blk)
+    n = 0
+
+    def blocks() -> Iterator[tuple[int, bytes]]:
+        nonlocal n
+        runs = itertools.groupby(lines, lambda line: (line[0] // 1000, line[3], line[4]))
+        for (second, create_time, block_no), blk in runs:
+            blk = list(blk)
+            n += len(blk)
+            yield 1, _log_block(second, create_time, block_no, blk)
+
+    write_container(path, BOOM_SCHEMA_JSON, "deflate", blocks(), sync)
     return n
 
 
@@ -868,16 +895,16 @@ def write_boom_tree(
     wrote ~hours/partitions files per task), and memory per task is
     one hour of lines. Lines are sorted (ts, message, event_id) before
     encoding so each hourly file's BYTES are deterministic across
-    runs, retries, and cluster sizes; the write lands on an
-    attempt-unique temp name and publishes via atomic rename, so a
-    retried/speculative attempt cannot interleave into a published
-    file. ``root`` must be a filesystem all executors share (local FS
-    in local mode, NFS/fuse mount on a cluster — for object stores
-    prefer ``write_log_store``'s parquet layout). ``file_tag``
-    namespaces the part files (e.g. a streaming micro-batch id) so
-    repeated appends into the same hour land on distinct names and a
-    recovery re-run of the SAME batch overwrites its own file rather
-    than duplicating lines. Returns the number of lines written.
+    runs, retries, and cluster sizes. Each file is written by
+    :func:`write_container`, so a retried or speculative attempt cannot
+    interleave into a published file and a failed one leaves none.
+    ``root`` must be a filesystem all executors share (local FS in
+    local mode, NFS/fuse mount on a cluster — for object stores prefer
+    ``write_log_store``'s parquet layout). ``file_tag`` namespaces the
+    part files (e.g. a streaming micro-batch id) so repeated appends
+    into the same hour land on distinct names and a recovery re-run of
+    the SAME batch overwrites its own file rather than duplicating
+    lines. Returns the number of lines written.
     """
     import pandas as pd
     from pyspark.sql import functions as F
@@ -894,8 +921,6 @@ def write_boom_tree(
     count_schema = T.StructType([T.StructField("n", T.LongType())])
 
     def write_group(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        from pyspark import TaskContext
-
         d, h = str(pdf["date"].iloc[0]), str(pdf["hour"].iloc[0])
         dirp = os.path.join(root, dc, service, log_type, d, h, component, "data")
         os.makedirs(dirp, exist_ok=True)
@@ -904,11 +929,7 @@ def write_boom_tree(
             (int(t), str(m), int(e))
             for t, m, e in zip(pdf["ts"], pdf["message"], pdf["event_id"])
         )
-        tc = TaskContext.get()
-        attempt = tc.taskAttemptId() if tc is not None else os.getpid()
-        tmp = f"{path}.inprogress.{attempt}"
-        write_boom_local(tmp, lines, create_time=create_time)
-        os.replace(tmp, path)
+        write_boom_local(path, lines, create_time=create_time)
         return pd.DataFrame({"n": [len(lines)]})
 
     # explicit repartition on the group key: hour groups are tiny, and

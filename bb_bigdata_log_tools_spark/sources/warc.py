@@ -1075,8 +1075,8 @@ def _write_record_shards(
     ``tagged`` carries the optional ``rec_meta`` column — the revisit
     sink's keeper/digest linkage; sinks without it keep the 4-arg
     signature). One exchange on shard_id, records sorted by key
-    within a shard, one gzip member per record, attempt-unique temp
-    name + atomic rename publish. Returns the manifest (shard_id,
+    within a shard, one gzip member per record, shard and ``.idx``
+    each through ``boom.published``. Returns the manifest (shard_id,
     path, n_records, total_bytes — UNCOMPRESSED record bytes, the
     deterministic quantity an oracle can recompute)."""
     import pandas as pd
@@ -1092,7 +1092,7 @@ def _write_record_shards(
     )
 
     def write_shard(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        from pyspark import TaskContext
+        from bb_bigdata_log_tools_spark.sources.boom import published
 
         if pdf["rec_key"].isna().any() or pdf["shard_id"].isna().any():
             # a null id has no shard and would serialize '<urn:doc:nan>'
@@ -1103,46 +1103,30 @@ def _write_record_shards(
             )
         sid = int(pdf["shard_id"].iloc[0])
         path = os.path.join(out_dir, f"{prefix}-{sid:05d}.warc.gz")
-        has_meta = "rec_meta" in pdf.columns
         # FULL-tuple sort: key ties (duplicate ids) must still order
         # deterministically or re-runs stop being byte-identical
-        if has_meta:
-            rows = sorted(
-                (int(k), str(p), str(u), str(d), str(m))
-                for k, p, u, d, m in zip(
-                    pdf["rec_key"], pdf["payload"], pdf["target_uri"],
-                    pdf["warc_date"], pdf["rec_meta"],
-                )
-            )
-        else:
-            rows = sorted(
-                (int(k), str(p), str(u), str(d))
-                for k, p, u, d in zip(
-                    pdf["rec_key"], pdf["payload"], pdf["target_uri"],
-                    pdf["warc_date"],
-                )
-            )
-        tc = TaskContext.get()
-        attempt = tc.taskAttemptId() if tc is not None else os.getpid()
-        tmp = f"{path}.inprogress.{attempt}"
+        text_cols = ["payload", "target_uri", "warc_date"]
+        if "rec_meta" in pdf.columns:
+            text_cols.append("rec_meta")
+        rows = sorted(
+            (int(k), *map(str, texts))
+            for k, *texts in zip(pdf["rec_key"], *(pdf[c] for c in text_cols))
+        )
         total = 0
         # CDX-style sidecar offset index (Common Crawl ships the same
         # idea as cluster.idx/CDXJ): "rec_pos offset length" of each
         # gzip member — what makes the EXACT split scan
         # (read_warc_split) possible without boundary heuristics.
         idx_lines = []
-        with open(tmp, "wb") as f:
+        with published(path) as tmp, open(tmp, "wb") as f:
             for i, row in enumerate(rows):
                 rec = make_record(*row)
                 member = gzip_member(rec)
                 idx_lines.append(f"{i} {f.tell()} {len(member)}\n")
                 f.write(member)
                 total += len(rec)
-        os.replace(tmp, path)
-        itmp = f"{path}.idx.inprogress.{attempt}"
-        with open(itmp, "w") as f:
+        with published(path + ".idx") as tmp, open(tmp, "w") as f:
             f.writelines(idx_lines)
-        os.replace(itmp, path + ".idx")
         return pd.DataFrame(
             {
                 "shard_id": [sid],

@@ -158,6 +158,7 @@ def write_webdataset(
     import pandas as pd
 
     from bb_bigdata_log_tools_spark.functions.hashing import md5_long
+    from bb_bigdata_log_tools_spark.sources.boom import published
 
     os.makedirs(out_dir, exist_ok=True)
     shard = F.pmod(
@@ -189,15 +190,7 @@ def write_webdataset(
             key=lambda r: (r[0], r[1]),
         )
         total = 0
-        # attempt-unique temp name: a retried/speculative attempt of the
-        # same shard task must not interleave writes into one file; the
-        # atomic os.replace publish makes last-writer-wins safe.
-        from pyspark import TaskContext
-
-        tc = TaskContext.get()
-        attempt = tc.taskAttemptId() if tc is not None else os.getpid()
-        tmp = f"{path}.inprogress.{attempt}"
-        with tarfile.open(tmp, "w", format=tarfile.USTAR_FORMAT) as tf:
+        with published(path) as tmp, tarfile.open(tmp, "w", format=tarfile.USTAR_FORMAT) as tf:
             for key, ext, payload in rows:
                 payload = bytes(payload)
                 info = tarfile.TarInfo(name=f"{key}.{ext}" if ext else str(key))
@@ -207,7 +200,6 @@ def write_webdataset(
                 info.uname = info.gname = ""
                 tf.addfile(info, io.BytesIO(payload))
                 total += len(payload)
-        os.replace(tmp, path)  # atomic publish (same-dir rename)
         return pd.DataFrame(
             {
                 "shard_id": [sid],

@@ -96,6 +96,13 @@ def test_merge_raw_blocks(tmp_path, spark):
         src_payloads = [raw for _i, _n, _sz, raw in ag.scan_blocks(f.read())]
     merged_payloads = [raw for _i, _n, _sz, raw in ag.scan_blocks(data)]
     assert merged_payloads[: len(src_payloads)] == src_payloads
+    # inputs with no block at all merge into a header-only container
+    for p in (a, b):
+        ag.write_avro_local(p, SCHEMA, [])
+    assert ag.merge_avro_files(spark, [a, b], merged) == 0
+    with open(merged, "rb") as f:
+        data = f.read()
+    assert ag.read_header(data)[2] == ag.MERGE_SYNC and list(read_container(data)) == []
 
 
 def test_merge_rejects_mismatched_schema(tmp_path, spark):

@@ -2,7 +2,9 @@
 Avro library (``tests/jvm_avro.py``). A file the JVM writes reads back
 exactly through every program reader, and a file the program writes
 reads back exactly through the JVM, so a bug shared by the program's
-writer and reader cannot pass."""
+writer and reader cannot pass. Every program writer frames its blocks
+through ``boom.write_container``; the write direction covers it through
+the ``.bm`` writers, ``write_avro_local`` and ``merge_avro_files``."""
 
 from __future__ import annotations
 
@@ -14,6 +16,7 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from bb_bigdata_log_tools_spark.sources.avro_generic import merge_avro_files, write_avro_local
 from bb_bigdata_log_tools_spark.sources.boom import (
     BOOM_SCHEMA_JSON,
     read_boom,
@@ -22,6 +25,7 @@ from bb_bigdata_log_tools_spark.sources.boom import (
     scan_boom_bytes,
     scan_boom_range,
     write_boom_local,
+    write_reboom_stream,
 )
 from jvm_avro import jvm_read, jvm_write
 
@@ -161,3 +165,98 @@ def test_jvm_written_corpus_scans_like_plain_filter(spark, blocks, codec, sync_i
                 ]
                 got = scan_boom_bytes(raw, terms, match_all, ci, start_ms, end_ms)
                 assert list(got) == expected, (start_ms, end_ms, match_all, ci)
+
+
+#: Messages and strings: any text, and text made only of non-BMP characters.
+TEXT = st.one_of(st.text(max_size=30),
+                 st.text(st.characters(min_codepoint=0x10000), max_size=6))
+LINE = st.fixed_dictionaries({
+    "ms": st.integers(0, 999),
+    "eventId": st.integers(-(2**31), 2**31 - 1),
+    "message": TEXT,
+})
+#: Few distinct values, so runs of equal create times and block numbers occur.
+RUNNY = st.one_of(st.integers(0, 2), st.integers(0, 2**62))
+
+
+@settings(max_examples=20, deadline=None)
+@given(st.lists(st.lists(LINE, max_size=6), max_size=12), st.integers(0, 2**62), st.randoms())
+def test_boom_local_written_lines_jvm_reads_back_exactly(spark, seconds, create_time, rnd):
+    """``write_boom_local`` over 0 to 6 lines a second, in shuffled
+    order: the JVM reads one logBlock per second that has lines, in
+    second order, numbered from 0, holding that second's lines in input
+    order."""
+    lines = [((SECOND0 + s) * 1000 + ln["ms"], ln["message"], ln["eventId"])
+             for s, lns in enumerate(seconds) for ln in lns]
+    rnd.shuffle(lines)
+    want = [
+        {"second": second, "createTime": create_time, "blockNumber": block_no,
+         "logLines": [{"ms": ts % 1000, "eventId": eid, "message": msg}
+                      for ts, msg, eid in lines if ts // 1000 == second]}
+        for block_no, second in enumerate(sorted({ts // 1000 for ts, *_ in lines}))
+    ]
+    with tempfile.TemporaryDirectory() as d:
+        path = os.path.join(d, "part-0.bm")
+        write_boom_local(path, lines, create_time=create_time)
+        assert jvm_read(spark, path) == want
+
+
+@settings(max_examples=20, deadline=None)
+@given(st.lists(st.fixed_dictionaries({
+    "second": st.integers(SECOND0, SECOND0 + 2),
+    "createTime": RUNNY,
+    "blockNumber": RUNNY,
+    "logLines": st.lists(LINE, min_size=1, max_size=6),
+}), max_size=20))
+def test_reboom_written_blocks_jvm_reads_back_exactly(spark, blocks):
+    """``write_reboom_stream`` over the lines of random logBlocks, each
+    block's (second, createTime, blockNumber) differing from the one
+    before: the JVM reads back exactly those blocks."""
+    def key(b):
+        return b["second"], b["createTime"], b["blockNumber"]
+
+    blocks = [b for i, b in enumerate(blocks) if i == 0 or key(b) != key(blocks[i - 1])]
+    lines = [(b["second"] * 1000 + ln["ms"], ln["message"], ln["eventId"], *key(b)[1:])
+             for b in blocks for ln in b["logLines"]]
+    with tempfile.TemporaryDirectory() as d:
+        path = os.path.join(d, "part-0.bm")
+        assert write_reboom_stream(path, iter(lines)) == len(lines)
+        assert jvm_read(spark, path) == blocks
+
+
+GENERIC_SCHEMA_JSON = (
+    '{"type":"record","name":"generic","fields":['
+    '{"name":"id","type":"long"},'
+    '{"name":"name","type":"string"},'
+    '{"name":"note","type":["null","string"]},'
+    '{"name":"tags","type":{"type":"array","items":"string"}},'
+    '{"name":"attrs","type":{"type":"map","values":"long"}}]}'
+)
+INT64 = st.integers(-(2**63), 2**63 - 1)
+GENERIC_ROW = st.fixed_dictionaries({
+    "id": INT64,
+    "name": TEXT,
+    "note": st.none() | TEXT,
+    "tags": st.lists(TEXT, max_size=4),
+    "attrs": st.dictionaries(TEXT, INT64, max_size=4),
+})
+
+
+@settings(max_examples=20, deadline=None)
+@given(st.lists(st.lists(GENERIC_ROW, max_size=12), min_size=2, max_size=3),
+       st.integers(1, 7), st.sampled_from(["null", "deflate"]))
+def test_program_written_avro_jvm_reads_back_exactly(spark, files, records_per_block, codec):
+    """``write_avro_local`` writes 2 or 3 files of random generic records
+    (long, string, a null|string union, an array and a map), 1 to 7
+    records a block; the JVM reads back each file's rows, and the
+    ``merge_avro_files`` output as all of them in file order."""
+    with tempfile.TemporaryDirectory() as d:
+        paths = []
+        for i, rows in enumerate(files):
+            paths.append(os.path.join(d, f"part-{i}.avro"))
+            write_avro_local(paths[-1], GENERIC_SCHEMA_JSON, rows, codec=codec,
+                             records_per_block=records_per_block)
+            assert jvm_read(spark, paths[-1]) == rows
+        merged = os.path.join(d, "merged.avro")
+        assert merge_avro_files(spark, paths, merged) == sum(map(len, files))
+        assert jvm_read(spark, merged) == [row for rows in files for row in rows]

@@ -17,6 +17,7 @@ import pytest
 from bb_bigdata_log_tools_spark.sources import avro_generic as ag
 from bb_bigdata_log_tools_spark.sources.boom import (
     BOOM_SCHEMA_JSON,
+    container_header_bytes,
     flatten_log_blocks,
     read_boom,
     read_container,
@@ -24,6 +25,7 @@ from bb_bigdata_log_tools_spark.sources.boom import (
     scan_boom_bytes,
     scan_boom_range,
     write_boom_local,
+    write_boom_stream,
 )
 
 SPLITS = (None, 257, 64, 17)  # None: one range over the whole file
@@ -110,7 +112,7 @@ def snappy_file(tmp_path):
     with open(path, "rb") as f:
         data = f.read()
     _schema, _codec, sync, header_end = read_header(data)
-    data = ag.container_header_bytes(BOOM_SCHEMA_JSON, "snappy", sync) + data[header_end:]
+    data = container_header_bytes(BOOM_SCHEMA_JSON, "snappy", sync) + data[header_end:]
     with open(path, "wb") as f:
         f.write(data)
     return path, data
@@ -304,9 +306,9 @@ PIN_AVRO_ROWS = [
 
 
 def test_writers_output_is_pinned(tmp_path):
-    """Both container writers frame blocks through one block framer; the
-    bytes they write on a fixed corpus are pinned (deflate at level 6 of
-    the installed zlib)."""
+    """Both container writers frame blocks through one container writer,
+    ``write_container``; the bytes they write on a fixed corpus are
+    pinned (deflate at level 6 of the installed zlib)."""
     path = str(tmp_path / "pin")
 
     def sha() -> str:
@@ -323,3 +325,26 @@ def test_writers_output_is_pinned(tmp_path):
     ag.write_avro_local(path, PIN_AVRO_SCHEMA, PIN_AVRO_ROWS, codec="null",
                         records_per_block=4)
     assert sha() == "852d01c2c9cb3305524f5bf1d1732d12dccda0f60cf77ed89f2788bdf3b54f2e"
+
+
+def test_failed_write_leaves_no_file(tmp_path):
+    """A writer whose input raises midway leaves neither its path nor a
+    temp file behind: a .bm stream whose input raises at line 4,000 of
+    5,000, and an .avro write whose row 3,000 of 5,000 does not encode.
+    Nothing short is left for a reader to take for the whole file."""
+
+    def lines():
+        for i in range(5000):
+            if i == 4000:
+                raise RuntimeError("input failed")
+            yield 1_700_000_000_000 + i * 250, f"line {i}", i
+
+    with pytest.raises(RuntimeError, match="input failed"):
+        write_boom_stream(str(tmp_path / "part-0.bm"), lines())
+    schema = json.dumps({"type": "record", "name": "r", "fields": [
+        {"name": "id", "type": "long"}, {"name": "name", "type": "string"}]})
+    rows = [{"id": i, "name": f"row {i}"} for i in range(5000)]
+    rows[3000]["id"] = "not a long"
+    with pytest.raises(ValueError):
+        ag.write_avro_local(str(tmp_path / "part-0.avro"), schema, rows, records_per_block=100)
+    assert os.listdir(tmp_path) == []

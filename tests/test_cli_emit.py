@@ -42,11 +42,16 @@ def tie_tree(tmp_path_factory):
     return root, data
 
 
-@pytest.mark.parametrize("spill", [False, True], ids=["driver_sort", "range_sort"])
-def test_stdout_order_equals_format_and_sort(spark, monkeypatch, tie_tree, spill):
-    """logcat's stdout equals ``format_and_sort`` (``orderBy`` on ts,
-    create_time, block_no, line_no), on the driver-side sort and, with
-    the spill threshold below the row count, on Spark's range sort."""
+@pytest.mark.parametrize(
+    "spill, out",
+    [(False, False), (True, False), (False, True), (True, True)],
+    ids=["driver_sort", "range_sort", "driver_sort_out", "range_sort_out"],
+)
+def test_stdout_order_equals_format_and_sort(spark, monkeypatch, tmp_path, tie_tree, spill, out):
+    """logcat's stdout, and the concatenated part files of ``--out``,
+    equal ``format_and_sort`` (``orderBy`` on ts, create_time, block_no,
+    line_no), on the small-result sort and, with the spill threshold
+    below the row count, on Spark's range sort."""
     root, data = tie_tree
     if spill:
         monkeypatch.setattr(util, "SMALL_SORT_SPILL_ROWS", 1)
@@ -55,7 +60,16 @@ def test_stdout_order_equals_format_and_sort(spark, monkeypatch, tie_tree, spill
         for r in logops.format_and_sort(logops.cat(read_boom(spark, data), *WINDOW)).collect()
     ]
     assert len(want) == 320 and len({line.split(" ", 1)[0] for line in want}) == 80
-    assert _run(spark, monkeypatch, "logcat", _argv(root, *WINDOW)) == want
+    if not out:
+        assert _run(spark, monkeypatch, "logcat", _argv(root, *WINDOW)) == want
+        return
+    target = str(tmp_path / "out")
+    assert _run(spark, monkeypatch, "logcat", _argv(root, *WINDOW, f"--out={target}")) == []
+    got = []
+    for name in sorted(n for n in os.listdir(target) if n.startswith("part-")):
+        with open(os.path.join(target, name), encoding="utf-8") as f:
+            got += f.read().splitlines()
+    assert got == want
 
 
 def test_stdout_call_runs_two_jobs_and_no_shuffle(spark, monkeypatch, tie_tree):

@@ -1,0 +1,66 @@
+"""The CLI's entry: every ``bin/`` tool is a symlink to the one dispatcher,
+``bin/logdriver``, which runs from any working directory, and a call that
+fails on its arguments, finds no data, or needs no cluster imports no
+pyspark."""
+
+from __future__ import annotations
+
+import os
+import subprocess
+import sys
+
+import pytest
+
+from bb_bigdata_log_tools_spark import __version__
+from bb_bigdata_log_tools_spark.sources.boom import write_boom_local
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+BIN = os.path.join(REPO, "bin")
+TOOLS = ("hfind", "indexlogs", "logcat", "loggrep", "logmaintenance",
+         "logmultisearch", "logsearch", "queryindex", "readboom")
+
+
+def test_bin_tools_run_from_any_directory(tmp_path):
+    """``bin/logdriver version`` and ``bin/queryindex`` work from a
+    directory outside the repository with no PYTHONPATH set, and every
+    tool in ``bin/`` is a symlink to ``logdriver``."""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    ver = subprocess.run([os.path.join(BIN, "logdriver"), "version"],
+                         capture_output=True, text=True, cwd=tmp_path, env=env, timeout=60)
+    assert ver.returncode == 0, ver.stderr
+    assert ver.stdout.strip() == __version__
+    q = subprocess.run([os.path.join(BIN, "queryindex"), f"-r={tmp_path / 'none'}"],
+                       capture_output=True, text=True, cwd=tmp_path, env=env, timeout=60)
+    assert q.returncode == 0, q.stderr
+    assert "Matched components: 0" in q.stdout
+    assert sorted(os.listdir(BIN)) == sorted([*TOOLS, "logdriver"])
+    assert all(os.readlink(os.path.join(BIN, t)) == "logdriver" for t in TOOLS)
+
+
+@pytest.mark.parametrize("case", ["bad_logsearch", "logcat_no_dirs", "readboom", "queryindex"])
+def test_tool_imports_no_pyspark(tmp_path, case):
+    """``python -X importtime`` lists every module a call imports: a
+    ``logsearch`` missing its arguments, a ``logcat`` whose window
+    matches no directory, ``readboom`` of a file and ``queryindex``
+    import no ``pyspark`` module."""
+    none = str(tmp_path / "none")
+    bm = str(tmp_path / "f.bm")
+    write_boom_local(bm, [(1500, "hello", 7), (2500, "world", 8)])
+    args, code, out_lines = {
+        "bad_logsearch": (["logsearch", "-dc=x"], 1, 0),
+        "logcat_no_dirs": (["logcat", "-dc=x", "-svc=y", "-comp=z", "-start=0",
+                            "-end=100", f"-root={none}"], 0, 0),
+        "readboom": (["readboom", bm], 0, 2),
+        "queryindex": (["queryindex", f"-r={none}"], 0, 2),
+    }[case]
+    res = subprocess.run(
+        [sys.executable, "-X", "importtime", "-m", "bb_bigdata_log_tools_spark", *args],
+        capture_output=True, text=True, cwd=tmp_path, timeout=60,
+        env=dict(os.environ, PYTHONPATH=REPO),
+    )
+    assert res.returncode == code, res.stderr[-2000:]
+    assert len(res.stdout.splitlines()) == out_lines, res.stdout
+    imported = [line.rsplit("|", 1)[-1].strip() for line in res.stderr.splitlines()
+                if line.startswith("import time:")]
+    assert "bb_bigdata_log_tools_spark.cli" in imported
+    assert [m for m in imported if m.split(".")[0] == "pyspark"] == []

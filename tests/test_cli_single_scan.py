@@ -165,7 +165,7 @@ def test_parse_time_ten_digits_is_epoch_seconds():
 def _cli_proc(*args: str, **kw) -> subprocess.Popen:
     env = dict(os.environ, PYTHONPATH=REPO, SPARK_GRAFT_CPUS="2")
     return subprocess.Popen(
-        [sys.executable, os.path.join(REPO, "bb_bigdata_log_tools_spark/cli.py"), *args],
+        [sys.executable, "-m", "bb_bigdata_log_tools_spark", *args],
         stderr=subprocess.PIPE, text=True, env=env, **kw,
     )
 

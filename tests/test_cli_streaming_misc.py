@@ -39,7 +39,7 @@ def service_root(tmp_path_factory):
 def run_tool(tool: str, *args: str) -> str:
     env = dict(os.environ, PYTHONPATH=REPO, SPARK_GRAFT_CPUS="4")
     res = subprocess.run(
-        [sys.executable, os.path.join(REPO, "bb_bigdata_log_tools_spark/cli.py"), tool, *args],
+        [sys.executable, "-m", "bb_bigdata_log_tools_spark", tool, *args],
         capture_output=True,
         text=True,
         timeout=300,
@@ -191,7 +191,7 @@ def test_cli_logsearch_case_insensitive(cli_batch):
 def test_cli_missing_args_usage_error(service_root):
     env = dict(os.environ, PYTHONPATH=REPO)
     res = subprocess.run(
-        [sys.executable, os.path.join(REPO, "bb_bigdata_log_tools_spark/cli.py"), "logsearch", "-dc=99"],
+        [sys.executable, "-m", "bb_bigdata_log_tools_spark", "logsearch", "-dc=99"],
         capture_output=True,
         text=True,
         timeout=120,

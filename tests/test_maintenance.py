@@ -232,7 +232,7 @@ def test_readboom_cli(tmp_path):
     bm = tmp_path / "x.bm"
     write_boom_local(str(bm), [(1500, "hello", 7), (2500, "world", 8)])
     out = subprocess.run(
-        [sys.executable, os.path.join(BIN, "..", "bb_bigdata_log_tools_spark", "cli_admin.py"), "readboom", str(bm)],
+        [os.path.join(BIN, "readboom"), str(bm)],
         capture_output=True,
         text=True,
         check=True,
@@ -242,7 +242,7 @@ def test_readboom_cli(tmp_path):
     assert lines[1] == "2500\tworld\t8\t0\t1\t0"
 
 
-READBOOM = [sys.executable, os.path.join(BIN, "..", "bb_bigdata_log_tools_spark", "cli_admin.py"), "readboom"]
+READBOOM = [os.path.join(BIN, "readboom")]
 
 
 def _readboom_lines(path: str) -> list[str]:
@@ -321,10 +321,9 @@ def test_indexlogs_and_queryindex_cli(tmp_path):
     _mk_hour(root, "dc1", "svcA", "logs", "20240112", "02", "c1", "archive", _lines_at(0), old=False)
     _mk_hour(root, "dc1", "svcB", "logs", "20240111", "03", "c2", "incoming", _lines_at(0), old=False)
 
-    cli = os.path.join(BIN, "..", "bb_bigdata_log_tools_spark", "cli_admin.py")
     idx_file = str(tmp_path / "index.json")
     subprocess.run(
-        [sys.executable, cli, "indexlogs", f"-r={root}", f"-o={idx_file}"],
+        [os.path.join(BIN, "indexlogs"), f"-r={root}", f"-o={idx_file}"],
         capture_output=True,
         text=True,
         check=True,
@@ -337,7 +336,7 @@ def test_indexlogs_and_queryindex_cli(tmp_path):
     assert c1["archiveDate"] == 1705017600000
 
     q = subprocess.run(
-        [sys.executable, cli, "queryindex", f"-f={idx_file}", "--p", "--s", "dc1", "svcA"],
+        [os.path.join(BIN, "queryindex"), f"-f={idx_file}", "--p", "--s", "dc1", "svcA"],
         capture_output=True,
         text=True,
         check=True,
@@ -347,7 +346,7 @@ def test_indexlogs_and_queryindex_cli(tmp_path):
     assert "Date range: 2024-01-10..2024-01-12" in q.stdout
 
     q_all = subprocess.run(
-        [sys.executable, cli, "queryindex", f"-f={idx_file}"],
+        [os.path.join(BIN, "queryindex"), f"-f={idx_file}"],
         capture_output=True,
         text=True,
         check=True,

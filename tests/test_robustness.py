@@ -19,7 +19,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from bb_bigdata_log_tools_spark.operators import dedup
+from bb_bigdata_log_tools_spark.operators import dedup, util
 from bb_bigdata_log_tools_spark.operators.util import small_sort
 
 # heavy tier: excluded from the fast dev gate (pytest -m 'not slow');
@@ -32,13 +32,15 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_small_sort_spills_to_range_sort(spark):
+def test_small_sort_spills_to_range_sort(spark, monkeypatch):
     # pmod scrambles the ordering so the sort can't be optimized away
     # (range output is ordered and localCheckpoint keeps that metadata)
     df = spark.range(1000).select(F.pmod(F.col("id") * 7919, F.lit(1000)).alias("k"))
-    small = small_sort(df, "k", spill_rows=2000)
+    monkeypatch.setattr(util, "SMALL_SORT_SPILL_ROWS", 2000)
+    small = small_sort(df, "k")
     assert "rangepartitioning" not in _plan(small).lower()
-    spilled = small_sort(df, "k", spill_rows=10)
+    monkeypatch.setattr(util, "SMALL_SORT_SPILL_ROWS", 10)
+    spilled = small_sort(df, "k")
     assert "rangepartitioning" in _plan(spilled).lower()
     assert [r["k"] for r in spilled.collect()] == list(range(1000))
     assert [r["k"] for r in small.collect()] == list(range(1000))
