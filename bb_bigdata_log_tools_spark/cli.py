@@ -40,6 +40,8 @@ import time
 from datetime import datetime, timezone
 from typing import TYPE_CHECKING, NoReturn
 
+from bb_bigdata_log_tools_spark import tree
+
 if TYPE_CHECKING:
     from pyspark.sql import DataFrame, SparkSession
 
@@ -53,6 +55,11 @@ DATE_FORMATS = [
     "%Y-%m-%dT%H:%M:%S",
     "%Y/%m/%d %H:%M",
 ]
+
+
+def fail(message: str) -> NoReturn:
+    """End the run with exit status 1 and one error line on stderr."""
+    raise SystemExit(f";******************** ERROR: {message}") from None
 
 
 def parse_time(value: str) -> int:
@@ -74,46 +81,21 @@ def parse_time(value: str) -> int:
             )
         except ValueError:
             continue
-    raise SystemExit(f";******************** ERROR: cannot parse time: {value}")
+    fail(f"cannot parse time: {value}")
 
 
 def resolve_paths(
     root: str, dc: str, svc: str, comp: str, start_ms: int, end_ms: int
 ) -> list[str]:
-    """CatByTime-style path pruning: hourly dirs inside [start, end).
-
-    Layout: ``<root>/<dc>/<svc>/<type>/<yyyyMMdd>/<HH>/<comp>/data``.
-    Only hours overlapping the window are listed — the hand-rolled
-    partition pruning of the reference, kept for .bm trees (parquet
-    tables get this from Catalyst instead).
-    """
-    out = []
-    svc_dir = os.path.join(root, dc, svc)
-    if not os.path.isdir(svc_dir):
-        return out
-    hour_ms = 3600 * 1000
-    for log_type in sorted(os.listdir(svc_dir)):
-        type_dir = os.path.join(svc_dir, log_type)
-        if not os.path.isdir(type_dir):
-            continue
-        for date_s in sorted(os.listdir(type_dir)):
-            if not re.fullmatch(r"\d{8}", date_s):
-                continue
-            for hour_s in sorted(os.listdir(os.path.join(type_dir, date_s))):
-                if not re.fullmatch(r"\d{2}", hour_s):
-                    continue
-                t0 = int(
-                    datetime.strptime(f"{date_s}{hour_s}", "%Y%m%d%H")
-                    .replace(tzinfo=timezone.utc)
-                    .timestamp()
-                    * 1000
-                )
-                if t0 + hour_ms <= start_ms or t0 >= end_ms:
-                    continue
-                comp_dir = os.path.join(type_dir, date_s, hour_s, comp, "data")
-                if os.path.isdir(comp_dir):
-                    out.append(comp_dir)
-    return out
+    """CatByTime-style path pruning of a .bm tree (parquet tables get it
+    from Catalyst): the ``data`` directories of ``comp`` in the hours the
+    window ``[start_ms, end_ms)`` touches, in (type, date, hour) order,
+    by the rules of :mod:`bb_bigdata_log_tools_spark.tree`."""
+    return [
+        path
+        for path, *_, state in tree.hours(root, dc, svc, comp, start_ms, end_ms)
+        if state == "data"
+    ]
 
 
 def parse_args(argv: list[str]) -> dict:
@@ -247,7 +229,7 @@ def _load(opts: dict, tool: str, extra: list[str]) -> tuple:
     )
     start_ms, end_ms = parse_time(start_s), parse_time(end_s)
     if end_ms <= start_ms:
-        raise SystemExit(";******************** ERROR: end must be after start")
+        fail("end must be after start")
     root = opts.get("root", "/service")
     paths = resolve_paths(root, dc, svc, comp, start_ms, end_ms)
     if not paths:
@@ -298,10 +280,7 @@ def loggrep(argv: list[str]) -> None:
     try:  # java.util.regex is rlike's dialect: fail before any job runs
         df.sparkSession._jvm.java.util.regex.Pattern.compile(regex)
     except IllegalArgumentException as exc:  # PatternSyntaxException
-        raise SystemExit(
-            f";******************** ERROR: invalid regex: {regex} "
-            f"({str(exc).splitlines()[0]})"
-        ) from None
+        fail(f"invalid regex: {regex} ({str(exc).splitlines()[0]})")
     _emit(
         logops.grep(df, regex, start_ms, end_ms, "i" in opts["flags"]),
         opts,
@@ -326,14 +305,12 @@ def _read_terms(strings_path: str) -> list[str]:
                     line.strip().replace("\r", "") for line in f if line.strip()
                 )
     except (OSError, UnicodeDecodeError) as exc:
-        raise SystemExit(
-            f";******************** ERROR: cannot read -strings={strings_path}: "
+        fail(
+            f"cannot read -strings={strings_path}: "
             f"{getattr(exc, 'strerror', None) or exc}"
-        ) from None
-    if not terms:
-        raise SystemExit(
-            f";******************** ERROR: no search terms in -strings={strings_path}"
         )
+    if not terms:
+        fail(f"no search terms in -strings={strings_path}")
     return terms
 
 

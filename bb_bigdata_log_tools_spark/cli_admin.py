@@ -28,7 +28,8 @@ import re
 import sys
 from datetime import datetime, timezone
 
-from bb_bigdata_log_tools_spark.cli import closed_pipe, parse_args, parse_time
+from bb_bigdata_log_tools_spark import tree
+from bb_bigdata_log_tools_spark.cli import closed_pipe, fail, parse_args, parse_time
 
 
 def _spark():
@@ -64,46 +65,23 @@ def readboom(argv: list[str]) -> None:
             closed_pipe()
         except Exception as exc:  # noqa: BLE001 — any read failure names its file
             name = "<stdin>" if file == "-" else file
-            raise SystemExit(
-                f";******************** ERROR: cannot read {name}: "
-                f"{getattr(exc, 'strerror', None) or exc}"
-            ) from None
+            fail(f"cannot read {name}: {getattr(exc, 'strerror', None) or exc}")
 
 
 # ---------------------------------------------------------------------------
 # indexlogs / queryindex
 # ---------------------------------------------------------------------------
 
-_STATE_DIRS = ("data", "incoming", "archive")
-
 
 def build_index(root: str) -> dict:
-    """Walk ``<root>/<dc>/<service>/<type>/<yyyyMMdd>/<HH>/<component>/
-    {data,incoming,archive}`` and aggregate the IndexLogs component
-    records: start/end/archive dates (epoch ms of yyyyMMdd) + sizes."""
+    """Aggregate the IndexLogs component records over the state
+    directories of the tree under ``root`` (:func:`tree.hours`):
+    start/end/archive dates (epoch ms of the date directory) + sizes."""
     out: dict = {}
-    if not os.path.isdir(root):
-        return out
-    for dirpath, dirnames, filenames in os.walk(root):
-        rel = os.path.relpath(dirpath, root)
-        parts = rel.split(os.sep)
-        # .../<dc>/<service>/<type>/<date>/<hour>/<component>/<state>
-        if len(parts) != 7 or parts[6] not in _STATE_DIRS:
-            continue
-        dc, service, log_type, date_s, hour_s, component, state = parts
-        if not (re.fullmatch(r"\d{8}", date_s) and re.fullmatch(r"\d{2}", hour_s)):
-            continue
-        date_ms = int(
-            datetime.strptime(date_s, "%Y%m%d")
-            .replace(tzinfo=timezone.utc)
-            .timestamp()
-            * 1000
-        )
-        size = sum(
-            os.path.getsize(os.path.join(dirpath, f))
-            for f in filenames
-            if f != "_READY"
-        )
+    for path, dc, service, log_type, date_s, _hour, component, state in tree.hours(root):
+        date_ms = tree.hour_start_ms(date_s)
+        with os.scandir(path) as it:
+            size = sum(e.stat().st_size for e in it if e.is_file() and e.name != "_READY")
         comp = (
             out.setdefault(dc, {})
             .setdefault(service, {})
@@ -124,14 +102,22 @@ def build_index(root: str) -> dict:
         comp["startDate"] = min(comp["startDate"], date_ms)
         comp["endDate"] = max(comp["endDate"], date_ms)
         comp["totalSize"] += size
-        if state == "data":
-            comp["dataSize"] += size
-        elif state == "incoming":
-            comp["incomingSize"] += size
-        else:
-            comp["archiveSize"] += size
+        comp[f"{state}Size"] += size
+        if state == "archive":
             comp["archiveDate"] = max(comp["archiveDate"], date_ms)
     return out
+
+
+def _components(index: dict) -> list[tuple[str, str, str, str, dict]]:
+    """``(dc, service, type, component, record)`` of every component of
+    an index, sorted by name."""
+    return sorted(
+        (dc, svc, t, c, v)
+        for dc, svcs in index.items()
+        for svc, types in svcs.items()
+        for t, comps in types.items()
+        for c, v in comps.items()
+    )
 
 
 def _fmt_date(ms: int) -> str:
@@ -149,33 +135,24 @@ def indexlogs(argv: list[str]) -> None:
     if fmt == "json":
         text = json.dumps(data, sort_keys=True)
     elif fmt == "csv":
-        rows = ["DC,Service,Type,Component,Start Date,End Date,Archive Date,"
-                "Total Size,Data Size,Archive Size,Incoming Size"]
-        for dc, svcs in sorted(data.items()):
-            for svc, types in sorted(svcs.items()):
-                for t, comps in sorted(types.items()):
-                    for c, v in sorted(comps.items()):
-                        rows.append(
-                            f"{dc},{svc},{t},{c},{_fmt_date(v['startDate'])},"
-                            f"{_fmt_date(v['endDate'])},{_fmt_date(v['archiveDate'])},"
-                            f"{v['totalSize']:.0f},{v['dataSize']:.0f},"
-                            f"{v['archiveSize']:.0f},{v['incomingSize']:.0f}"
-                        )
-        text = "\n".join(rows)
+        text = "\n".join([
+            "DC,Service,Type,Component,Start Date,End Date,Archive Date,"
+            "Total Size,Data Size,Archive Size,Incoming Size",
+            *(f"{dc},{svc},{t},{c},{_fmt_date(v['startDate'])},"
+              f"{_fmt_date(v['endDate'])},{_fmt_date(v['archiveDate'])},"
+              f"{v['totalSize']:.0f},{v['dataSize']:.0f},"
+              f"{v['archiveSize']:.0f},{v['incomingSize']:.0f}"
+              for dc, svc, t, c, v in _components(data)),
+        ])
     else:
-        lines = []
-        for dc, svcs in sorted(data.items()):
-            for svc, types in sorted(svcs.items()):
-                for t, comps in sorted(types.items()):
-                    for c, v in sorted(comps.items()):
-                        lines.append(
-                            f"{dc}/{svc}/{t}/{c}: {_fmt_date(v['startDate'])}"
-                            f"..{_fmt_date(v['endDate'])} "
-                            f"total={v['totalSize']:.0f}B data={v['dataSize']:.0f}B "
-                            f"incoming={v['incomingSize']:.0f}B "
-                            f"archive={v['archiveSize']:.0f}B"
-                        )
-        text = "\n".join(lines)
+        text = "\n".join(
+            f"{dc}/{svc}/{t}/{c}: {_fmt_date(v['startDate'])}"
+            f"..{_fmt_date(v['endDate'])} "
+            f"total={v['totalSize']:.0f}B data={v['dataSize']:.0f}B "
+            f"incoming={v['incomingSize']:.0f}B "
+            f"archive={v['archiveSize']:.0f}B"
+            for dc, svc, t, c, v in _components(data)
+        )
     target = opts.get("o", opts.get("out"))
     if target:
         with open(target, "w", encoding="utf-8") as f:
@@ -198,58 +175,30 @@ def queryindex(argv: list[str]) -> None:
     opts = parse_args(argv)
     flags = opts["flags"]
     pos = opts.get("positional", [])
-    t_window = None
+    t0 = t1 = None
     if "t" in opts:
         # parse_args puts '-t=START' form in opts; bin/queryindex passes
         # two positionals after -t — accept both
-        t_window = (parse_time(opts["t"]), parse_time(pos.pop(0)) if pos else None)
-    regexes = [*pos, *[".*"] * (4 - len(pos))][:4]
+        t0, t1 = parse_time(opts["t"]), (parse_time(pos.pop(0)) if pos else None)
     if "f" in opts:
         with open(opts["f"], encoding="utf-8") as f:
             data = json.load(f)
     else:
         data = build_index(opts.get("r", opts.get("root", "/service")))
 
-    total = 0.0
-    n = 0
-    start_min, end_max = None, None
-    matched = []
-    for dc, svcs in sorted(data.items()):
-        if not re.fullmatch(regexes[0], dc):
-            continue
-        for svc, types in sorted(svcs.items()):
-            if not re.fullmatch(regexes[1], svc):
-                continue
-            for t, comps in sorted(types.items()):
-                if not re.fullmatch(regexes[2], t):
-                    continue
-                for c, v in sorted(comps.items()):
-                    if not re.fullmatch(regexes[3], c):
-                        continue
-                    if t_window is not None:
-                        t0, t1 = t_window
-                        if v["endDate"] < t0 or (
-                            t1 is not None and v["startDate"] > t1
-                        ):
-                            continue
-                    matched.append((dc, svc, t, c, v))
-                    total += v["totalSize"]
-                    n += 1
-                    start_min = (
-                        v["startDate"]
-                        if start_min is None
-                        else min(start_min, v["startDate"])
-                    )
-                    end_max = (
-                        v["endDate"] if end_max is None else max(end_max, v["endDate"])
-                    )
-
-    sys.stdout.write(f"Matched components: {n}\n")
-    sys.stdout.write(f"Total size: {total:.0f}B\n")
-    if start_min is not None:
-        sys.stdout.write(
-            f"Date range: {_fmt_date(start_min)}..{_fmt_date(end_max)}\n"
-        )
+    matched = [
+        (dc, svc, t, c, v)
+        for dc, svc, t, c, v in _components(data)
+        if all(re.fullmatch(r, name) for r, name in zip(pos, (dc, svc, t, c)))
+        and (t0 is None or v["endDate"] >= t0)
+        and (t1 is None or v["startDate"] <= t1)
+    ]
+    sys.stdout.write(f"Matched components: {len(matched)}\n")
+    sys.stdout.write(f"Total size: {sum(v['totalSize'] for *_, v in matched):.0f}B\n")
+    if matched:
+        start = min(v["startDate"] for *_, v in matched)
+        end = max(v["endDate"] for *_, v in matched)
+        sys.stdout.write(f"Date range: {_fmt_date(start)}..{_fmt_date(end)}\n")
     if "p" in flags:
         for dc, svc, t, c, v in matched:
             bits = [f"{dc}/{svc}/{t}/{c}"]
@@ -266,6 +215,17 @@ def queryindex(argv: list[str]) -> None:
 # ---------------------------------------------------------------------------
 
 
+def _numbers(opts: dict, *keys: str) -> dict[str, int]:
+    """The values of the options ``keys`` that are given, as ints, read
+    before any session starts. A value that is not a whole number
+    (find's ``+N``/``-N`` included) ends the run with one error line
+    naming its option."""
+    for key in keys:
+        if key in opts and not re.fullmatch(r"[+-]?[0-9]+", opts[key]):
+            fail(f"{key} must be a whole number: {opts[key]}")
+    return {key: int(opts[key]) for key in keys if key in opts}
+
+
 def hfind_cli(argv: list[str]) -> None:
     """find(1)-style CLI (HFind.java): ``hfind <path>... [predicates]``.
 
@@ -276,47 +236,39 @@ def hfind_cli(argv: list[str]) -> None:
     """
     import time as _time
 
+    opts = parse_args(argv)
+    n = _numbers(opts, "size", "mmin", "mtime", "maxdepth")
+    paths = opts.get("positional") or ["."]
+    now_ms = int(_time.time() * 1000)
+    kwargs: dict = {}
+    if "name" in opts:
+        kwargs["name_glob"] = opts["name"]
+    if "type" in opts:
+        kwargs["file_type"] = opts["type"]
+    if "maxdepth" in n:
+        kwargs["max_depth"] = n["maxdepth"]
+    if "size" in n:
+        sign, size = opts["size"][0], abs(n["size"])
+        if sign == "+":
+            kwargs["min_size"] = size + 1
+        elif sign == "-":
+            kwargs["max_size"] = size - 1
+        else:
+            kwargs["min_size"] = kwargs["max_size"] = size
+    for key, unit_ms in (("mmin", 60 * 1000), ("mtime", 24 * 3600 * 1000)):
+        if key in n:
+            sign, age = opts[key][0], abs(n[key]) * unit_ms
+            if sign != "-":  # +N: more than N units ago; N: N units ago
+                kwargs["mtime_before_ms"] = now_ms - age
+            if sign != "+":  # -N: less than N units ago; N: within the unit before
+                kwargs["mtime_after_ms"] = now_ms - age - (0 if sign == "-" else unit_ms)
+
     from pyspark.sql import functions as F
 
     from bb_bigdata_log_tools_spark.sources.hfind import hfind
 
-    opts = parse_args(argv)
-    paths = opts.get("positional") or ["."]
-    now_ms = int(_time.time() * 1000)
-
-    def window(spec: str, unit_ms: int):
-        """find-style +N/-N/N → (mtime_after, mtime_before) in ms."""
-        if spec.startswith("+"):  # older than N units
-            return (None, now_ms - int(spec[1:]) * unit_ms)
-        if spec.startswith("-"):  # younger than N units
-            return (now_ms - int(spec[1:]) * unit_ms, None)
-        n = int(spec)
-        return (now_ms - (n + 1) * unit_ms, now_ms - n * unit_ms)
-
     spark = _spark()
     for path in paths:
-        kwargs: dict = {}
-        if "name" in opts:
-            kwargs["name_glob"] = opts["name"]
-        if "type" in opts:
-            kwargs["file_type"] = opts["type"]
-        if "maxdepth" in opts:
-            kwargs["max_depth"] = int(opts["maxdepth"])
-        if "size" in opts:
-            spec = opts["size"]
-            if spec.startswith("+"):
-                kwargs["min_size"] = int(spec[1:]) + 1
-            elif spec.startswith("-"):
-                kwargs["max_size"] = int(spec[1:]) - 1
-            else:
-                kwargs["min_size"] = kwargs["max_size"] = int(spec)
-        for key, unit in (("mmin", 60 * 1000), ("mtime", 24 * 3600 * 1000)):
-            if key in opts:
-                after, before = window(opts[key], unit)
-                if after is not None:
-                    kwargs["mtime_after_ms"] = after
-                if before is not None:
-                    kwargs["mtime_before_ms"] = before
         df = hfind(spark, path, **kwargs)
         if "regex" in opts:
             df = df.filter(F.col("path").rlike(opts["regex"]))
@@ -341,11 +293,6 @@ def logmaintenance(argv: list[str]) -> None:
     Kerberos here); days-before-* match DAYS_BEFORE_ARCHIVE /
     DAYS_BEFORE_DELETE environment config.
     """
-    from bb_bigdata_log_tools_spark.maintenance import (
-        MaintenanceLockHeld,
-        log_maintenance,
-    )
-
     opts = parse_args(argv)
     pos = opts.get("positional", [])
     if len(pos) < 2:
@@ -363,6 +310,11 @@ def logmaintenance(argv: list[str]) -> None:
     if not root:
         sys.stderr.write("; --root is required (service root dir)\n")
         raise SystemExit(1)
+    n = _numbers(opts, "days-before-archive", "days-before-delete", "now-ms", "wait-min")
+    from bb_bigdata_log_tools_spark.maintenance import (
+        MaintenanceLockHeld,
+        log_maintenance,
+    )
 
     try:
         report = log_maintenance(
@@ -370,22 +322,14 @@ def logmaintenance(argv: list[str]) -> None:
             root,
             dc,
             service,
-        logdir=opts.get("logdir", "logs"),
-        date=date,
-        hour=hour,
-            days_before_archive=(
-                int(opts["days-before-archive"])
-                if "days-before-archive" in opts
-                else None
-            ),
-            days_before_delete=(
-                int(opts["days-before-delete"])
-                if "days-before-delete" in opts
-                else None
-            ),
+            logdir=opts.get("logdir", "logs"),
+            date=date,
+            hour=hour,
+            days_before_archive=n.get("days-before-archive"),
+            days_before_delete=n.get("days-before-delete"),
             filters_conf=opts.get("filters"),
-            now_ms=int(opts["now-ms"]) if "now-ms" in opts else None,
-            wait_time_ms=int(opts.get("wait-min", "10")) * 60 * 1000,
+            now_ms=n.get("now-ms"),
+            wait_time_ms=n.get("wait-min", 10) * 60 * 1000,
             do_merge="no-merge" not in opts["flags"],
         )
     except MaintenanceLockHeld as e:

@@ -44,12 +44,12 @@ import os
 import re
 import shutil
 from dataclasses import dataclass, field
-from datetime import datetime, timedelta, timezone
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bb_bigdata_log_tools_spark.schema import LOG_COLUMNS
+from bb_bigdata_log_tools_spark.tree import STATES, hour_stamp, hour_start_ms
 
 # Files eligible for merging, per the reference's VALID_FILE pattern
 # (numeric-suffixed uploads or .bm files).
@@ -395,11 +395,6 @@ class MaintenanceReport:
         )
 
 
-def _cutoff_stamp(now_ms: int, days: int) -> str:
-    dt = datetime.fromtimestamp(now_ms / 1000, tz=timezone.utc) - timedelta(days=days)
-    return dt.strftime("%Y%m%d%H")
-
-
 def _mtime_ms(path: str) -> int:
     try:
         return int(os.lstat(path).st_mtime * 1000)
@@ -450,24 +445,18 @@ def log_maintenance(
     import time as _time
 
     now = int(_time.time() * 1000) if now_ms is None else now_ms
-    delete_cut = (
-        _cutoff_stamp(now, days_before_delete)
-        if days_before_delete is not None and days_before_delete >= 0
-        else None
-    )
-    archive_cut = (
-        _cutoff_stamp(now, days_before_archive)
-        if days_before_archive is not None and days_before_archive >= 0
-        else None
-    )
+
+    def cutoff(days: int | None) -> str | None:
+        """The hour stamp ``days`` before now; None when unset or negative."""
+        return hour_stamp(now - days * 86_400_000) if days is not None and days >= 0 else None
 
     base = os.path.join(root, dc, service, logdir)
     if not os.path.isdir(base):
         return MaintenanceReport()
     with MaintenanceLease(base):
         return _sweep(
-            spark, base, date, hour, now, delete_cut, archive_cut,
-            filters_conf, wait_time_ms, do_merge,
+            spark, base, date, hour, now, cutoff(days_before_delete),
+            cutoff(days_before_archive), filters_conf, wait_time_ms, do_merge,
         )
 
 
@@ -485,11 +474,6 @@ def _sweep(
 ) -> MaintenanceReport:
     """The body of :func:`log_maintenance`, run under its lease."""
     report = MaintenanceReport()
-    date_re = re.escape(date) if date else r"\d{8}"
-    hour_re = re.escape(hour) if hour else r"\d{2}"
-    re_date = re.compile(rf"({date_re})$")
-    re_hour = re.compile(rf"({date_re})/({hour_re})$")
-    re_state = re.compile(rf"({date_re})/({hour_re})/([^/]+)/(incoming|data|archive)$")
 
     def is_old(path: str) -> bool:
         return _mtime_ms(path) < now - wait_time_ms
@@ -517,7 +501,11 @@ def _sweep(
         if not os.path.isdir(p):
             continue
         children = sorted(os.listdir(p))
-        rel = os.path.relpath(p, base)
+        # <date>[/<hour>[/<comp>/<state>]] below base: an hour of the
+        # tree (tree.hour_start_ms) that the date/hour arguments name
+        parts = os.path.relpath(p, base).split(os.sep)
+        d, h = (parts + [hour or "00"])[:2]
+        in_sweep = hour_start_ms(d, h) is not None and date in (None, d) and hour in (None, h)
 
         if not is_old(p):
             pass  # too young to touch; still descend
@@ -529,12 +517,11 @@ def _sweep(
             report.empties_removed.append(p)
             continue
         else:
-            if re_date.fullmatch(rel) or re_hour.fullmatch(rel):
+            if len(parts) <= 2 and in_sweep:
                 mark_ready_if_children_ready(p, children)
 
-            m = re_state.fullmatch(rel)
-            if m:
-                stamp, comp, state = m.group(1) + m.group(2), m.group(3), m.group(4)
+            if len(parts) == 4 and parts[3] in STATES and in_sweep:
+                stamp, comp, state = d + h, parts[2], parts[3]
                 if delete_cut is not None and stamp < delete_cut:
                     shutil.rmtree(p)
                     report.deleted.append(p)

@@ -882,7 +882,8 @@ def write_boom_tree(
     create_time: int = 0,
     file_tag: str = "",
 ) -> int:
-    """Write canonical log lines into the reference's hourly .bm tree:
+    """Write canonical log lines into the reference's hourly .bm tree
+    (:mod:`bb_bigdata_log_tools_spark.tree`):
     ``<root>/<dc>/<svc>/<type>/<yyyyMMdd>/<HH>/<comp>/data/part-*.bm``
     — the ``PigBoomHourlyOutputFormat`` / ``BoomHourlyStoreFunc`` role
     (``mapreduce/boom/PigBoomHourlyOutputFormat.java``).
@@ -910,12 +911,14 @@ def write_boom_tree(
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    with_dh = logs.select(
+    from bb_bigdata_log_tools_spark.tree import hour_columns
+
+    with_dh = logs.withColumns(hour_columns()).select(
         "ts",
         "message",
         F.coalesce(F.col("event_id"), F.lit(0)).alias("event_id"),
-        F.date_format(F.timestamp_millis(F.col("ts")), "yyyyMMdd").alias("date"),
-        F.date_format(F.timestamp_millis(F.col("ts")), "HH").alias("hour"),
+        "date",
+        "hour",
     )
     tag = f"{file_tag}." if file_tag else ""
     count_schema = T.StructType([T.StructField("n", T.LongType())])

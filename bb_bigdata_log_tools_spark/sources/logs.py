@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from bb_bigdata_log_tools_spark.schema import LOG_COLUMNS
+from bb_bigdata_log_tools_spark.tree import hour_columns, hour_stamp
 
 EVENTS_AS_LOGS_SQL = """
     SELECT epoch_ms(ts) AS ts,
@@ -80,13 +81,13 @@ def write_log_store(logs: DataFrame, path: str, mode: str = "overwrite") -> None
 
     This is the engine's native storage layout: the reference's
     ``/service/.../<yyyyMMdd>/<HH>/...`` directory scheme becomes Hive
-    partitioning, so Catalyst partition pruning replaces the hand-rolled
-    path resolution of the *ByTime tools. At 100 TB this is the layout
-    that makes a one-hour query read one-hour's bytes.
+    partitioning (by ``tree.hour_columns``, which replace any ``date`` and
+    ``hour`` of ``logs``), so Catalyst partition pruning replaces the
+    hand-rolled path resolution of the *ByTime tools. At 100 TB this is
+    the layout that makes a one-hour query read one-hour's bytes.
     """
     (
-        logs.withColumn("date", F.date_format(F.timestamp_millis(F.col("ts")), "yyyyMMdd"))
-        .withColumn("hour", F.date_format(F.timestamp_millis(F.col("ts")), "HH"))
+        logs.withColumns(hour_columns())
         # repartition on the partition keys first: otherwise every write
         # task emits a sliver file into every (date, hour) directory —
         # tasks × partitions small files instead of one file per dir
@@ -134,22 +135,14 @@ def read_log_store(spark, path: str) -> DataFrame:
 
 
 def cat_by_time(spark, path: str, start_ms: int, end_ms: int) -> DataFrame:
-    """CatByTime on the partitioned store: the time window becomes BOTH
-    a partition filter (directory pruning — check ``PartitionFilters``
-    in the scan) and a row-level ts predicate (exact half-open window).
-    """
-    from datetime import datetime, timedelta, timezone
-
+    """CatByTime on the partitioned store: the hours the window touches
+    (:mod:`bb_bigdata_log_tools_spark.tree`) become a partition filter on
+    ``date * 100 + hour`` (check ``PartitionFilters`` in the scan), and
+    ``ts`` a row-level predicate (exact half-open window)."""
     df = read_log_store(spark, path)
-    d0 = datetime.fromtimestamp(start_ms / 1000, tz=timezone.utc)
-    d1 = datetime.fromtimestamp(max(start_ms, end_ms - 1) / 1000, tz=timezone.utc)
-    dates = []
-    d = d0.date()
-    while d <= d1.date():
-        dates.append(d.strftime("%Y%m%d"))
-        d += timedelta(days=1)
+    stamp = F.col("date").cast("long") * 100 + F.col("hour").cast("long")
     out = df.filter(
-        F.col("date").isin(dates)
+        stamp.between(int(hour_stamp(start_ms)), int(hour_stamp(end_ms - 1)))
         & (F.col("ts") >= F.lit(start_ms))
         & (F.col("ts") < F.lit(end_ms))
     )

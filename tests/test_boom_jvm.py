@@ -4,10 +4,14 @@ exactly through every program reader, and a file the program writes
 reads back exactly through the JVM, so a bug shared by the program's
 writer and reader cannot pass. Every program writer frames its blocks
 through ``boom.write_container``; the write direction covers it through
-the ``.bm`` writers, ``write_avro_local`` and ``merge_avro_files``."""
+the ``.bm`` writers (the hourly tree and the compaction included),
+``write_avro_local`` and ``merge_avro_files``, and the read direction
+every reader: ``read_boom`` at several split sizes, ``scan_boom_range``,
+``scan_boom_bytes``, ``read_avro`` and ``avro_block_scan``."""
 
 from __future__ import annotations
 
+import json
 import os
 import re
 import tempfile
@@ -16,15 +20,23 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from bb_bigdata_log_tools_spark.sources.avro_generic import merge_avro_files, write_avro_local
+from bb_bigdata_log_tools_spark import tree
+from bb_bigdata_log_tools_spark.sources.avro_generic import (
+    avro_block_scan,
+    merge_avro_files,
+    read_avro,
+    write_avro_local,
+)
 from bb_bigdata_log_tools_spark.sources.boom import (
     BOOM_SCHEMA_JSON,
+    compact_boom_dir,
     read_boom,
     read_boom_local,
     read_header,
     scan_boom_bytes,
     scan_boom_range,
     write_boom_local,
+    write_boom_tree,
     write_reboom_stream,
 )
 from jvm_avro import jvm_read, jvm_write
@@ -260,3 +272,108 @@ def test_program_written_avro_jvm_reads_back_exactly(spark, files, records_per_b
         merged = os.path.join(d, "merged.avro")
         assert merge_avro_files(spark, paths, merged) == sum(map(len, files))
         assert jvm_read(spark, merged) == [row for rows in files for row in rows]
+
+
+@settings(max_examples=8, deadline=None)
+@given(LOG_BLOCKS, st.sampled_from(["null", "deflate"]), st.sampled_from([64, 2048]))
+def test_jvm_written_corpus_reads_through_read_boom(spark, blocks, codec, sync_interval):
+    """A random logBlock corpus written by the JVM reads through
+    ``read_boom`` as exactly its lines, whether the file is cut into
+    64-byte ranges (most of them inside a block) or read as one range."""
+    key = "spark.sql.files.maxPartitionBytes"
+    saved = spark.conf.get(key)
+    with tempfile.TemporaryDirectory() as d:
+        path = os.path.join(d, "jvm.bm")
+        jvm_write(spark, path, BOOM_SCHEMA_JSON, blocks, codec=codec, sync_interval=sync_interval)
+        try:
+            for split in ("64", saved):
+                spark.conf.set(key, split)
+                assert sorted(map(tuple, read_boom(spark, path).collect())) == sorted(_flat(blocks))
+        finally:
+            spark.conf.set(key, saved)
+
+
+HOUR_MS = 3600 * 1000
+#: Lines within two hours of a midnight, some without an event id.
+TREE_LINES = st.lists(
+    st.tuples(st.integers(SECOND0 * 1000 - 2 * HOUR_MS, SECOND0 * 1000 + 2 * HOUR_MS), TEXT,
+              st.none() | st.integers(-(2**31), 2**31 - 1)),
+    max_size=40,
+)
+
+
+@settings(max_examples=6, deadline=None)
+@given(TREE_LINES, st.integers(0, 2**62))
+def test_boom_tree_hourly_files_jvm_read_back_exactly(spark, lines, create_time):
+    """``write_boom_tree`` over lines around a midnight: each hourly file,
+    found through ``tree.hours``, reads back through the JVM as exactly
+    that hour's lines (sorted, a missing event id as 0), one logBlock a
+    second numbered from 0 with the given create time."""
+    want: dict = {}
+    for ts, msg, eid in sorted((ts, msg, eid or 0) for ts, msg, eid in lines):
+        stamp = tree.hour_stamp(ts)
+        want.setdefault((stamp[:8], stamp[8:]), []).append((ts, msg, eid))
+    df = spark.createDataFrame(lines, "ts long, message string, event_id int")
+    with tempfile.TemporaryDirectory() as d:
+        assert write_boom_tree(df, d, "dc1", "svc1", "logs", "comp1",
+                               create_time=create_time) == len(lines)
+        got = {}
+        for path, _dc, _svc, _type, date, hour, _comp, _state in tree.hours(d):
+            (name,) = os.listdir(path)
+            records = jvm_read(spark, os.path.join(path, name))
+            assert [r["blockNumber"] for r in records] == list(range(len(records)))
+            assert {r["createTime"] for r in records} == {create_time}
+            got[(date, hour)] = [(r["second"] * 1000 + ln["ms"], ln["message"], ln["eventId"])
+                                 for r in records for ln in r["logLines"]]
+    assert got == want
+
+
+@settings(max_examples=6, deadline=None)
+@given(st.lists(st.lists(st.tuples(st.integers(SECOND0 * 1000, SECOND0 * 1000 + 5000), TEXT,
+                                   st.integers(-(2**31), 2**31 - 1)), min_size=1, max_size=15),
+                min_size=1, max_size=3))
+def test_compacted_file_jvm_reads_back_exactly(spark, parts):
+    """``compact_boom_dir`` merges 1-3 part files into the one file the
+    JVM reads back as every input line, ordered by (ts, message), one
+    logBlock a second numbered from 0."""
+    lines = [ln for part in parts for ln in part]
+    with tempfile.TemporaryDirectory() as d:
+        os.makedirs(os.path.join(d, "incoming"))
+        for i, part in enumerate(parts):
+            write_boom_local(os.path.join(d, "incoming", f"part-{i}.bm"), part)
+        out = os.path.join(d, "merged.bm")
+        assert compact_boom_dir(spark, os.path.join(d, "incoming"), out) == len(lines)
+        records = jvm_read(spark, out)
+    got = [(r["second"] * 1000 + ln["ms"], ln["message"], ln["eventId"])
+           for r in records for ln in r["logLines"]]
+    assert sorted(got) == sorted(lines)
+    assert [g[:2] for g in got] == sorted(ln[:2] for ln in lines)
+    assert [r["blockNumber"] for r in records] == list(range(len(records)))
+    assert [r["second"] for r in records] == sorted({ts // 1000 for ts, *_ in lines})
+
+
+def _avro_json(row: dict) -> dict:
+    """``row`` in Avro's JSON encoding, which names a union's branch."""
+    return {**row, "note": None if row["note"] is None else {"string": row["note"]}}
+
+
+@settings(max_examples=6, deadline=None)
+@given(st.lists(st.lists(GENERIC_ROW, max_size=12), min_size=1, max_size=3),
+       st.sampled_from(["null", "deflate"]))
+def test_jvm_written_avro_reads_through_read_avro(spark, files, codec):
+    """1-3 files of random generic records written by the JVM (sync
+    interval 64, so many blocks) read through ``read_avro`` as exactly
+    their records, and ``avro_block_scan``'s record counts sum to the
+    number of records."""
+    rows = [row for recs in files for row in recs]
+    with tempfile.TemporaryDirectory() as d:
+        for i, recs in enumerate(files):
+            jvm_write(spark, os.path.join(d, f"part-{i}.avro"), GENERIC_SCHEMA_JSON,
+                      [_avro_json(r) for r in recs], codec=codec, sync_interval=64)
+        got = [r.asDict() for r in read_avro(spark, d).collect()]
+        counts = [r["record_count"] for r in avro_block_scan(spark, d).collect()]
+    def canonical(row: dict) -> str:
+        return json.dumps(row, sort_keys=True)
+
+    assert sorted(map(canonical, got)) == sorted(map(canonical, rows))
+    assert sum(counts) == len(rows)

@@ -37,21 +37,29 @@ def test_bin_tools_run_from_any_directory(tmp_path):
     assert all(os.readlink(os.path.join(BIN, t)) == "logdriver" for t in TOOLS)
 
 
-@pytest.mark.parametrize("case", ["bad_logsearch", "logcat_no_dirs", "readboom", "queryindex"])
+@pytest.mark.parametrize("case", ["bad_logsearch", "logcat_no_dirs", "readboom", "queryindex",
+                                  "maintenance_bad_days", "maintenance_bad_wait",
+                                  "hfind_bad_size"])
 def test_tool_imports_no_pyspark(tmp_path, case):
     """``python -X importtime`` lists every module a call imports: a
     ``logsearch`` missing its arguments, a ``logcat`` whose window
-    matches no directory, ``readboom`` of a file and ``queryindex``
-    import no ``pyspark`` module."""
+    matches no directory, ``readboom`` of a file, ``queryindex``, and an
+    admin tool given a number that is not one import no ``pyspark``
+    module; the bad number exits 1 with one error line naming it."""
     none = str(tmp_path / "none")
     bm = str(tmp_path / "f.bm")
     write_boom_local(bm, [(1500, "hello", 7), (2500, "world", 8)])
-    args, code, out_lines = {
-        "bad_logsearch": (["logsearch", "-dc=x"], 1, 0),
+    maintenance = ["logmaintenance", "dc", "svc", f"--root={none}"]
+    args, code, out_lines, error = {
+        "bad_logsearch": (["logsearch", "-dc=x"], 1, 0, None),
         "logcat_no_dirs": (["logcat", "-dc=x", "-svc=y", "-comp=z", "-start=0",
-                            "-end=100", f"-root={none}"], 0, 0),
-        "readboom": (["readboom", bm], 0, 2),
-        "queryindex": (["queryindex", f"-r={none}"], 0, 2),
+                            "-end=100", f"-root={none}"], 0, 0, None),
+        "readboom": (["readboom", bm], 0, 2, None),
+        "queryindex": (["queryindex", f"-r={none}"], 0, 2, None),
+        "maintenance_bad_days": ([*maintenance, "--days-before-archive=x"], 1, 0,
+                                 "days-before-archive"),
+        "maintenance_bad_wait": ([*maintenance, "--wait-min=ten"], 1, 0, "wait-min"),
+        "hfind_bad_size": (["hfind", none, "-size=abc"], 1, 0, "size"),
     }[case]
     res = subprocess.run(
         [sys.executable, "-X", "importtime", "-m", "bb_bigdata_log_tools_spark", *args],
@@ -64,3 +72,8 @@ def test_tool_imports_no_pyspark(tmp_path, case):
                 if line.startswith("import time:")]
     assert "bb_bigdata_log_tools_spark.cli" in imported
     assert [m for m in imported if m.split(".")[0] == "pyspark"] == []
+    if error:
+        errors = [line for line in res.stderr.splitlines()
+                  if not line.startswith("import time:")]
+        assert len(errors) == 1, errors
+        assert errors[0].startswith(";******************** ERROR: ") and error in errors[0]

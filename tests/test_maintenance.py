@@ -225,6 +225,26 @@ def test_ready_marker_propagation(spark, tmp_path):
     assert any(p.endswith("02") for p in report.ready_marked)
 
 
+def test_sweep_leaves_non_hour_directories_alone(spark, tmp_path):
+    """Only valid ``<yyyyMMdd>/<HH>`` directories are hours: past the
+    delete cutoff, ``20230101/03`` is deleted, while ``20230230/03`` (no
+    such day) and ``20230101/24`` (no such hour) are left as they are."""
+    root = str(tmp_path / "service")
+    dc, svc, logdir = "dc1", "svc1", "logs"
+    ancient = _mk_hour(root, dc, svc, logdir, "20230101", "03", "app01", "data", _lines_at(0))
+    strays = [
+        _mk_hour(root, dc, svc, logdir, date, hour, "app01", state, _lines_at(0))
+        for date, hour in (("20230230", "03"), ("20230101", "24"))
+        for state in ("data", "incoming")
+    ]
+    _age_tree(root)
+    report = log_maintenance(spark, root, dc, svc, logdir=logdir, days_before_archive=5,
+                             days_before_delete=20, filters_conf=FILTERS_YAML, now_ms=NOW_MS)
+    assert report.deleted == [ancient]
+    assert report.merged == [] and report.archived == [] and report.kept == []
+    assert all(os.path.isdir(d) and os.listdir(d) for d in strays)
+
+
 BIN = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "bin")
 
 
@@ -352,6 +372,108 @@ def test_indexlogs_and_queryindex_cli(tmp_path):
         check=True,
     )
     assert "Matched components: 2" in q_all.stdout
+
+
+#: (state directory, file name, size): two dcs, all three states, hours on
+#: two days; ``_READY`` counts toward no size.
+INDEX_TREE = [
+    ("dc1/svcA/logs/20240110/01/c1/data", "part-0.bm", 100),
+    ("dc1/svcA/logs/20240110/01/c1/incoming", "part-1", 50),
+    ("dc1/svcA/logs/20240111/23/c1/archive", "part-2.bm", 70),
+    ("dc1/svcA/logs/20240111/23/c1/archive", "_READY", 0),
+    ("dc1/svcA/logs/20240111/23/c2/data", "x.bm", 30),
+    ("dc1/svcA/app/20240111/00/c1/data", "y.bm", 10),
+    ("dc2/svcB/logs/20240111/05/c9/incoming", "a", 20),
+    ("dc2/svcB/logs/20240111/05/c9/incoming", "b", 5),
+    ("dc2/svcB/logs/20240110/12/c9/archive", "z.bm", 40),
+]
+
+INDEX_OUTPUT = {
+    ("indexlogs", "--format=csv"): """\
+DC,Service,Type,Component,Start Date,End Date,Archive Date,Total Size,Data Size,Archive Size,Incoming Size
+dc1,svcA,app,c1,2024-01-11,2024-01-11,1970-01-01,10,10,0,0
+dc1,svcA,logs,c1,2024-01-10,2024-01-11,2024-01-11,220,100,70,50
+dc1,svcA,logs,c2,2024-01-11,2024-01-11,1970-01-01,30,30,0,0
+dc2,svcB,logs,c9,2024-01-10,2024-01-11,2024-01-10,65,0,40,25
+""",
+    ("indexlogs", "--format=human"): """\
+dc1/svcA/app/c1: 2024-01-11..2024-01-11 total=10B data=10B incoming=0B archive=0B
+dc1/svcA/logs/c1: 2024-01-10..2024-01-11 total=220B data=100B incoming=50B archive=70B
+dc1/svcA/logs/c2: 2024-01-11..2024-01-11 total=30B data=30B incoming=0B archive=0B
+dc2/svcB/logs/c9: 2024-01-10..2024-01-11 total=65B data=0B incoming=25B archive=40B
+""",
+    ("indexlogs",): (
+        '{"dc1": {"svcA": {"app": {"c1": {"archiveDate": 0, "archiveSize": 0.0, '
+        '"dataSize": 10.0, "endDate": 1704931200000, "incomingSize": 0.0, '
+        '"startDate": 1704931200000, "totalSize": 10.0}}, "logs": {"c1": '
+        '{"archiveDate": 1704931200000, "archiveSize": 70.0, "dataSize": 100.0, '
+        '"endDate": 1704931200000, "incomingSize": 50.0, "startDate": 1704844800000, '
+        '"totalSize": 220.0}, "c2": {"archiveDate": 0, "archiveSize": 0.0, '
+        '"dataSize": 30.0, "endDate": 1704931200000, "incomingSize": 0.0, '
+        '"startDate": 1704931200000, "totalSize": 30.0}}}}, "dc2": {"svcB": '
+        '{"logs": {"c9": {"archiveDate": 1704844800000, "archiveSize": 40.0, '
+        '"dataSize": 0.0, "endDate": 1704931200000, "incomingSize": 25.0, '
+        '"startDate": 1704844800000, "totalSize": 65.0}}}}}\n'
+    ),
+    ("queryindex", "--p", "--d", "--s", "--l"): """\
+Matched components: 4
+Total size: 325B
+Date range: 2024-01-10..2024-01-11
+dc1/svcA/app/c1 2024-01-11..2024-01-11 10B
+dc1/svcA/logs/c1 2024-01-10..2024-01-11 220B
+dc1/svcA/logs/c2 2024-01-11..2024-01-11 30B
+dc2/svcB/logs/c9 2024-01-10..2024-01-11 65B
+""",
+    ("queryindex", "--p", "--d", "--s"): """\
+Matched components: 4
+Total size: 325B
+Date range: 2024-01-10..2024-01-11
+dc1/svcA/app/c1
+  2024-01-11..2024-01-11
+  10B
+dc1/svcA/logs/c1
+  2024-01-10..2024-01-11
+  220B
+dc1/svcA/logs/c2
+  2024-01-11..2024-01-11
+  30B
+dc2/svcB/logs/c9
+  2024-01-10..2024-01-11
+  65B
+""",
+    ("queryindex", "-t=1704844800000", "1704855600000", "--p", "--d", "--s", "--l"): """\
+Matched components: 2
+Total size: 285B
+Date range: 2024-01-10..2024-01-11
+dc1/svcA/logs/c1 2024-01-10..2024-01-11 220B
+dc2/svcB/logs/c9 2024-01-10..2024-01-11 65B
+""",
+    ("queryindex", "-t=1704844800", "1704855600", "--p", "--s", "dc.*", "svc.*"): """\
+Matched components: 2
+Total size: 285B
+Date range: 2024-01-10..2024-01-11
+dc1/svcA/logs/c1
+  220B
+dc2/svcB/logs/c9
+  65B
+""",
+}
+
+
+def test_index_tools_output_is_pinned(tmp_path):
+    """``indexlogs`` (json, csv, human) and ``queryindex`` (``-p -d -s
+    -l`` and a ``-t`` window, flags in the ``--x`` form) print exactly
+    this text over a small tree."""
+    root = str(tmp_path / "service")
+    for d, name, size in INDEX_TREE:
+        os.makedirs(os.path.join(root, d), exist_ok=True)
+        with open(os.path.join(root, d, name), "wb") as f:
+            f.write(b"x" * size)
+    for (tool, *args), want in INDEX_OUTPUT.items():
+        res = subprocess.run([os.path.join(BIN, tool), f"-r={root}", *args],
+                             capture_output=True, text=True, timeout=60)
+        assert res.returncode == 0, res.stderr
+        assert res.stdout == want, (tool, args)
 
 
 def test_logmaintenance_cli_end_to_end(tmp_path):
