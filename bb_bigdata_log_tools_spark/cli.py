@@ -99,19 +99,29 @@ def resolve_paths(
 
 
 def parse_args(argv: list[str]) -> dict:
+    """``-k=v``/``--k=v`` options (a ``-k=`` value loses its quotes),
+    ``-f``/``--f`` flags, and positionals, a lone ``-`` included."""
     opts: dict = {"flags": set()}
     for arg in argv:
-        if arg.startswith("--") and "=" in arg:
-            k, v = arg[2:].split("=", 1)
-            opts[k] = v
-        elif arg.startswith("--"):
-            opts["flags"].add(arg[2:])
-        elif arg.startswith("-") and "=" in arg:
-            k, v = arg[1:].split("=", 1)
-            opts[k] = v.strip("'\"")
-        else:
+        if not arg.startswith("-") or arg == "-":
             opts.setdefault("positional", []).append(arg)
+        elif "=" in arg:
+            k, v = arg.split("=", 1)
+            opts[k.lstrip("-")] = v if arg.startswith("--") else v.strip("'\"")
+        else:
+            opts["flags"].add(arg[2:] if arg.startswith("--") else arg[1:])
     return opts
+
+
+def check_regex(spark: SparkSession, regex: str) -> None:
+    """End the run with one error line unless ``regex`` compiles in
+    ``java.util.regex``, ``rlike``'s dialect: before any job runs."""
+    from pyspark.errors import IllegalArgumentException
+
+    try:
+        spark._jvm.java.util.regex.Pattern.compile(regex)
+    except IllegalArgumentException as exc:  # PatternSyntaxException
+        fail(f"invalid regex: {regex} ({str(exc).splitlines()[0]})")
 
 
 def _require(opts: dict, tool: str, keys: list[str]) -> list[str]:
@@ -273,14 +283,9 @@ def logsearch(argv: list[str]) -> None:
 def loggrep(argv: list[str]) -> None:
     opts = parse_args(argv)
     df, start_ms, end_ms, (regex,) = _load(opts, "loggrep", ["regex"])
-    from pyspark.errors import IllegalArgumentException
-
     from bb_bigdata_log_tools_spark.operators import logops
 
-    try:  # java.util.regex is rlike's dialect: fail before any job runs
-        df.sparkSession._jvm.java.util.regex.Pattern.compile(regex)
-    except IllegalArgumentException as exc:  # PatternSyntaxException
-        fail(f"invalid regex: {regex} ({str(exc).splitlines()[0]})")
+    check_regex(df.sparkSession, regex)
     _emit(
         logops.grep(df, regex, start_ms, end_ms, "i" in opts["flags"]),
         opts,

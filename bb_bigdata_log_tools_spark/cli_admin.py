@@ -29,7 +29,13 @@ import sys
 from datetime import datetime, timezone
 
 from bb_bigdata_log_tools_spark import tree
-from bb_bigdata_log_tools_spark.cli import closed_pipe, fail, parse_args, parse_time
+from bb_bigdata_log_tools_spark.cli import (
+    check_regex,
+    closed_pipe,
+    fail,
+    parse_args,
+    parse_time,
+)
 
 
 def _spark():
@@ -175,10 +181,10 @@ def queryindex(argv: list[str]) -> None:
     opts = parse_args(argv)
     flags = opts["flags"]
     pos = opts.get("positional", [])
+    if "t" in flags and pos:  # -t START END (bin/queryindex), as -t=START END
+        opts["t"] = pos.pop(0)
     t0 = t1 = None
     if "t" in opts:
-        # parse_args puts '-t=START' form in opts; bin/queryindex passes
-        # two positionals after -t — accept both
         t0, t1 = parse_time(opts["t"]), (parse_time(pos.pop(0)) if pos else None)
     if "f" in opts:
         with open(opts["f"], encoding="utf-8") as f:
@@ -268,6 +274,8 @@ def hfind_cli(argv: list[str]) -> None:
     from bb_bigdata_log_tools_spark.sources.hfind import hfind
 
     spark = _spark()
+    if "regex" in opts:
+        check_regex(spark, opts["regex"])
     for path in paths:
         df = hfind(spark, path, **kwargs)
         if "regex" in opts:
@@ -314,7 +322,17 @@ def logmaintenance(argv: list[str]) -> None:
     from bb_bigdata_log_tools_spark.maintenance import (
         MaintenanceLockHeld,
         log_maintenance,
+        parse_filters,
     )
+
+    filters = None
+    if "filters" in opts:  # read once, before the session starts
+        try:
+            with open(opts["filters"], encoding="utf-8") as f:
+                filters = parse_filters(f.read())
+        except (OSError, ValueError) as exc:
+            reason = getattr(exc, "strerror", None) or exc
+            fail(f"cannot use --filters={opts['filters']}: {reason}")
 
     try:
         report = log_maintenance(
@@ -327,7 +345,7 @@ def logmaintenance(argv: list[str]) -> None:
             hour=hour,
             days_before_archive=n.get("days-before-archive"),
             days_before_delete=n.get("days-before-delete"),
-            filters_conf=opts.get("filters"),
+            filters_conf=filters,
             now_ms=n.get("now-ms"),
             wait_time_ms=n.get("wait-min", 10) * 60 * 1000,
             do_merge="no-merge" not in opts["flags"],

@@ -24,7 +24,12 @@ Spark-first shape: the tree walk and renames are driver/metastore work
 the filter predicate and the merge sort — is a DataFrame plan. The
 filter predicate is built from ``pyspark.sql.functions`` (rlike /
 contains / lit), so it is pushed into the scan of whatever source the
-lines come from; no Python runs per line. Oozie submission is out of
+lines come from; no Python runs per line. Both rewrites of an hour
+(merge and filter-archive) write one file through ``boom.write_sorted``
+and publish it through ``boom.published`` only after a full re-decode
+counts the lines written (the ``fs/FileManager.java`` checksum-verified
+move); the source state directory goes only then. An hour with nothing
+to write publishes a header-only file. Oozie submission is out of
 scope (SURVEY §2). The reference's ZooKeeper maintenance locking
 (``logdriver/locks/LockUtil.java``, ``admin/LockedFs.java``) — which
 exists precisely so two cron-launched sweeps never compact the same
@@ -43,17 +48,16 @@ from __future__ import annotations
 import os
 import re
 import shutil
+from collections.abc import Callable
 from dataclasses import dataclass, field
+from typing import TYPE_CHECKING
 
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-from bb_bigdata_log_tools_spark.schema import LOG_COLUMNS
+from bb_bigdata_log_tools_spark.sources import boom
 from bb_bigdata_log_tools_spark.tree import STATES, hour_stamp, hour_start_ms
 
-# Files eligible for merging, per the reference's VALID_FILE pattern
-# (numeric-suffixed uploads or .bm files).
-VALID_FILE = re.compile(r".*([0-9]|\.bm)$")
+if TYPE_CHECKING:
+    from pyspark.sql import Column, SparkSession
+
 READY_MARKER = "_READY"
 LEASE_MARKER = "_MAINTENANCE_LEASE"
 
@@ -206,9 +210,27 @@ class MaintenanceLease:
 # ---------------------------------------------------------------------------
 
 
+def parse_filters(conf) -> dict:
+    """The mapping of a filter definition: a dict, YAML text, or the path
+    of a YAML file. Raises ``ValueError`` when it is not a mapping."""
+    if isinstance(conf, str):
+        import yaml  # noqa: PLC0415
+
+        if os.path.exists(conf):
+            with open(conf, encoding="utf-8") as f:
+                conf = f.read()
+        try:
+            conf = yaml.safe_load(conf)
+        except yaml.YAMLError as e:
+            raise ValueError(f"not YAML: {' '.join(str(e).split())}") from e
+    if not isinstance(conf, dict):
+        raise ValueError(f"not a mapping of filters: {conf!r:.60}")
+    return conf
+
+
 def load_filters(component: str, conf) -> list[dict] | None:
     """Select the filter rule list for ``component`` from a filter
-    definition (dict, YAML text, or path to a YAML file).
+    definition (:func:`parse_filters`).
 
     Structure (BoomFilterMapper.loadFilters): ``{"filters": [{<component
     regex>: [{"type": regex|stringmatch|keepall|dropall, "pattern": ...},
@@ -216,18 +238,8 @@ def load_filters(component: str, conf) -> list[dict] | None:
     component name wins. Returns None when no set matches (the reference
     then skips processing).
     """
-    if isinstance(conf, str):
-        if os.path.exists(conf):
-            with open(conf, encoding="utf-8") as f:
-                conf = f.read()
-        try:
-            import yaml  # noqa: PLC0415
-
-            conf = yaml.safe_load(conf)
-        except ImportError as e:  # pragma: no cover - yaml is in this env
-            raise RuntimeError("filter definitions need pyyaml or a dict") from e
     rules: list[dict] = []
-    for conf_set in conf.get("filters", []):
+    for conf_set in parse_filters(conf).get("filters", []):
         for key, items in conf_set.items():
             if re.fullmatch(key, component):
                 for item in items or []:
@@ -246,6 +258,8 @@ def filters_to_predicate(rules: list[dict]) -> Column:
     BoomFilterMapper keeps a line as soon as any filter accepts it.
     Pure column expressions: regex → ``rlike`` (Java regex semantics on
     both engines), stringmatch → ``contains``."""
+    from pyspark.sql import functions as F
+
     pred: Column | None = None
     for rule in rules:
         if rule["type"] == "keepall":
@@ -269,59 +283,49 @@ def _only(rules: list[dict], ftype: str) -> bool:
 # ---------------------------------------------------------------------------
 
 
-def _publish_verified(job: str, tmp: str, final: str, n: int, source: str) -> None:
-    """Rename the written container ``tmp`` to ``final`` and remove the
-    ``source`` directory, only once ``tmp`` re-decodes to the ``n`` lines
-    written (a streaming full decode through an mmap, the
-    ``fs/FileManager.java`` checksum-verified-move analog). An
-    unreadable or short ``tmp`` is deleted and the job fails, keeping
-    ``source``."""
-    from bb_bigdata_log_tools_spark.sources.boom import scan_boom_range
-
-    kept = f"{os.path.basename(source)} retained"
-    try:
-        got = sum(1 for _ in scan_boom_range(tmp))
-    except Exception as e:
-        os.unlink(tmp)
-        raise RuntimeError(
-            f"{job} verification failed: {tmp} is unreadable ({e}); {kept}"
-        ) from e
-    if got != n:
-        os.unlink(tmp)
-        raise RuntimeError(
-            f"{job} verification failed: wrote {n} lines, re-read {got}; {kept}"
-        )
-    os.rename(tmp, final)
-    shutil.rmtree(source)
+def _rewrite(
+    job: str, hour_comp_dir: str, source: str, target: str, name: str,
+    write: Callable[[str, str], int],
+) -> int:
+    """Rewrite the ``source`` state directory of an hour as the one file
+    ``<target>/<name>``: ``write(source_dir, tmp)`` writes it and returns
+    its line count, and the file is published (:func:`boom.published`)
+    only once ``tmp`` re-decodes in full to that count — a streaming
+    decode through an mmap, the ``fs/FileManager.java``
+    checksum-verified-move analog. Only then is ``source`` removed. An
+    unreadable or short file raises, leaving no file and ``source`` as it
+    was. A reader of the hour sees the old state or the new, never a
+    half-written file. Returns the line count."""
+    src = os.path.join(hour_comp_dir, source)
+    out_dir = os.path.join(hour_comp_dir, target)
+    os.makedirs(out_dir, exist_ok=True)
+    kept = f"{source} retained"
+    with boom.published(os.path.join(out_dir, name)) as tmp:
+        n = write(src, tmp)
+        try:
+            got = sum(1 for _ in boom.scan_boom_range(tmp))
+        except Exception as e:
+            raise RuntimeError(
+                f"{job} verification failed: {tmp} is unreadable ({e}); {kept}"
+            ) from e
+        if got != n:
+            raise RuntimeError(
+                f"{job} verification failed: wrote {n} lines, re-read {got}; {kept}"
+            )
+    shutil.rmtree(src)
+    return n
 
 
 def merge_incoming_dir(spark: SparkSession, hour_comp_dir: str) -> int:
     """The merge job: compact a settled ``incoming`` directory's part
-    files into one .bm in ``data``, then remove ``incoming``.
-
-    Distributed via :func:`compact_boom_dir` (executor-side sorted
-    streaming write). Returns the number of lines merged.
-
-    Safety (``fs/FileManager.java`` checksum-verified-move analog +
-    reader fencing): the merged container is written to a ``.bm.tmp``
-    name — invisible to every reader (the boom source and CLI glob
-    ``*.bm``) — fully re-decoded and line-counted against the writer's
-    count, and only then atomically renamed into place and the source
-    ``incoming`` removed. A reader catting the hour mid-merge therefore
-    sees either the pre-merge state or the complete merged file, never
-    a half-written one; a truncated/corrupt merge raises and leaves
-    ``incoming`` intact.
+    files into one .bm in ``data`` (:func:`compact_boom_dir`), then
+    remove ``incoming`` (:func:`_rewrite`). Returns the number of lines
+    merged.
     """
-    from bb_bigdata_log_tools_spark.sources.boom import compact_boom_dir
-
-    incoming = os.path.join(hour_comp_dir, "incoming")
-    data = os.path.join(hour_comp_dir, "data")
-    os.makedirs(data, exist_ok=True)
-    final = os.path.join(data, "part-merged.00000.bm")
-    tmp = final + ".tmp"
-    n = compact_boom_dir(spark, incoming, tmp)
-    _publish_verified("merge", tmp, final, n, incoming)
-    return n
+    return _rewrite(
+        "merge", hour_comp_dir, "incoming", "data", "part-merged.00000.bm",
+        lambda incoming, tmp: boom.compact_boom_dir(spark, incoming, tmp),
+    )
 
 
 def filter_archive_dir(
@@ -329,43 +333,22 @@ def filter_archive_dir(
 ) -> int:
     """The filter/archive job: read ``data``, keep lines any rule
     accepts, ReBoom-write them (original createTime/blockNumber
-    preserved) into ``archive``, then delete ``data``.
+    preserved) into ``archive``, then delete ``data`` (:func:`_rewrite`).
 
-    The sort is ``repartition(1).sortWithinPartitions(create_time,
-    block_no, ts, line_no)`` — original file order — and the single
-    archive file is written executor-side by the streaming ReBoom
-    writer. Returns the number of lines archived.
-
-    Same verified tmp-write-then-rename protocol as
-    :func:`merge_incoming_dir`: ``data`` is deleted only after the
-    archive container re-decodes to the written line count.
+    The lines are written in original file order, (create_time,
+    block_no, ts, line_no), by :func:`write_sorted` through the
+    streaming ReBoom writer. Returns the number of lines archived.
     """
-    from bb_bigdata_log_tools_spark.sources.boom import read_boom, write_reboom_stream
+    reboom = boom.write_reboom_stream  # looked up on the driver, not in the task
 
-    data = os.path.join(hour_comp_dir, "data")
-    archive = os.path.join(hour_comp_dir, "archive")
-    os.makedirs(archive, exist_ok=True)
-    final = os.path.join(archive, "part-filtered.00000.bm")
-    tmp = final + ".tmp"
-
-    kept = (
-        read_boom(spark, data)
-        .filter(filters_to_predicate(rules))
-        .select(*LOG_COLUMNS)
-        .repartition(1)
-        .sortWithinPartitions("create_time", "block_no", "ts", "line_no")
-    )
-
-    def write_part(rows):
-        tuples = (
-            (r["ts"], r["message"], r["event_id"], r["create_time"], r["block_no"])
-            for r in rows
+    def write(data: str, tmp: str) -> int:
+        kept = boom.read_boom(spark, data).filter(filters_to_predicate(rules))
+        return boom.write_sorted(
+            kept, ["create_time", "block_no", "ts", "line_no"], tmp,
+            lambda path, rows: reboom(path, (r[:5] for r in rows)),  # all but line_no
         )
-        yield write_reboom_stream(tmp, tuples)
 
-    n = sum(kept.rdd.mapPartitions(write_part).collect())
-    _publish_verified("archive", tmp, final, n, data)
-    return n
+    return _rewrite("archive", hour_comp_dir, "data", "archive", "part-filtered.00000.bm", write)
 
 
 # ---------------------------------------------------------------------------
@@ -425,8 +408,9 @@ def log_maintenance(
       being written);
     - ``incoming``/``data``/``archive`` whose ``yyyyMMddHH`` stamp sorts
       before the delete cutoff are deleted recursively;
-    - settled ``incoming`` dirs containing valid part files are merged
-      into ``data`` (one compacted .bm);
+    - settled ``incoming`` dirs holding ``.bm`` part files that the merge
+      reads (``boom.container_ranges``) are merged into ``data`` (one
+      compacted .bm, header-only when they hold no line);
     - ``data`` dirs older than the archive cutoff are filter-archived
       per the component's rules: keepall-only → files MOVED to
       ``archive``; dropall-only → data deleted; otherwise the filter
@@ -453,6 +437,8 @@ def log_maintenance(
     base = os.path.join(root, dc, service, logdir)
     if not os.path.isdir(base):
         return MaintenanceReport()
+    if filters_conf is not None:
+        filters_conf = parse_filters(filters_conf)
     with MaintenanceLease(base):
         return _sweep(
             spark, base, date, hour, now, cutoff(days_before_delete),
@@ -526,11 +512,7 @@ def _sweep(
                     shutil.rmtree(p)
                     report.deleted.append(p)
                     continue
-                if (
-                    state == "incoming"
-                    and do_merge
-                    and any(VALID_FILE.fullmatch(c) for c in children)
-                ):
+                if state == "incoming" and do_merge and boom.container_ranges(p):
                     report.lines_merged += merge_incoming_dir(
                         spark, os.path.dirname(p)
                     )

@@ -21,11 +21,12 @@ Parity targets (re-derived from the PUBLIC Avro 1.x container spec):
 Spark integration is the boom source's one distributed read
 (``boom.fan_out``): block scan and merge read whole files, as they
 number blocks per file, and the decode splits a large file like a
-``.bm``. The merge writes through one ordered partition with a
-streaming writer (bounded memory), the same shape as
-``compact_boom_dir``. Schema translation maps the embedded writer schema
-to Spark types so arbitrary-schema containers (not just boom's logBlock)
-decode to typed DataFrames.
+``.bm``. The merge writes through the one ordered one-file write
+(``boom.write_sorted``) with a streaming writer (bounded memory), as
+``compact_boom_dir`` and the maintenance filter-archive do. Schema
+translation maps the embedded writer schema to Spark types so
+arbitrary-schema containers (not just boom's logBlock) decode to typed
+DataFrames.
 """
 
 from __future__ import annotations
@@ -190,10 +191,10 @@ def merge_avro_files(spark: SparkSession, paths: list[str], out_path: str) -> in
 
     Distributed shape: each input file's raw payloads are extracted on
     an executor (one whole-file range each, :func:`fan_out`) and flow,
-    ordered, through one partition into ``boom.write_container``, which
-    frames them with ``MERGE_SYNC``: driver memory stays O(1), executor
-    memory O(largest single block), as in ``compact_boom_dir``. Returns
-    the merged record count.
+    ordered, through ``boom.write_sorted`` into ``boom.write_container``,
+    which frames them with ``MERGE_SYNC``: driver memory stays O(1),
+    executor memory O(largest single block). Inputs with no block give
+    a header-only file. Returns the merged record count.
 
     Parity: ``mapreduce/avro/AvroBlockWriterMapper.java`` (keep one
     header, clean up sync markers) over BinaryOutputFormat.
@@ -225,19 +226,11 @@ def merge_avro_files(spark: SparkSession, paths: list[str], out_path: str) -> in
     schema = "file_order int, block_idx long, record_count long, payload binary"
     blocks = boom.fan_out(spark, ranges, extract, schema)
 
-    def write_part(rows) -> Iterator[tuple[int]]:
+    def write(path: str, rows) -> int:
         payloads = ((int(r.record_count), bytes(r.payload)) for r in rows)
-        yield (boom.write_container(out_path, schema_json, codec0, payloads, MERGE_SYNC),)
+        return boom.write_container(path, schema_json, codec0, payloads, MERGE_SYNC)
 
-    counts = (
-        blocks.repartition(1)
-        .sortWithinPartitions("file_order", "block_idx")
-        .rdd.mapPartitions(write_part)
-        .collect()
-    )
-    if not counts:  # no input block: the empty exchange runs no task
-        return boom.write_container(out_path, schema_json, codec0, [], MERGE_SYNC)
-    return counts[0][0]
+    return boom.write_sorted(blocks, ["file_order", "block_idx"], out_path, write)
 
 
 # ---------------------------------------------------------------------------

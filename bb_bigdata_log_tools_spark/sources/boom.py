@@ -36,6 +36,9 @@ task reads a bin of ranges through an mmap of its files. A ``.bm`` range
 decodes through the same ranged walk (the Avro
 ``DataFileReader.sync/pastSync`` contract), so hourly part files and a
 consolidated archive alike return exactly the whole-file rows.
+:func:`write_sorted` is its write-side counterpart, the one ordered
+one-file write (the compaction, the maintenance filter-archive and the
+Avro merge).
 
 Every ``.bm`` and ``.avro`` write goes through one container writer,
 :func:`write_container` (the reference's one ``DataFileWriter``), and
@@ -47,6 +50,7 @@ from __future__ import annotations
 
 import contextlib
 import fnmatch
+import functools
 import glob
 import heapq
 import itertools
@@ -505,8 +509,8 @@ def container_ranges(
     directories below a root, whose names start with ``_`` or ``.`` are
     skipped, as Spark's file sources skip them (``_temporary`` attempt
     output, hidden files); only matching names are read, so a
-    ``*.bm.tmp`` or a :func:`published` temp name stays invisible. A
-    path that matches nothing raises. An empty file still gets one range, so a strict read
+    :func:`published` temp name stays invisible. A path that matches
+    nothing raises. An empty file still gets one range, so a strict read
     of it fails like any headerless file."""
 
     def hidden(name: str) -> bool:
@@ -581,6 +585,25 @@ def fan_out(
     return spark.range(len(bins), numPartitions=len(bins)).mapInPandas(
         decode, schema=schema
     )
+
+
+def write_sorted(
+    df: DataFrame, keys: list[str], path: str, write: Callable[[str, Iterator], int]
+) -> int:
+    """The one ordered one-file write, the write-side counterpart of
+    :func:`fan_out`: one executor task streams every row of ``df``, in
+    ``keys`` order, through ``write(path, rows)`` and returns its count,
+    so memory is whatever ``write`` holds, never the whole file. Over no
+    rows the exchange runs no task, and ``write(path, iter(()))`` runs on
+    the driver instead, so ``path`` is always written. ``path`` must be
+    on a filesystem that executor and driver share."""
+    counts = (
+        df.repartition(1)
+        .sortWithinPartitions(*keys)
+        .rdd.mapPartitions(lambda rows: [write(path, rows)])
+        .collect()
+    )
+    return counts[0] if counts else write(path, iter(()))
 
 
 def read_boom(
@@ -849,27 +872,14 @@ def compact_boom_dir(
 
     The reference's LogMaintenance merges per-hour part files before
     archiving (``admin/LogMaintenance.java``). Fully distributed: the
-    read is the parallel boom source, the order comes from
-    ``repartition(1).sortWithinPartitions`` (no range-sampling re-read,
-    no driver collect), and the single output file is written by the
-    EXECUTOR holding that partition via the streaming writer — memory
-    stays bounded at one second of lines even for a multi-GB hour.
-    ``out_path`` must be on a filesystem that executor and driver share
-    (as for ``write_boom_tree``). Returns the line count.
+    read is the parallel boom source, and the one output file is written
+    by :func:`write_sorted` through the streaming writer, so memory stays
+    bounded at one second of lines even for a multi-GB hour. A directory
+    with no lines gives a header-only file. Returns the line count.
     """
-    sorted_one = (
-        read_boom(spark, in_dir)
-        .select("ts", "message", "event_id")
-        .repartition(1)
-        .sortWithinPartitions("ts", "message")
-    )
-
-    def write_part(rows) -> Iterator[int]:
-        tuples = ((r["ts"], r["message"], r["event_id"]) for r in rows)
-        yield write_boom_stream(out_path, tuples, create_time=create_time)
-
-    counts = sorted_one.rdd.mapPartitions(write_part).collect()
-    return sum(counts)
+    lines = read_boom(spark, in_dir).select("ts", "message", "event_id")
+    write = functools.partial(write_boom_stream, create_time=create_time)
+    return write_sorted(lines, ["ts", "message"], out_path, write)
 
 
 def write_boom_tree(

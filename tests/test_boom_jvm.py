@@ -5,9 +5,10 @@ reads back exactly through the JVM, so a bug shared by the program's
 writer and reader cannot pass. Every program writer frames its blocks
 through ``boom.write_container``; the write direction covers it through
 the ``.bm`` writers (the hourly tree and the compaction included),
-``write_avro_local`` and ``merge_avro_files``, and the read direction
-every reader: ``read_boom`` at several split sizes, ``scan_boom_range``,
-``scan_boom_bytes``, ``read_avro`` and ``avro_block_scan``."""
+``write_avro_local`` and ``merge_avro_files`` (over program- and
+JVM-written inputs), and the read direction every reader: ``read_boom``
+at several split sizes, ``scan_boom_range``, ``scan_boom_bytes``,
+``read_avro`` and ``avro_block_scan``."""
 
 from __future__ import annotations
 
@@ -377,3 +378,23 @@ def test_jvm_written_avro_reads_through_read_avro(spark, files, codec):
 
     assert sorted(map(canonical, got)) == sorted(map(canonical, rows))
     assert sum(counts) == len(rows)
+
+
+@settings(max_examples=8, deadline=None)
+@given(st.lists(st.lists(GENERIC_ROW, max_size=12), min_size=2, max_size=3),
+       st.integers(0, 2), st.sampled_from(["null", "deflate"]))
+def test_merged_jvm_written_avro_jvm_reads_back_exactly(spark, files, empty, codec):
+    """``merge_avro_files`` over 2-3 JVM-written files of random generic
+    records (one schema and codec, sync interval 64, so many blocks), one
+    of them with no block: the JVM reads the merged file back as exactly
+    the input records, in input order."""
+    files[empty % len(files)] = []
+    with tempfile.TemporaryDirectory() as d:
+        paths = []
+        for i, recs in enumerate(files):
+            paths.append(os.path.join(d, f"part-{i}.avro"))
+            jvm_write(spark, paths[-1], GENERIC_SCHEMA_JSON, [_avro_json(r) for r in recs],
+                      codec=codec, sync_interval=64)
+        merged = os.path.join(d, "merged.avro")
+        assert merge_avro_files(spark, paths, merged) == sum(map(len, files))
+        assert jvm_read(spark, merged) == [row for recs in files for row in recs]

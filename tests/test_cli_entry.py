@@ -39,16 +39,20 @@ def test_bin_tools_run_from_any_directory(tmp_path):
 
 @pytest.mark.parametrize("case", ["bad_logsearch", "logcat_no_dirs", "readboom", "queryindex",
                                   "maintenance_bad_days", "maintenance_bad_wait",
-                                  "hfind_bad_size"])
+                                  "hfind_bad_size", "maintenance_missing_filters",
+                                  "maintenance_filters_not_mapping"])
 def test_tool_imports_no_pyspark(tmp_path, case):
     """``python -X importtime`` lists every module a call imports: a
     ``logsearch`` missing its arguments, a ``logcat`` whose window
     matches no directory, ``readboom`` of a file, ``queryindex``, and an
     admin tool given a number that is not one import no ``pyspark``
-    module; the bad number exits 1 with one error line naming it."""
+    module; the bad number, and a ``--filters`` file that is missing or
+    holds no mapping, exit 1 with one error line naming the option."""
     none = str(tmp_path / "none")
     bm = str(tmp_path / "f.bm")
     write_boom_local(bm, [(1500, "hello", 7), (2500, "world", 8)])
+    listing = tmp_path / "list.yaml"
+    listing.write_text("- keepall\n- dropall\n")
     maintenance = ["logmaintenance", "dc", "svc", f"--root={none}"]
     args, code, out_lines, error = {
         "bad_logsearch": (["logsearch", "-dc=x"], 1, 0, None),
@@ -60,6 +64,10 @@ def test_tool_imports_no_pyspark(tmp_path, case):
                                  "days-before-archive"),
         "maintenance_bad_wait": ([*maintenance, "--wait-min=ten"], 1, 0, "wait-min"),
         "hfind_bad_size": (["hfind", none, "-size=abc"], 1, 0, "size"),
+        "maintenance_missing_filters": ([*maintenance, f"--filters={none}.yaml"], 1, 0,
+                                        "filters"),
+        "maintenance_filters_not_mapping": ([*maintenance, f"--filters={listing}"], 1, 0,
+                                            "filters"),
     }[case]
     res = subprocess.run(
         [sys.executable, "-X", "importtime", "-m", "bb_bigdata_log_tools_spark", *args],

@@ -186,6 +186,28 @@ def test_invalid_regex_one_error_line_no_java_trace(trees):
 
 
 @pytest.mark.slow
+def test_hfind_invalid_regex_one_error_line(tmp_path):
+    """``hfind -regex=`` checks its pattern like ``loggrep``: one error
+    line, exit 1, no Java trace."""
+    proc = _cli_proc("hfind", str(tmp_path), "-regex=(unclosed", stdout=subprocess.PIPE)
+    out, err = proc.communicate(timeout=300)
+    assert proc.returncode == 1, err[-2000:]
+    assert out == ""
+    errors = [line for line in err.splitlines() if "ERROR" in line]
+    assert len(errors) == 1, err[-2000:]
+    assert errors[0].startswith(";******************** ERROR: invalid regex: (unclosed")
+    for trace in ("Traceback", "PatternSyntaxException", "\tat "):
+        assert trace not in err, err[-2000:]
+
+
+def test_parse_args_single_dash_flags():
+    """A single-dash argument without ``=`` is a flag, as its ``--``
+    form; a lone ``-`` stays a positional."""
+    opts = cli.parse_args(["-p", "--d", "-", "-k='v'", "--x='y'", "pos"])
+    assert opts == {"flags": {"p", "d"}, "k": "v", "x": "'y'", "positional": ["-", "pos"]}
+
+
+@pytest.mark.slow
 def test_closed_pipe_exits_quietly(tmp_path):
     """`logcat ... | head -1`: once the reader closes the pipe the CLI
     stops delivering and exits 0 with no traceback. The output (~1 MB)

@@ -12,9 +12,12 @@ import json
 import os
 import subprocess
 import sys
+import tempfile
 import time
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from bb_bigdata_log_tools_spark.maintenance import (
     MaintenanceReport,
@@ -23,11 +26,12 @@ from bb_bigdata_log_tools_spark.maintenance import (
     log_maintenance,
 )
 from bb_bigdata_log_tools_spark.sources.boom import (
-
+    iter_blocks,
     read_boom_local,
     read_container,
     write_boom_local,
     write_reboom_stream,
+    write_sorted,
 )
 
 # heavy tier: excluded from the fast dev gate (pytest -m 'not slow');
@@ -245,6 +249,84 @@ def test_sweep_leaves_non_hour_directories_alone(spark, tmp_path):
     assert all(os.path.isdir(d) and os.listdir(d) for d in strays)
 
 
+def _header_only(path: str) -> bool:
+    """``path`` is a container with no block, which reads as no line."""
+    with open(path, "rb") as f:
+        data = f.read()
+    return list(iter_blocks(data)) == [] and read_boom_local(path) == []
+
+
+def test_sweep_completes_over_empty_and_quiet_hours(spark, tmp_path):
+    """One sweep over an ``incoming`` hour whose .bm holds no line, a
+    ``data`` hour past the archive cutoff where no line passes its rules,
+    and one where three do: all three complete. The first two publish
+    header-only files and their sources are gone. An ``incoming`` hour
+    with no ``.bm`` file, which the merge would not read, stays."""
+    root = str(tmp_path / "service")
+    dc, svc, logdir = "dc1", "svc1", "logs"
+    empty = _mk_hour(root, dc, svc, logdir, "20240131", "07", "app01", "incoming", [])
+    unread = _mk_hour(root, dc, svc, logdir, "20240131", "08", "app01", "incoming",
+                      _lines_at(1706688000000))
+    os.rename(os.path.join(unread, "part-0.00000.20240131-08.bm"),
+              os.path.join(unread, "upload.00001"))
+    quiet = _mk_hour(root, dc, svc, logdir, "20240120", "03", "app01", "data",
+                     [(1705719600000 + i * 400, f"ok line {i}", i) for i in range(6)])
+    loud = _mk_hour(root, dc, svc, logdir, "20240120", "04", "app01", "data",
+                    _lines_at(1705723200000))
+    _age_tree(root)
+    report = log_maintenance(spark, root, dc, svc, logdir=logdir, days_before_archive=5,
+                             filters_conf=FILTERS_YAML, now_ms=NOW_MS)
+    assert report.merged == [empty] and report.lines_merged == 0
+    assert report.archived == [os.path.dirname(quiet), os.path.dirname(loud)]
+    assert report.lines_archived == 3
+    assert not any(os.path.exists(d) for d in (empty, quiet, loud))
+    assert os.listdir(unread) == ["upload.00001"]
+    sibling = os.path.join(os.path.dirname(empty), "data")
+    assert os.listdir(sibling) == ["part-merged.00000.bm"]
+    assert _header_only(os.path.join(sibling, "part-merged.00000.bm"))
+    sibling = os.path.join(os.path.dirname(quiet), "archive")
+    assert os.listdir(sibling) == ["part-filtered.00000.bm"]
+    assert _header_only(os.path.join(sibling, "part-filtered.00000.bm"))
+    archived = read_boom_local(os.path.join(os.path.dirname(loud), "archive",
+                                            "part-filtered.00000.bm"))
+    assert [r[1] for r in archived] == [f"ERROR line {i}" for i in (1, 3, 5)]
+
+
+#: Lines of the filter-archive's columns: few create times and block
+#: numbers, so runs of one (second, create_time, block_no) form.
+REBOOM_ROWS = st.lists(
+    st.tuples(st.integers(-5_000, 5_000), st.text(max_size=8),
+              st.integers(-(2**31), 2**31 - 1), st.integers(0, 2), st.integers(0, 2)),
+    max_size=40,
+)
+ARCHIVE_KEYS = ["create_time", "block_no", "ts", "line_no"]
+
+
+@settings(max_examples=15, deadline=None)
+@given(REBOOM_ROWS, st.integers(1, 4), st.booleans())
+def test_write_sorted_reboom_writes_rows_in_key_order(spark, rows, partitions, drop_all):
+    """``write_sorted`` through ``write_reboom_stream``, as the
+    filter-archive calls it: 0-40 rows over 1-4 input partitions, or a
+    filter that removes every row, give one file whose lines are the
+    input sorted by (create_time, block_no, ts, line_no)."""
+    from pyspark.sql import functions as F
+
+    rows = [(*row, i) for i, row in enumerate(rows)]
+    df = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, partitions),
+        "ts long, message string, event_id int, create_time long, block_no long, line_no long",
+    )
+    if drop_all:
+        df, rows = df.filter(F.lit(False)), []
+    want = [r[:5] for r in sorted(rows, key=lambda r: (r[3], r[4], r[0], r[5]))]
+    with tempfile.TemporaryDirectory() as d:
+        path = os.path.join(d, "out.bm")
+        n = write_sorted(df, ARCHIVE_KEYS, path,
+                         lambda p, it: write_reboom_stream(p, (r[:5] for r in it)))
+        assert n == len(want)
+        assert [r[:5] for r in read_boom_local(path)] == want
+
+
 BIN = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "bin")
 
 
@@ -460,10 +542,23 @@ dc2/svcB/logs/c9
 }
 
 
+#: Single-dash flags and ``-t START END`` print what their twins print.
+INDEX_OUTPUT.update({
+    ("queryindex", "-p", "-d", "-s", "-l"): INDEX_OUTPUT[("queryindex", "--p", "--d", "--s", "--l")],
+    ("queryindex", "-p", "-d", "-s"): INDEX_OUTPUT[("queryindex", "--p", "--d", "--s")],
+    ("queryindex", "-t", "1704844800000", "1704855600000", "-p", "-d", "-s", "-l"):
+        INDEX_OUTPUT[("queryindex", "-t=1704844800000", "1704855600000",
+                      "--p", "--d", "--s", "--l")],
+    ("queryindex", "-t=1704844800", "1704855600", "-p", "-s", "dc.*", "svc.*"):
+        INDEX_OUTPUT[("queryindex", "-t=1704844800", "1704855600",
+                      "--p", "--s", "dc.*", "svc.*")],
+})
+
+
 def test_index_tools_output_is_pinned(tmp_path):
     """``indexlogs`` (json, csv, human) and ``queryindex`` (``-p -d -s
-    -l`` and a ``-t`` window, flags in the ``--x`` form) print exactly
-    this text over a small tree."""
+    -l`` and a ``-t`` window, flags in the ``-x`` and ``--x`` forms)
+    print exactly this text over a small tree."""
     root = str(tmp_path / "service")
     for d, name, size in INDEX_TREE:
         os.makedirs(os.path.join(root, d), exist_ok=True)
@@ -646,10 +741,11 @@ def test_archive_verification_keeps_data(spark, tmp_path, monkeypatch):
 
 
 def test_mid_merge_reader_sees_old_or_new_never_half(spark, tmp_path):
-    """Reader fencing: the merge writes to `*.bm.tmp` (invisible to the
-    boom source's `*.bm` glob) and renames only after verification, so
-    a cat over the hour mid-merge sees the pre-merge state; after the
-    merge it sees exactly the merged lines."""
+    """Reader fencing: the merge writes to
+    `part-merged.00000.bm.inprogress.<id>` (invisible to the boom
+    source's `*.bm` glob) and renames only after verification, so a cat
+    over the hour mid-merge sees the pre-merge state; after the merge it
+    sees exactly the merged lines."""
     from bb_bigdata_log_tools_spark import maintenance
     from bb_bigdata_log_tools_spark.sources.boom import read_boom
 
@@ -662,13 +758,12 @@ def test_mid_merge_reader_sees_old_or_new_never_half(spark, tmp_path):
     data = os.path.join(hour_comp, "data")
     os.makedirs(data, exist_ok=True)
 
-    # Simulate the mid-merge window: the tmp container exists in data/
+    # Simulate the mid-merge window: the temp container exists in data/
     # but has not been renamed yet. Readers must see the OLD state.
-    write_boom_local(
-        os.path.join(data, "part-merged.00000.bm.tmp"), [(1, "half-written", 0)]
-    )
+    tmp = os.path.join(data, f"part-merged.00000.bm.inprogress.{os.getpid()}")
+    write_boom_local(tmp, [(1, "half-written", 0)])
     assert read_boom(spark, data).count() == 0
-    os.unlink(os.path.join(data, "part-merged.00000.bm.tmp"))
+    os.unlink(tmp)
 
     n = maintenance.merge_incoming_dir(spark, hour_comp)
     assert n == len(lines)
