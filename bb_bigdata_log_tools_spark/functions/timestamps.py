@@ -37,10 +37,11 @@ def parse_rfc5424(ts: Column | str) -> Column:
 
     Handles optional fractional seconds of any length (floored to millis,
     like the reference which only records up to 3 digits) and ``Z`` or
-    ``±hh:mm`` zone offsets, via Spark's native timestamp cast.
+    ``±hh:mm`` zone offsets, via Spark's native timestamp cast. A string
+    that is not a timestamp gives null, with ANSI mode on or off.
     """
     c = F.col(ts) if isinstance(ts, str) else ts
-    return F.unix_millis(c.cast("timestamp"))
+    return F.unix_millis(c.try_cast("timestamp"))
 
 
 def parse_rfc3164(ts: Column | str, ref_year: Column | int | None = None) -> Column:

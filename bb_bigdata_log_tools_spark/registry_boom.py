@@ -1,14 +1,21 @@
 """Registry part 3: Boom-format and timestamp-parsing operators
 (SURVEY.md §2a rows 11-14, 16).
 
-``boom_read``'s oracle is the PINNED expected decode of the reference
-repo's own golden .bm test file (independently cross-checked against
-``reference-files/logcat-reference.txt`` in tests/test_boom_golden.py),
-so the driver's t2 gate also covers the Avro container decoder.
+The three ``boom_read*`` keys read the reference repo's own golden .bm
+test file when its test tree is present; their oracle is then the PINNED
+expected decode of that file (independently cross-checked against
+``reference-files/logcat-reference.txt`` in tests/test_boom_golden.py).
+When the tree is absent they read the committed stand-in ``data/standin.bm``,
+written by the JVM's own Avro ``DataFileWriter`` from the logBlock records
+in ``data/standin-blocks.json`` (``tests/make_gate_corpus.py``); their
+oracle is then built from those records by the ``LogLineData`` rule, not
+by the program's decoder. Either way the driver's t2 gate also covers the
+Avro container decoder.
 """
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -27,24 +34,48 @@ BM_DIR = (
     "/root/reference/testcases/logsearch/logsearch-testservice/logs/"
     "20120228/10/logsearch-test/data"
 )
+DATA_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data")
+STANDIN_BM = os.path.join(DATA_DIR, "standin.bm")
+STANDIN_BLOCKS = os.path.join(DATA_DIR, "standin-blocks.json")
+#: What the ``boom_read*`` keys read: the reference's golden .bm
+#: directory, or the committed stand-in when that tree is absent.
+BOOM_INPUT = BM_DIR if os.path.isdir(BM_DIR) else STANDIN_BM
 
 
 def q_boom_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed decode of the reference golden .bm file (fixed input —
+    """Distributed decode of :data:`BOOM_INPUT`: the reference golden .bm
+    file, or the stand-in without the reference tree (fixed input —
     independent of sf_dir)."""
-    return read_boom(spark, BM_DIR)
+    return read_boom(spark, BOOM_INPUT)
 
 
 def _sql_quote(s: str) -> str:
     return "'" + s.replace("'", "''") + "'"
 
 
+def _boom_rows() -> list[tuple]:
+    """The expected lines of :data:`BOOM_INPUT`: the pinned decode of the
+    reference file, or the stand-in's JSON records flattened by the
+    ``LogLineData`` rule (ts = second*1000 + ms, line_no = index within
+    the block)."""
+    if BOOM_INPUT == BM_DIR:
+        bm = None
+        for f in os.listdir(BM_DIR):
+            if f.endswith(".bm"):
+                bm = os.path.join(BM_DIR, f)
+        return read_boom_local(bm)
+    with open(STANDIN_BLOCKS, encoding="utf-8") as f:
+        blocks = json.load(f)
+    return [
+        (r["second"] * 1000 + ln["ms"], ln["message"], ln["eventId"], r["createTime"],
+         r["blockNumber"], i)
+        for r in blocks
+        for i, ln in enumerate(r["logLines"])
+    ]
+
+
 def _build_boom_values() -> str:
-    bm = None
-    for f in os.listdir(BM_DIR):
-        if f.endswith(".bm"):
-            bm = os.path.join(BM_DIR, f)
-    rows = sorted(read_boom_local(bm))
+    rows = sorted(_boom_rows())
     vals = ",\n  ".join(
         f"({r[0]}, {_sql_quote(r[1])}, {r[2]}, {r[3]}, {r[4]}, {r[5]})" for r in rows
     )
@@ -60,7 +91,7 @@ FROM (VALUES
 """
 
 
-SQL_BOOM_READ = _build_boom_values() if os.path.isdir(BM_DIR) else None
+SQL_BOOM_READ = _build_boom_values()
 
 # FastSearch-parity pushdown: Spark side filters INSIDE the decoder
 # (block byte-scan before record decode, sources/boom.py:scan_boom_bytes);
@@ -70,20 +101,16 @@ PUSHDOWN_TERMS = ["contains", "Greek"]
 
 
 def q_boom_read_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pushed substring search on the reference golden .bm file
-    (``util/FastSearch.java:76`` semantics; fixed input, independent of
-    sf_dir)."""
-    return read_boom(spark, BM_DIR, search_terms=PUSHDOWN_TERMS)
+    """Pushed substring search on :data:`BOOM_INPUT`, the reference golden
+    .bm file or the stand-in (``util/FastSearch.java:76`` semantics; fixed
+    input, independent of sf_dir)."""
+    return read_boom(spark, BOOM_INPUT, search_terms=PUSHDOWN_TERMS)
 
 
-SQL_BOOM_READ_PUSHDOWN = (
-    f"""
+SQL_BOOM_READ_PUSHDOWN = f"""
 SELECT * FROM ({SQL_BOOM_READ}) AS unfiltered
 WHERE message LIKE '%{PUSHDOWN_TERMS[0]}%' OR message LIKE '%{PUSHDOWN_TERMS[1]}%'
 """
-    if SQL_BOOM_READ is not None
-    else None
-)
 
 
 def q_ts_parse_rfc5424(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -134,7 +161,8 @@ ORDER BY event_id
 """
 
 def q_boom_read_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The golden .bm decoded through ``read_boom``'s sync-split ranges
+    """:data:`BOOM_INPUT` (the golden .bm, or the stand-in without the
+    reference tree) decoded through ``read_boom``'s sync-split ranges
     under a 512-byte ``maxPartitionBytes`` (forcing many ranges over one
     small file) — must equal the whole-file decode exactly (fixed input,
     independent of sf_dir). The ranges are planned inside ``read_boom``,
@@ -143,7 +171,7 @@ def q_boom_read_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     saved = spark.conf.get(key)
     spark.conf.set(key, "512")
     try:
-        return read_boom(spark, BM_DIR)
+        return read_boom(spark, BOOM_INPUT)
     finally:
         spark.conf.set(key, saved)
 
@@ -157,13 +185,9 @@ BOOM_QUERIES = {
 }
 
 BOOM_ORACLES = {
-    k: v
-    for k, v in {
-        "boom_read": SQL_BOOM_READ,
-        "boom_read_split": SQL_BOOM_READ,
-        "boom_read_pushdown": SQL_BOOM_READ_PUSHDOWN,
-        "ts_parse_rfc5424": SQL_TS_PARSE_RFC5424,
-        "ts_parse_rfc3164": SQL_TS_PARSE_RFC3164,
-    }.items()
-    if v is not None
+    "boom_read": SQL_BOOM_READ,
+    "boom_read_split": SQL_BOOM_READ,
+    "boom_read_pushdown": SQL_BOOM_READ_PUSHDOWN,
+    "ts_parse_rfc5424": SQL_TS_PARSE_RFC5424,
+    "ts_parse_rfc3164": SQL_TS_PARSE_RFC3164,
 }

@@ -836,7 +836,8 @@ def text_to_boom(
 
     Each line is split at the first space (Rfc5424TimestampParser.splitLine
     semantics), the timestamp parsed to epoch ms, and the remainder kept
-    as the message. One .bm file is written per partition by executors
+    as the message; a line whose head is not a timestamp is dropped. One
+    .bm file is written per partition by executors
     (``foreachPartition``) — distributed, driver never sees the data.
     Returns the number of lines converted.
     """
