@@ -217,8 +217,8 @@ def _emit(df: DataFrame, opts: dict) -> None:
                     sc.removeJobTag(tag)
             sys.stdout.flush()
         except BrokenPipeError:
-            sc.cancelJobsWithTag(tag)
-            closed_pipe()
+            sc.cancelJobsWithTag(tag)  # main() then ends the run quietly
+            raise
     if not silent:
         sys.stderr.write(DATA_MARKER + "\n")
 
@@ -352,19 +352,24 @@ def main() -> None:
     ``bin/<tool>`` symlink to it run): the search tools here and the
     admin tools of ``cli_admin``, the one table of tools. ``help`` (or
     no tool) lists them, ``version`` prints the version, and an unknown
-    tool exits 2."""
+    tool exits 2. A closed stdout ends any tool quietly
+    (:func:`closed_pipe`)."""
     from bb_bigdata_log_tools_spark import __version__
     from bb_bigdata_log_tools_spark.cli_admin import TOOLS as ADMIN_TOOLS
 
     tools = {**TOOLS, **ADMIN_TOOLS}
     tool = sys.argv[1] if len(sys.argv) > 1 else "help"
-    if tool in tools:
-        tools[tool](sys.argv[2:])
-    elif tool == "version":
-        print(__version__)
-    elif tool in ("help", "-h", "--help"):
-        print("usage: logdriver <tool> [args...]")
-        print(f"tools: {' '.join(tools)} version")
-    else:
-        sys.stderr.write(f"logdriver: unknown tool '{tool}'\n")
-        raise SystemExit(2)
+    try:
+        if tool in tools:
+            tools[tool](sys.argv[2:])
+        elif tool == "version":
+            print(__version__)
+        elif tool in ("help", "-h", "--help"):
+            print("usage: logdriver <tool> [args...]")
+            print(f"tools: {' '.join(tools)} version")
+        else:
+            sys.stderr.write(f"logdriver: unknown tool '{tool}'\n")
+            raise SystemExit(2)
+        sys.stdout.flush()  # a pipe closed after the last write fails here
+    except BrokenPipeError:
+        closed_pipe()

@@ -31,7 +31,6 @@ from datetime import datetime, timezone
 from bb_bigdata_log_tools_spark import tree
 from bb_bigdata_log_tools_spark.cli import (
     check_regex,
-    closed_pipe,
     fail,
     parse_args,
     parse_time,
@@ -68,7 +67,7 @@ def readboom(argv: list[str]) -> None:
                 sys.stdout.write("\t".join(map(str, row)) + "\n")
             sys.stdout.flush()
         except BrokenPipeError:
-            closed_pipe()
+            raise  # a closed stdout, not a damaged file: cli.main ends quietly
         except Exception as exc:  # noqa: BLE001 — any read failure names its file
             name = "<stdin>" if file == "-" else file
             fail(f"cannot read {name}: {getattr(exc, 'strerror', None) or exc}")

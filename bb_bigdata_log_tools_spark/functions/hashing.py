@@ -59,27 +59,3 @@ def shingles(c: Column | str, n: int = 5) -> Column:
     count = F.greatest(F.length(c) - F.lit(n - 1), F.lit(1))
     return F.transform(F.sequence(F.lit(1), count), lambda i: F.substring(c, i, n))
 
-
-def minhash_signature(
-    shingle_hashes: Column, num_perm: int = 64, seed: int = 2024
-) -> Column:
-    """Minhash signature array<long> from an array<long> of shingle hashes.
-
-    ``sig[i] = min over shingles of (a_i * (h mod p) + b_i) mod p`` with
-    p = 2^31-1; a_i*(h mod p) ≤ (2^31)^2 < 2^63, overflow-free.
-
-    NOTE: array higher-order functions evaluate interpreted (outside
-    codegen) — for corpus-scale signatures prefer the relational form,
-    ``operators.dedup.minhash_signature_relational`` (identical values).
-    """
-    sigs = []
-    for a, b in permutation_params(num_perm, seed):
-        mapped = F.transform(
-            shingle_hashes,
-            lambda h: F.pmod(
-                F.lit(a) * F.pmod(h, F.lit(MERSENNE_31)) + F.lit(b),
-                F.lit(MERSENNE_31),
-            ),
-        )
-        sigs.append(F.array_min(mapped))
-    return F.array(*sigs)

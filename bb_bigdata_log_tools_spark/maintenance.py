@@ -28,7 +28,7 @@ lines come from; no Python runs per line. Both rewrites of an hour
 (merge and filter-archive) write one file through ``boom.write_sorted``
 and publish it through ``boom.published`` only after a full re-decode
 counts the lines written (the ``fs/FileManager.java`` checksum-verified
-move); the source state directory goes only then. An hour with nothing
+move); only then go the source files it read. An hour with nothing
 to write publishes a header-only file. Oozie submission is out of
 scope (SURVEY §2). The reference's ZooKeeper maintenance locking
 (``logdriver/locks/LockUtil.java``, ``admin/LockedFs.java``) — which
@@ -48,6 +48,7 @@ from __future__ import annotations
 import os
 import re
 import shutil
+import sys
 from collections.abc import Callable
 from dataclasses import dataclass, field
 from typing import TYPE_CHECKING
@@ -284,24 +285,31 @@ def _only(rules: list[dict], ftype: str) -> bool:
 
 
 def _rewrite(
-    job: str, hour_comp_dir: str, source: str, target: str, name: str,
-    write: Callable[[str, str], int],
+    job: str, hour_comp_dir: str, source: str, target: str, stem: str,
+    write: Callable[[list[str], str], int],
 ) -> int:
-    """Rewrite the ``source`` state directory of an hour as the one file
-    ``<target>/<name>``: ``write(source_dir, tmp)`` writes it and returns
-    its line count, and the file is published (:func:`boom.published`)
-    only once ``tmp`` re-decodes in full to that count — a streaming
-    decode through an mmap, the ``fs/FileManager.java``
-    checksum-verified-move analog. Only then is ``source`` removed. An
-    unreadable or short file raises, leaving no file and ``source`` as it
-    was. A reader of the hour sees the old state or the new, never a
-    half-written file. Returns the line count."""
+    """Rewrite the ``source`` state directory of an hour as one new file
+    ``<target>/<stem>.NNNNN.bm``, NNNNN the first number no file there
+    holds yet: ``write(files, tmp)`` writes it from the ``.bm`` files of
+    ``source`` (``boom.container_ranges``) and returns its line count,
+    and the file is published (:func:`boom.published`) only once ``tmp``
+    re-decodes in full to that count — a streaming decode through an
+    mmap, the ``fs/FileManager.java`` checksum-verified-move analog.
+    Only then are those files removed, and ``source`` with them if
+    nothing else is left in it; anything else stays, named on stderr. An unreadable or
+    short file raises, leaving no file and ``source`` as it was. A reader
+    of the hour sees the old state or the new, never a half-written
+    file. Returns the line count."""
     src = os.path.join(hour_comp_dir, source)
     out_dir = os.path.join(hour_comp_dir, target)
     os.makedirs(out_dir, exist_ok=True)
+    files = sorted({f for f, _, _ in boom.container_ranges(src)})
+    n_out = 0
+    while os.path.exists(os.path.join(out_dir, f"{stem}.{n_out:05d}.bm")):
+        n_out += 1
     kept = f"{source} retained"
-    with boom.published(os.path.join(out_dir, name)) as tmp:
-        n = write(src, tmp)
+    with boom.published(os.path.join(out_dir, f"{stem}.{n_out:05d}.bm")) as tmp:
+        n = write(files, tmp)
         try:
             got = sum(1 for _ in boom.scan_boom_range(tmp))
         except Exception as e:
@@ -312,19 +320,26 @@ def _rewrite(
             raise RuntimeError(
                 f"{job} verification failed: wrote {n} lines, re-read {got}; {kept}"
             )
-    shutil.rmtree(src)
+    for f in files:
+        os.remove(f)
+    left = sorted(os.listdir(src))
+    if left:
+        print(f"{job}: kept {src}, which holds what the {job} did not read: "
+              f"{', '.join(left)}", file=sys.stderr)
+    else:
+        os.rmdir(src)
     return n
 
 
 def merge_incoming_dir(spark: SparkSession, hour_comp_dir: str) -> int:
     """The merge job: compact a settled ``incoming`` directory's part
     files into one .bm in ``data`` (:func:`compact_boom_dir`), then
-    remove ``incoming`` (:func:`_rewrite`). Returns the number of lines
+    remove the files it merged (:func:`_rewrite`). Returns the number of lines
     merged.
     """
     return _rewrite(
-        "merge", hour_comp_dir, "incoming", "data", "part-merged.00000.bm",
-        lambda incoming, tmp: boom.compact_boom_dir(spark, incoming, tmp),
+        "merge", hour_comp_dir, "incoming", "data", "part-merged",
+        lambda files, tmp: boom.compact_boom_dir(spark, files, tmp),
     )
 
 
@@ -333,7 +348,8 @@ def filter_archive_dir(
 ) -> int:
     """The filter/archive job: read ``data``, keep lines any rule
     accepts, ReBoom-write them (original createTime/blockNumber
-    preserved) into ``archive``, then delete ``data`` (:func:`_rewrite`).
+    preserved) into ``archive``, then delete the files it read
+    (:func:`_rewrite`).
 
     The lines are written in original file order, (create_time,
     block_no, ts, line_no), by :func:`write_sorted` through the
@@ -341,14 +357,14 @@ def filter_archive_dir(
     """
     reboom = boom.write_reboom_stream  # looked up on the driver, not in the task
 
-    def write(data: str, tmp: str) -> int:
-        kept = boom.read_boom(spark, data).filter(filters_to_predicate(rules))
+    def write(files: list[str], tmp: str) -> int:
+        kept = boom.read_boom(spark, files).filter(filters_to_predicate(rules))
         return boom.write_sorted(
             kept, ["create_time", "block_no", "ts", "line_no"], tmp,
             lambda path, rows: reboom(path, (r[:5] for r in rows)),  # all but line_no
         )
 
-    return _rewrite("archive", hour_comp_dir, "data", "archive", "part-filtered.00000.bm", write)
+    return _rewrite("archive", hour_comp_dir, "data", "archive", "part-filtered", write)
 
 
 # ---------------------------------------------------------------------------

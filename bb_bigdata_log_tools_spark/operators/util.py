@@ -44,8 +44,10 @@ def small_sort(df, *cols):
     never a result.
 
     Returns a DataFrame, for callers that go on computing or writing in
-    Spark (the gate keys, the CLI's ``--out``). The CLI's stdout path
-    orders small results on the driver instead (``cli._emit``).
+    Spark: the operators (their ``sort`` option) and the CLI's ``--out``.
+    The CLI's stdout path orders small results on the driver instead
+    (``cli._emit``). Gate keys do not sort their result: the gate
+    compares rows as a multiset.
     """
     out, n = counted_checkpoint(df)
     if n > SMALL_SORT_SPILL_ROWS:

@@ -14,7 +14,6 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bb_bigdata_log_tools_spark.operators.util import small_sort
 from bb_bigdata_log_tools_spark.sources import avro_generic as ag
 
 FIXTURE_SCHEMA = json.dumps(
@@ -83,7 +82,7 @@ def _project(df: DataFrame) -> DataFrame:
         "note",
         F.size("tags").alias("n_tags"),
         F.array_join("tags", ",").alias("tags_csv"),
-    ).transform(lambda d: small_sort(d, "id"))
+    )
 
 
 def q_avro_generic_read(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -113,10 +112,7 @@ def q_avro_block_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Block-level scan without decompress/decode: one row per
     container block with its on-disk compressed size."""
     root = _fixture_dir()
-    return (
-        ag.avro_block_scan(spark, root, glob="[ab].avro")
-        .transform(lambda d: small_sort(d, "file", "block_idx"))
-    )
+    return ag.avro_block_scan(spark, root, glob="[ab].avro")
 
 
 def _values_oracle(rows: list[dict]) -> str:

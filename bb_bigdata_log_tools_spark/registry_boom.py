@@ -26,7 +26,6 @@ from bb_bigdata_log_tools_spark.functions.timestamps import (
     parse_rfc3164,
     parse_rfc5424,
 )
-from bb_bigdata_log_tools_spark.operators.util import small_sort
 from bb_bigdata_log_tools_spark.session import table
 from bb_bigdata_log_tools_spark.sources.boom import read_boom, read_boom_local
 
@@ -125,7 +124,7 @@ def q_ts_parse_rfc5424(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = ev.withColumn("ts_string", format_timestamp(F.col("ms"), "RFC5424"))
     return s.select(
         "event_id", "ts_string", parse_rfc5424(F.col("ts_string")).alias("parsed_ms")
-    ).transform(lambda d: small_sort(d, "event_id"))
+    )
 
 
 SQL_TS_PARSE_RFC5424 = """
@@ -149,7 +148,7 @@ def q_ts_parse_rfc3164(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         "ts_string",
         parse_rfc3164(F.col("ts_string"), ref_year=2024).alias("parsed_ms"),
-    ).transform(lambda d: small_sort(d, "event_id"))
+    )
 
 
 SQL_TS_PARSE_RFC3164 = """

@@ -16,7 +16,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bb_bigdata_log_tools_spark.operators import curation, similarity
-from bb_bigdata_log_tools_spark.operators.util import small_sort
 from bb_bigdata_log_tools_spark.session import ensure_parallelism, table
 
 #: DuckDB rendering of functions.hashing.md5_long
@@ -38,7 +37,6 @@ def q_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
             docs, "lang", SAMPLE_FRACTIONS, default_fraction=SAMPLE_DEFAULT
         )
         .select("doc_id", "lang", "source")
-        .transform(lambda d: small_sort(d, "doc_id"))
     )
 
 
@@ -68,7 +66,6 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         curation.dedup_incremental(batch, seen)
         .select("doc_id", "lang", "source")
-        .transform(lambda d: small_sort(d, "doc_id"))
     )
 
 
@@ -122,7 +119,7 @@ def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
         "pii_phone",
         "pii_total",
         F.md5("text_scrubbed").alias("scrub_md5"),
-    ).transform(lambda d: small_sort(d, "doc_id"))
+    )
 
 
 _EMAIL = curation.PII_PATTERNS["email"]
@@ -189,9 +186,8 @@ ELSE text END
 
 def q_url_domain_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _inject_urls(table(spark, sf_dir, "documents"))
-    return (
-        curation.url_domain_stats(docs, text_col="text2", blocklist=URL_BLOCKLIST)
-        .orderBy("domain")
+    return curation.url_domain_stats(
+        docs, text_col="text2", blocklist=URL_BLOCKLIST
     )
 
 
@@ -227,7 +223,6 @@ def q_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id", "n_chars_q", "n_tokens_q", "mean_token_len",
             "unique_ratio", "fail_reason", "keep",
         )
-        .transform(lambda d: small_sort(d, "doc_id"))
     )
 
 
@@ -560,7 +555,6 @@ def q_sample_exact_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         curation.sample_exact_stratified(docs, "lang", EXACT_N_PER_STRATUM)
         .select("doc_id", "lang", "source")
-        .orderBy("doc_id")
     )
 
 
@@ -763,7 +757,6 @@ def q_sample_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         curation.sample_reservoir(docs, RESERVOIR_N)
         .select("doc_id", "lang", "source", "sample_rank")
-        .orderBy("sample_rank")
     )
 
 
@@ -792,10 +785,7 @@ OUTLIER_CELLS = 8
 
 def q_embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = ensure_parallelism(table(spark, sf_dir, "embeddings"))
-    return (
-        similarity.embedding_outliers(emb, OUTLIER_CELLS, OUTLIER_N)
-        .orderBy("outlier_rank")
-    )
+    return similarity.embedding_outliers(emb, OUTLIER_CELLS, OUTLIER_N)
 
 
 SQL_EMBEDDING_OUTLIERS = f"""
@@ -1203,9 +1193,7 @@ def q_sample_weighted_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = F.size(F.filter(F.split(F.col("text"), " "), lambda t: t != ""))
     d = docs.select("doc_id", "source", toks.cast("long").alias("wt"))
     out = sample_weighted_exact(d, n=_SWX_N, max_tickets=_SWX_CAP)
-    return out.select("sample_rank", "doc_id", "source", "wt", "draw_key").orderBy(
-        "sample_rank"
-    )
+    return out.select("sample_rank", "doc_id", "source", "wt", "draw_key")
 
 
 SQL_SAMPLE_WEIGHTED_EXACT = f"""
@@ -1262,7 +1250,7 @@ def q_sample_weighted_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return out.select(
         "source", "sample_rank", "doc_id", "wt", "draw_key"
-    ).orderBy("source", "sample_rank")
+    )
 
 
 SQL_SAMPLE_WEIGHTED_STRATIFIED = f"""

@@ -8,7 +8,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bb_bigdata_log_tools_spark.operators import analytics, datasetops, similarity
-from bb_bigdata_log_tools_spark.operators.util import small_sort
 from bb_bigdata_log_tools_spark.operators.curation import (
     URL_DOMAIN_PATTERN,
     URL_PATTERN,
@@ -79,7 +78,6 @@ def q_filter_blocklist(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         datasetops.filter_blocklist(docs, BLOCKLIST, text_col="text2")
         .select("doc_id", "source", "n_urls")
-        .transform(lambda d: small_sort(d, "doc_id"))
     )
 
 
@@ -484,7 +482,6 @@ def q_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
         datasetops.split_assign(table(spark, sf_dir, "documents"), **SPLIT)
         .groupBy("source", "split")
         .agg(F.count("*").alias("n_docs"))
-        .orderBy("source", "split")
     )
 
 

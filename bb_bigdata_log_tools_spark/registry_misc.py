@@ -19,7 +19,6 @@ from pyspark.sql import functions as F
 
 from bb_bigdata_log_tools_spark.functions.hashing import permutation_params
 from bb_bigdata_log_tools_spark.operators import index, similarity
-from bb_bigdata_log_tools_spark.operators.util import small_sort
 from bb_bigdata_log_tools_spark.registry_boom import DATA_DIR
 from bb_bigdata_log_tools_spark.session import ensure_parallelism, table
 from bb_bigdata_log_tools_spark.sources.boom import published
@@ -62,7 +61,7 @@ def q_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = table(spark, sf_dir, "documents")
-    return small_sort(media_metadata(attach_media(docs)), "doc_id")
+    return media_metadata(attach_media(docs))
 
 
 SQL_MULTIMODAL_META = """
@@ -246,7 +245,7 @@ def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(i, p, mt) for i, mt, p in _decode_payloads()],
         "doc_id long, payload binary, media_type string",
     )
-    return small_sort(extract_features(media), "doc_id")
+    return extract_features(media)
 
 
 # Expected EXIF orientation per decode-fixture doc_id (pinned
@@ -369,7 +368,7 @@ def q_hfind(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = hfind(
         spark, root, name_glob="*.log", file_type="f", min_size=100, max_depth=2
     ).select(F.lit("size_depth").alias("probe"), *cols)
-    return small_sort(a.unionAll(b), "probe", "name")
+    return a.unionAll(b)
 
 
 def _hfind_oracle() -> str:
@@ -410,7 +409,7 @@ def q_gzip_text_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     gz_path = os.path.join(gz_dir, os.path.basename(TEXT_INPUT) + ".gz")
     with published(gz_path) as tmp, open(TEXT_INPUT, "rb") as f_in, gzip.open(tmp, "wb") as f_out:
         shutil.copyfileobj(f_in, f_out)
-    return small_sort(read_gzip_text(spark, gz_path), "line")
+    return read_gzip_text(spark, gz_path)
 
 
 def _gzip_oracle() -> str:
@@ -430,11 +429,7 @@ def q_text_to_boom(spark: SparkSession, sf_dir: str) -> DataFrame:
     out_dir = os.path.join(tempfile.gettempdir(), "bb_text_to_boom")
     shutil.rmtree(out_dir, ignore_errors=True)
     text_to_boom(spark, TEXT_INPUT, out_dir)
-    return (
-        read_boom(spark, out_dir)
-        .select("ts", "message")
-        .transform(lambda d: small_sort(d, "ts", "message"))
-    )
+    return read_boom(spark, out_dir).select("ts", "message")
 
 
 def _text_to_boom_oracle() -> str:
@@ -516,7 +511,7 @@ def q_media_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(i, p, mt) for i, mt, p in _decode_payloads()],
         "doc_id long, payload binary, media_type string",
     )
-    return small_sort(media_frame_sample(media, FRAME_EVERY_N), "doc_id", "frame_idx")
+    return media_frame_sample(media, FRAME_EVERY_N)
 
 
 def _frame_sample_oracle() -> str:
@@ -732,7 +727,7 @@ def q_media_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(i, p, mt) for i, mt, p in _resize_payloads()],
         "doc_id long, payload binary, media_type string",
     )
-    return small_sort(media_resize(media, RESIZE_W, RESIZE_H), "doc_id")
+    return media_resize(media, RESIZE_W, RESIZE_H)
 
 
 def _media_resize_oracle() -> str:
@@ -1017,7 +1012,7 @@ def q_audio_pcm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(i, p, mt) for i, mt, p in _audio_stats_payloads()],
         "doc_id long, payload binary, media_type string",
     )
-    return small_sort(audio_pcm_stats(media), "doc_id")
+    return audio_pcm_stats(media)
 
 
 def _audio_stats_oracle() -> str:
@@ -1084,7 +1079,7 @@ def q_audio_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(i, p, mt) for i, mt, p in _resample_payloads()],
         "doc_id long, payload binary, media_type string",
     )
-    return small_sort(audio_resample(media, RESAMPLE_RATE), "doc_id")
+    return audio_resample(media, RESAMPLE_RATE)
 
 
 def _audio_resample_oracle() -> str:

@@ -834,14 +834,10 @@ def q_docs_minhash_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
     incremental pipeline PERSISTS so tomorrow's crawl LSH-joins against
     yesterday's signatures without re-minhashing the archive
     (``dedup_incremental``'s input contract)."""
-    from bb_bigdata_log_tools_spark.operators.util import small_sort
-
     sh = dedup.doc_shingle_hashes(
         ensure_parallelism(table(spark, sf_dir, "documents")), 3
     )
-    return dedup.minhash_bands_from_hashes(sh, 64, 16).transform(
-        lambda d: small_sort(d, "doc_id", "band_idx")
-    )
+    return dedup.minhash_bands_from_hashes(sh, 64, 16)
 
 
 SQL_DOCS_MINHASH_SIGNATURE = f"""

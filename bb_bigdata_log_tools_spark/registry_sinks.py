@@ -31,7 +31,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from bb_bigdata_log_tools_spark.operators.util import small_sort
 from bb_bigdata_log_tools_spark.registry_datasetops import _MD5_BUCKET
 from bb_bigdata_log_tools_spark.session import ensure_parallelism, table
 from bb_bigdata_log_tools_spark.sources.boom import read_boom, write_boom_tree
@@ -110,7 +109,6 @@ def q_boom_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         read_boom(spark, os.path.join(root, "dc1", "svc", "apache"))
         .select("ts", "message", "event_id")
-        .transform(lambda d: small_sort(d, "ts", "message", "event_id"))
     )
 
 
@@ -152,7 +150,7 @@ def q_write_jsonl_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
         "shard_pos",
         "doc_id",
         F.md5(F.encode("text", "UTF-8")).alias("text_md5"),
-    ).transform(lambda d: small_sort(d, "shard", "shard_pos"))
+    )
 
 
 SQL_WRITE_JSONL_SHARDS = f"""
@@ -211,7 +209,6 @@ def q_read_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n_chars").alias("total_chars"),
             F.countDistinct("source").alias("n_sources"),
         )
-        .orderBy("shard")
     )
 
 
@@ -282,7 +279,7 @@ def q_write_webdataset(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return manifest.select(
         "shard_id", "n_samples", "n_members", "total_bytes"
-    ).orderBy("shard_id")
+    )
 
 
 SQL_WRITE_WEBDATASET = f"""
@@ -328,7 +325,7 @@ def q_read_webdataset(spark: SparkSession, sf_dir: str) -> DataFrame:
     m = read_webdataset(spark, os.path.join(store, "*.tar"))
     return m.select(
         "sample_key", "ext", "n_bytes", F.md5("payload").alias("payload_md5")
-    ).transform(lambda d: small_sort(d, "sample_key", "ext"))
+    )
 
 
 SQL_READ_WEBDATASET = f"""
@@ -362,7 +359,7 @@ def q_samples_from_members(spark: SparkSession, sf_dir: str) -> DataFrame:
         "sample_key",
         F.array_join("exts", ",").alias("exts_csv"),
         "total_bytes",
-    ).transform(lambda d: small_sort(d, "sample_key"))
+    )
 
 
 SQL_SAMPLES_FROM_MEMBERS = f"""
@@ -503,9 +500,7 @@ def q_write_warc(spark: SparkSession, sf_dir: str) -> DataFrame:
     manifest = spark.createDataFrame(
         rows, "shard_id int, path string, n_records long, total_bytes long"
     )
-    return manifest.select("shard_id", "n_records", "total_bytes").orderBy(
-        "shard_id"
-    )
+    return manifest.select("shard_id", "n_records", "total_bytes")
 
 
 # serialized record length, mirroring sources/warc.py build_warc_record
@@ -558,7 +553,7 @@ def q_read_warc(spark: SparkSession, sf_dir: str) -> DataFrame:
         "http_content_type",
         "n_bytes",
         F.md5("payload").alias("payload_md5"),
-    ).transform(lambda d: small_sort(d, "target_uri"))
+    )
 
 
 def _read_warc_oracle() -> str:
@@ -779,7 +774,7 @@ def q_read_warc_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         "http_content_type",
         "n_bytes",
         F.md5("payload").alias("payload_md5"),
-    ).transform(lambda d: small_sort(d, "target_uri"))
+    )
 
 
 def q_crawl_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -966,8 +961,7 @@ def q_stream_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_bytes",
         F.md5("payload").alias("payload_md5"),
     )
-    out = _drain_to_memory(recs, "stream_warc_ingest_sink", "append")
-    return out.orderBy("target_uri")
+    return _drain_to_memory(recs, "stream_warc_ingest_sink", "append")
 
 
 def q_warc_extract_links(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1029,7 +1023,7 @@ def q_write_wet(spark: SparkSession, sf_dir: str) -> DataFrame:
         "record_id",
         "n_bytes",
         F.md5("payload").alias("payload_md5"),
-    ).transform(lambda d: small_sort(d, "target_uri"))
+    )
 
 
 def _write_wet_oracle() -> str:
@@ -1218,7 +1212,7 @@ def q_write_wat(spark: SparkSession, sf_dir: str) -> DataFrame:
         "record_id",
         "n_bytes",
         F.md5("payload").alias("payload_md5"),
-    ).transform(lambda d: small_sort(d, "target_uri"))
+    )
 
 
 def _write_wat_oracle() -> str:
@@ -1335,25 +1329,18 @@ def q_decode_payload_text(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # materialize the synthesized store ONCE — the documented seam on
     # decode_payload_text_full for expensive upstreams: its union
-    # branches each re-evaluate their input, and the trailing range
-    # sort's sampler added a third pass, so the Python encode
-    # mapInPandas ran 3x per query (r12 optimization round). The
-    # checkpoint holds exactly the payload bytes a real store would
-    # hold on disk; small_sort replaces the sampling orderBy (same
-    # total order, one pass).
+    # branches each re-evaluate their input, so without it the Python
+    # encode mapInPandas runs once per branch. The checkpoint holds
+    # exactly the payload bytes a real store would hold on disk.
     raw = docs.mapInPandas(
         enc, "doc_id long, payload binary, http_content_type string"
     ).localCheckpoint()
-    out = decode_payload_text_full(raw)
-    return small_sort(
-        out.select(
-            "doc_id",
-            "charset",
-            "jvm_decoded",
-            "charset_supported",
-            F.md5(F.encode("html", "UTF-8")).alias("text_md5"),
-        ),
+    return decode_payload_text_full(raw).select(
         "doc_id",
+        "charset",
+        "jvm_decoded",
+        "charset_supported",
+        F.md5(F.encode("html", "UTF-8")).alias("text_md5"),
     )
 
 
@@ -1437,7 +1424,7 @@ def q_write_warc_revisit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "payload_digest",
         "n_bytes",
         F.md5("payload").alias("payload_md5"),
-    ).transform(lambda d: small_sort(d, "target_uri"))
+    )
 
 
 def _write_warc_revisit_oracle() -> str:
@@ -1500,7 +1487,7 @@ def q_write_cdx(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.regexp_extract(v, r'"mime":"([^"]*)"', 1).alias("mime"),
         F.regexp_extract(v, r'"status":(\d+)', 1).cast("int").alias("status"),
         F.regexp_extract(v, r'"digest":"([^"]+)"', 1).alias("digest"),
-    ).transform(lambda d: small_sort(d, "urlkey", "url"))
+    )
 
 
 def _write_cdx_oracle() -> str:
@@ -1563,9 +1550,7 @@ def q_cdx_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     urls = [
         f"{_WARC_URI_PREFIX}{i}.html" for i in _CDX_PROBE_IDS
     ]
-    return cdx_lookup(spark, store, urls, n_shards=N_WARC_SHARDS).orderBy(
-        "urlkey"
-    )
+    return cdx_lookup(spark, store, urls, n_shards=N_WARC_SHARDS)
 
 
 def _cdx_lookup_oracle() -> str:
@@ -1626,8 +1611,7 @@ def q_stream_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.regexp_extract("canonical_url", "^https?://([^/?#]+)", 1)
         ).alias("host"),
     ).dropDuplicates(["canonical_url"])
-    out = _drain_to_memory(disc, "stream_frontier_sink", "append")
-    return out.orderBy("canonical_url")
+    return _drain_to_memory(disc, "stream_frontier_sink", "append")
 
 
 def _stream_frontier_oracle() -> str:
@@ -1902,7 +1886,7 @@ def q_cdx_range_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     store = _cdx_range_store(spark, sf_dir)
     return cdx_range_scan(
         spark, store, _CDX_RANGE_PROBE_PREFIX
-    ).transform(lambda d: small_sort(d, "urlkey", "url"))
+    )
 
 
 def _cdx_range_scan_oracle() -> str:
@@ -1966,7 +1950,7 @@ def q_cdx_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         out,
         n_shards=N_WARC_SHARDS,
     )
-    return small_sort(cdx_range_scan(spark, out, ""), "urlkey", "url")
+    return cdx_range_scan(spark, out, "")
 
 
 def _cdx_merge_oracle() -> str:
@@ -2052,7 +2036,7 @@ def q_warc_fetch(spark: SparkSession, sf_dir: str) -> DataFrame:
         "record_id",
         "n_bytes",
         F.md5("payload").alias("payload_md5"),
-    ).transform(lambda d: small_sort(d, "target_uri"))
+    )
 
 
 def _warc_fetch_oracle() -> str:
@@ -2158,7 +2142,7 @@ def q_cdx_temporal(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cdx_range_scan(
         spark, out, _CDX_RANGE_PROBE_PREFIX,
         ts_from=_CDX_TS_FROM, ts_to=_CDX_TS_TO,
-    ).transform(lambda d: small_sort(d, "urlkey", "ts14", "url"))
+    )
 
 
 def _cdx_temporal_oracle() -> str:
@@ -2810,7 +2794,7 @@ def q_cdx_store_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cdx_multi_scan(
         spark, stores, _CDX_RANGE_PROBE_PREFIX,
         ts_from=_CDX_STORE_TS_FROM, ts_to=_CDX_STORE_TS_TO,
-    ).transform(lambda d: small_sort(d, "urlkey", "ts14", "url"))
+    )
 
 
 def _cdx_store_prune_oracle() -> str:
@@ -2890,7 +2874,7 @@ def q_warc_site_export(spark: SparkSession, sf_dir: str) -> DataFrame:
         "record_id",
         "n_bytes",
         F.md5("payload").alias("payload_md5"),
-    ).transform(lambda d: small_sort(d, "target_uri"))
+    )
 
 
 def _warc_site_export_oracle() -> str:

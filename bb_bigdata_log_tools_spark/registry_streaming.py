@@ -607,7 +607,6 @@ def q_stream_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("grp").alias("event_type"),
             F.round(est, 2).alias("hll_estimate"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -742,7 +741,7 @@ def q_stream_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
         "q",
         "n",
         F.round("est_raw", 4).alias("sketch_est"),
-    ).orderBy("event_type", "q")
+    )
 
 
 def _stream_quantile_oracle() -> str:
@@ -788,9 +787,7 @@ def q_stream_skew_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("ts").alias("event_time"),
     )
     out = stream_skew_asof_join(ev, SKEW_ASOF_WITHIN_MS)
-    return _drain_to_memory(out, "stream_skew_asof_sink", "append").orderBy(
-        "purchase_id"
-    )
+    return _drain_to_memory(out, "stream_skew_asof_sink", "append")
 
 
 SQL_STREAM_SKEW_ASOF = f"""

@@ -32,6 +32,7 @@ def get_spark(
     on so skewed shuffles (LSH buckets, hot services) re-plan at runtime,
     and the session timezone is pinned to UTC so timestamp semantics match
     the oracle (DuckDB) and the reference (epoch-millis arithmetic).
+    No progress bar is drawn: stderr carries only the CLI's own lines.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
@@ -49,6 +50,7 @@ def get_spark(
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.ui.showConsoleProgress", "false")
     )
     if master is not None:
         builder = builder.master(master)

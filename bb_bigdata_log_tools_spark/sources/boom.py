@@ -866,10 +866,11 @@ def text_to_boom(
 
 
 def compact_boom_dir(
-    spark: SparkSession, in_dir: str, out_path: str, create_time: int = 0
+    spark: SparkSession, in_dir: str | list[str], out_path: str, create_time: int = 0
 ) -> int:
     """LogMaintenance-style compaction: merge a directory of hourly .bm
-    part files into one file, lines re-sorted by (ts, message).
+    part files (or a list of them) into one file, lines re-sorted by
+    (ts, message).
 
     The reference's LogMaintenance merges per-hour part files before
     archiving (``admin/LogMaintenance.java``). Fully distributed: the

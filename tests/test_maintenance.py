@@ -456,6 +456,26 @@ def test_indexlogs_and_queryindex_cli(tmp_path):
     assert "Matched components: 2" in q_all.stdout
 
 
+def test_queryindex_closed_pipe_exits_quietly(tmp_path):
+    """``queryindex -p -d -s -l | head -1`` over 900 components: the
+    listing (~120 kB) overflows the pipe, so the write after the reader
+    closes fails; cli.main ends the run with exit status 0 and no
+    traceback."""
+    root = tmp_path / "service"
+    for n in range(900):
+        (root / "dc1" / "svc1" / "logs" / "20240110" / "01" / f"{n:04d}-{'c' * 80}" / "data").mkdir(parents=True)
+    proc = subprocess.Popen(
+        [os.path.join(BIN, "queryindex"), f"-r={root}", "-p", "-d", "-s", "-l"],
+        stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True,
+    )
+    first = proc.stdout.readline()
+    proc.stdout.close()
+    err = proc.stderr.read()
+    assert proc.wait(timeout=120) == 0, err
+    assert first == "Matched components: 900\n"
+    assert "Traceback" not in err and "BrokenPipeError" not in err, err
+
+
 #: (state directory, file name, size): two dcs, all three states, hours on
 #: two days; ``_READY`` counts toward no size.
 INDEX_TREE = [
@@ -771,6 +791,44 @@ def test_mid_merge_reader_sees_old_or_new_never_half(spark, tmp_path):
     got = read_boom(spark, data).count()
     assert got == len(lines)
     assert os.listdir(data) == ["part-merged.00000.bm"]
+
+
+@pytest.mark.parametrize("name", ["upload.00001", "part-b.bm.inprogress.77"])
+def test_merge_keeps_files_it_did_not_read(spark, tmp_path, capsys, name):
+    """The merge reads only the ``*.bm`` files of ``incoming``, so it
+    removes only those: a numeric-suffixed upload or a writer's
+    ``.inprogress.`` file stays in ``incoming``, named on stderr."""
+    from bb_bigdata_log_tools_spark import maintenance
+
+    root = str(tmp_path / "service")
+    i = _mk_hour(root, "dc1", "svc1", "logs", "20240131", "07", "app01", "incoming",
+                 [(1706684400000, "A", 0)])
+    write_boom_local(os.path.join(i, name), [(1706684400001, "U", 1)])
+    assert maintenance.merge_incoming_dir(spark, os.path.dirname(i)) == 1
+    data = os.path.join(os.path.dirname(i), "data")
+    assert [r[1] for r in read_boom_local(os.path.join(data, "part-merged.00000.bm"))] == ["A"]
+    assert os.listdir(i) == [name]
+    assert [r[1] for r in read_boom_local(os.path.join(i, name))] == ["U"]
+    err = capsys.readouterr().err.splitlines()
+    assert len(err) == 1 and name in err[0] and i in err[0], err
+
+
+def test_second_merge_of_an_hour_keeps_the_first(spark, tmp_path):
+    """Two merges of one hour publish two files: the second takes the
+    next free ``part-merged.NNNNN.bm`` name instead of replacing the
+    first, and ``incoming`` goes once its files are merged."""
+    from bb_bigdata_log_tools_spark import maintenance
+
+    root = str(tmp_path / "service")
+    for line in ("A", "B"):
+        i = _mk_hour(root, "dc1", "svc1", "logs", "20240131", "07", "app01", "incoming",
+                     [(1706684400000, line, 0)])
+        assert maintenance.merge_incoming_dir(spark, os.path.dirname(i)) == 1
+        assert not os.path.exists(i)
+    data = os.path.join(os.path.dirname(i), "data")
+    assert sorted(os.listdir(data)) == ["part-merged.00000.bm", "part-merged.00001.bm"]
+    assert [r[1] for f in sorted(os.listdir(data))
+            for r in read_boom_local(os.path.join(data, f))] == ["A", "B"]
 
 
 def test_lease_pluggable_object_store_backend(tmp_path):

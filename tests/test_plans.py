@@ -155,29 +155,6 @@ def test_log_store_partition_pruning(spark, sf_dir, tmp_path):
     assert df.count() == base.count()
 
 
-def test_bucketed_join_no_shuffle(spark, sf_dir, tmp_path):
-    """Two tables bucketed on the join key must sort-merge join with no
-    Exchange on either side — the repeated-join scale path."""
-    from bb_bigdata_log_tools_spark.sources.bucketed import read_table, write_bucketed
-
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        ev = table(spark, sf_dir, "events")
-        write_bucketed(ev.select("event_id", "user_id", "value"), "ev_b", ["user_id"], 8)
-        write_bucketed(
-            ev.select("event_id", "user_id", "event_type"), "ev_c", ["user_id"], 8
-        )
-        a, b = read_table(spark, "ev_b"), read_table(spark, "ev_c")
-        joined = a.join(b, "user_id")
-        plan = plan_of(joined)
-        assert "Exchange" not in plan, plan[:1500]
-        assert joined.count() > 0
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-        spark.sql("DROP TABLE IF EXISTS ev_b")
-        spark.sql("DROP TABLE IF EXISTS ev_c")
-
-
 def test_curation_maps_no_shuffle(spark, sf_dir):
     """Sampling, PII scrub, and the quality gate are pure maps — any
     Exchange here would be a scan-speed killer at 100 TB."""

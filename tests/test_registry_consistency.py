@@ -1,8 +1,12 @@
 """Registry integrity: the merged QUERIES/ORACLES dicts must not
-silently shadow keys, and every auxiliary list must reference real
-keys."""
+silently shadow keys, every auxiliary list must reference real keys,
+and no registry function ends in a sort."""
 
 from __future__ import annotations
+
+import ast
+import glob
+import os
 
 import bb_bigdata_log_tools_spark.registry as R
 
@@ -57,3 +61,48 @@ def test_window_priority_and_bench_reference_real_keys():
     assert set(bench.BENCH_QUERIES) <= set(R.QUERIES)
     assert len(set(bench.BENCH_QUERIES)) == len(bench.BENCH_QUERIES)
     assert len(set(R._WINDOW_PRIORITY)) == len(R._WINDOW_PRIORITY)
+
+
+#: Calls that order a DataFrame.
+_SORTS = {"small_sort", "orderBy", "sort", "sortWithinPartitions"}
+
+
+def _is_sort(node) -> bool:
+    """``node`` is a call to a sort, or a ``.transform(lambda d: <sort>)``."""
+    if not isinstance(node, ast.Call):
+        return False
+    f = node.func
+    name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+    if name == "transform" and node.args and isinstance(node.args[0], ast.Lambda):
+        return _is_sort(node.args[0].body)
+    return name in _SORTS
+
+
+def _own_returns(fn):
+    """The ``return`` statements of ``fn`` itself, not of functions nested in it."""
+    stack = list(fn.body)
+    while stack:
+        node = stack.pop()
+        if isinstance(node, ast.Return):
+            yield node
+        if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
+            stack.extend(ast.iter_child_nodes(node))
+
+
+def test_no_registry_function_ends_in_a_sort():
+    """The gate compares each key's rows as a multiset, so a sort as the
+    last step of a registry function costs a job and a shuffle that no
+    reader sees. An operator's own ordering, and a ``.limit`` after a
+    sort (the sort then picks the rows), stay."""
+    pkg = os.path.dirname(R.__file__)
+    found = []
+    for path in sorted(glob.glob(os.path.join(pkg, "registry*.py"))):
+        with open(path, encoding="utf-8") as f:
+            tree = ast.parse(f.read())
+        for fn in ast.walk(tree):
+            if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                found += [
+                    f"{os.path.basename(path)}:{r.lineno} {fn.name}"
+                    for r in _own_returns(fn) if _is_sort(r.value)
+                ]
+    assert not found, "registry functions that end in a sort:\n" + "\n".join(found)
