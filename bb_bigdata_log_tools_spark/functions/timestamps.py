@@ -11,14 +11,19 @@ Parity targets (no code reused; semantics re-derived):
   README ``--dateFormat`` — output formats RFC822, RFC3164 (zero-padded
   day), RFC5424 (default), or any valid pattern string.
 
-Everything here is a pure column expression: whole-stage codegen, no
-Python UDFs in the hot path.
+Everything here that takes a column is a pure column expression:
+whole-stage codegen, no Python UDFs in the hot path. :func:`format_ms`
+is the same output formatting in Python for the named formats, for the
+CLI's driver executor; pyspark is imported only by the column functions.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+from datetime import datetime, timedelta
+from typing import TYPE_CHECKING
+
+if TYPE_CHECKING:
+    from pyspark.sql import Column
 
 # Java DateTimeFormatter patterns (Spark >= 3 uses java.time).
 RFC5424_PATTERN = "yyyy-MM-dd'T'HH:mm:ss.SSSxxx"  # 2012-02-28T10:00:01.000+00:00
@@ -31,6 +36,26 @@ FORMATS = {
     "RFC822": RFC822_PATTERN,
 }
 
+#: The same formats in Python, over the UTC fields of a timestamp: English
+#: month and day names and a zero-padded 4-digit year, as Java prints them
+#: (``strftime``'s ``%b``/``%a`` follow the locale, and glibc's ``%Y``
+#: does not pad years below 1000).
+PY_FORMATS = {
+    "RFC5424": "{Y:04d}-{m:02d}-{d:02d}T{H:02d}:{M:02d}:{S:02d}.{f:03d}+00:00",
+    "RFC3164": "{b} {d:02d} {H:02d}:{M:02d}:{S:02d}",
+    "RFC822": "{a}, {d:02d} {b} {Y:04d} {H:02d}:{M:02d}:{S:02d} +0000",
+}
+
+#: Epoch ms of 0001-01-01 and of 10000-01-01: :func:`format_ms` formats
+#: ``[PY_MIN_MS, PY_END_MS)``, the years Python's ``datetime`` holds.
+PY_MIN_MS = -62_135_596_800_000
+PY_END_MS = 253_402_300_800_000
+
+_EPOCH = datetime(1970, 1, 1)
+_MONTHS = ("Jan", "Feb", "Mar", "Apr", "May", "Jun",
+           "Jul", "Aug", "Sep", "Oct", "Nov", "Dec")
+_DAYS = ("Mon", "Tue", "Wed", "Thu", "Fri", "Sat", "Sun")
+
 
 def parse_rfc5424(ts: Column | str) -> Column:
     """RFC5424/ISO-8601 timestamp string → epoch millis (LongType).
@@ -40,6 +65,8 @@ def parse_rfc5424(ts: Column | str) -> Column:
     ``±hh:mm`` zone offsets, via Spark's native timestamp cast. A string
     that is not a timestamp gives null, with ANSI mode on or off.
     """
+    from pyspark.sql import functions as F
+
     c = F.col(ts) if isinstance(ts, str) else ts
     return F.unix_millis(c.try_cast("timestamp"))
 
@@ -53,6 +80,8 @@ def parse_rfc3164(ts: Column | str, ref_year: Column | int | None = None) -> Col
     ``ref_year`` defaults to the current session year; pass an int for
     reproducible tests.
     """
+    from pyspark.sql import functions as F
+
     c = F.col(ts) if isinstance(ts, str) else ts
     if ref_year is None:
         year = F.year(F.current_date())
@@ -90,6 +119,19 @@ def format_timestamp(ts_ms: Column | str, date_format: str = "RFC5424") -> Colum
     Java DateTimeFormatter pattern — same contract as the reference's
     ``--dateFormat`` option.
     """
+    from pyspark.sql import functions as F
+
     c = F.col(ts_ms) if isinstance(ts_ms, str) else ts_ms
     pattern = FORMATS.get(date_format, date_format)
     return F.date_format(F.timestamp_millis(c), pattern)
+
+
+def format_ms(ts_ms: int, date_format: str = "RFC5424") -> str:
+    """Epoch ms → the string :func:`format_timestamp` gives for a name in
+    :data:`FORMATS`, in Python, for ``ts_ms`` in ``[PY_MIN_MS,
+    PY_END_MS)``."""
+    t = _EPOCH + timedelta(milliseconds=ts_ms)
+    return PY_FORMATS[date_format].format(
+        Y=t.year, m=t.month, d=t.day, H=t.hour, M=t.minute, S=t.second,
+        f=t.microsecond // 1000, b=_MONTHS[t.month - 1], a=_DAYS[t.weekday()],
+    )

@@ -29,9 +29,7 @@ from pyspark.sql import functions as F
 from bb_bigdata_log_tools_spark.functions.timestamps import format_timestamp
 from bb_bigdata_log_tools_spark.operators.util import small_sort
 from bb_bigdata_log_tools_spark.schema import LOG_COLUMNS
-
-#: The total order of formatted lines (formatAndSort.pg).
-SORT_KEYS = ("ts", "create_time", "block_no", "line_no")
+from bb_bigdata_log_tools_spark.sources.boom import SORT_KEYS
 
 
 def _time_window(df: DataFrame, start_ms: int | None, end_ms: int | None) -> DataFrame:

@@ -28,7 +28,3 @@ LOG_SCHEMA = T.StructType(
 )
 
 LOG_COLUMNS = [f.name for f in LOG_SCHEMA.fields]
-
-# Default intermediate field separator: U+001F INFORMATION SEPARATOR ONE
-# (reference README: --fieldSeparator default).
-DEFAULT_FIELD_SEPARATOR = ""

@@ -68,6 +68,13 @@ if TYPE_CHECKING:
 
 MAGIC = b"Obj\x01"
 
+#: The fields of a flattened .bm line, in the order :func:`flatten_log_blocks`
+#: yields them (``LogLineData``): the columns of ``schema.LOG_SCHEMA``.
+LINE_FIELDS = ("ts", "message", "event_id", "create_time", "block_no", "line_no")
+
+#: The total order of formatted lines (formatAndSort.pg).
+SORT_KEYS = ("ts", "create_time", "block_no", "line_no")
+
 
 class _Decoder:
     """Minimal Avro binary decoder (spec-complete for the types boom
@@ -328,17 +335,13 @@ def read_container(
             raise
 
 
-#: UTF-8 of the only non-ASCII code points whose ``lower()`` holds ASCII
-#: letters: U+0130 (``İ`` -> ``i̇``) and U+212A (KELVIN SIGN -> ``k``).
-_LOWERS_TO_ASCII = ("\u0130".encode(), "\u212a".encode())
-
-
 def _matcher(
     search_terms: list[str] | None,
     match_all: bool,
     case_insensitive: bool,
     start_ms: int | None = None,
     end_ms: int | None = None,
+    ascii_case: bool = False,
 ):
     """The FastSearch predicates ``(block_ok, line_ok)`` of
     :func:`read_container` and :func:`flatten_log_blocks`, each None
@@ -349,13 +352,18 @@ def _matcher(
     ``match_all`` requires every term (a line containing all terms
     implies each term's bytes appear in its block, so requiring all
     terms at block level is a safe prefilter); the default is match-any.
+
     Case-insensitive mode lower-cases both sides line-level, as Spark's
-    ``lower()`` does in ``logops``; ASCII terms byte-scan both cases
-    cheaply via ``.lower()`` on a latin-1 view, except in a block
-    holding a code point that lower-cases to ASCII
-    (:data:`_LOWERS_TO_ASCII`), which passes. Non-ASCII upper/lower can
-    change byte LENGTH (the reference's ``unicode`` flag), so such terms
-    pass every block. No terms match everything."""
+    ``lower()`` does in ``logops``, and the block test scans the payload
+    decoded as UTF-8 (``surrogateescape``) and lower-cased: the byte
+    before a message is the last byte of its length varint, below 0x80,
+    so every message decodes intact (``İ`` and KELVIN SIGN included,
+    which lower-case to ASCII), and ``lower()`` maps each code point on
+    its own except Σ (Final_Sigma looks at its neighbours), so a term
+    whose lower form holds σ or ς passes every block. ``ascii_case``
+    folds ASCII letters only, as Java's ``CASE_INSENSITIVE`` without
+    ``UNICODE_CASE`` does (``loggrep --i``): both tests are then
+    ``bytes.lower()`` containment on UTF-8. No terms match everything."""
     lo = float("-inf") if start_ms is None else start_ms
     hi = float("inf") if end_ms is None else end_ms
     if search_terms is None:
@@ -363,15 +371,29 @@ def _matcher(
             return None, None
         return None, (lambda ts, msg: lo <= ts < hi)
     want = all if match_all else any
-    if case_insensitive:
-        ascii_ok = all(t.isascii() for t in search_terms)
-        terms_lower = [t.lower() for t in search_terms]
+    if case_insensitive and ascii_case:
+        terms_bytes = [t.encode("utf-8").lower() for t in search_terms]
 
         def block_ok(payload: bytes) -> bool:
-            if not ascii_ok or any(b in payload for b in _LOWERS_TO_ASCII):
-                return True
-            hay = payload.decode("latin-1").lower()
-            return want([t in hay for t in terms_lower])
+            hay = payload.lower()
+            return want([t in hay for t in terms_bytes])
+
+        def line_ok(ts: int, msg: str) -> bool:
+            if not lo <= ts < hi:
+                return False
+            m = msg.encode("utf-8").lower()
+            return want([t in m for t in terms_bytes])
+
+    elif case_insensitive:
+        terms_lower = [t.lower() for t in search_terms]
+
+        if any("σ" in t or "ς" in t for t in terms_lower):
+            block_ok = None
+        else:
+
+            def block_ok(payload: bytes) -> bool:
+                hay = payload.decode("utf-8", "surrogateescape").lower()
+                return want([t in hay for t in terms_lower])
 
         def line_ok(ts: int, msg: str) -> bool:
             if not lo <= ts < hi:
@@ -423,6 +445,9 @@ def scan_boom_range(
     match_all: bool = False,
     case_insensitive: bool = False,
     salvage: bool = False,
+    start_ms: int | None = None,
+    end_ms: int | None = None,
+    ascii_case: bool = False,
 ) -> Iterator[tuple]:
     """Flattened lines of the blocks one BYTE RANGE ``[start, end)`` of
     a .bm file owns (default: the whole file), read through an mmap —
@@ -431,12 +456,16 @@ def scan_boom_range(
     ranges of any split of a file together return exactly its
     whole-file rows, each once, and a damaged block raises as in the
     whole-file read (:func:`iter_blocks`) unless ``salvage`` is set. The
-    optional ``search_terms`` push the FastSearch predicates into each
-    range (:func:`scan_boom_bytes`).
+    optional ``search_terms`` and window ``[start_ms, end_ms)`` push
+    the FastSearch predicates into each range (:func:`_matcher`); a
+    salvage walk decodes every block, as the byte prefilter assumes an
+    intact container, and only the exact line test filters its lines.
     """
-    block_ok, line_ok = _matcher(search_terms, match_all, case_insensitive)
+    block_ok, line_ok = _matcher(
+        search_terms, match_all, case_insensitive, start_ms, end_ms, ascii_case
+    )
     with mapped(path) as mm:
-        records = read_container(mm, start, end, salvage, block_ok)
+        records = read_container(mm, start, end, salvage, None if salvage else block_ok)
         yield from flatten_log_blocks(records, line_ok)
 
 
@@ -553,6 +582,20 @@ def _pack(ranges: list[tuple[str, int, int]], n_bins: int) -> list[list[tuple]]:
     return bins
 
 
+def read_ranges(ranges: Iterable[tuple[str, int, int]], read_range: Callable) -> Iterator:
+    """``read_range(file, start, end)`` of each range in turn, a failure
+    re-raised as a ``ValueError`` naming its file, as one reader reads
+    many: the loop of each :func:`fan_out` task and of the CLI's driver
+    executor (:func:`read_lines`)."""
+    for p, start, end in ranges:
+        try:
+            out = read_range(p, start, end)
+        except Exception as exc:  # noqa: BLE001 — re-raised, named
+            name = f"{os.path.splitext(p)[1]} file {p}"
+            raise ValueError(f"cannot decode {name}: {type(exc).__name__}: {exc}") from exc
+        yield out
+
+
 def fan_out(
     spark: SparkSession,
     ranges: list[tuple[str, int, int]],
@@ -562,23 +605,15 @@ def fan_out(
     """One distributed read of ``ranges``: they are packed into
     ``min(#ranges, defaultParallelism)`` bins, and each task of
     ``spark.range(n).mapInPandas`` turns the ranges of its bin into
-    frames of ``schema`` through ``read_range(file, start, end)``. A
-    failure is re-raised naming its file, as one task reads many. Paths
-    must be reachable from executors (shared FS / mount, as for writers)."""
+    frames of ``schema`` through ``read_range(file, start, end)``
+    (:func:`read_ranges`). Paths must be reachable from executors
+    (shared FS / mount, as for writers)."""
     bins = _pack(ranges, spark.sparkContext.defaultParallelism)
 
     def decode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         for pdf in batches:
             for b in pdf["id"]:
-                for p, start, end in bins[b]:
-                    try:
-                        frame = read_range(p, start, end)
-                    except Exception as exc:  # noqa: BLE001 — re-raised, named
-                        name = f"{os.path.splitext(p)[1]} file {p}"
-                        raise ValueError(
-                            f"cannot decode {name}: {type(exc).__name__}: {exc}"
-                        ) from exc
-                    yield frame
+                yield from read_ranges(bins[b], read_range)
 
     # spark.range, not createDataFrame(ranges): it needs no Arrow or
     # Python worker on the driver and runs no job at load
@@ -606,6 +641,57 @@ def write_sorted(
     return counts[0] if counts else write(path, iter(()))
 
 
+def range_lines(
+    path: str,
+    start: int,
+    end: int,
+    search_terms: list[str] | None = None,
+    match_all: bool = False,
+    case_insensitive: bool = False,
+    skip_corrupt: bool = False,
+    start_ms: int | None = None,
+    end_ms: int | None = None,
+    ascii_case: bool = False,
+) -> list[tuple]:
+    """The lines of one range of a .bm file (:func:`scan_boom_range`):
+    the per-range body of :func:`read_boom`'s tasks and of the CLI's
+    driver executor (:func:`read_lines`). Under ``skip_corrupt`` a range
+    that still fails after the block-level resync gives zero rows: a
+    mutated header can even yield a different valid schema whose records
+    do not flatten, and salvage never ends the read."""
+    try:
+        return list(scan_boom_range(
+            path, start, end, search_terms, match_all, case_insensitive,
+            skip_corrupt, start_ms, end_ms, ascii_case,
+        ))
+    except Exception:  # noqa: BLE001
+        if not skip_corrupt:
+            raise
+        return []
+
+
+def read_lines(
+    ranges: list[tuple[str, int, int]],
+    search_terms: list[str] | None = None,
+    match_all: bool = False,
+    case_insensitive: bool = False,
+    skip_corrupt: bool = False,
+    start_ms: int | None = None,
+    end_ms: int | None = None,
+    ascii_case: bool = False,
+) -> list[tuple]:
+    """The lines of ``ranges`` (:func:`container_ranges`) read in this
+    process, with :func:`read_boom`'s arguments and per-range body
+    (:func:`range_lines`): the CLI's driver executor, which starts no
+    Spark job."""
+    read = functools.partial(
+        range_lines, search_terms=search_terms, match_all=match_all,
+        case_insensitive=case_insensitive, skip_corrupt=skip_corrupt,
+        start_ms=start_ms, end_ms=end_ms, ascii_case=ascii_case,
+    )
+    return [line for part in read_ranges(ranges, read) for line in part]
+
+
 def read_boom(
     spark: SparkSession,
     path: str | list[str],
@@ -613,6 +699,9 @@ def read_boom(
     match_all: bool = False,
     case_insensitive: bool = False,
     skip_corrupt: bool = False,
+    start_ms: int | None = None,
+    end_ms: int | None = None,
+    ascii_case: bool = False,
 ) -> DataFrame:
     """Distributed .bm read into the canonical log schema: the one reader
     for hourly part files and multi-GB archives alike.
@@ -632,7 +721,9 @@ def read_boom(
     FastSearch fast path (``util/FastSearch.java:76``, see
     :func:`scan_boom_bytes`). Semantically identical to reading
     everything then filtering with ``logops.multisearch``, so callers
-    may use it as a drop-in accelerator.
+    may use it as a drop-in accelerator; ``ascii_case`` folds ASCII
+    letters only, as ``logops.grep`` does (:func:`_matcher`). The window
+    ``[start_ms, end_ms)`` drops every other line in the decoder.
 
     ``skip_corrupt=True`` opts into SALVAGE semantics for damaged
     trees: corrupt container blocks are resynced past via the Avro
@@ -642,34 +733,19 @@ def read_boom(
     block granularity, for when one flipped block must not kill a
     1000-executor ingest. Default OFF: silent data loss is the wrong
     default, and the maintenance integrity checks rely on strict
-    reads. Mutually exclusive with ``search_terms`` (the push-down
-    byte-scan assumes intact containers — salvage first, then search).
+    reads. With ``search_terms`` a salvage read skips no block on the
+    byte-scan, which assumes intact containers; the line test still
+    filters (:func:`scan_boom_range`).
     """
-    if skip_corrupt and search_terms is not None:
-        raise ValueError(
-            "skip_corrupt and search_terms are mutually exclusive: the "
-            "FastSearch byte-scan assumes intact containers — salvage "
-            "the tree first, then search"
-        )
-
     from bb_bigdata_log_tools_spark.schema import LOG_COLUMNS, LOG_SCHEMA
 
     def read_range(p: str, start: int, end: int) -> "pd.DataFrame":
         import pandas as pd
 
-        rows = scan_boom_range(
-            p, start, end, search_terms, match_all, case_insensitive, skip_corrupt
+        rows = range_lines(
+            p, start, end, search_terms, match_all, case_insensitive,
+            skip_corrupt, start_ms, end_ms, ascii_case,
         )
-        try:
-            rows = list(rows)
-        except Exception:  # noqa: BLE001
-            if not skip_corrupt:
-                raise
-            # file-level fallback on top of block-level resync: a mutated
-            # header can even yield a DIFFERENT valid schema whose records
-            # don't flatten — under salvage that range contributes zero
-            # rows, it never kills the task
-            rows = []
         return pd.DataFrame(rows, columns=LOG_COLUMNS)
 
     ranges = container_ranges(path, spark=spark)

@@ -389,9 +389,11 @@ def test_read_boom_skip_corrupt_salvages_blocks(spark, tmp_path):
     for s in (0, 1, 3, 4):
         for i in range(3):
             assert any(f"s{s} i{i}" in m for m in msgs)
-    # salvage + push-down search is an explicit usage error
-    with pytest.raises(ValueError):
-        read_boom(spark, str(d), search_terms=["x"], skip_corrupt=True)
+    # salvage + search: the salvaged lines that hold the term
+    found = read_boom(spark, str(d), search_terms=["i1"], skip_corrupt=True).collect()
+    assert sorted(tuple(r) for r in found) == sorted(
+        tuple(r) for r in rows if "i1" in r["message"])
+    assert len(found) == 4
     # unreadable header: zero rows under salvage
     p.write_bytes(b"Obj\x01" + b"\x00" * 10)
     assert read_boom(spark, str(d), skip_corrupt=True).count() == 0

@@ -1,7 +1,9 @@
-"""The CLI's delivery to stdout: a small result is fetched once as Arrow
-and ordered on the driver, a large one is range-sorted by Spark, and
-both print exactly what ``logops.format_and_sort`` orders, ties on the
-timestamp included. A call to stdout runs two jobs and no shuffle."""
+"""The CLI's delivery to stdout on the Spark executor (``--r``): a small
+result is fetched once as Arrow and ordered on the driver, a large one is
+range-sorted by Spark, and both print exactly what
+``logops.format_and_sort`` orders, ties on the timestamp included. A
+call to stdout runs two jobs and no shuffle; the same call on the driver
+executor runs none."""
 
 from __future__ import annotations
 
@@ -61,10 +63,11 @@ def test_stdout_order_equals_format_and_sort(spark, monkeypatch, tmp_path, tie_t
     ]
     assert len(want) == 320 and len({line.split(" ", 1)[0] for line in want}) == 80
     if not out:
-        assert _run(spark, monkeypatch, "logcat", _argv(root, *WINDOW)) == want
+        assert _run(spark, monkeypatch, "logcat", _argv(root, *WINDOW, "--r")) == want
         return
     target = str(tmp_path / "out")
-    assert _run(spark, monkeypatch, "logcat", _argv(root, *WINDOW, f"--out={target}")) == []
+    assert _run(spark, monkeypatch, "logcat",
+                _argv(root, *WINDOW, f"--out={target}", "--r")) == []
     got = []
     for name in sorted(n for n in os.listdir(target) if n.startswith("part-")):
         with open(os.path.join(target, name), encoding="utf-8") as f:
@@ -79,7 +82,7 @@ def test_stdout_call_runs_two_jobs_and_no_shuffle(spark, monkeypatch, tie_tree):
     sc, group = spark.sparkContext, "emit-jobs"
     sc.setJobGroup(group, "logcat")
     try:
-        assert _run(spark, monkeypatch, "logcat", _argv(root, *WINDOW))
+        assert _run(spark, monkeypatch, "logcat", _argv(root, *WINDOW, "--r"))
     finally:
         sc._jsc.clearJobGroup()
     tracker, store = sc.statusTracker(), sc._jsc.sc().statusStore()
@@ -92,3 +95,18 @@ def test_stdout_call_runs_two_jobs_and_no_shuffle(spark, monkeypatch, tie_tree):
             if info is not None and info.numTasks:
                 shuffle += store.lastStageAttempt(sid).shuffleWriteBytes()
     assert shuffle == 0
+
+
+def test_stdout_call_on_driver_runs_no_job(spark, monkeypatch, tie_tree):
+    """The same logcat without ``--r`` runs on the driver executor: no
+    Spark job, and the same lines in the same order."""
+    root, _data = tie_tree
+    sc, group = spark.sparkContext, "emit-local"
+    sc.setJobGroup(group, "logcat")
+    try:
+        got = _run(spark, monkeypatch, "logcat", _argv(root, *WINDOW))
+    finally:
+        sc._jsc.clearJobGroup()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert got == _run(spark, monkeypatch, "logcat", _argv(root, *WINDOW, "--r"))
+    assert len(got) == 320

@@ -1,7 +1,7 @@
 """The CLI's entry: every ``bin/`` tool is a symlink to the one dispatcher,
 ``bin/logdriver``, which runs from any working directory, and a call that
-fails on its arguments, finds no data, or needs no cluster imports no
-pyspark."""
+fails on its arguments, finds no data, or needs no cluster (a small
+search runs on the driver executor) imports no pyspark."""
 
 from __future__ import annotations
 
@@ -37,20 +37,31 @@ def test_bin_tools_run_from_any_directory(tmp_path):
     assert all(os.readlink(os.path.join(BIN, t)) == "logdriver" for t in TOOLS)
 
 
-@pytest.mark.parametrize("case", ["bad_logsearch", "logcat_no_dirs", "readboom", "queryindex",
+@pytest.mark.parametrize("case", ["bad_logsearch", "logcat_no_dirs", "logsearch_two_hours",
+                                  "readboom", "queryindex",
                                   "maintenance_bad_days", "maintenance_bad_wait",
                                   "hfind_bad_size", "maintenance_missing_filters",
                                   "maintenance_filters_not_mapping"])
 def test_tool_imports_no_pyspark(tmp_path, case):
     """``python -X importtime`` lists every module a call imports: a
     ``logsearch`` missing its arguments, a ``logcat`` whose window
-    matches no directory, ``readboom`` of a file, ``queryindex``, and an
-    admin tool given a number that is not one import no ``pyspark``
-    module; the bad number, and a ``--filters`` file that is missing or
-    holds no mapping, exit 1 with one error line naming the option."""
+    matches no directory, a ``logsearch`` over a two-hour tree,
+    ``readboom`` of a file, ``queryindex``, and an admin tool given a
+    number that is not one import no ``pyspark`` module; the search
+    prints its lines, and the bad number, and a ``--filters`` file that
+    is missing or holds no mapping, exit 1 with one error line naming
+    the option."""
     none = str(tmp_path / "none")
     bm = str(tmp_path / "f.bm")
     write_boom_local(bm, [(1500, "hello", 7), (2500, "world", 8)])
+    tree = tmp_path / "tree"
+    for hour, lines in (("00", [(3_600_000 - 1, "hello late", 0), (1000, "hi", 1)]),
+                        ("01", [(3_600_000, "hello next", 2), (7_199_999, "bye", 3)])):
+        data = tree / "dc" / "svc" / "logs" / "19700101" / hour / "comp" / "data"
+        data.mkdir(parents=True)
+        write_boom_local(str(data / "part-0.bm"), lines)
+    search = ["logsearch", "-dc=dc", "-svc=svc", "-comp=comp", "-start=0", "-end=7200",
+              f"-root={tree}", "-string=hello"]
     listing = tmp_path / "list.yaml"
     listing.write_text("- keepall\n- dropall\n")
     maintenance = ["logmaintenance", "dc", "svc", f"--root={none}"]
@@ -58,6 +69,7 @@ def test_tool_imports_no_pyspark(tmp_path, case):
         "bad_logsearch": (["logsearch", "-dc=x"], 1, 0, None),
         "logcat_no_dirs": (["logcat", "-dc=x", "-svc=y", "-comp=z", "-start=0",
                             "-end=100", f"-root={none}"], 0, 0, None),
+        "logsearch_two_hours": (search, 0, 2, None),
         "readboom": (["readboom", bm], 0, 2, None),
         "queryindex": (["queryindex", f"-r={none}"], 0, 2, None),
         "maintenance_bad_days": ([*maintenance, "--days-before-archive=x"], 1, 0,
@@ -80,6 +92,9 @@ def test_tool_imports_no_pyspark(tmp_path, case):
                 if line.startswith("import time:")]
     assert "bb_bigdata_log_tools_spark.cli" in imported
     assert [m for m in imported if m.split(".")[0] == "pyspark"] == []
+    if case == "logsearch_two_hours":
+        assert res.stdout == ("1970-01-01T00:59:59.999+00:00 hello late\n"
+                              "1970-01-01T01:00:00.000+00:00 hello next\n")
     if error:
         errors = [line for line in res.stderr.splitlines()
                   if not line.startswith("import time:")]

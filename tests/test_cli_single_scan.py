@@ -1,7 +1,8 @@
-"""The CLI reads every hour of a window in ONE ``read_boom`` scan: its
-output equals a per-hour read + plain Spark filter, loading runs no Spark
-job (the driver lists the files, however many hours the window has), and
-the CLI behaves like a Unix filter at its edges."""
+"""The CLI reads every hour of a window in ONE scan, on the driver
+executor or, with ``--r``, in one ``read_boom``: on both, its output
+equals a per-hour read + plain Spark filter, loading runs no Spark job
+(the driver lists the files, however many hours the window has), and the
+CLI behaves like a Unix filter at its edges."""
 
 from __future__ import annotations
 
@@ -82,27 +83,34 @@ def _run(spark, monkeypatch, tool: str, argv: list[str]) -> list[str]:
     return out.getvalue().splitlines()
 
 
-@pytest.mark.parametrize("skip_corrupt", [False, True])
-def test_single_scan_equals_per_hour_filter(spark, monkeypatch, trees, skip_corrupt):
+@pytest.mark.parametrize("skip_corrupt, executor", [
+    pytest.param(False, [], id="False"),
+    pytest.param(True, [], id="True"),
+    pytest.param(False, ["--r"], id="False-r"),
+    pytest.param(True, ["--r"], id="True-r"),
+])
+def test_single_scan_equals_per_hour_filter(spark, monkeypatch, trees, skip_corrupt, executor):
     """logsearch / loggrep / logmultisearch over a >32-hour window equal
-    the plain Spark filter over a per-hour read_boom of each directory;
-    with --skipCorrupt, also over a tree with one damaged hour. Loading
-    the window starts no Spark job."""
+    the plain Spark filter over a per-hour read_boom of each directory,
+    on the driver executor and on Spark (``--r``); with --skipCorrupt,
+    also over a tree with one damaged hour. Loading the window starts no
+    Spark job."""
     root = trees["bad" if skip_corrupt else "good"]
-    flags = ["--skipCorrupt"] if skip_corrupt else []
+    flags = (["--skipCorrupt"] if skip_corrupt else []) + executor
     # seconds-granular epoch bounds; the window cuts into the first hour
     start_ms, end_ms = T0 + 30 * 60_000, T0 + HOURS * HOUR
     dc, svc, comp = TREE
     paths = cli.resolve_paths(root, dc, svc, comp, start_ms, end_ms)
     assert len(paths) == HOURS > 32
 
-    sc, group = spark.sparkContext, f"single-scan-load-{skip_corrupt}"
+    sc, group = spark.sparkContext, f"single-scan-load-{skip_corrupt}-{executor}"
     sc.setJobGroup(group, "cli._load")
     try:
-        cli._load(
-            cli.parse_args(_argv(root, start_ms, end_ms, "-string=x", *flags)),
-            "logsearch", ["string"],
-        )
+        with contextlib.redirect_stdout(io.StringIO()), contextlib.redirect_stderr(io.StringIO()):
+            cli._load(
+                cli.parse_args(_argv(root, start_ms, end_ms, "-string=x", *flags)),
+                "logsearch", ["string"], ["x"],
+            )
     finally:
         sc._jsc.clearJobGroup()
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
@@ -117,6 +125,7 @@ def test_single_scan_equals_per_hour_filter(spark, monkeypatch, trees, skip_corr
         ("logsearch", ["-string=disk FAIL"], msg.contains("disk FAIL")),
         ("loggrep", ["-regex=h1[0-9] i[0-9]+ (net|user)"],
          msg.rlike("h1[0-9] i[0-9]+ (net|user)")),
+        ("loggrep", ["-regex=disk (FAIL|ok)", "--i"], msg.rlike("(?i)disk (FAIL|ok)")),
         ("logmultisearch", [f"-strings={trees['strings']}"],
          msg.contains("net timeout") | msg.contains("ÉCHEC-DISQUE")),
     ]

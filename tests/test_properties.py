@@ -375,6 +375,57 @@ def test_pushdown_scan_equals_filter_random(lines, terms, match_all, ci):
         assert got == want
 
 
+#: Characters whose case folding is special (İ, KELVIN SIGN, ß, ẞ, final
+#: sigma) among plain ones, so random terms often match.
+FOLDING_CHARS = "İiIı\u212akKßẞsSΣσςÉéÈCcH- x"
+
+
+@settings(max_examples=300, deadline=None)
+@given(
+    st.lists(
+        st.tuples(st.integers(min_value=0, max_value=4_999),
+                  st.text(alphabet=FOLDING_CHARS, max_size=12),
+                  st.integers(min_value=0, max_value=9)),
+        min_size=1,
+        max_size=30,
+    ),
+    st.lists(st.text(alphabet=FOLDING_CHARS, min_size=1, max_size=3), min_size=1, max_size=3),
+    st.booleans(),
+)
+@example([(0, "İstanbul", 0)], ["İs"], False)
+@example([(0, "cooled to 4 \u212a", 0)], ["\u212a"], False)
+@example([(0, "cooled to 4 \u212a", 0)], ["k"], False)
+@example([(0, "Straße", 0)], ["STRAẞE"], False)
+# the next line's ms varint, 50 -> b"d", makes Σ non-final in the payload
+@example([(0, "ΟΔΟΣ", 0), (50, "x", 1)], ["ΟΣ"], False)
+@example([(0, "disk ÉCHEC-DISQUE", 0)], ["échec-disque", "disk"], True)
+def test_case_insensitive_prefilter_keeps_matching_blocks(lines, terms, match_all):
+    """The case-insensitive block prefilter never rejects a block that
+    holds a line the exact line test accepts, for any terms, ASCII or
+    not."""
+    import tempfile
+
+    from bb_bigdata_log_tools_spark.sources.boom import (
+        _Decoder,
+        _matcher,
+        inflate,
+        iter_blocks,
+    )
+
+    block_ok, line_ok = _matcher(terms, match_all, True)
+    with tempfile.TemporaryDirectory() as d:
+        path = os.path.join(d, "f.bm")
+        write_boom_local(path, lines)
+        with open(path, "rb") as f:
+            data = f.read()
+    for schema, codec, count, raw in iter_blocks(data):
+        payload = inflate(codec, raw)
+        dec = _Decoder(payload)
+        records = [dec.decode(schema) for _ in range(count)]
+        if any(line_ok(ts, msg) for ts, msg, *_ in flatten_log_blocks(records)):
+            assert block_ok is None or block_ok(payload), (terms, records)
+
+
 # Lines at 10.5 s, 11.1 s and 12.9 s: a window edge inside a second must
 # cut between lines of that second, not at the second's start.
 SUB_SECOND_LINES = [(10_500, "line a", 0), (11_100, "line b", 1), (12_900, "line c", 2)]
