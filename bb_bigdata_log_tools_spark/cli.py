@@ -13,7 +13,8 @@ Shared argument surface::
              --fieldSeparator=X (separator for --raw intermediate-format
              output; default U+001F)  --raw (emit the reference's
              intermediate separator-joined fields, unformatted/unsorted)
-             --silent  --v (one stderr line naming the executor and why)
+             --silent  --v (one stderr line naming the executor, the
+             driver executor's read workers, and why)
              --l (run on the driver whatever the slice's size)
              --r (run on Spark)
              --skipCorrupt (salvage damaged .bm trees: resync past
@@ -25,11 +26,17 @@ local or a remote sort. A stdout ``logcat``, ``logsearch`` or
 (:func:`grep_literals`), with a named ``--dateFormat`` or ``--raw``,
 whose ``.bm`` files total at most :data:`LOCAL_MAX_BYTES`, runs on the
 driver executor: the same ranges, per-range reader and predicates as
-the Spark read (``boom.read_lines``), sorted and formatted in this
-process, with no pyspark import and no JVM. Every other call, and any
-call with ``--r``, reads on Spark (``boom.read_boom``), where the
-observed row count picks the sort: a small result is ordered on the
-driver, a large one by a distributed range sort.
+the Spark read (``boom.read_lines``), with no pyspark import and no JVM.
+Like Spark's tasks, its ranges are packed into one bin per usable core
+(``boom.local_bins``), each read by one worker of a pool of forked
+processes that the first call of more than one bin starts and later
+calls in the same process reuse; a call of one bin reads in this
+process. The lines come back in range order and are sorted and
+formatted here. Every other call, and any call with ``--r``, reads on
+Spark (``boom.read_boom``), where the observed row count picks the
+sort: a small result is ordered on the driver, a large one by a
+distributed range sort. On either executor a damaged ``.bm`` file ends
+the call with one error line naming it.
 
 Times accept epoch seconds, epoch millis, ``now``, or common date
 strings (``Feb 28, 2012 10:00``, ISO). Order of arguments does not
@@ -67,15 +74,19 @@ DATA_MARKER = ";#################### DATA MARKER ####################"
 DEFAULT_FIELD_SEPARATOR = "\x1f"
 
 #: The most bytes of ``.bm`` files a call reads on the driver executor;
-#: ``--l`` lifts it. On a 20k-lines-an-hour tree, fresh processes of
-#: ``--l`` beat ``--r`` in wall time and peak RSS for every call measured
-#: up to 64 hours (67.9 MB), a ``logcat`` of all 1.28M lines included; at
-#: 96 hours ``logcat`` tied, and a search returning 30% of the lines lost
-#: from 128 hours on (CHANGES.md).
-LOCAL_MAX_BYTES = 65 * 2**20
+#: ``--l`` lifts it. On a 20k-lines-an-hour tree and 4 cores, fresh
+#: processes of ``--l`` beat ``--r`` in wall time and in the summed peak
+#: RSS of their processes for every call measured up to 128 hours
+#: (135.7 MB), a ``logcat`` of all 2.56M lines and a search returning 30%
+#: of the lines included (CHANGES.md).
+LOCAL_MAX_BYTES = 130 * 2**20
 
 #: The most literals a ``loggrep`` regex expands to as a literal search.
 GREP_MAX_LITERALS = 32
+
+#: The error ``boom.read_ranges`` raises for a damaged file, in the text
+#: of a failed Spark job.
+_DECODE_ERROR = re.compile(r"^ValueError: (cannot decode \S+ file .*)$", re.M)
 
 #: A backslash before ASCII punctuation: that character, in Java and Python.
 _ESCAPED_PUNCT = re.compile(r"\\[!-/:-@\[-`{-~]")
@@ -223,6 +234,19 @@ def _require(opts: dict, tool: str, keys: list[str]) -> list[str]:
 
 
 def _emit(df: DataFrame, opts: dict) -> None:
+    """The Spark executor's output of ``df``'s log lines (:func:`_write_spark`).
+    A job that fails on a damaged file ends the run with the one error
+    line the driver executor prints for it."""
+    try:
+        _write_spark(df, opts)
+    except Exception as exc:  # noqa: BLE001 — re-raised unless a file is damaged
+        damaged = _DECODE_ERROR.search(str(exc))
+        if damaged is None:
+            raise
+        fail(damaged.group(1))
+
+
+def _write_spark(df: DataFrame, opts: dict) -> None:
     from pyspark.sql import functions as F
 
     from bb_bigdata_log_tools_spark.operators import logops, util
@@ -346,11 +370,12 @@ def _load(
                 start_ms=start_ms, end_ms=end_ms, ascii_case=ascii_case)
     ranges, reason = _executor(opts, paths, start_ms, end_ms, spark_only)
     if "v" in opts["flags"]:
-        sys.stderr.write(f"; executor={'spark' if ranges is None else 'driver'} {reason}\n")
+        where = "spark" if ranges is None else f"driver workers={len(boom.local_bins(ranges))}"
+        sys.stderr.write(f"; executor={where} {reason}\n")
     if ranges is not None:
         try:
             lines = boom.read_lines(ranges, **scan)
-        except ValueError as exc:  # read_ranges names the damaged file
+        except (ValueError, ChildProcessError) as exc:  # a damaged file, named; a dead worker
             fail(str(exc))
         _write_local(lines, opts)
         return None
@@ -392,16 +417,16 @@ def _write_local(lines: list[tuple], opts: dict) -> None:
     :func:`_emit` writes them to stdout, ``"<formatted ts> <message>"``
     in ``SORT_KEYS`` order, or with ``--raw`` the separator-joined fields
     in read order, between the data markers."""
-    from bb_bigdata_log_tools_spark.functions.timestamps import format_ms
+    from bb_bigdata_log_tools_spark.functions.timestamps import ms_formatter
     from bb_bigdata_log_tools_spark.sources.boom import LINE_FIELDS, SORT_KEYS
 
     if "raw" in opts["flags"]:
         sep = opts.get("fieldSeparator", DEFAULT_FIELD_SEPARATOR)
         out = (sep.join(map(str, line)) for line in lines)
     else:
-        date_format = opts.get("dateFormat", "RFC5424")
+        fmt = ms_formatter(opts.get("dateFormat", "RFC5424"))
         lines.sort(key=operator.itemgetter(*(LINE_FIELDS.index(k) for k in SORT_KEYS)))
-        out = (f"{format_ms(line[0], date_format)} {line[1]}" for line in lines)
+        out = (f"{fmt(line[0])} {line[1]}" for line in lines)
     silent = "silent" in opts["flags"]
     if not silent:
         sys.stderr.write(DATA_MARKER + "\n")
@@ -415,7 +440,11 @@ def _write_local(lines: list[tuple], opts: dict) -> None:
 def _spark() -> SparkSession:
     from bb_bigdata_log_tools_spark.session import get_spark
 
-    return get_spark("logtools")
+    spark = get_spark("logtools")
+    # a failed job ends the run with its own error (_emit): Spark's task
+    # logs would repeat it, stack traces and all, on stderr
+    spark.sparkContext.setLogLevel("FATAL")
+    return spark
 
 
 def logcat(argv: list[str]) -> None:

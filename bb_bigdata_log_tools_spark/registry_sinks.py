@@ -33,6 +33,7 @@ from pyspark.sql import types as T
 
 from bb_bigdata_log_tools_spark.registry_datasetops import _MD5_BUCKET
 from bb_bigdata_log_tools_spark.session import ensure_parallelism, table
+from bb_bigdata_log_tools_spark.sources import spark_paths
 from bb_bigdata_log_tools_spark.sources.boom import read_boom, write_boom_tree
 from bb_bigdata_log_tools_spark.sources.jsonl import read_jsonl, write_jsonl_shards
 from bb_bigdata_log_tools_spark.sources.logs import EVENTS_AS_LOGS_SQL, events_as_logs
@@ -1478,7 +1479,7 @@ def q_write_cdx(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(out, ignore_errors=True)
     write_cdx(recs.filter(F.col("warc_type") == "response"), out,
               n_shards=N_WARC_SHARDS)
-    lines = spark.read.text(os.path.join(out, "shard=*"))
+    lines = spark.read.text(spark_paths(os.path.join(out, "shard=*")))
     v = F.col("value")
     return lines.select(
         F.regexp_extract(v, r"^(\S+) ", 1).alias("urlkey"),

@@ -35,10 +35,13 @@ read. The driver lists the files and cuts them into byte ranges; each
 task reads a bin of ranges through an mmap of its files. A ``.bm`` range
 decodes through the same ranged walk (the Avro
 ``DataFileReader.sync/pastSync`` contract), so hourly part files and a
-consolidated archive alike return exactly the whole-file rows.
-:func:`write_sorted` is its write-side counterpart, the one ordered
-one-file write (the compaction, the maintenance filter-archive and the
-Avro merge).
+consolidated archive alike return exactly the whole-file rows. The
+CLI's driver executor reads the same ranges without Spark
+(:func:`read_lines`), packed by the same rule into one bin per usable
+core and one forked worker process a bin. :func:`write_sorted` is
+:func:`fan_out`'s write-side counterpart, the one ordered one-file
+write (the compaction, the maintenance filter-archive and the Avro
+merge).
 
 Every ``.bm`` and ``.avro`` write goes through one container writer,
 :func:`write_container` (the reference's one ``DataFileWriter``), and
@@ -58,6 +61,7 @@ import json
 import mmap
 import os
 import struct
+import sys
 import zlib
 from collections.abc import Callable, Iterable, Iterator
 from typing import TYPE_CHECKING
@@ -670,6 +674,50 @@ def range_lines(
         return []
 
 
+#: The driver executor's read workers (:func:`_read_pool`), kept for the
+#: later calls of the process, as Spark keeps its Python workers.
+_POOL = None
+
+
+def local_bins(ranges: list[tuple[str, int, int]]) -> list[list[tuple]]:
+    """``ranges`` in one bin per usable core at most (:func:`_pack`): the
+    driver executor's bins, each read by one worker (:func:`read_lines`)."""
+    return _pack(ranges, len(os.sched_getaffinity(0)))
+
+
+def _read_pool():
+    """A pool of one forked worker per usable core, made on the first call
+    and reused. ``fork`` copies this process's modules, where a fresh
+    interpreter (``forkserver``, ``spawn``) would import them, pyspark
+    included, again. A fork copies only the forking thread, so a lock
+    another thread held (a Spark driver's py4j threads) stays held in
+    the worker; a worker only runs this module's read, imported
+    already, and takes no such lock. The workers ignore SIGINT, so
+    Ctrl-C reaches the parent alone. The pool shuts down at exit while
+    the modules it uses are still there: collected during the
+    interpreter's teardown, it fails in a callback."""
+    global _POOL
+    if _POOL is None:
+        import atexit
+        import multiprocessing
+        import signal
+        from concurrent.futures import ProcessPoolExecutor
+
+        sys.stdout.flush()  # a forked worker must not write this process's buffers again
+        sys.stderr.flush()
+        _POOL = ProcessPoolExecutor(
+            len(os.sched_getaffinity(0)), multiprocessing.get_context("fork"),
+            initializer=signal.signal, initargs=(signal.SIGINT, signal.SIG_IGN),
+        )
+        atexit.register(_POOL.shutdown)
+    return _POOL
+
+
+def _read_bin(ranges: list[tuple[str, int, int]], read: Callable) -> list[list[tuple]]:
+    """A worker's bin: the lines of each of its ranges (:func:`read_ranges`)."""
+    return list(read_ranges(ranges, read))
+
+
 def read_lines(
     ranges: list[tuple[str, int, int]],
     search_terms: list[str] | None = None,
@@ -680,16 +728,32 @@ def read_lines(
     end_ms: int | None = None,
     ascii_case: bool = False,
 ) -> list[tuple]:
-    """The lines of ``ranges`` (:func:`container_ranges`) read in this
-    process, with :func:`read_boom`'s arguments and per-range body
+    """The lines of ``ranges`` (:func:`container_ranges`) in range order,
+    with :func:`read_boom`'s arguments and per-range body
     (:func:`range_lines`): the CLI's driver executor, which starts no
-    Spark job."""
+    Spark job. Like a Spark read, it reads :func:`local_bins`' bins in
+    parallel, one worker process each (:func:`_read_pool`); a single bin
+    is read in this process, which then imports no process pool at all.
+    A damaged range raises :func:`read_ranges`' ``ValueError``, and a
+    worker that dies a ``ChildProcessError``."""
     read = functools.partial(
         range_lines, search_terms=search_terms, match_all=match_all,
         case_insensitive=case_insensitive, skip_corrupt=skip_corrupt,
         start_ms=start_ms, end_ms=end_ms, ascii_case=ascii_case,
     )
-    return [line for part in read_ranges(ranges, read) for line in part]
+    bins = local_bins(ranges)
+    if len(bins) == 1:
+        return [line for part in read_ranges(ranges, read) for line in part]
+    from concurrent.futures.process import BrokenProcessPool
+
+    global _POOL
+    try:
+        parts = _read_pool().map(_read_bin, bins, itertools.repeat(read))
+        lines = dict(zip(itertools.chain(*bins), itertools.chain.from_iterable(parts)))
+    except BrokenProcessPool as exc:  # the next call forks a new pool
+        _POOL = None
+        raise ChildProcessError(f"a read worker died: {exc}") from exc
+    return [line for r in ranges for line in lines[r]]
 
 
 def read_boom(

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bb_bigdata_log_tools_spark.operators.datasetops import shuffle_shards
+from bb_bigdata_log_tools_spark.sources import spark_paths
 
 
 def write_jsonl_shards(
@@ -54,7 +55,7 @@ def write_jsonl_shards(
         .json(path)
     )
     # count from the written output — verifies the files, not the plan
-    return df.sparkSession.read.json(os.path.join(path, "shard=*")).count()
+    return df.sparkSession.read.json(spark_paths(os.path.join(path, "shard=*"))).count()
 
 
 def read_jsonl(spark: SparkSession, path: str, schema=None) -> DataFrame:

@@ -45,6 +45,8 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from bb_bigdata_log_tools_spark.sources import spark_paths
+
 CRLF = b"\r\n"
 
 WARC_SCHEMA = T.StructType(
@@ -508,7 +510,7 @@ def read_warc_headers(spark: SparkSession, path: str) -> DataFrame:
 
     return (
         spark.read.format("binaryFile")
-        .load(path)
+        .load(spark_paths(path))
         .select("path", "content")
         .mapInPandas(parse, HTTP_HEADERS_SCHEMA)
     )
@@ -769,7 +771,7 @@ def read_warc(spark: SparkSession, path: str) -> DataFrame:
     WET text, warcinfo, request, metadata) the payload is the record
     block verbatim and http_status is 0.
     """
-    return parse_warc_files(spark.read.format("binaryFile").load(path))
+    return parse_warc_files(spark.read.format("binaryFile").load(spark_paths(path)))
 
 
 def parse_warc_files(files: DataFrame) -> DataFrame:
@@ -914,7 +916,7 @@ def parse_warc_idx(spark: SparkSession, path: str) -> DataFrame:
     and :func:`warc_fetch` all consume ONE copy of the sidecar
     grammar. ``path`` is the ``.warc.gz`` glob; indexes are found at
     ``path + ".idx"``."""
-    idx_files = spark.read.format("binaryFile").load(path + ".idx")
+    idx_files = spark.read.format("binaryFile").load(spark_paths(path + ".idx"))
 
     def parse_idx(batches: Iterator["object"]) -> Iterator["object"]:
         import pandas as pd
@@ -1496,7 +1498,7 @@ def write_cdx(
     # ts_from pruning exact ('' never passes a ts_from filter).
     ts = F.regexp_extract("value", r"^\S+ (\d{14}) ", 1)
     stats = (
-        spark.read.text(_os.path.join(out_dir, "shard=*"))
+        spark.read.text(spark_paths(_os.path.join(out_dir, "shard=*")))
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.min(ts).alias("lo"),
@@ -1555,7 +1557,7 @@ def _write_cdx_range_lines(
     # contract. Deriving bounds from what landed on disk (not from
     # the plan) keeps pruning exact even if the range sampler placed
     # boundaries unevenly.
-    written = spark.read.text(_os.path.join(out_dir, "shard=*"))
+    written = spark.read.text(spark_paths(_os.path.join(out_dir, "shard=*")))
     bounds = (
         written.select(
             F.regexp_extract(F.input_file_name(), r"shard=(\d+)", 1)
@@ -1635,7 +1637,7 @@ def merge_cdx_stores(
             out_dir,
             n_shards,
         )
-    raw = spark.read.text(globs)
+    raw = spark.read.text(spark_paths(*globs))
     lines = raw.select(
         F.substring_index("value", " ", 1).alias("_k"),
         F.regexp_extract("value", r'"url":"([^"]+)"', 1).alias("_u"),

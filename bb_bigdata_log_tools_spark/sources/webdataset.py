@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from bb_bigdata_log_tools_spark.sources import spark_paths
+
 MEMBER_SCHEMA = T.StructType(
     [
         T.StructField("shard", T.StringType()),
@@ -51,7 +53,7 @@ def read_webdataset(spark: SparkSession, path: str) -> DataFrame:
     ``x.seg.png`` → key ``x``, ext ``seg.png``). Directories and
     non-regular members are skipped.
     """
-    shards = spark.read.format("binaryFile").load(path)
+    shards = spark.read.format("binaryFile").load(spark_paths(path))
 
     def parse(batches: Iterator["object"]) -> Iterator["object"]:
         import pandas as pd

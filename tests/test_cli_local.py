@@ -1,14 +1,17 @@
 """The CLI's driver executor: a small slice of the .bm tree is read, sorted
 and formatted in this process, with no Spark job, and prints byte for
-byte what the Spark executor (``--r``) prints. Its Python formatter
+byte what the Spark executor (``--r``) prints. Its pool of read workers
+prints what one bin read in this process prints, its Python formatter
 equals ``format_timestamp``, its literal ``loggrep`` equals ``rlike``,
-and a damaged file ends it with one error line naming the file."""
+and a damaged file ends it, and the Spark executor, with one error line
+naming the file."""
 
 from __future__ import annotations
 
 import contextlib
 import io
 import os
+import re
 import subprocess
 import sys
 import tempfile
@@ -21,11 +24,12 @@ from bb_bigdata_log_tools_spark import cli
 from bb_bigdata_log_tools_spark.functions.timestamps import (
     PY_END_MS,
     PY_MIN_MS,
-    format_ms,
     format_timestamp,
+    ms_formatter,
 )
 from bb_bigdata_log_tools_spark.operators import logops
 from bb_bigdata_log_tools_spark.schema import LOG_COLUMNS
+from bb_bigdata_log_tools_spark.sources import boom
 from bb_bigdata_log_tools_spark.sources.boom import (
     LINE_FIELDS,
     _matcher,
@@ -168,18 +172,33 @@ def test_local_equals_spark(run, tree, call, flags, start, length):
         assert local[1] == spark[1]
 
 
+#: Times within a minute of the first and the last one formatted, of 1970
+#: and of 2026: sorted runs of them cross second, minute, year and range
+#: edges.
+NEAR_EDGES = st.sampled_from([PY_MIN_MS, 0, 1_767_225_600_000, PY_END_MS]).flatmap(
+    lambda edge: st.integers(max(PY_MIN_MS, edge - 61_000), min(PY_END_MS - 1, edge + 61_000)))
+
+
 @settings(max_examples=40, deadline=None, suppress_health_check=[HealthCheck.too_slow])
-@given(st.lists(st.integers(min_value=PY_MIN_MS, max_value=PY_END_MS - 1),
+@given(st.lists(st.integers(min_value=PY_MIN_MS, max_value=PY_END_MS - 1) | NEAR_EDGES,
                 min_size=1, max_size=40))
 @example([PY_MIN_MS, PY_END_MS - 1, -1, 0, -999, -1000, -12_219_292_800_001,
           -30_610_224_000_001, 1_330_423_201_123])
+@example([PY_MIN_MS, PY_MIN_MS + 999, PY_MIN_MS + 1000, PY_MIN_MS + 60_000, -60_001, -60_000,
+          -1001, -1000, -1, 0, 1_767_225_599_999, 1_767_225_600_000, 1_767_225_600_000,
+          PY_END_MS - 60_001, PY_END_MS - 1000, PY_END_MS - 1])
 def test_python_formatter_equals_format_timestamp(spark, values):
-    """``format_ms`` equals Spark's ``format_timestamp`` for the three
-    named formats over years 1-9999, pre-1970 times included."""
+    """``ms_formatter`` equals Spark's ``format_timestamp`` for the three
+    named formats over years 1-9999, pre-1970 times included, over
+    sorted times in runs that cross second, minute, year and range
+    edges, as the driver executor formats them, and over each time alone."""
     names = ("RFC5424", "RFC3164", "RFC822")
+    values = sorted(values)
     df = spark.createDataFrame([(v,) for v in values], "ts long")
     got = [tuple(r) for r in df.select(*[format_timestamp("ts", n) for n in names]).collect()]
-    assert got == [tuple(format_ms(v, n) for n in names) for v in values]
+    formatters = [ms_formatter(n) for n in names]
+    assert got == [tuple(fmt(v) for fmt in formatters) for v in values]
+    assert got == [tuple(ms_formatter(n)(v) for n in names) for v in values]
 
 
 GREP_MESSAGES = ["cooled to 4 \u212a", "KELVIN k", "İstanbul", "istanbul", "ISTANBUL",
@@ -283,26 +302,159 @@ def test_verbose_names_the_executor(spark, run, tmp_path):
                             f"{cli.DATA_MARKER}\n{cli.DATA_MARKER}\n")
     code, out, err = got["verbose"]
     assert (code, out) == got["quiet"][:2]
-    assert err.splitlines()[0].startswith("; executor=driver files=1 bytes=")
+    assert err.splitlines()[0].startswith("; executor=driver workers=1 files=1 bytes=")
     assert err.splitlines()[1:] == [cli.DATA_MARKER] * 2
     code, out, err = run("logcat", [*argv, "--v", "--r"])
     assert (code, out) == got["quiet"][:2]
     assert err.splitlines() == ["; executor=spark reason=--r"] + [cli.DATA_MARKER] * 2
 
 
+def _damaged_tree(tmp_path) -> tuple[str, str]:
+    """A two-hour tree whose second file has a damaged block: its root
+    and the damaged file."""
+    root = str(tmp_path / "tree")
+    for hour in range(2):
+        lines = [(T0 + hour * HOUR + s * 1000, f"line {s}", 0) for s in range(20)]
+        path = _write_hour(root, hour, [lines])[0]
+    damage_block(path)
+    return root, path
+
+
+def _logcat(root: str, *extra: str) -> subprocess.CompletedProcess:
+    """A fresh ``logcat`` process over the two hours of ``root``."""
+    return subprocess.run(
+        [sys.executable, "-m", "bb_bigdata_log_tools_spark", "logcat",
+         *_argv(root, T0, T0 + 2 * HOUR), *extra],
+        capture_output=True, text=True, timeout=300, env=dict(os.environ, PYTHONPATH=REPO),
+    )
+
+
 def test_damaged_file_one_error_line(tmp_path):
     """On the driver executor a damaged file ends the call with exit 1
-    and exactly one error line naming the file."""
-    root = str(tmp_path / "tree")
-    lines = [(T0 + s * 1000, f"line {s}", 0) for s in range(20)]
-    path = _write_hour(root, 0, [lines])[0]
-    damage_block(path)
-    res = subprocess.run(
-        [sys.executable, "-m", "bb_bigdata_log_tools_spark", "logcat",
-         *_argv(root, T0, T0 + HOUR)],
-        capture_output=True, text=True, timeout=120, env=dict(os.environ, PYTHONPATH=REPO),
-    )
+    and exactly one error line naming the file, whichever worker read it."""
+    root, path = _damaged_tree(tmp_path)
+    res = _logcat(root)
     assert res.returncode == 1 and res.stdout == ""
     errors = res.stderr.splitlines()
     assert len(errors) == 1, res.stderr
     assert errors[0].startswith(f";******************** ERROR: cannot decode .bm file {path}: ")
+
+
+#: What the JVM and Spark's logging print on stderr while any Spark call
+#: starts, before the program can set a log level.
+JVM_START = re.compile(r"WARNING: Using incubator modules: |Using Spark's default log4j profile: "
+                       r"|Setting default log level to |To adjust logging level use "
+                       r"|\d\d/\d\d/\d\d \d\d:\d\d:\d\d WARN NativeCodeLoader: ")
+
+
+@pytest.mark.slow
+def test_damaged_file_one_error_line_on_spark(tmp_path):
+    """On the Spark executor a damaged file ends the call with exit 1 and
+    the driver executor's one error line: no traceback and no task log,
+    only the notices of the JVM's start before it."""
+    root, _ = _damaged_tree(tmp_path)
+    res = _logcat(root, "--r")
+    assert res.returncode == 1 and res.stdout == ""
+    errors = [e for e in res.stderr.splitlines() if not JVM_START.match(e)]
+    assert errors == _logcat(root).stderr.splitlines(), res.stderr
+
+
+def _tie_tree(root: str) -> None:
+    """Three hours of two files each, every file with the same create time
+    and the same times: every line ties on all of ``SORT_KEYS`` with its
+    twins in the other files, so only the read order breaks the ties."""
+    dc, svc, comp = TREE
+    for hour in range(3):
+        data = os.path.join(root, dc, svc, "logs", "20261005", f"{hour:02d}", comp, "data")
+        os.makedirs(data)
+        for k in range(2):
+            lines = [(T0 + (i // 3) * 250, f"{WORDS[i % len(WORDS)]} h{hour} f{k} #{i}", i)
+                     for i in range(60)]
+            write_boom_local(os.path.join(data, f"part-{k:05d}.bm"), lines, create_time=7)
+
+
+@pytest.mark.parametrize("extra", [[], ["--raw"], ["--dateFormat=RFC3164"], ["--skipCorrupt"],
+                                   ["-string=needle"]],
+                         ids=["logcat", "raw", "RFC3164", "skipCorrupt", "logsearch"])
+def test_pool_equals_one_bin(run, tmp_path, extra):
+    """The pooled read prints byte for byte what a read of one bin in this
+    process prints, ties across files, ``--raw``'s read order and a
+    salvaged block included."""
+    root = str(tmp_path)
+    _tie_tree(root)
+    if "--skipCorrupt" in extra:
+        damage_block(os.path.join(root, *TREE[:2], "logs", "20261005", "01", TREE[2], "data",
+                                  "part-00001.bm"))
+    tool = "logsearch" if any(a.startswith("-string=") for a in extra) else "logcat"
+    argv = [*_argv(root, T0, T0 + 3 * HOUR), *extra, "--v", "--silent"]
+    got = {}
+    for bins in (1, 3):
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(boom, "local_bins", lambda ranges, n=bins: boom._pack(ranges, n))
+            got[bins] = run(tool, argv)
+    assert got[3][2].startswith("; executor=driver workers=3 files=6 "), got[3][2]
+    assert got[1][2].startswith("; executor=driver workers=1 files=6 "), got[1][2]
+    assert got[1][0] == got[3][0] == 0
+    assert got[1][1] == got[3][1] and got[1][1].count("\n") >= 24
+
+
+def test_pool_damaged_file_one_error_line(run, tmp_path, monkeypatch):
+    """A damaged file read by a worker ends the call with exactly one
+    error line naming it."""
+    root = str(tmp_path)
+    _tie_tree(root)
+    path = os.path.join(root, *TREE[:2], "logs", "20261005", "02", TREE[2], "data",
+                        "part-00000.bm")
+    damage_block(path)
+    monkeypatch.setattr(boom, "local_bins", lambda ranges: boom._pack(ranges, 3))
+    code, out, err = run("logcat", _argv(root, T0, T0 + 3 * HOUR))
+    assert (code, out) == (1, "")
+    assert len(err.splitlines()) == 1, err
+    assert err.startswith(f";******************** ERROR: cannot decode .bm file {path}: ")
+
+
+def _exit_in_worker(*args, parent: int = os.getpid(), **kwargs):
+    if os.getpid() == parent:
+        raise AssertionError("read in the test process")
+    os._exit(3)
+
+
+def test_pool_dead_worker_one_error_line(run, tmp_path, monkeypatch):
+    """A worker that dies ends the call with one error line, and the next
+    call forks a new pool."""
+    root = str(tmp_path)
+    _tie_tree(root)
+    argv = _argv(root, T0, T0 + 3 * HOUR, "--silent")
+    monkeypatch.setattr(boom, "local_bins", lambda ranges: boom._pack(ranges, 3))
+    monkeypatch.setattr(boom, "_POOL", None)  # a pool forked with the patch below
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(boom, "range_lines", _exit_in_worker)
+        code, out, err = run("logcat", argv)
+    assert (code, out) == (1, "")
+    assert err.splitlines() == [";******************** ERROR: a read worker died: A process in "
+                                "the process pool was terminated abruptly while the future was "
+                                "running or pending."]
+    assert boom._POOL is None
+    try:
+        code, out, err = run("logcat", argv)
+    finally:
+        boom._POOL.shutdown()
+    assert code == 0 and out.count("\n") == 360
+
+
+@pytest.mark.slow
+def test_pooled_call_releases_its_pipes(tmp_path):
+    """A fresh ``bin/logsearch`` over several hours reaches stdout's end
+    and exits within the timeout: no worker outlives the call holding
+    stdout or stderr open."""
+    root = str(tmp_path)
+    _tie_tree(root)
+    res = subprocess.run(
+        [os.path.join(REPO, "bin", "logsearch"), *_argv(root, T0, T0 + 3 * HOUR),
+         "-string=needle", "--v"],
+        capture_output=True, text=True, timeout=60,
+    )
+    assert res.returncode == 0, res.stderr
+    workers = min(6, len(os.sched_getaffinity(0)))
+    assert res.stderr.startswith(f"; executor=driver workers={workers} files=6 "), res.stderr
+    assert len(res.stdout.splitlines()) == 24

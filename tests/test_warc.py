@@ -10,6 +10,7 @@ import os
 
 import pytest
 
+from bb_bigdata_log_tools_spark.sources import spark_paths
 from bb_bigdata_log_tools_spark.sources.warc import (
     build_http_response,
     build_warc_record,
@@ -131,6 +132,17 @@ def test_uncompressed_warc_read(spark, tmp_path):
         f"https://crawl.example/d/{i}.html" for i in range(3)
     ]
     assert all(r.n_bytes == len(bytes(r.payload)) for r in got)
+
+
+def test_spark_paths_expand_globs_on_the_driver(tmp_path):
+    """A Spark file source gets a glob's files in name order, so it never
+    looks for a streaming sink's metadata under the pattern; a pattern
+    that matches nothing reaches Spark unchanged, to fail there as before."""
+    for name in ("b.warc.gz", "a.warc.gz", "a.warc.gz.idx"):
+        (tmp_path / name).write_bytes(b"")
+    pattern, none = str(tmp_path / "*.warc.gz"), str(tmp_path / "x" / "*.warc.gz")
+    assert spark_paths(pattern, none) == [str(tmp_path / "a.warc.gz"),
+                                          str(tmp_path / "b.warc.gz"), none]
 
 
 def test_record_length_formula():
